@@ -21,7 +21,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from fastetl_spark.checkpointing import materialize
+from fastetl_spark.checkpointing import materialize, observed
 from fastetl_spark.io.readers import read_jdbc
 from fastetl_spark.io.writers import atomic_overwrite, select_intersection, write_csv
 from fastetl_spark.meta.load_info import LoadInfo
@@ -180,17 +180,20 @@ class Engine:
                     if wm is None
                     else src_df.filter(F.col(watermark_col) > F.lit(wm))
                 )
+                # the new watermark rides on the merge's materialisation
+                # of the increment (v1 and v2 alike): no second pass
+                wm_obs = Observation()
+                inc = inc.observe(wm_obs, F.max(watermark_col).alias("wm"))
+                merge = partial_merge(self.spark, dest["path"], inc, deleted_keys)
                 if self.watermark_store is not None:
-                    inc = inc.transform(materialize)  # two consumers below
-                partial_merge(self.spark, dest["path"], inc, deleted_keys)
-                if self.watermark_store is not None:
-                    new_wm = inc.agg(F.max(watermark_col)).first()[0]
+                    new_wm = observed(wm_obs, {"wm": None})["wm"]
                     if new_wm is not None:
                         self.watermark_store.set(table_name or dest["path"], new_wm)
-                # total-rows metric from parquet footers only — no data
-                # scan (read_bucketed resolves the v2 manifest when
-                # present; a raw root read would see both generations)
-                n = read_bucketed(self.spark, dest["path"]).count()
+                # total rows: the v2 manifest's recorded count; on v1,
+                # parquet footers only — no data scan
+                n = merge["rows"]
+                if n is None:
+                    n = read_bucketed(self.spark, dest["path"]).count()
                 if self.load_info:
                     self.load_info.save(
                         table_name or dest.get("path", ""), "incremental", n

@@ -22,7 +22,7 @@ multi-executor deployment).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 
 
 def reliable_checkpoint_dir(spark: SparkSession) -> str | None:
@@ -47,3 +47,19 @@ def materialize(df: DataFrame) -> DataFrame:
     if reliable_checkpoint_dir(df.sparkSession) is not None:
         return df.checkpoint(eager=True)
     return df.localCheckpoint()
+
+
+def observed(obs: Observation, empty: dict) -> dict:
+    """The metrics of ``obs`` once its frame has run an action, so a
+    driver-side fact rides on an action that already runs instead of a
+    job of its own. Call only after that action: ``get`` blocks until
+    the observed plan executes.
+
+    When the optimizer or AQE drops a subtree it proves empty, an
+    observation inside it goes too and Spark hands back an empty row;
+    ``empty`` (the aggregates over zero rows) is returned instead. That
+    is exact only where every operator between the observation and the
+    action or the write's exchange keeps rows (RUNBOOK.md)."""
+    if obs._jo.getRow().length() == 0:
+        return dict(empty)
+    return obs.get

@@ -58,17 +58,20 @@ from __future__ import annotations
 
 import json
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
-from fastetl_spark.checkpointing import materialize
+from fastetl_spark.checkpointing import materialize, observed
 from fastetl_spark.io.fsutil import (
     hadoop_fs,
+    parquet_rows,
     read_text_file,
     replace_dir,
     replace_text_file,
     write_text_file,
 )
+from fastetl_spark.io.writers import literal_frame
 
 BUCKET_COL = "__fe_bucket"
 SPEC_FILE = "_bucket_spec.json"
@@ -122,20 +125,18 @@ def _manifest_gens(fs, path_cls, base: str) -> list[int]:
 def read_manifest(spark: SparkSession, path: str) -> dict | None:
     """Latest committed manifest of a v2 destination:
     {"gen": N, "buckets": {bucket_id: dir_name}} — the one pointer that
-    defines which physical dirs are live. None when no manifest exists."""
+    defines which physical dirs are live. None when no manifest exists.
+
+    Manifests committed by this version also carry ``rows`` ({bucket_id:
+    row count} of the live dirs, from their parquet footers) and
+    ``schema`` (the data schema as Spark JSON), so a row count or a
+    read of the live dirs needs no Spark job; older manifests lack both
+    keys and readers fall back to counting and to schema inference."""
     fs, path_cls = hadoop_fs(spark, path)
-    base = path.rstrip("/")
-    gens = _manifest_gens(fs, path_cls, base)
+    gens = _manifest_gens(fs, path_cls, path.rstrip("/"))
     if not gens:
         return None
-    text = read_text_file(spark, f"{base}/{MANIFEST_PREFIX}{gens[-1]}.json")
-    m = json.loads(text)
-    m["buckets"] = {int(k): v for k, v in m["buckets"].items()}
-    if "shards" in m:
-        m["shards"] = {int(k): int(v) for k, v in m["shards"].items()}
-    if "n_shards" in m:
-        m["n_shards"] = int(m["n_shards"])
-    return m
+    return _read_manifest_gen(spark, path, gens[-1])
 
 
 def _commit_manifest(
@@ -145,6 +146,8 @@ def _commit_manifest(
     buckets: dict[int, str],
     shards: dict[int, int] | None = None,
     n_shards: int | None = None,
+    rows: dict[int, int] | None = None,
+    schema: dict | None = None,
 ) -> None:
     """THE atomic publish step: write the manifest to a hidden tmp name,
     then rename onto `_manifest_<gen>.json` (rename-to-new-name is
@@ -158,7 +161,10 @@ def _commit_manifest(
     bucket dirs as of this gen. ``n_shards`` rides along as the ring
     size the map was computed for: the MANIFEST is the source of truth
     for shard placement (it commits atomically with the data pointer),
-    the spec file is a convenience mirror refreshed after commit."""
+    the spec file is a convenience mirror refreshed after commit.
+
+    ``rows`` and ``schema`` (see ``read_manifest``) are recorded when
+    known."""
     fs, path_cls = hadoop_fs(spark, path)
     base = path.rstrip("/")
     tmp = f"{base}/.{MANIFEST_PREFIX}{gen}.json.tmp"
@@ -168,11 +174,11 @@ def _commit_manifest(
         m["shards"] = {str(k): int(v) for k, v in shards.items()}
     if n_shards is not None:
         m["n_shards"] = int(n_shards)
-    write_text_file(
-        spark,
-        tmp,
-        json.dumps(m),
-    )
+    if rows is not None:
+        m["rows"] = {str(k): int(v) for k, v in rows.items()}
+    if schema is not None:
+        m["schema"] = schema
+    write_text_file(spark, tmp, json.dumps(m))
     if not fs.rename(path_cls(tmp), path_cls(final)):
         fs.delete(path_cls(tmp), False)
         raise IOError(
@@ -275,6 +281,7 @@ def write_bucketed(
     out.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(staging)
     gen = 1
     buckets: dict[int, str] = {}
+    rows: dict[int, int] = {}
     for s in hadoop_fs(spark, staging)[0].listStatus(path_cls(staging)):
         name = s.getPath().getName()
         if not (s.isDirectory() and name.startswith(f"{BUCKET_COL}=")):
@@ -285,18 +292,22 @@ def write_bucketed(
         if not fs.rename(s.getPath(), path_cls(f"{base}/{dirname}")):
             raise IOError(f"could not place {dirname} under {base}")
         buckets[b] = dirname
+        rows[b] = parquet_rows(spark, f"{base}/{dirname}")
     if not buckets:
         # zero-row initial load: keep one schema-bearing empty bucket
-        empty = df.sparkSession.createDataFrame([], df.schema)
+        empty = literal_frame(spark, df.schema)
         empty.write.mode("overwrite").parquet(f"{base}/bucket_0_v{gen}")
-        buckets[0] = f"bucket_0_v{gen}"
+        buckets[0], rows[0] = f"bucket_0_v{gen}", 0
     fs.delete(path_cls(staging), True)
     shards = (
         {b: _hrw_shard(b, n_shards) for b in range(n_buckets)}
         if n_shards is not None
         else None
     )
-    _commit_manifest(spark, path, gen, buckets, shards=shards, n_shards=n_shards)
+    _commit_manifest(
+        spark, path, gen, buckets, shards=shards, n_shards=n_shards,
+        rows=rows, schema=df.schema.jsonValue(),
+    )
     spec: dict = {
         "version": SPEC_VERSION_ATOMIC,
         "keys": list(keys),
@@ -306,6 +317,15 @@ def write_bucketed(
     if n_shards is not None:
         spec["n_shards"] = int(n_shards)
     write_text_file(spark, _spec_path(path), json.dumps(spec))
+
+
+def _read_dirs(spark: SparkSession, m: dict, dirs: list[str]) -> DataFrame:
+    """Read bucket dirs of the generation ``m`` describes. A recorded
+    schema skips parquet schema inference, which costs a Spark job."""
+    reader = spark.read
+    if "schema" in m:
+        reader = reader.schema(StructType.fromJson(m["schema"]))
+    return reader.parquet(*dirs)
 
 
 def read_bucketed(spark: SparkSession, path: str) -> DataFrame:
@@ -327,8 +347,7 @@ def read_bucketed(spark: SparkSession, path: str) -> DataFrame:
     )
     if m is not None:
         base = path.rstrip("/")
-        dirs = [f"{base}/{d}" for d in m["buckets"].values()]
-        return spark.read.parquet(*dirs)
+        return _read_dirs(spark, m, [f"{base}/{d}" for d in m["buckets"].values()])
     if spec is not None and spec["version"] == SPEC_VERSION_ATOMIC:
         raise IOError(
             f"{path} has a v2 bucket spec but no committed manifest — "
@@ -355,6 +374,8 @@ def _read_manifest_gen(spark: SparkSession, path: str, gen: int) -> dict:
         )
     m = json.loads(text)
     m["buckets"] = {int(k): v for k, v in m["buckets"].items()}
+    if "rows" in m:
+        m["rows"] = {int(k): int(v) for k, v in m["rows"].items()}
     if "shards" in m:
         m["shards"] = {int(k): int(v) for k, v in m["shards"].items()}
     if "n_shards" in m:
@@ -377,7 +398,7 @@ def read_bucketed_at(spark: SparkSession, path: str, gen: int) -> DataFrame:
             f"{missing[:3]}{'...' if len(missing) > 3 else ''} were GC'd "
             "(outside the keep_gens retention window)"
         )
-    return spark.read.parquet(*[f"{base}/{d}" for d in m["buckets"].values()])
+    return _read_dirs(spark, m, [f"{base}/{d}" for d in m["buckets"].values()])
 
 
 def rollback_bucketed(spark: SparkSession, path: str, to_gen: int | None = None) -> int:
@@ -422,32 +443,41 @@ def rollback_bucketed(spark: SparkSession, path: str, to_gen: int | None = None)
                 f"{missing[:3]}{'...' if len(missing) > 3 else ''} were GC'd"
             )
         new_gen = gens[-1] + 1
-        _commit_manifest(spark, path, new_gen, m["buckets"], shards=m.get("shards"))
+        _commit_manifest(
+            spark, path, new_gen, m["buckets"], shards=m.get("shards"),
+            rows=m.get("rows"), schema=m.get("schema"),
+        )
         return new_gen
     finally:
         fs.delete(lock, False)
 
 
 def read_buckets_for_keys(
-    spark: SparkSession, path: str, keys_df: DataFrame
+    spark: SparkSession, path: str, keys_df: DataFrame, *, _touched=None
 ) -> DataFrame:
     """Point-lookup path: read only the buckets that could contain the
     given key rows, then semi-join down to exact matches. Turns a
     point query against a 100 TB destination into a scan of the few
-    touched buckets."""
+    touched buckets.
+
+    ``_touched`` (internal) is the keys' bucket-id set when the caller
+    already observed it on an action of its own; otherwise it costs one
+    ``distinct().collect()`` job here."""
     spec = read_bucket_spec(spark, path)
     if spec is None:
         raise ValueError(f"{path} is not a bucketed destination")
     keys = spec["keys"]
-    tagged = keys_df.withColumn(BUCKET_COL, bucket_id(keys, spec["n_buckets"]))
-    touched = sorted(r[0] for r in tagged.select(BUCKET_COL).distinct().collect())
+    if _touched is None:
+        tagged = keys_df.withColumn(BUCKET_COL, bucket_id(keys, spec["n_buckets"]))
+        _touched = {r[0] for r in tagged.select(BUCKET_COL).distinct().collect()}
+    touched = sorted(_touched)
     if spec["version"] == SPEC_VERSION_ATOMIC:
         m = read_manifest(spark, path)
         base = path.rstrip("/")
         dirs = [f"{base}/{m['buckets'][b]}" for b in touched if b in m["buckets"]]
         if not dirs:
             return read_bucketed(spark, path).limit(0)
-        dest = spark.read.parquet(*dirs)
+        dest = _read_dirs(spark, m, dirs)
         return dest.join(keys_df.select(*keys), on=keys, how="left_semi")
     existing = _existing_bucket_paths(spark, path, touched)
     if not existing:
@@ -468,6 +498,43 @@ def _existing_bucket_paths(
     return out
 
 
+def _tag_touched(
+    increment: DataFrame,
+    deleted_keys: DataFrame | None,
+    keys: list[str],
+    n_buckets: int,
+) -> tuple[DataFrame, DataFrame | None, list[int]]:
+    """Tag the increment (and the deletion feed's keys) with their
+    bucket and materialise each once; the touched-bucket set (at most
+    n_buckets small ints) is observed on those same materialisations
+    instead of costing a ``distinct().collect()`` job apiece. Any
+    observation a caller attached to ``increment`` is filled here too."""
+    frames = [increment]
+    if deleted_keys is not None:
+        frames.append(deleted_keys.select(*keys))
+    tagged, touched = [], set()
+    for df in frames:
+        obs = Observation()
+        df = (
+            df.withColumn(BUCKET_COL, bucket_id(keys, n_buckets))
+            .observe(obs, F.collect_set(BUCKET_COL).alias("b"))
+            .transform(materialize)
+        )
+        touched |= set(observed(obs, {"b": []})["b"])
+        tagged.append(df)
+    return tagged[0], (tagged[1] if len(tagged) > 1 else None), sorted(touched)
+
+
+def _write_by_bucket(df: DataFrame, path: str) -> None:
+    """``partitionBy`` write of a bucket-tagged frame, distributed by
+    bucket first: one file per touched bucket (more only where AQE splits
+    a big bucket), not one per upstream task. Each file created is a
+    fixed cost (RUNBOOK.md)."""
+    df.hint("rebalance", BUCKET_COL).write.mode("overwrite").partitionBy(
+        BUCKET_COL
+    ).parquet(path)
+
+
 def partial_merge(
     spark: SparkSession,
     path: str,
@@ -482,7 +549,9 @@ def partial_merge(
     deletions match delete_sync (anti-join retain). The increment must
     be key-unique (callers dedupe, as the streaming merge already does).
 
-    Returns ``{"n_buckets": N, "buckets_touched": t, "rows_written": w}``.
+    Returns ``{"n_buckets": N, "buckets_touched": t, "rows_written": w,
+    "rows": r}``, where ``r`` is the destination's row count after the
+    merge (v2 layout; None on v1, whose count needs a scan).
 
     Concurrency: a lock file (``<path>.__merge_lock__``, atomic create)
     rejects a second merge on the same destination — two merges would
@@ -532,7 +601,13 @@ def _partial_merge_locked_v2(
     exactly at the old generation (orphan dirs are overwritten by the
     re-run and collected by generation GC); a crash after the commit IS
     the new state. Readers racing the merge resolve one committed
-    manifest — old or new, never mixed."""
+    manifest — old or new, never mixed.
+
+    Row counts per bucket come from the new dirs' footers and, for
+    untouched buckets, from the old manifest (read from their footers
+    once when it has no ``rows``). Not from observations: the merge
+    plan's joins sit above the scans, and AQE drops a subtree it finds
+    empty together with its observations."""
     from fastetl_spark.operators.sync import delete_sync, merge_upsert
 
     m = read_manifest(spark, path)
@@ -541,25 +616,18 @@ def _partial_merge_locked_v2(
     base = path.rstrip("/")
     fs, path_cls = hadoop_fs(spark, path)
 
-    inc = increment.withColumn(BUCKET_COL, bucket_id(keys, n_buckets)).transform(
-        materialize
-    )
-    touched = {r[0] for r in inc.select(BUCKET_COL).distinct().collect()}
-    dels = None
-    if deleted_keys is not None:
-        dels = (
-            deleted_keys.select(*keys)
-            .withColumn(BUCKET_COL, bucket_id(keys, n_buckets))
-            .transform(materialize)
-        )
-        touched |= {r[0] for r in dels.select(BUCKET_COL).distinct().collect()}
-    touched_ids = sorted(touched)
+    inc, dels, touched_ids = _tag_touched(increment, deleted_keys, keys, n_buckets)
     if not touched_ids:
-        return {"n_buckets": n_buckets, "buckets_touched": 0, "rows_written": 0}
+        return {
+            "n_buckets": n_buckets,
+            "buckets_touched": 0,
+            "rows_written": 0,
+            "rows": sum(m["rows"].values()) if "rows" in m else None,
+        }
 
     live_touched = [f"{base}/{old_buckets[b]}" for b in touched_ids if b in old_buckets]
     if live_touched:
-        dest = spark.read.parquet(*live_touched)
+        dest = _read_dirs(spark, m, live_touched)
         merged = merge_upsert(dest, inc.drop(BUCKET_COL).select(*dest.columns), keys)
     else:
         merged = inc.drop(BUCKET_COL)
@@ -569,16 +637,13 @@ def _partial_merge_locked_v2(
     staging = base + ".__merge_staging__"
     if fs.exists(path_cls(staging)):
         fs.delete(path_cls(staging), True)
-    from pyspark.sql import Observation
+    _write_by_bucket(merged.withColumn(BUCKET_COL, bucket_id(keys, n_buckets)), staging)
 
-    obs = Observation()
-    out = merged.observe(obs, F.count(F.lit(1)).alias("n_rows")).withColumn(
-        BUCKET_COL, bucket_id(keys, n_buckets)
-    )
-    out.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(staging)
-    rows_written = int(obs.get["n_rows"])
-
-    new_buckets = {b: d for b, d in old_buckets.items() if b not in touched}
+    new_buckets = {b: d for b, d in old_buckets.items() if b not in touched_ids}
+    rows = {
+        b: m["rows"][b] if "rows" in m else parquet_rows(spark, f"{base}/{d}")
+        for b, d in new_buckets.items()
+    }
     for b in touched_ids:
         src = path_cls(f"{staging}/{BUCKET_COL}={b}")
         if not fs.exists(src):
@@ -590,20 +655,26 @@ def _partial_merge_locked_v2(
         if not fs.rename(src, dst):
             raise IOError(f"could not place {dirname} under {base}")
         new_buckets[b] = dirname
+        rows[b] = parquet_rows(spark, f"{base}/{dirname}")
     fs.delete(path_cls(staging), True)
     if not new_buckets:
         # destination fully emptied: keep one schema-bearing empty dir
         dirname = f"bucket_0_v{next_gen}"
-        empty = spark.createDataFrame([], merged.schema)
-        empty.write.mode("overwrite").parquet(f"{base}/{dirname}")
-        new_buckets[0] = dirname
-    _commit_manifest(spark, path, next_gen, new_buckets, shards=m.get("shards"))
+        literal_frame(spark, merged.schema).write.mode("overwrite").parquet(
+            f"{base}/{dirname}"
+        )
+        new_buckets[0], rows[0] = dirname, 0
+    _commit_manifest(
+        spark, path, next_gen, new_buckets, shards=m.get("shards"),
+        rows=rows, schema=merged.schema.jsonValue(),
+    )
     spec = read_bucket_spec(spark, path) or {}
     _gc_generations(spark, path, keep_gens=int(spec.get("keep_gens", 2)))
     return {
         "n_buckets": n_buckets,
         "buckets_touched": len(touched_ids),
-        "rows_written": rows_written,
+        "rows_written": sum(rows[b] for b in touched_ids if b in rows),
+        "rows": sum(rows.values()),
     }
 
 
@@ -617,21 +688,9 @@ def _partial_merge_locked(
 ) -> dict:
     from fastetl_spark.operators.sync import delete_sync, merge_upsert
 
-    inc = increment.withColumn(BUCKET_COL, bucket_id(keys, n_buckets)).transform(
-        materialize
-    )
-    touched = {r[0] for r in inc.select(BUCKET_COL).distinct().collect()}
-    dels = None
-    if deleted_keys is not None:
-        dels = (
-            deleted_keys.select(*keys)
-            .withColumn(BUCKET_COL, bucket_id(keys, n_buckets))
-            .transform(materialize)
-        )
-        touched |= {r[0] for r in dels.select(BUCKET_COL).distinct().collect()}
-    touched_ids = sorted(touched)
+    inc, dels, touched_ids = _tag_touched(increment, deleted_keys, keys, n_buckets)
     if not touched_ids:
-        return {"n_buckets": n_buckets, "buckets_touched": 0, "rows_written": 0}
+        return {"n_buckets": n_buckets, "buckets_touched": 0, "rows_written": 0, "rows": None}
 
     existing = _existing_bucket_paths(spark, path, touched_ids)
     if existing:
@@ -649,12 +708,12 @@ def _partial_merge_locked(
     # row-count metric rides on the write itself (observe) — no second
     # job, and it stays correct when a delete empties every touched
     # bucket (an empty staging dir cannot be read back for a count)
-    from pyspark.sql import Observation
-
+    # right under the write's exchange, the observation is dropped by
+    # AQE only when no row reaches the write, so 0 is then exact
     obs = Observation()
     merged = merged.observe(obs, F.count(F.lit(1)).alias("n_rows"))
-    merged.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(staging)
-    rows_written = int(obs.get["n_rows"])
+    _write_by_bucket(merged, staging)
+    rows_written = int(observed(obs, {"n_rows": 0})["n_rows"])
 
     for b in touched_ids:
         src = f"{staging}/{BUCKET_COL}={b}"
@@ -674,12 +733,13 @@ def _partial_merge_locked(
         if s.isDirectory() and s.getPath().getName().startswith(f"{BUCKET_COL}=")
     ]
     if not remaining:
-        empty = spark.createDataFrame([], merged.drop(BUCKET_COL).schema)
+        empty = literal_frame(spark, merged.drop(BUCKET_COL).schema)
         empty.write.mode("overwrite").parquet(f"{path.rstrip('/')}/{BUCKET_COL}=0")
     return {
         "n_buckets": n_buckets,
         "buckets_touched": len(touched_ids),
         "rows_written": int(rows_written),
+        "rows": None,
     }
 
 
@@ -921,14 +981,16 @@ def reshard_bucketed(
             rows_moved += df.count()  # parquet footer metadata only
             df.write.mode("overwrite").parquet(dst)
             new_buckets[b] = dirname
-        rows_total = 0
-        if m["buckets"]:
-            rows_total = spark.read.parquet(
-                *[f"{base}/{d}" for d in m["buckets"].values()]
+        if "rows" in m:
+            rows_total = sum(m["rows"].values())
+        else:
+            rows_total = _read_dirs(
+                spark, m, [f"{base}/{d}" for d in m["buckets"].values()]
             ).count()
         _commit_manifest(
             spark, path, next_gen, new_buckets,
             shards=new_shards, n_shards=int(new_n_shards),
+            rows=m.get("rows"), schema=m.get("schema"),
         )
         spec["n_shards"] = int(new_n_shards)
         replace_text_file(spark, _spec_path(path), json.dumps(spec))

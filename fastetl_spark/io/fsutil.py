@@ -93,6 +93,50 @@ def read_text_file(spark: SparkSession, path_str: str) -> str | None:
         stream.close()
 
 
+def _parquet_reader(spark: SparkSession, status):
+    """A footer reader over one parquet file (a Hadoop FileStatus)."""
+    conf = spark.sparkContext._jsc.hadoopConfiguration()
+    parquet = spark.sparkContext._jvm.org.apache.parquet.hadoop
+    return parquet.ParquetFileReader.open(
+        parquet.util.HadoopInputFile.fromStatus(status, conf)
+    )
+
+
+def parquet_rows(spark: SparkSession, dir_str: str) -> int:
+    """Row count of a parquet directory from its data files' footers,
+    read on the driver: no Spark job, one footer per file."""
+    fs, path_cls = hadoop_fs(spark, dir_str)
+    n = 0
+    for s in fs.listStatus(path_cls(dir_str)):
+        if s.isDirectory() or s.getPath().getName().startswith(("_", ".")):
+            continue
+        reader = _parquet_reader(spark, s)
+        try:
+            n += reader.getRecordCount()
+        finally:
+            reader.close()
+    return n
+
+
+def parquet_physical_type(spark: SparkSession, glob_str: str, column: str) -> str | None:
+    """Physical type (``INT64``, ``BINARY``, ...) of top-level ``column``
+    in the footer of the first parquet file matching ``glob_str``, read
+    on the driver (Spark's schema inference costs a job). None when no
+    file matches or the column is absent."""
+    fs, path_cls = hadoop_fs(spark, glob_str)
+    files = fs.globStatus(path_cls(glob_str)) or []
+    if not files:
+        return None
+    reader = _parquet_reader(spark, files[0])
+    try:
+        schema = reader.getFooter().getFileMetaData().getSchema()
+    finally:
+        reader.close()
+    if not schema.containsField(column):
+        return None
+    return schema.getType(column).asPrimitiveType().getPrimitiveTypeName().name()
+
+
 _LEFTOVER_SUFFIXES = (
     "__staging__",
     "__old__",

@@ -13,6 +13,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 def select_intersection(df: DataFrame, dest_columns: list[str]) -> DataFrame:
@@ -21,6 +22,27 @@ def select_intersection(df: DataFrame, dest_columns: list[str]) -> DataFrame:
     dest = {c.lower(): c for c in dest_columns}
     keep = [c for c in df.columns if c.lower() in dest]
     return df.select(*keep)
+
+
+def literal_frame(spark, schema: str | StructType, values: tuple | None = None) -> DataFrame:
+    """A one-row frame of ``values`` (zero rows when None) typed by
+    ``schema``, built from JVM literals over a one-partition range.
+
+    ``createDataFrame(list)`` scans a Python RDD, so even a one-row
+    bookkeeping write pays for Python workers; this plan never leaves
+    the JVM. Every column is nullable, as ``createDataFrame`` makes
+    them: a ``CASE`` on the range id stops Catalyst folding the literal
+    into a non-null one, so the written parquet schema is unchanged."""
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    base = spark.range(0, 0 if values is None else 1, 1, 1)
+    values = values if values is not None else (None,) * len(schema.fields)
+    return base.select(
+        *[
+            F.when(F.col("id") == 0, F.lit(v)).cast(f.dataType).alias(f.name)
+            for f, v in zip(schema.fields, values)
+        ]
+    )
 
 
 def write_parquet(df: DataFrame, path: str, mode: str = "overwrite", partition_by: list[str] | None = None) -> None:

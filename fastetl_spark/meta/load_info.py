@@ -3,7 +3,8 @@
 The reference creates a `consumo_dados` table on the destination and
 inserts one row per load (vdb, schema, table, user, load_type,
 timestamp, row count). Here the log is an append-only parquet metrics
-table with the same schema, written as a one-row DataFrame.
+table with the same schema, written as a one-row DataFrame built from
+JVM literals (io/writers.literal_frame).
 """
 
 from __future__ import annotations
@@ -12,6 +13,8 @@ import getpass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from fastetl_spark.io.writers import literal_frame
 
 LOG_SCHEMA = (
     "no_vdb string, no_schema string, no_tabela string, no_usuario string,"
@@ -28,11 +31,12 @@ class LoadInfo:
 
     def save(self, table: str, load_type: str, row_count: int) -> None:
         """One row per load, like LoadInfo.save (load_info.py:82-103)."""
-        row = self.spark.createDataFrame(
-            [(self.vdb, self.schema, table, getpass.getuser(), load_type, row_count)],
+        row = literal_frame(
+            self.spark,
             LOG_SCHEMA,
+            (self.vdb, self.schema, table, getpass.getuser(), load_type, int(row_count)),
         ).withColumn("dt_consumo", F.current_timestamp())
-        row.coalesce(1).write.mode("append").parquet(self.path)
+        row.write.mode("append").parquet(self.path)
 
     def read(self) -> DataFrame:
         return self.spark.read.parquet(self.path)

@@ -28,10 +28,10 @@ all hash to the same bucket.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from fastetl_spark.checkpointing import materialize
+from fastetl_spark.checkpointing import materialize, observed
 from fastetl_spark.io.bucketed import (
     BUCKET_COL,
     DEFAULT_MAX_FILES_PER_BUCKET,
@@ -170,12 +170,15 @@ def _append_index_rows(
     touched bucket, so per-bucket file counts stay bounded forever
     instead of growing by one file per daily increment)."""
     spark = rows.sparkSession
-    tagged = rows.withColumn(BUCKET_COL, bucket_id(keys, n_buckets)).transform(
-        materialize
+    # the touched bucket ids (bounded by n_buckets — a driver value) are
+    # observed on the append write itself: no materialisation, no
+    # distinct().collect() job
+    obs = Observation()
+    tagged = rows.withColumn(BUCKET_COL, bucket_id(keys, n_buckets)).observe(
+        obs, F.collect_set(BUCKET_COL).alias("b")
     )
-    # distinct bucket ids are bounded by n_buckets — a driver value
-    touched = sorted({r[0] for r in tagged.select(BUCKET_COL).distinct().collect()})
     tagged.write.mode("append").partitionBy(BUCKET_COL).parquet(index_path)
+    touched = sorted(observed(obs, {"b": []})["b"])
     if compact_threshold is not None:
         compact_buckets(spark, index_path, touched, max_files=compact_threshold)
 
@@ -330,11 +333,17 @@ def _index_is_portable(spark: SparkSession, index_path: str) -> bool:
     """Variant sniff from the on-disk schema: the portable index stores
     band_hash as a string concat key, the xxhash64 index as a long.
     Keeps append/match parameter-free and makes a variant mismatch
-    (probe hashed one way, index built the other) impossible."""
-    for f in spark.read.parquet(index_path).schema.fields:
-        if f.name == "band_hash":
-            return f.dataType.simpleString() == "string"
-    raise ValueError(f"{index_path} has no band_hash column — not a minhash index")
+    (probe hashed one way, index built the other) impossible. One data
+    file's footer is read on the driver: Spark's schema inference over
+    the index root would cost a job on every match and append."""
+    from fastetl_spark.io.fsutil import parquet_physical_type
+
+    t = parquet_physical_type(
+        spark, f"{index_path.rstrip('/')}/{BUCKET_COL}=*/*.parquet", "band_hash"
+    )
+    if t is None:
+        raise ValueError(f"{index_path} has no band_hash column — not a minhash index")
+    return t == "BINARY"
 
 
 def build_minhash_index(
@@ -398,13 +407,23 @@ def match_minhash_index(
     probe -> candidate ids -> bucket-pruned text fetch -> exact verify.
     """
     portable = _index_is_portable(spark, index_path)
-    inc_bands = _band_rows(increment, shingle_n, portable=portable).select(
-        "band", "band_hash", F.col("doc_id").alias("new_doc")
-    ).transform(materialize)
-    probe_keys = inc_bands.select("band", "band_hash").distinct()
-    hits = read_buckets_for_keys(spark, index_path, probe_keys).select(
-        "band", "band_hash", F.col("doc_id").alias("corpus_doc")
+    spec = read_bucket_spec(spark, index_path)
+    # the probe buckets are observed on the one materialisation of the
+    # increment's band rows instead of a distinct().collect() job
+    obs = Observation()
+    inc_bands = (
+        _band_rows(increment, shingle_n, portable=portable)
+        .select("band", "band_hash", F.col("doc_id").alias("new_doc"))
+        .observe(
+            obs,
+            F.collect_set(bucket_id(spec["keys"], spec["n_buckets"])).alias("b"),
+        )
+        .transform(materialize)
     )
+    probe_keys = inc_bands.select("band", "band_hash").distinct()
+    hits = read_buckets_for_keys(
+        spark, index_path, probe_keys, _touched=observed(obs, {"b": []})["b"]
+    ).select("band", "band_hash", F.col("doc_id").alias("corpus_doc"))
     cands = (
         hits.join(inc_bands, on=["band", "band_hash"])
         .filter(F.col("corpus_doc") != F.col("new_doc"))

@@ -351,7 +351,7 @@ def bpe_first_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # 5 unrolled merges (round 8; was 3): the oracle CTE chain stays
 # manageable and the gate now covers two more genuinely-later merges —
-# tools/bpe_depth_perf.py + PERF.md #38 carry the depth evidence to 64
+# PERF.md #38 carries the depth evidence to 64
 _BPE_LOOP_ITERS = 5
 _BPE_LOOP_TOP = 30
 _BPE_SEP = "\x1f"
@@ -433,8 +433,7 @@ def _bpe_train(
     merge: {"iter", "seconds", "pair", "pair_count"} — the wall of each
     model step. Per-merge cost is VOCABULARY-sized (distinct words, not
     corpus rows), so the walls should stay flat as the merge count
-    grows; tools/bpe_depth_perf.py records the 64-merge profile in
-    PERF.md."""
+    grows; PERF.md #38 records the 64-merge profile."""
     import time
 
     from fastetl_spark.checkpointing import materialize

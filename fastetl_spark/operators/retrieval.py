@@ -331,9 +331,9 @@ def zipf_maxdf_evidence(
     reps: int = 2,
     k: int = 10,
 ) -> dict:
-    """The max_df evidence harness shared by the bench guard and
-    tools/bm25_zipf_perf.py (one implementation — the release gate and
-    the evidence tool can never disagree about the same claim): build
+    """The max_df evidence harness behind the bench guard and PERF.md
+    #41 (one implementation — the release gate and the recorded
+    evidence can never disagree about the same claim): build
     the Zipf corpus + workload, time the capped and uncapped runs
     (best of ``reps``), count scored pairs (k=inf row counts), and
     bit-compare every query containing no capped term. Returns
@@ -383,11 +383,10 @@ def zipf_maxdf_evidence(
     bit_equal = t_rows == c_rows and len(t_rows) > 0
     # correctness (tail bit-equality — a violation is ALWAYS a bug) and
     # prune strength (>5x pairs — a property of the chosen
-    # n_docs/vocab/cap combo) are SEPARATE claims: CLI-chosen combos in
-    # tools/bm25_zipf_perf.py can legitimately prune less than 5x, and
-    # that must not read as a correctness failure. The bench guard runs
-    # a pinned combo where both are expected, so its `ok` stays the
-    # conjunction.
+    # n_docs/vocab/cap combo) are SEPARATE claims: other combos can
+    # legitimately prune less than 5x, and that must not read as a
+    # correctness failure. The bench guard runs a pinned combo where
+    # both are expected, so its `ok` stays the conjunction.
     ok_prune = pairs["capped"] * 5 < pairs["uncapped"]
     return {
         "uncapped_sec": walls["uncapped"],

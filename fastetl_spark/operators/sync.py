@@ -112,9 +112,12 @@ class WatermarkStore:
     def set(self, table: str, value) -> None:
         import time
 
-        row = self.spark.createDataFrame(
-            [(table, str(value), _watermark_type(value), time.time_ns())],
+        from fastetl_spark.io.writers import literal_frame
+
+        row = literal_frame(
+            self.spark,
             "table_name string, watermark_value string, value_type string, seq long",
+            (table, str(value), _watermark_type(value), time.time_ns()),
         ).withColumn("updated_at", F.current_timestamp())
         row.write.mode("append").parquet(self.path)
 

@@ -212,7 +212,7 @@ def test_bpe_train_depth_monotone(spark):
     with pairs left, and the total corpus token count contracts
     monotonically with depth (each merge replaces >= 1 two-token
     occurrence with one token). Per-merge walls stay flat out to 64
-    merges — tools/bpe_depth_perf.py / PERF.md #38."""
+    merges — PERF.md #38."""
     from fastetl_spark.io.readers import ensure_parallelism, read_table
     from fastetl_spark.operators.features import _bpe_train
 
