@@ -52,11 +52,7 @@ def main(sf_dir: str, work: str) -> None:
     from fastetl_spark.io.bucketed import partial_merge, read_bucketed, write_bucketed
 
     write_bucketed(
-        cleaned.select("o_orderkey", "o_custkey", "o_totalprice"),
-        dest,
-        ["o_orderkey"],
-        8,
-        atomic=True,
+        cleaned.select("o_orderkey", "o_custkey", "o_totalprice"), dest, ["o_orderkey"], 8
     )
     increment = cleaned.select("o_orderkey", "o_custkey", "o_totalprice").filter(
         F.col("o_orderkey") % 10 == 0

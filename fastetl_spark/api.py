@@ -181,7 +181,7 @@ class Engine:
                     else src_df.filter(F.col(watermark_col) > F.lit(wm))
                 )
                 # the new watermark rides on the merge's materialisation
-                # of the increment (v1 and v2 alike): no second pass
+                # of the increment: no second pass
                 wm_obs = Observation()
                 inc = inc.observe(wm_obs, F.max(watermark_col).alias("wm"))
                 merge = partial_merge(self.spark, dest["path"], inc, deleted_keys)
@@ -189,11 +189,7 @@ class Engine:
                     new_wm = observed(wm_obs, {"wm": None})["wm"]
                     if new_wm is not None:
                         self.watermark_store.set(table_name or dest["path"], new_wm)
-                # total rows: the v2 manifest's recorded count; on v1,
-                # parquet footers only — no data scan
-                n = merge["rows"]
-                if n is None:
-                    n = read_bucketed(self.spark, dest["path"]).count()
+                n = merge["rows"]  # from the manifest: no count job
                 if self.load_info:
                     self.load_info.save(
                         table_name or dest.get("path", ""), "incremental", n
@@ -410,17 +406,23 @@ class Engine:
         zorder_write(df, path, cols, n_files=n_files)
 
     def bucketize(
-        self, path: str, keys: list[str], n_buckets: int, atomic: bool = False
+        self, path: str, keys: list[str], n_buckets: int, atomic: bool = True
     ) -> None:
         """Migrate a plain-parquet destination to the key-bucketed
         layout (io/bucketed) so subsequent `sync` calls rewrite only the
         buckets each increment touches instead of the whole destination.
-        ``atomic=True`` selects layout v2: every merge publishes all its
-        touched buckets with one manifest pointer flip, so readers never
-        see a cross-bucket mix (read via `io.bucketed.read_bucketed`)."""
+        Every merge publishes all its touched buckets with one manifest
+        pointer flip, so readers never see a cross-bucket mix (read via
+        `io.bucketed.read_bucketed`). ``atomic`` is kept for existing
+        callers: the manifest layout is the only one, and False raises."""
         from fastetl_spark.io.bucketed import bucketize
 
-        bucketize(self.spark, path, keys, n_buckets, atomic=atomic)
+        if not atomic:
+            raise ValueError(
+                "bucketize writes the manifest (atomic) layout only; "
+                "atomic=False is not supported"
+            )
+        bucketize(self.spark, path, keys, n_buckets)
 
     def ingest_new_files(self, src_dir: str, dest_path: str,
                          manifest_path: str) -> list[str]:
@@ -469,16 +471,6 @@ class Engine:
 
         append_to_ivf_index(new_vecs, index_path)
 
-    def rollback(self, path: str, to_gen: int | None = None) -> int:
-        """Undo a merge on an atomic (v2) bucketed destination: commit a
-        new manifest pointing at an earlier generation's bucket dirs —
-        an atomic pointer flip, the plain-parquet twin of Delta RESTORE.
-        Defaults to the generation before the current one; returns the
-        new generation number (io/bucketed.rollback_bucketed)."""
-        from fastetl_spark.io.bucketed import rollback_bucketed
-
-        return rollback_bucketed(self.spark, path, to_gen)
-
     def generations(self, path: str) -> list[int]:
         """Committed manifest generations of a v2 bucketed destination
         (ascending); the ones inside the GC retention window can be
@@ -495,26 +487,6 @@ class Engine:
         from fastetl_spark.io.bucketed import read_bucketed_at
 
         return read_bucketed_at(self.spark, path, gen)
-
-    def reshard(self, path: str, new_n_shards: int) -> dict:
-        """Online reshard of a v2 bucketed destination's rendezvous
-        shard layer (io/bucketed.reshard_bucketed, gated by the
-        `rendezvous_reshard_roundtrip` query): only the ~1/new_n of
-        buckets whose HRW owner changes are physically moved into the
-        new generation; the placement map rides on the manifest.
-        Returns the move stats ({gen, buckets_moved, rows_moved,
-        rows_total, ...})."""
-        from fastetl_spark.io.bucketed import reshard_bucketed
-
-        return reshard_bucketed(self.spark, path, new_n_shards)
-
-    def read_shard(self, path: str, shard: int) -> DataFrame:
-        """One shard's rows of a sharded v2 bucketed destination — the
-        per-worker view of a sharded stateful consumer
-        (io/bucketed.read_shard)."""
-        from fastetl_spark.io.bucketed import read_shard
-
-        return read_shard(self.spark, path, shard)
 
     def vacuum(self, path: str, keep_commit_markers: int = 1000) -> dict:
         """Maintenance sweep of a swap-published destination: drop

@@ -8,39 +8,41 @@ avoids that by doing UPDATE/INSERT inside the destination database
 file-level pruning. This module is the plain-parquet equivalent:
 
 - the destination is laid out as N independent hash-buckets of the
-  merge key (``path/__fe_bucket=K/`` Hive-style subdirectories, one
-  parquet directory each, plus a ``_bucket_spec.json`` control file);
+  merge key, one parquet directory each, plus a ``_bucket_spec.json``
+  control file;
 - a merge computes the increment's touched bucket set (≤ N small ints
   — a bounded, documented driver value, not a data collect), reads
-  ONLY those buckets, merges, and atomically swaps each touched bucket
-  directory;
+  ONLY those buckets, merges, and publishes them;
 - untouched buckets are never opened, so merge cost is
   O(|increment| + |touched buckets|), and a point increment into a
   4096-bucket 100 TB destination rewrites ~25 GB, not 100 TB.
 
-Crash semantics, layout v1 (default): each bucket swap is atomic
-(backup-and-rename), the set of swaps is not one transaction — a crash
-mid-publish leaves some buckets at the new version and some at the
-old. The merge is idempotent by construction (upsert keyed on the
-merge key; deletes are anti-joins), so recovery is "re-run the same
-increment": every bucket converges to the same state.
+Every merge destination has one layout, the manifest layout (spec
+version 2, ``write_bucketed``): bucket data lives in versioned
+``bucket_<K>_v<gen>`` dirs, and a rename-committed
+``_manifest_<gen>.json`` is the single pointer that publishes a
+generation. A merge writes all touched buckets' new dirs first
+(unreferenced, invisible), then flips the pointer once — readers
+racing the merge resolve one committed generation, old or new, never a
+mix; a crash before the commit leaves the old generation fully intact,
+and re-running the same increment converges. The previous generation's
+dirs are retained for in-flight readers and GC'd a generation later.
+The manifest also records each bucket's row count and the data schema,
+so a count or a read needs no Spark job. The trade: the root is not
+raw-readable with ``spark.read.parquet(path)`` — go through
+``read_bucketed``. The Delta-backed path (operators/delta_merge)
+remains the choice where delta is installed.
 
-Layout v2 (``write_bucketed(..., atomic=True)``) closes that window
-for plain parquet: bucket data lives in versioned ``bucket_<K>_v<gen>``
-dirs, and a rename-committed ``_manifest_<gen>.json`` is the single
-pointer that publishes a generation. A merge writes all touched
-buckets' new dirs first (unreferenced, invisible), then flips the
-pointer once — readers racing the merge resolve one committed
-generation, old or new, never a mix; a crash before the commit leaves
-the old generation fully intact. The previous generation's dirs are
-retained for in-flight readers and GC'd a generation later. The
-trade: v2 roots are not raw-readable with ``spark.read.parquet(path)``
-— go through ``read_bucketed``. The Delta-backed path
-(operators/delta_merge) remains the choice where delta is installed.
+The append-only indexes (operators/dedup_index, the IVF-PQ
+``vectors/`` of operators/ann_index) keep the Hive layout (spec version
+1, ``_write_hive_bucketed``): ``path/__fe_bucket=K/`` subdirectories
+that appends add files to in place and ``compact_buckets`` coalesces.
+That layout stays raw-readable: ``spark.read.parquet(path)`` discovers
+the bucket column as a Hive partition (``read_bucketed`` drops it).
+``partial_merge`` rejects it; ``bucketize`` migrates such a root to the
+manifest layout once.
 
-Reads stay one-call: ``spark.read.parquet(path)`` discovers the bucket
-column as a normal Hive partition (``read_bucketed`` drops it). The
-bucket id is ``pmod(hash(keys), n_buckets)`` — Spark's Murmur3, the
+The bucket id is ``pmod(hash(keys), n_buckets)`` — Spark's Murmur3, the
 same function Spark's managed bucketing uses. Note the limit: a plain
 parquet scan cannot REPORT that partitioning to Catalyst (only
 saveAsTable bucketing or a JVM DataSource V2 can), so a join of two
@@ -75,10 +77,11 @@ from fastetl_spark.io.writers import literal_frame
 
 BUCKET_COL = "__fe_bucket"
 SPEC_FILE = "_bucket_spec.json"
-SPEC_VERSION = 1
-# Layout v2: versioned bucket dirs + a rename-committed manifest pointer
-# (cross-bucket ATOMIC publish — readers see one generation, never a mix)
-SPEC_VERSION_ATOMIC = 2
+# Hive layout: the append-only indexes (``__fe_bucket=K/`` dirs)
+HIVE_VERSION = 1
+# Manifest layout: every merge destination (versioned bucket dirs + a
+# rename-committed manifest pointer; readers see one generation)
+MANIFEST_VERSION = 2
 MANIFEST_PREFIX = "_manifest_"
 
 
@@ -99,12 +102,12 @@ def read_bucket_spec(spark: SparkSession, path: str) -> dict | None:
     if text is None:
         return None
     spec = json.loads(text)
-    if spec.get("version") not in (SPEC_VERSION, SPEC_VERSION_ATOMIC):
+    if spec.get("version") not in (HIVE_VERSION, MANIFEST_VERSION):
         raise ValueError(f"unsupported bucket spec version: {spec.get('version')}")
     return spec
 
 
-# --- layout v2: manifest-committed generations ---------------------------
+# --- manifest layout (v2): committed generations ---------------------------
 
 
 def _manifest_gens(fs, path_cls, base: str) -> list[int]:
@@ -131,7 +134,7 @@ def read_manifest(spark: SparkSession, path: str) -> dict | None:
     row count} of the live dirs, from their parquet footers) and
     ``schema`` (the data schema as Spark JSON), so a row count or a
     read of the live dirs needs no Spark job; older manifests lack both
-    keys and readers fall back to counting and to schema inference."""
+    keys and readers fall back to the footers and to schema inference."""
     fs, path_cls = hadoop_fs(spark, path)
     gens = _manifest_gens(fs, path_cls, path.rstrip("/"))
     if not gens:
@@ -211,84 +214,54 @@ def write_bucketed(
     path: str,
     keys: list[str],
     n_buckets: int,
-    atomic: bool = False,
-    one_file_per_bucket: bool = False,
     keep_gens: int = 2,
     n_shards: int | None = None,
 ) -> None:
-    """Initial full load of a bucketed destination: write all N buckets
-    (one shuffle-free partitionBy job) and commit the spec file last, so
-    a half-written initial load is never mistaken for a valid bucketed
-    destination.
-
-    ``atomic=True`` selects layout v2: bucket data lives in versioned
+    """Initial full load of a bucketed merge destination, in the
+    manifest layout: bucket data lands in versioned
     ``bucket_<K>_v<gen>`` dirs and a rename-committed manifest file is
     the single pointer that publishes a generation. Merges then flip
     ALL touched buckets in one pointer commit — a reader racing a merge
-    sees the old generation or the new one, never a mix (v1's
-    per-bucket swaps are each atomic but not jointly). v2 trades away
-    raw ``spark.read.parquet(path)`` root reads — go through
-    ``read_bucketed`` — so v1 stays the default.
+    sees the old generation or the new one, never a mix. Read it with
+    ``read_bucketed``, not a raw ``spark.read.parquet(path)``. The spec
+    file is committed last, so a half-written initial load is never
+    mistaken for a valid bucketed destination.
 
-    ``one_file_per_bucket=True`` adds a repartition on the bucket id
-    before the write, so each bucket lands as one file instead of one
-    per upstream task (up to shuffle_partitions files per bucket).
-    Right for append-maintained destinations (the persistent dedup
-    indexes): a clean baseline means the append auto-compaction
-    threshold tracks genuine growth, not initial-load fragmentation.
-    Leave False for very large initial loads where a 10-50 GB bucket
-    should not funnel through a single write task.
+    Rows are distributed by bucket before the write (``_write_by_bucket``):
+    one file per bucket, more only where AQE splits an oversized one.
 
-    ``keep_gens`` (v2 only, recorded in the spec) is the GC retention
-    window: merge-time GC keeps the newest N generations' manifests and
-    dirs. 2 = current + previous (enough for in-flight readers and a
-    one-step ``rollback_bucketed``); raise it on destinations that need
-    deeper undo/time-travel, at the cost of retaining old bucket dirs.
+    ``keep_gens`` (recorded in the spec) is the GC retention window:
+    merge-time GC keeps the newest N generations' manifests and dirs.
+    2 = current + previous (enough for in-flight readers and a one-step
+    ``rollback_bucketed``); raise it on destinations that need deeper
+    undo/time-travel, at the cost of retaining old bucket dirs.
 
-    ``n_shards`` (v2 only) adds the rendezvous shard layer: every bucket
-    is assigned to a shard via HRW hashing (``_hrw_shard``) and the
+    ``n_shards`` adds the rendezvous shard layer: every bucket is
+    assigned to a shard via HRW hashing (``_hrw_shard``) and the
     placement map rides on each manifest. Shards are the PLACEMENT
     unit (which storage node / stateful worker owns which buckets);
     buckets stay the merge-I/O unit. ``reshard_bucketed`` grows or
     shrinks the shard count while moving only the ~1/N of rows whose
     HRW assignment changes."""
-    if n_shards is not None and not atomic:
-        raise ValueError(
-            "n_shards requires the atomic (v2) layout — the shard map "
-            "rides on manifests (write_bucketed(..., atomic=True))"
-        )
     if n_shards is not None and n_shards < 1:
         raise ValueError(f"n_shards must be >= 1, got {n_shards}")
     spark = df.sparkSession
-    out = df.withColumn(BUCKET_COL, bucket_id(keys, n_buckets))
-    if one_file_per_bucket:
-        out = out.repartition(n_buckets, F.col(BUCKET_COL))
-    if not atomic:
-        out.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(path)
-        write_text_file(
-            spark,
-            _spec_path(path),
-            json.dumps(
-                {"version": SPEC_VERSION, "keys": list(keys), "n_buckets": int(n_buckets)}
-            ),
-        )
-        return
     fs, path_cls = hadoop_fs(spark, path)
     base = path.rstrip("/")
     staging = base + ".__init_staging__"
     if fs.exists(path_cls(staging)):
         fs.delete(path_cls(staging), True)
-    out.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(staging)
+    _write_by_bucket(df.withColumn(BUCKET_COL, bucket_id(keys, n_buckets)), staging)
     gen = 1
     buckets: dict[int, str] = {}
     rows: dict[int, int] = {}
-    for s in hadoop_fs(spark, staging)[0].listStatus(path_cls(staging)):
+    fs.mkdirs(path_cls(base))
+    for s in fs.listStatus(path_cls(staging)):
         name = s.getPath().getName()
         if not (s.isDirectory() and name.startswith(f"{BUCKET_COL}=")):
             continue
         b = int(name.split("=", 1)[1])
         dirname = f"bucket_{b}_v{gen}"
-        fs.mkdirs(path_cls(base))
         if not fs.rename(s.getPath(), path_cls(f"{base}/{dirname}")):
             raise IOError(f"could not place {dirname} under {base}")
         buckets[b] = dirname
@@ -309,7 +282,7 @@ def write_bucketed(
         rows=rows, schema=df.schema.jsonValue(),
     )
     spec: dict = {
-        "version": SPEC_VERSION_ATOMIC,
+        "version": MANIFEST_VERSION,
         "keys": list(keys),
         "n_buckets": int(n_buckets),
         "keep_gens": int(keep_gens),
@@ -317,6 +290,18 @@ def write_bucketed(
     if n_shards is not None:
         spec["n_shards"] = int(n_shards)
     write_text_file(spark, _spec_path(path), json.dumps(spec))
+
+
+def _write_hive_bucketed(
+    df: DataFrame, path: str, keys: list[str], n_buckets: int
+) -> None:
+    """Initial load of an append-only index in the Hive layout:
+    ``path/__fe_bucket=K/`` dirs (one file each, ``_write_by_bucket``)
+    that appends add files to in place, then the spec file (version 1),
+    committed last. Merge destinations use ``write_bucketed``."""
+    _write_by_bucket(df.withColumn(BUCKET_COL, bucket_id(keys, n_buckets)), path)
+    spec = {"version": HIVE_VERSION, "keys": list(keys), "n_buckets": int(n_buckets)}
+    write_text_file(df.sparkSession, _spec_path(path), json.dumps(spec))
 
 
 def _read_dirs(spark: SparkSession, m: dict, dirs: list[str]) -> DataFrame:
@@ -330,25 +315,26 @@ def _read_dirs(spark: SparkSession, m: dict, dirs: list[str]) -> DataFrame:
 
 def read_bucketed(spark: SparkSession, path: str) -> DataFrame:
     """Read a bucketed destination as plain rows (bucket column dropped).
-    v2 resolves the latest committed manifest — one consistent
-    generation, even while a merge publishes. Filters on the merge key
+    A manifest-layout root resolves its latest committed manifest — one
+    consistent generation, even while a merge publishes; a Hive-layout
+    index root is a raw read. Filters on the merge key
     do NOT prune buckets automatically (the hash is opaque to
     Catalyst); use ``read_buckets_for_keys`` for point lookups."""
     spec = read_bucket_spec(spark, path)
     # The manifest, not the spec, decides whether this is a v2 root: a
     # crash (or the atomic spec swap's delete/rename window) can leave
     # the spec briefly ABSENT while manifests exist — falling through to
-    # the raw v1 read would then scan EVERY retained generation's bucket
+    # the raw Hive read would then scan EVERY retained generation's bucket
     # dirs and silently return duplicated rows.
     m = (
         read_manifest(spark, path)
-        if spec is None or spec["version"] == SPEC_VERSION_ATOMIC
+        if spec is None or spec["version"] == MANIFEST_VERSION
         else None
     )
     if m is not None:
         base = path.rstrip("/")
         return _read_dirs(spark, m, [f"{base}/{d}" for d in m["buckets"].values()])
-    if spec is not None and spec["version"] == SPEC_VERSION_ATOMIC:
+    if spec is not None and spec["version"] == MANIFEST_VERSION:
         raise IOError(
             f"{path} has a v2 bucket spec but no committed manifest — "
             "the destination was never published or is corrupt"
@@ -358,7 +344,7 @@ def read_bucketed(spark: SparkSession, path: str) -> DataFrame:
 
 def list_generations(spark: SparkSession, path: str) -> list[int]:
     """Committed manifest generations of a v2 destination, ascending.
-    Empty for v1 destinations (no manifests)."""
+    Empty for a Hive-layout index (no manifests)."""
     fs, path_cls = hadoop_fs(spark, path)
     return _manifest_gens(fs, path_cls, path.rstrip("/"))
 
@@ -414,10 +400,10 @@ def rollback_bucketed(spark: SparkSession, path: str, to_gen: int | None = None)
     holds the destination lock. This is the plain-parquet twin of Delta's
     RESTORE; with delta installed, prefer the transactional path."""
     spec = read_bucket_spec(spark, path)
-    if spec is None or spec["version"] != SPEC_VERSION_ATOMIC:
+    if spec is None or spec["version"] != MANIFEST_VERSION:
         raise ValueError(
-            f"{path} is not an atomic (v2) bucketed destination — rollback "
-            "needs the manifest-committed layout (write_bucketed(..., atomic=True))"
+            f"{path} is not a manifest-layout (v2) bucketed destination — "
+            "rollback needs committed generations (write_bucketed)"
         )
     fs, path_cls = hadoop_fs(spark, path)
     lock = path_cls(path.rstrip("/") + ".__merge_lock__")
@@ -471,7 +457,7 @@ def read_buckets_for_keys(
         tagged = keys_df.withColumn(BUCKET_COL, bucket_id(keys, spec["n_buckets"]))
         _touched = {r[0] for r in tagged.select(BUCKET_COL).distinct().collect()}
     touched = sorted(_touched)
-    if spec["version"] == SPEC_VERSION_ATOMIC:
+    if spec["version"] == MANIFEST_VERSION:
         m = read_manifest(spark, path)
         base = path.rstrip("/")
         dirs = [f"{base}/{m['buckets'][b]}" for b in touched if b in m["buckets"]]
@@ -479,6 +465,7 @@ def read_buckets_for_keys(
             return read_bucketed(spark, path).limit(0)
         dest = _read_dirs(spark, m, dirs)
         return dest.join(keys_df.select(*keys), on=keys, how="left_semi")
+    # Hive-layout index root: the bucket dirs that exist
     existing = _existing_bucket_paths(spark, path, touched)
     if not existing:
         return read_bucketed(spark, path).limit(0)
@@ -535,6 +522,15 @@ def _write_by_bucket(df: DataFrame, path: str) -> None:
     ).parquet(path)
 
 
+def _live_rows(spark: SparkSession, base: str, m: dict) -> dict[int, int]:
+    """Row count per live bucket of manifest ``m``: the recorded
+    ``rows``, or the live dirs' parquet footers (read on the driver, no
+    job) for a manifest that predates them."""
+    if "rows" in m:
+        return dict(m["rows"])
+    return {b: parquet_rows(spark, f"{base}/{d}") for b, d in m["buckets"].items()}
+
+
 def partial_merge(
     spark: SparkSession,
     path: str,
@@ -549,22 +545,39 @@ def partial_merge(
     deletions match delete_sync (anti-join retain). The increment must
     be key-unique (callers dedupe, as the streaming merge already does).
 
+    The touched buckets' NEW versions are written as fresh
+    ``bucket_<K>_v<gen+1>`` dirs (invisible — nothing references them),
+    then every touched bucket is published at once with ONE manifest
+    rename-commit. A crash before the commit leaves the destination
+    exactly at the old generation (orphan dirs are overwritten by the
+    re-run and collected by generation GC); a crash after the commit IS
+    the new state.
+
     Returns ``{"n_buckets": N, "buckets_touched": t, "rows_written": w,
-    "rows": r}``, where ``r`` is the destination's row count after the
-    merge (v2 layout; None on v1, whose count needs a scan).
+    "rows": r}``: ``w`` is the row count of the rewritten buckets and
+    ``r`` the destination's row count after the merge, both from the
+    manifest and the new dirs' parquet footers — no count job.
+
+    Only manifest-layout roots merge; a Hive-layout root (spec version
+    1) raises ``ValueError`` — migrate it once with ``bucketize``.
 
     Concurrency: a lock file (``<path>.__merge_lock__``, atomic create)
     rejects a second merge on the same destination — two merges would
-    fight over one staging directory and interleave bucket swaps. A
-    crash leaves the lock behind; clear it with
-    ``io.fsutil.vacuum_dest`` (or delete the file) once no merge runs.
+    fight over one staging directory and one next generation. A crash
+    leaves the lock behind; clear it with ``io.fsutil.vacuum_dest`` (or
+    delete the file) once no merge runs.
     """
     spec = read_bucket_spec(spark, path)
     if spec is None:
         raise ValueError(
             f"{path} has no {SPEC_FILE}; initialize with write_bucketed() first"
         )
-    keys, n_buckets = spec["keys"], spec["n_buckets"]
+    if spec["version"] != MANIFEST_VERSION:
+        raise ValueError(
+            f"{path} is in the Hive bucket layout (spec version "
+            f"{spec['version']}), which partial_merge does not merge; migrate "
+            "it once with bucketize(spark, path, keys, n_buckets)"
+        )
 
     lock_fs, lock_path_cls = hadoop_fs(spark, path)
     lock = lock_path_cls(path.rstrip("/") + ".__merge_lock__")
@@ -575,54 +588,41 @@ def partial_merge(
             "with io.fsutil.vacuum_dest)"
         )
     try:
-        if spec["version"] == SPEC_VERSION_ATOMIC:
-            return _partial_merge_locked_v2(
-                spark, path, increment, deleted_keys, keys, n_buckets
-            )
-        return _partial_merge_locked(
-            spark, path, increment, deleted_keys, keys, n_buckets
-        )
+        return _merge_locked(spark, path, spec, increment, deleted_keys)
     finally:
         lock_fs.delete(lock, False)
 
 
-def _partial_merge_locked_v2(
+def _merge_locked(
     spark: SparkSession,
     path: str,
+    spec: dict,
     increment: DataFrame,
     deleted_keys: DataFrame | None,
-    keys: list[str],
-    n_buckets: int,
 ) -> dict:
-    """v2 merge: write the touched buckets' NEW versions as fresh
-    ``bucket_<K>_v<gen+1>`` dirs (invisible — nothing references them),
-    then publish every touched bucket at once with ONE manifest
-    rename-commit. A crash before the commit leaves the destination
-    exactly at the old generation (orphan dirs are overwritten by the
-    re-run and collected by generation GC); a crash after the commit IS
-    the new state. Readers racing the merge resolve one committed
-    manifest — old or new, never mixed.
+    """The body of ``partial_merge``, run under its lock.
 
     Row counts per bucket come from the new dirs' footers and, for
-    untouched buckets, from the old manifest (read from their footers
-    once when it has no ``rows``). Not from observations: the merge
-    plan's joins sit above the scans, and AQE drops a subtree it finds
-    empty together with its observations."""
+    untouched buckets, from the old manifest. Not from observations:
+    the merge plan's joins sit above the scans, and AQE drops a subtree
+    it finds empty together with its observations."""
     from fastetl_spark.operators.sync import delete_sync, merge_upsert
 
+    keys, n_buckets = spec["keys"], spec["n_buckets"]
     m = read_manifest(spark, path)
     gen, old_buckets = m["gen"], dict(m["buckets"])
     next_gen = gen + 1
     base = path.rstrip("/")
     fs, path_cls = hadoop_fs(spark, path)
 
+    rows = _live_rows(spark, base, m)
     inc, dels, touched_ids = _tag_touched(increment, deleted_keys, keys, n_buckets)
     if not touched_ids:
         return {
             "n_buckets": n_buckets,
             "buckets_touched": 0,
             "rows_written": 0,
-            "rows": sum(m["rows"].values()) if "rows" in m else None,
+            "rows": sum(rows.values()),
         }
 
     live_touched = [f"{base}/{old_buckets[b]}" for b in touched_ids if b in old_buckets]
@@ -640,10 +640,7 @@ def _partial_merge_locked_v2(
     _write_by_bucket(merged.withColumn(BUCKET_COL, bucket_id(keys, n_buckets)), staging)
 
     new_buckets = {b: d for b, d in old_buckets.items() if b not in touched_ids}
-    rows = {
-        b: m["rows"][b] if "rows" in m else parquet_rows(spark, f"{base}/{d}")
-        for b, d in new_buckets.items()
-    }
+    rows = {b: n for b, n in rows.items() if b in new_buckets}
     for b in touched_ids:
         src = path_cls(f"{staging}/{BUCKET_COL}={b}")
         if not fs.exists(src):
@@ -668,7 +665,6 @@ def _partial_merge_locked_v2(
         spark, path, next_gen, new_buckets, shards=m.get("shards"),
         rows=rows, schema=merged.schema.jsonValue(),
     )
-    spec = read_bucket_spec(spark, path) or {}
     _gc_generations(spark, path, keep_gens=int(spec.get("keep_gens", 2)))
     return {
         "n_buckets": n_buckets,
@@ -678,79 +674,15 @@ def _partial_merge_locked_v2(
     }
 
 
-def _partial_merge_locked(
-    spark: SparkSession,
-    path: str,
-    increment: DataFrame,
-    deleted_keys: DataFrame | None,
-    keys: list[str],
-    n_buckets: int,
-) -> dict:
-    from fastetl_spark.operators.sync import delete_sync, merge_upsert
-
-    inc, dels, touched_ids = _tag_touched(increment, deleted_keys, keys, n_buckets)
-    if not touched_ids:
-        return {"n_buckets": n_buckets, "buckets_touched": 0, "rows_written": 0, "rows": None}
-
-    existing = _existing_bucket_paths(spark, path, touched_ids)
-    if existing:
-        dest = spark.read.option("basePath", path).parquet(*existing)
-        merged = merge_upsert(dest, inc.select(*dest.columns), keys)
-    else:
-        merged = inc
-    if dels is not None:
-        merged = delete_sync(merged, dels.select(*keys), keys)
-
-    staging = path.rstrip("/") + ".__merge_staging__"
-    fs, path_cls = hadoop_fs(spark, path)
-    if fs.exists(path_cls(staging)):
-        fs.delete(path_cls(staging), True)
-    # row-count metric rides on the write itself (observe) — no second
-    # job, and it stays correct when a delete empties every touched
-    # bucket (an empty staging dir cannot be read back for a count)
-    # right under the write's exchange, the observation is dropped by
-    # AQE only when no row reaches the write, so 0 is then exact
-    obs = Observation()
-    merged = merged.observe(obs, F.count(F.lit(1)).alias("n_rows"))
-    _write_by_bucket(merged, staging)
-    rows_written = int(observed(obs, {"n_rows": 0})["n_rows"])
-
-    for b in touched_ids:
-        src = f"{staging}/{BUCKET_COL}={b}"
-        dst = f"{path.rstrip('/')}/{BUCKET_COL}={b}"
-        if fs.exists(path_cls(src)):
-            replace_dir(fs, path_cls, src, dst)
-        elif fs.exists(path_cls(dst)):
-            # every row of this bucket was deleted: the bucket dir goes away
-            fs.delete(path_cls(dst), True)
-    fs.delete(path_cls(staging), True)
-    # a delete can empty the WHOLE destination; plain parquet cannot
-    # express "zero rows, known schema" without a file, so keep one
-    # schema-bearing empty file in bucket 0 — reads stay one-call
-    remaining = [
-        s
-        for s in fs.listStatus(path_cls(path.rstrip("/")))
-        if s.isDirectory() and s.getPath().getName().startswith(f"{BUCKET_COL}=")
-    ]
-    if not remaining:
-        empty = literal_frame(spark, merged.drop(BUCKET_COL).schema)
-        empty.write.mode("overwrite").parquet(f"{path.rstrip('/')}/{BUCKET_COL}=0")
-    return {
-        "n_buckets": n_buckets,
-        "buckets_touched": len(touched_ids),
-        "rows_written": int(rows_written),
-        "rows": None,
-    }
-
-
 DEFAULT_MAX_FILES_PER_BUCKET = 16
 
 
 def bucket_file_counts(
     spark: SparkSession, path: str, bucket_ids: list[int] | None = None
 ) -> dict[int, int]:
-    """Data-file count per bucket directory (Hadoop listStatus — pure
-    metadata, no data read). ``bucket_ids=None`` lists every bucket."""
+    """Data-file count per bucket directory of a Hive-layout index
+    (Hadoop listStatus — pure metadata, no data read).
+    ``bucket_ids=None`` lists every bucket."""
     fs, path_cls = hadoop_fs(spark, path)
     base = path.rstrip("/")
     if bucket_ids is None:
@@ -780,8 +712,8 @@ def compact_buckets(
     max_files: int = DEFAULT_MAX_FILES_PER_BUCKET,
     target_rows_per_file: int = 1_000_000,
 ) -> dict[int, int]:
-    """Per-bucket small-file compaction for append-maintained bucketed
-    destinations (the persistent dedup indexes append a few files per
+    """Per-bucket small-file compaction for the append-maintained
+    Hive-layout indexes (the persistent dedup indexes append a few files per
     increment forever — without this, a year of daily batches turns the
     "read only touched buckets" win into a file-count-overhead loss).
 
@@ -873,7 +805,7 @@ def shard_map(spark: SparkSession, path: str) -> dict[int, int]:
     if m is None or "shards" not in m:
         raise ValueError(
             f"{path} has no shard layer — create with "
-            "write_bucketed(..., atomic=True, n_shards=N) or run "
+            "write_bucketed(..., n_shards=N) or run "
             "reshard_bucketed once to initialize placement"
         )
     return m["shards"]
@@ -891,7 +823,7 @@ def read_shard(spark: SparkSession, path: str, shard: int) -> DataFrame:
     if m is None or "shards" not in m:
         raise ValueError(
             f"{path} has no shard layer — create with "
-            "write_bucketed(..., atomic=True, n_shards=N) or run "
+            "write_bucketed(..., n_shards=N) or run "
             "reshard_bucketed once to initialize placement"
         )
     shards = m["shards"]
@@ -933,11 +865,10 @@ def reshard_bucketed(
     Returns {"gen", "old_n_shards", "new_n_shards", "n_buckets",
     "buckets_moved", "rows_moved", "rows_total"}."""
     spec = read_bucket_spec(spark, path)
-    if spec is None or spec["version"] != SPEC_VERSION_ATOMIC:
+    if spec is None or spec["version"] != MANIFEST_VERSION:
         raise ValueError(
-            f"{path} is not an atomic (v2) bucketed destination — the "
-            "shard layer needs manifest-committed generations "
-            "(write_bucketed(..., atomic=True))"
+            f"{path} is not a manifest-layout (v2) bucketed destination — "
+            "the shard layer needs committed generations (write_bucketed)"
         )
     if new_n_shards < 1:
         raise ValueError(f"new_n_shards must be >= 1, got {new_n_shards}")
@@ -969,28 +900,20 @@ def reshard_bucketed(
         )
         next_gen = m["gen"] + 1
         new_buckets = dict(m["buckets"])
-        rows_moved = 0
+        rows = _live_rows(spark, base, m)
         for b in moved:
-            src = f"{base}/{m['buckets'][b]}"
             dirname = f"bucket_{b}_v{next_gen}"
             dst = f"{base}/{dirname}"
             dst_p = path_cls(dst)
             if fs.exists(dst_p):  # orphan from a crashed previous attempt
                 fs.delete(dst_p, True)
-            df = spark.read.parquet(src)
-            rows_moved += df.count()  # parquet footer metadata only
-            df.write.mode("overwrite").parquet(dst)
+            src = f"{base}/{m['buckets'][b]}"
+            _read_dirs(spark, m, [src]).write.mode("overwrite").parquet(dst)
             new_buckets[b] = dirname
-        if "rows" in m:
-            rows_total = sum(m["rows"].values())
-        else:
-            rows_total = _read_dirs(
-                spark, m, [f"{base}/{d}" for d in m["buckets"].values()]
-            ).count()
         _commit_manifest(
             spark, path, next_gen, new_buckets,
             shards=new_shards, n_shards=int(new_n_shards),
-            rows=m.get("rows"), schema=m.get("schema"),
+            rows=rows, schema=m.get("schema"),
         )
         spec["n_shards"] = int(new_n_shards)
         replace_text_file(spark, _spec_path(path), json.dumps(spec))
@@ -1001,8 +924,8 @@ def reshard_bucketed(
             "new_n_shards": int(new_n_shards),
             "n_buckets": n_buckets,
             "buckets_moved": len(moved),
-            "rows_moved": int(rows_moved),
-            "rows_total": int(rows_total),
+            "rows_moved": sum(rows[b] for b in moved),
+            "rows_total": sum(rows.values()),
         }
     finally:
         fs.delete(lock, False)
@@ -1013,19 +936,19 @@ def bucketize(
     path: str,
     keys: list[str],
     n_buckets: int,
-    atomic: bool = False,
     keep_gens: int = 2,
 ) -> None:
-    """Migrate an existing plain-parquet destination to the bucketed
-    layout (one full rewrite — the last one it will need). Staged to a
-    sibling directory and swapped, so the migration never caches the
-    destination and readers never see a partial layout. ``atomic=True``
-    migrates to layout v2 (manifest-committed generations; ``keep_gens``
-    sets the GC retention window for rollback/time-travel)."""
-    df = spark.read.parquet(path)
+    """Migrate an existing parquet destination — plain, or a Hive-layout
+    bucketed root — to the manifest layout (one full rewrite, the last
+    one it will need; ``keep_gens`` sets the GC retention window for
+    rollback/time-travel). Staged to a sibling directory and swapped,
+    so the migration never caches the destination and readers never see
+    a partial layout. A Hive-layout root's bucket column is dropped:
+    ``write_bucketed`` derives its own."""
+    df = spark.read.parquet(path).drop(BUCKET_COL)
     staging = path.rstrip("/") + ".__bucketize_staging__"
     fs, path_cls = hadoop_fs(spark, path)
     if fs.exists(path_cls(staging)):
         fs.delete(path_cls(staging), True)
-    write_bucketed(df, staging, keys, n_buckets, atomic=atomic, keep_gens=keep_gens)
+    write_bucketed(df, staging, keys, n_buckets, keep_gens=keep_gens)
     replace_dir(fs, path_cls, staging, path.rstrip("/"))

@@ -29,12 +29,11 @@ def replace_dir(fs, path_cls, src_str: str, dst_str: str) -> None:
     destination as either the complete old directory or the complete
     new one (on failure the old one is restored), but there is a
     window between the two renames where the destination path does not
-    exist — a live reader listing the tree right then sees it missing
-    (or, under a multi-bucket merge, silently misses that bucket's
-    rows). Deployments with readers concurrent to merges should use
-    the manifest-committed bucketed layout v2 (io/bucketed,
-    ``write_bucketed(atomic=True)``) or the Delta path
-    (operators/delta_merge), both of which publish by pointer flip."""
+    exist — a live reader listing the tree right then sees it missing.
+    Used for one-off swaps (``io.bucketed.bucketize`` migrating a
+    root); recurring merges publish by pointer flip instead, through
+    the bucketed manifest (io/bucketed) or the Delta path
+    (operators/delta_merge)."""
     src = path_cls(src_str)
     dst = path_cls(dst_str)
     backup = path_cls(dst_str.rstrip("/") + ".__old__")

@@ -343,9 +343,9 @@ def build_ivfpq_index(
         .drop("vec")
     )
     codes.write.mode("overwrite").partitionBy("cell").parquet(f"{base}/codes")
-    from fastetl_spark.io.bucketed import write_bucketed
+    from fastetl_spark.io.bucketed import _write_hive_bucketed
 
-    write_bucketed(raw, f"{base}/vectors", ["vid"], vec_buckets)
+    _write_hive_bucketed(raw, f"{base}/vectors", ["vid"], vec_buckets)
     write_text_file(
         spark,
         f"{base}/{PQ_META_FILE}",

@@ -36,6 +36,7 @@ from fastetl_spark.io.bucketed import (
     BUCKET_COL,
     DEFAULT_MAX_FILES_PER_BUCKET,
     bucket_id,
+    _write_hive_bucketed,
     compact_buckets,
     read_bucket_spec,
     read_buckets_for_keys,
@@ -78,12 +79,8 @@ def build_shingle_index(
     """One-time index build: explode the corpus once and lay the rows
     out bucketed by shingle hash, one clean file per bucket — the
     append compaction threshold then tracks real increment growth."""
-    write_bucketed(
-        _shingle_rows(docs, shingle_n),
-        index_path,
-        ["shingle"],
-        n_buckets,
-        one_file_per_bucket=True,
+    _write_hive_bucketed(
+        _shingle_rows(docs, shingle_n), index_path, ["shingle"], n_buckets
     )
 
 
@@ -355,12 +352,8 @@ def build_minhash_index(
     """One-time LSH index build: the corpus's banded signature rows,
     bucketed by (band, band_hash), one clean file per bucket. One
     corpus pass, ever."""
-    write_bucketed(
-        _band_rows(docs, portable=portable),
-        index_path,
-        ["band", "band_hash"],
-        n_buckets,
-        one_file_per_bucket=True,
+    _write_hive_bucketed(
+        _band_rows(docs, portable=portable), index_path, ["band", "band_hash"], n_buckets
     )
 
 
@@ -470,7 +463,7 @@ from fastetl_spark.registry import query  # noqa: E402
 
 # Bump when index layout/params change so stale scratch indexes from an
 # older code version can never satisfy _scratch_index_ready.
-_SCRATCH_INDEX_VERSION = "v2"
+_SCRATCH_INDEX_VERSION = "v3"
 
 
 def _scratch_index_path(sf_dir: str, kind: str) -> str:
@@ -483,7 +476,7 @@ def _scratch_index_path(sf_dir: str, kind: str) -> str:
 
 def _scratch_index_ready(spark: SparkSession, path: str) -> bool:
     """A scratch index is reusable iff its bucket spec exists: the spec
-    file is committed LAST by write_bucketed, so presence implies a
+    file is committed LAST by the bucketed writers, so presence implies a
     complete build. The path tag encodes sf_dir + layout version, and
     the fixture + build are deterministic, so a complete index at the
     tagged path is byte-equivalent to a fresh rebuild."""

@@ -175,7 +175,7 @@ def rendezvous_shard_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # The assignment function above proves HRW stability row-wise; this
 # query exercises the STORE operation built on it
-# (io/bucketed.reshard_bucketed): an orders destination is atomically
+# (io/bucketed.reshard_bucketed): an orders destination is
 # loaded at 4 shards, resharded online to 5, and read back — the
 # post-reshard content must hash-match the original table exactly, so
 # any row lost, duplicated, or corrupted by the move-only-changed-
@@ -224,9 +224,6 @@ def rendezvous_reshard_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         shutil.rmtree(dest, ignore_errors=True)
         vacuum_dest(spark, dest)
-        write_bucketed(
-            orders, dest, ["o_orderkey"], 64, atomic=True,
-            n_shards=_RESHARD_OLD_N,
-        )
+        write_bucketed(orders, dest, ["o_orderkey"], 64, n_shards=_RESHARD_OLD_N)
         reshard_bucketed(spark, dest, _RESHARD_NEW_N)
     return read_bucketed(spark, dest)

@@ -536,7 +536,7 @@ FROM orders
 
 @query("bucketed_time_travel", _TIME_TRAVEL_SQL)
 def bucketed_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """v2 generations under the oracle gate: initial atomic load (gen1),
+    """v2 generations under the oracle gate: initial load (gen1),
     partial_merge of updates + inserts (gen2, the latest), then a
     read_bucketed_at(gen=1) time-travel read that must reproduce the
     baseline byte-for-byte. The scratch destination is rebuilt only
@@ -575,7 +575,7 @@ def bucketed_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
         # staging dirs as SIBLINGS of dest — without this sweep a stale
         # lock would make every rebuild's partial_merge raise
         vacuum_dest(spark, dest)
-        write_bucketed(orders, dest, ["o_orderkey"], 8, atomic=True)
+        write_bucketed(orders, dest, ["o_orderkey"], 8)
         inc = orders.filter(F.col("o_orderkey") % 5 == 0).withColumn(
             "o_totalprice", F.col("o_totalprice") * 2.0
         )

@@ -211,7 +211,7 @@ def test_engine_read_at_and_pagerank(spark, tmp_path):
     eng = Engine(spark)
     dest = str(tmp_path / "d")
     base = spark.createDataFrame([(i, i * 10) for i in range(20)], "k long, v long")
-    write_bucketed(base, dest, ["k"], 4, atomic=True)
+    write_bucketed(base, dest, ["k"], 4)
     partial_merge(spark, dest, base.withColumn("v", F.col("v") + 1))
     assert eng.generations(dest) == [1, 2]
     # read_at(1) = the original values, latest = incremented

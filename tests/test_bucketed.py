@@ -2,7 +2,8 @@
 
 The core scale claim under test: an increment touching 1 of N buckets
 rewrites exactly that bucket — every other bucket's files survive
-byte-identical (same paths, same modification times). Plus semantic
+byte-identical (same paths, same modification times), because the
+manifest of the new generation still points at their dirs. Plus semantic
 equivalence against the full-frame merge operators, deletion handling,
 the Engine.sync integration, and the streaming foreachBatch path.
 """
@@ -16,12 +17,14 @@ from pyspark.sql import functions as F
 
 from fastetl_spark.io.bucketed import (
     BUCKET_COL,
+    _write_hive_bucketed,
     bucket_id,
     bucketize,
     partial_merge,
     read_bucket_spec,
     read_bucketed,
     read_buckets_for_keys,
+    read_manifest,
     write_bucketed,
 )
 from fastetl_spark.io.readers import read_table
@@ -30,20 +33,26 @@ from fastetl_spark.operators.sync import delete_sync, merge_upsert
 N_BUCKETS = 8
 
 
-def _bucket_listing(path: str) -> dict[int, dict[str, float]]:
-    """{bucket_id: {file_path: mtime}} for every bucket dir."""
+def _bucket_listing(spark, path: str) -> dict[int, dict[str, float]]:
+    """{bucket_id: {file_path: mtime}} for every live bucket dir, as the
+    latest manifest maps bucket -> dir."""
     out: dict[int, dict[str, float]] = {}
-    for entry in os.listdir(path):
-        if not entry.startswith(f"{BUCKET_COL}="):
-            continue
-        b = int(entry.split("=", 1)[1])
-        d = os.path.join(path, entry)
+    for b, name in read_manifest(spark, path)["buckets"].items():
+        d = os.path.join(path, name)
         out[b] = {
-            f: os.path.getmtime(os.path.join(d, f))
+            os.path.join(d, f): os.path.getmtime(os.path.join(d, f))
             for f in os.listdir(d)
             if not f.startswith(".")
         }
     return out
+
+
+def _data_files(spark, path: str) -> dict[int, list[str]]:
+    """{bucket_id: parquet data files} of the live generation."""
+    return {
+        b: [f for f in files if f.endswith(".parquet")]
+        for b, files in _bucket_listing(spark, path).items()
+    }
 
 
 def _rows(df, cols):
@@ -56,18 +65,28 @@ def test_write_read_roundtrip_and_spec(spark, sf_dir, tmp_path):
     write_bucketed(nation, dest, ["n_nationkey"], N_BUCKETS)
 
     spec = read_bucket_spec(spark, dest)
-    assert spec == {"version": 1, "keys": ["n_nationkey"], "n_buckets": N_BUCKETS}
+    assert spec == {
+        "version": 2, "keys": ["n_nationkey"], "n_buckets": N_BUCKETS, "keep_gens": 2
+    }
 
     back = read_bucketed(spark, dest)
     assert BUCKET_COL not in back.columns
     assert _rows(back, nation.columns) == _rows(nation, nation.columns)
+
+    # rows are distributed by bucket before the write: a 4-partition
+    # input lands as one file per bucket, not one per (task, bucket)
+    wide = str(tmp_path / "wide_b")
+    write_bucketed(spark.range(0, 400, numPartitions=4), wide, ["id"], 16)
+    files = _data_files(spark, wide)
+    assert len(files) == 16
+    assert all(len(f) == 1 for f in files.values()), files
 
 
 def test_partial_merge_rewrites_only_touched_bucket(spark, sf_dir, tmp_path):
     dest = str(tmp_path / "nation_b")
     nation = read_table(spark, sf_dir, "nation")
     write_bucketed(nation, dest, ["n_nationkey"], N_BUCKETS)
-    before = _bucket_listing(dest)
+    before = _bucket_listing(spark, dest)
     assert len(before) > 1  # 25 keys over 8 buckets: several dirs exist
 
     inc = nation.filter(F.col("n_nationkey") == 7).withColumn(
@@ -80,7 +99,7 @@ def test_partial_merge_rewrites_only_touched_bucket(spark, sf_dir, tmp_path):
     (touched_bucket,) = [
         r[0] for r in inc.select(bucket_id(["n_nationkey"], N_BUCKETS)).collect()
     ]
-    after = _bucket_listing(dest)
+    after = _bucket_listing(spark, dest)
     assert set(after) == set(before)
     for b, files in before.items():
         if b == touched_bucket:
@@ -119,7 +138,7 @@ def test_partial_merge_new_keys_land_in_new_buckets(spark, tmp_path):
     dest = str(tmp_path / "tiny_b")
     df = spark.createDataFrame([(1, "a"), (2, "b")], "id long, v string")
     write_bucketed(df, dest, ["id"], 4)
-    existing = set(_bucket_listing(dest))
+    existing = set(_bucket_listing(spark, dest))
 
     # append keys until one lands in a bucket with no directory yet
     newbies = spark.createDataFrame(
@@ -129,7 +148,7 @@ def test_partial_merge_new_keys_land_in_new_buckets(spark, tmp_path):
     assert stats["buckets_touched"] >= len(existing)
     got = read_bucketed(spark, dest)
     assert got.count() == 2 + 37
-    assert set(_bucket_listing(dest)) >= existing
+    assert set(_bucket_listing(spark, dest)) >= existing
 
 
 def test_partial_merge_delete_can_empty_a_bucket(spark, tmp_path):
@@ -144,7 +163,7 @@ def test_partial_merge_delete_can_empty_a_bucket(spark, tmp_path):
     empty_inc = df.limit(0)
     partial_merge(spark, dest, empty_inc, deleted_keys=dels)
 
-    assert victim not in _bucket_listing(dest)
+    assert victim not in _bucket_listing(spark, dest)
     got = read_bucketed(spark, dest)
     assert got.count() == 20 - n_deleted
     assert got.join(dels, on="id", how="left_semi").count() == 0
@@ -194,6 +213,43 @@ def test_partial_merge_requires_spec(spark, tmp_path):
     df.write.parquet(plain)
     with pytest.raises(ValueError, match="bucket_spec"):
         partial_merge(spark, plain, df)
+
+
+def test_partial_merge_rejects_hive_root_with_migration_hint(spark, tmp_path):
+    """A Hive-layout root (spec version 1, the index layout) is not a
+    merge destination: the merge names the one-time migration."""
+    dest = str(tmp_path / "hive")
+    df = spark.createDataFrame([(1, "a"), (2, "b")], "id long, v string")
+    _write_hive_bucketed(df, dest, ["id"], 4)
+    with pytest.raises(ValueError, match="bucketize"):
+        partial_merge(spark, dest, df)
+    assert not os.path.exists(dest + ".__merge_lock__")
+
+
+def test_bucketize_migrates_hive_root(spark, tmp_path):
+    """bucketize on a Hive-layout root keeps the rows and the columns:
+    the Hive bucket column is neither read back nor recorded in the
+    manifest schema, and the migrated root merges."""
+    from fastetl_spark.api import Engine
+
+    dest = str(tmp_path / "hive")
+    df = spark.createDataFrame([(i, f"v{i}") for i in range(30)], "id long, v string")
+    _write_hive_bucketed(df, dest, ["id"], 4)
+    bucketize(spark, dest, ["id"], N_BUCKETS)
+
+    assert read_bucket_spec(spark, dest)["version"] == 2
+    schema = read_manifest(spark, dest)["schema"]
+    assert [f["name"] for f in schema["fields"]] == ["id", "v"]
+    back = read_bucketed(spark, dest)
+    assert back.columns == ["id", "v"]
+    assert _rows(back, ["id", "v"]) == _rows(df, ["id", "v"])
+
+    stats = partial_merge(spark, dest, df.limit(3).withColumn("v", F.lit("x")))
+    assert stats["rows"] == 30
+    assert read_bucketed(spark, dest).filter(F.col("v") == "x").count() == 3
+
+    with pytest.raises(ValueError, match="atomic"):
+        Engine(spark).bucketize(dest, ["id"], N_BUCKETS, atomic=False)
 
 
 def test_foreach_batch_merge_bucketed(spark, sf_dir, tmp_path):
@@ -271,12 +327,12 @@ def test_engine_sync_bucketed_watermark_store(spark, sf_dir, tmp_path):
     true_max = orders.agg(F.max("o_orderdate")).first()[0]
     assert stored == true_max
 
-    before = _bucket_listing(dest)
+    before = _bucket_listing(spark, dest)
     n2 = eng.sync(
         {"path": src}, {"path": dest}, keys=["o_orderkey"], watermark_col="o_orderdate"
     )
     assert n2 == orders.count()
-    assert _bucket_listing(dest) == before, "no-op sync rewrote buckets"
+    assert _bucket_listing(spark, dest) == before, "no-op sync rewrote buckets"
 
 
 def test_engine_sync_emptied_bucketed_dest_reloads_full_source(spark, tmp_path):
@@ -340,7 +396,7 @@ def test_v2_roundtrip_merge_and_key_pruning(spark, sf_dir, tmp_path):
 
     dest = str(tmp_path / "nation_v2")
     nation = read_table(spark, sf_dir, "nation")
-    write_bucketed(nation, dest, ["n_nationkey"], N_BUCKETS, atomic=True)
+    write_bucketed(nation, dest, ["n_nationkey"], N_BUCKETS)
     assert read_bucket_spec(spark, dest)["version"] == 2
     assert read_manifest(spark, dest)["gen"] == 1
 
@@ -374,7 +430,7 @@ def test_v2_crash_before_pointer_flip_leaves_old_generation(spark, sf_dir, tmp_p
 
     dest = str(tmp_path / "dest_v2")
     nation = read_table(spark, sf_dir, "nation")
-    write_bucketed(nation, dest, ["n_nationkey"], N_BUCKETS, atomic=True)
+    write_bucketed(nation, dest, ["n_nationkey"], N_BUCKETS)
     before = _rows(read_bucketed(spark, dest), nation.columns)
 
     inc = nation.withColumn("n_name", F.lit("v2-merged"))  # touches all buckets
@@ -411,7 +467,7 @@ def test_v2_deletion_to_empty_then_sync_reloads(spark, tmp_path):
     rows = spark.createDataFrame(
         [(1, "a", 10), (2, "b", 20), (3, "c", 30)], "id long, v string, ts long"
     )
-    write_bucketed(rows, dest, ["id"], N_BUCKETS, atomic=True)
+    write_bucketed(rows, dest, ["id"], N_BUCKETS)
     partial_merge(spark, dest, rows.limit(0), deleted_keys=rows.select("id"))
     emptied = read_bucketed(spark, dest)
     assert emptied.count() == 0
@@ -435,7 +491,7 @@ def test_v2_generation_gc_bounds_dirs(spark, tmp_path):
 
     dest = str(tmp_path / "dest")
     rows = spark.createDataFrame([(i, i * 10) for i in range(8)], "id long, v long")
-    write_bucketed(rows, dest, ["id"], 4, atomic=True)
+    write_bucketed(rows, dest, ["id"], 4)
     for g in range(5):
         inc = spark.createDataFrame([(i, 100 * g + i) for i in range(8)], "id long, v long")
         partial_merge(spark, dest, inc)
@@ -473,7 +529,7 @@ def test_v2_rollback_undoes_last_merge_and_history_continues(spark, tmp_path):
 
     dest = str(tmp_path / "dest")
     rows = spark.createDataFrame([(i, "orig") for i in range(8)], "id long, v string")
-    write_bucketed(rows, dest, ["id"], 4, atomic=True)
+    write_bucketed(rows, dest, ["id"], 4)
     inc = spark.createDataFrame([(i, "merged") for i in range(8)], "id long, v string")
     partial_merge(spark, dest, inc)
     assert {r.v for r in read_bucketed(spark, dest).collect()} == {"merged"}
@@ -492,13 +548,13 @@ def test_v2_rollback_undoes_last_merge_and_history_continues(spark, tmp_path):
     assert got == {(0, "post")} | {(i, "orig") for i in range(1, 8)}
     assert read_manifest(spark, dest)["gen"] == 4
 
-    # unknown generation raises; v1 layout raises
+    # unknown generation raises; the Hive (index) layout raises
     with pytest.raises(ValueError, match="not in committed history"):
         rollback_bucketed(spark, dest, to_gen=99)
-    v1 = str(tmp_path / "v1dest")
-    write_bucketed(rows, v1, ["id"], 4)
+    hive = str(tmp_path / "hive_dest")
+    _write_hive_bucketed(rows, hive, ["id"], 4)
     with pytest.raises(ValueError, match="v2"):
-        rollback_bucketed(spark, v1)
+        rollback_bucketed(spark, hive)
 
 
 def test_v2_rollback_rejects_gcd_generation(spark, tmp_path):
@@ -511,7 +567,7 @@ def test_v2_rollback_rejects_gcd_generation(spark, tmp_path):
 
     dest = str(tmp_path / "dest")
     rows = spark.createDataFrame([(i, 0) for i in range(8)], "id long, v long")
-    write_bucketed(rows, dest, ["id"], 4, atomic=True)
+    write_bucketed(rows, dest, ["id"], 4)
     for g in range(3):
         inc = spark.createDataFrame([(i, g + 1) for i in range(8)], "id long, v long")
         partial_merge(spark, dest, inc)
@@ -553,7 +609,7 @@ def test_v2_keep_gens_widens_rollback_window(spark, tmp_path):
 
     dest = str(tmp_path / "dest")
     rows = spark.createDataFrame([(i, 0) for i in range(8)], "id long, v long")
-    write_bucketed(rows, dest, ["id"], 4, atomic=True, keep_gens=4)
+    write_bucketed(rows, dest, ["id"], 4, keep_gens=4)
     for g in range(3):
         inc = spark.createDataFrame([(i, g + 1) for i in range(8)], "id long, v long")
         partial_merge(spark, dest, inc)
@@ -592,47 +648,6 @@ def test_vacuum_dest_removes_leftovers_keeps_data(spark, tmp_path):
     # redelivery of a RETAINED batch is still absorbed after the vacuum
     merge(spark.createDataFrame([(4, "XX")], "id long, v string"), 4)
     assert {r.v for r in spark.read.parquet(dest).collect()} == {"v0", "v1", "v2", "v3", "v4"}
-
-
-def test_partial_merge_crash_mid_publish_converges_on_rerun(spark, tmp_path, monkeypatch):
-    """A crash between bucket swaps leaves a mixed old/new destination;
-    re-running the SAME increment must converge every bucket (the
-    documented idempotent-recovery contract, io/bucketed docstring)."""
-    import fastetl_spark.io.bucketed as bucketed_mod
-    from fastetl_spark.io.bucketed import partial_merge, read_bucketed, write_bucketed
-    from fastetl_spark.io.fsutil import replace_dir
-    from fastetl_spark.operators.sync import merge_upsert
-
-    dest = str(tmp_path / "dest")
-    base = spark.createDataFrame([(i, f"b{i}") for i in range(40)], "id long, v string")
-    # touch several buckets: updates spread over the whole keyspace
-    inc = spark.createDataFrame(
-        [(i, f"NEW{i}") for i in range(0, 40, 3)] + [(100, "added")],
-        "id long, v string",
-    )
-    write_bucketed(base, dest, ["id"], 4)
-
-    calls = {"n": 0}
-
-    def failing_replace(fs, path_cls, src, dst):
-        calls["n"] += 1
-        if calls["n"] == 2:
-            raise IOError("injected crash between bucket swaps")
-        return replace_dir(fs, path_cls, src, dst)
-
-    monkeypatch.setattr(bucketed_mod, "replace_dir", failing_replace)
-    with pytest.raises(IOError, match="injected crash"):
-        partial_merge(spark, dest, inc)
-    # destination is now a MIX of merged and unmerged buckets, but every
-    # bucket is a complete old or new version (never partial)
-    monkeypatch.setattr(bucketed_mod, "replace_dir", replace_dir)
-
-    partial_merge(spark, dest, inc)  # recovery: re-run the same increment
-    got = sorted(tuple(r) for r in read_bucketed(spark, dest).collect())
-    expected = sorted(
-        tuple(r) for r in merge_upsert(base, inc, ["id"]).collect()
-    )
-    assert got == expected
 
 
 def test_partial_merge_lock_rejects_concurrent_and_vacuums(spark, tmp_path):

@@ -93,7 +93,7 @@ def test_sync_round_and_index_append_job_budget(spark, sf_dir, tmp_path, monkeyp
     )
 
     dest, src = str(tmp_path / "dest"), str(tmp_path / "src")
-    write_bucketed(_table(spark, 0, 400, 1), dest, ["id"], N_BUCKETS, atomic=True)
+    write_bucketed(_table(spark, 0, 400, 1), dest, ["id"], N_BUCKETS)
     wm, log = str(tmp_path / "wm"), str(tmp_path / "log")
     eng = Engine(spark, load_log_path=log, watermark_store_path=wm)
     eng.watermark_store.set(dest, 1)
@@ -124,7 +124,7 @@ def test_sync_round_and_index_append_job_budget(spark, sf_dir, tmp_path, monkeyp
 def test_manifest_rows_track_every_publish(spark, tmp_path):
     dest, src = str(tmp_path / "dest"), str(tmp_path / "src")
     _table(spark, 0, 300, 1).write.parquet(dest)
-    Engine(spark).bucketize(dest, ["id"], N_BUCKETS, atomic=True)
+    Engine(spark).bucketize(dest, ["id"], N_BUCKETS)
 
     def check():
         got = read_bucketed(spark, dest)
@@ -161,7 +161,7 @@ def test_sync_of_v2_table_without_recorded_rows(spark, tmp_path):
     """A manifest committed before ``rows``/``schema`` were recorded:
     the sync still reports the right count and records both."""
     dest, src = str(tmp_path / "dest"), str(tmp_path / "src")
-    write_bucketed(_table(spark, 0, 200, 1), dest, ["id"], N_BUCKETS, atomic=True)
+    write_bucketed(_table(spark, 0, 200, 1), dest, ["id"], N_BUCKETS)
     (gen,) = list_generations(spark, dest)
     path = os.path.join(dest, f"{MANIFEST_PREFIX}{gen}.json")
     with open(path) as fh:
@@ -187,7 +187,7 @@ def test_merge_facts_under_reliable_checkpoints(spark, tmp_path):
 
     def run(tag: str):
         dest, src = str(tmp_path / f"dest_{tag}"), str(tmp_path / f"src_{tag}")
-        write_bucketed(_table(spark, 0, 100, 1), dest, ["id"], N_BUCKETS, atomic=True)
+        write_bucketed(_table(spark, 0, 100, 1), dest, ["id"], N_BUCKETS)
         _table(spark, 90, 130, 2).write.parquet(src)
         eng = Engine(spark, watermark_store_path=str(tmp_path / f"wm_{tag}"))
         eng.watermark_store.set(dest, 1)

@@ -297,7 +297,7 @@ def test_time_travel_reads_only_target_generation_dirs(spark, tmp_path):
 
     dest = str(tmp_path / "d")
     base = spark.createDataFrame([(i, i) for i in range(40)], "k long, v long")
-    write_bucketed(base, dest, ["k"], 4, atomic=True)
+    write_bucketed(base, dest, ["k"], 4)
     partial_merge(spark, dest, base.withColumn("v", F.col("v") + 7))
     m1 = _read_manifest_gen(spark, dest, 1)
     allowed = {d for d in m1["buckets"].values()}

@@ -347,8 +347,7 @@ def test_v2_merge_history_and_rollback_agree_with_python_model(
     dest = str(tmp_path_factory.mktemp("prop") / "dest")
     model: dict[int, int] = {0: 0}
     write_bucketed(
-        spark.createDataFrame([(0, 0)], "id long, v long"), dest, ["id"], 4,
-        atomic=True, keep_gens=10,
+        spark.createDataFrame([(0, 0)], "id long, v long"), dest, ["id"], 4, keep_gens=10
     )
     states = [dict(model)]
     for inc in increments:

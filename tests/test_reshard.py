@@ -47,7 +47,7 @@ def store(spark, tmp_path):
     df = spark.range(4096).select(
         F.col("id").alias("k"), (F.col("id") * 7 % 1000).alias("v")
     )
-    write_bucketed(df, path, ["k"], 256, atomic=True, n_shards=4)
+    write_bucketed(df, path, ["k"], 256, n_shards=4)
     return path
 
 
@@ -134,7 +134,7 @@ def test_placement_survives_merge_and_rollback(spark, store):
 def test_initializes_unsharded_store_without_moving(spark, tmp_path):
     path = str(tmp_path / "plain_v2")
     df = spark.range(500).select(F.col("id").alias("k"), F.lit(0).alias("v"))
-    write_bucketed(df, path, ["k"], 32, atomic=True)
+    write_bucketed(df, path, ["k"], 32)
     stats = reshard_bucketed(spark, path, 3)
     assert stats["old_n_shards"] == 0 and stats["buckets_moved"] == 0
     assert read_bucket_spec(spark, path)["n_shards"] == 3
@@ -158,12 +158,18 @@ def test_hrw_matches_rendezvous_shard_column(spark):
 
 
 def test_sharded_requires_atomic_layout(spark, tmp_path):
+    """The shard map rides on manifests: a Hive-layout index root has
+    none to carry it and is rejected."""
+    from fastetl_spark.operators.dedup_index import build_shingle_index
+
     df = spark.range(10).select(F.col("id").alias("k"))
-    with pytest.raises(ValueError, match="atomic"):
-        write_bucketed(df, str(tmp_path / "x"), ["k"], 4, n_shards=2)
-    write_bucketed(df, str(tmp_path / "y"), ["k"], 4)  # v1
-    with pytest.raises(ValueError, match="v2|atomic"):
-        reshard_bucketed(spark, str(tmp_path / "y"), 2)
+    with pytest.raises(ValueError, match="n_shards"):
+        write_bucketed(df, str(tmp_path / "x"), ["k"], 4, n_shards=0)
+    idx = str(tmp_path / "idx")
+    docs = spark.createDataFrame([(1, "a b c d e f")], "doc_id long, text string")
+    build_shingle_index(docs, idx, n_buckets=4)
+    with pytest.raises(ValueError, match="v2"):
+        reshard_bucketed(spark, idx, 2)
 
 
 def test_hrw_stability_property():
