@@ -1,7 +1,12 @@
-.PHONY: test test-sf01 bench smoke
+.PHONY: test test-sf01 fixed-costs bench smoke
 
 test:
 	python -m pytest tests/ -q
+
+# Driver-cost gate (Spark jobs, codegen compilations, py4j round trips
+# of an ingest round): a minute or two, ahead of the full suite.
+fixed-costs:
+	python -m pytest tests/test_ingest_fixed_costs.py -q
 
 test-sf01:
 	SPARK_GRAFT_TEST_SF_DIR=/root/testdata/sf0.01 python -m pytest tests/test_queries_vs_duckdb.py -q

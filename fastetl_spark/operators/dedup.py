@@ -515,21 +515,16 @@ def minhash_signature_from_hashes(base: Column, k: int = _MINHASH_K) -> Column:
     such docs. NULL preserves the original per-i transform+array_min
     contract (array_min over empty → NULL) and lsh_candidate_pairs
     filters NULL signatures out before banding."""
-    acc0 = F.array_repeat(F.lit(_M31).cast("long"), k)
-    params = F.array(
-        *[
-            F.struct(
-                F.lit(2 * i + 1).cast("long").alias("a"),
-                F.lit(i * 7919).cast("long").alias("b"),
-            )
-            for i in range(k)
-        ]
-    )
+    # the accumulator (k copies of 2^31-1) and the k affine coefficient
+    # pairs as one SQL literal: one driver call, where F.struct/F.lit
+    # calls cost ~100, each one or more py4j round trips
+    coefs = ", ".join(f"named_struct('a', {2 * i + 1}L, 'b', {i * 7919}L)" for i in range(k))
+    consts = F.expr(f"named_struct('acc', array_repeat({_M31}L, {k}), 'p', array({coefs}))")
     sig = F.aggregate(
         base,
-        acc0,
+        consts["acc"],
         lambda acc, h: F.zip_with(
-            acc, params, lambda m, p: F.least(m, (h * p["a"] + p["b"]) % _M31)
+            acc, consts["p"], lambda m, p: F.least(m, (h * p["a"] + p["b"]) % _M31)
         ),
     )
     return F.when(F.size(base) > 0, sig)

@@ -119,6 +119,7 @@ def increment_already_applied(
 
 
 MAX_INCREMENT_MARKERS = 1024  # retained replay markers per index
+_MARKER_PRUNE_BATCH = MAX_INCREMENT_MARKERS // 8  # overflow pruned at once
 
 
 def mark_increment_applied(spark: SparkSession, index_path: str, fp: str) -> None:
@@ -130,27 +131,29 @@ def mark_increment_applied(spark: SparkSession, index_path: str, fp: str) -> Non
     job commit and this one-file write — is a single filesystem create,
     orders of magnitude smaller than the append job itself.)
 
-    Retention: only the newest MAX_INCREMENT_MARKERS markers are kept
-    (one listStatus + deletes of the overflow, mtime order), so a
+    Retention: the newest MAX_INCREMENT_MARKERS markers are kept, so a
     daily-increment index cannot grow an unbounded marker listing.
     Replay protection therefore covers the last ~1k increments — far
-    beyond any real retry window, which spans one job."""
+    beyond any real retry window, which spans one job. Each append
+    counts the markers in one call; only once they pass the cap by
+    _MARKER_PRUNE_BATCH does it list them (a few py4j round trips per
+    marker) and delete the oldest down to the cap, mtime order. The
+    listing is thus paid once per batch of appends, not on every one."""
     from fastetl_spark.io.fsutil import hadoop_fs, write_text_file
 
     write_text_file(spark, _marker_path(index_path, fp), fp)
     fs, path_cls = hadoop_fs(spark, index_path)
     inc_dir = path_cls(f"{index_path.rstrip('/')}/_increments")
-    statuses = [
-        (s.getModificationTime(), s.getPath())
-        for s in fs.listStatus(inc_dir)
-        if s.isFile()
-    ]
-    if len(statuses) > MAX_INCREMENT_MARKERS:
-        # sort by mtime ONLY: on an mtime tie the tuple sort would fall
-        # through to comparing py4j Path objects and raise TypeError
-        statuses.sort(key=lambda t: t[0])  # oldest first
-        for _, p in statuses[: len(statuses) - MAX_INCREMENT_MARKERS]:
-            fs.delete(p, False)
+    if fs.getContentSummary(inc_dir).getFileCount() <= (
+        MAX_INCREMENT_MARKERS + _MARKER_PRUNE_BATCH
+    ):
+        return
+    statuses = [(s.getModificationTime(), s) for s in fs.listStatus(inc_dir) if s.isFile()]
+    # sort by mtime ONLY: on an mtime tie the tuple sort would fall
+    # through to comparing py4j objects and raise TypeError
+    statuses.sort(key=lambda t: t[0])  # oldest first
+    for _, status in statuses[: len(statuses) - MAX_INCREMENT_MARKERS]:
+        fs.delete(status.getPath(), False)
 
 
 def _append_index_rows(
@@ -256,9 +259,7 @@ from fastetl_spark.operators.dedup import (  # noqa: E402
     _M31,
     _MINHASH_BANDS,
     _MINHASH_K,
-    md5_prefix_hash,
     minhash_signature_from_hashes,
-    word_shingles,
 )
 
 LSH_INDEX_BUCKETS = 64  # local default; ~4096 at 100 TB
@@ -277,53 +278,48 @@ def _band_rows(
     Production indexes keep the default (faster) hashing; the two
     variants are distinguished on disk by the band_hash column type
     (string = portable, long = xxhash64) and auto-detected on read.
+
+    The shingle windows and band keys are SQL text over this function's
+    own column names (``selectExpr``): one driver call per stage, where
+    the same expressions built from ``F.*`` and ``Column`` calls took
+    thousands of py4j round trips per call, every round.
     """
-    tok = docs.select("doc_id", word_tokens(F.col("text")).alias("tokens"))
-    if portable:
-        sh = tok.select(
-            "doc_id", word_shingles(F.col("tokens"), shingle_n).alias("sh")
-        )
-        hashed = sh.select(
-            "doc_id",
-            F.transform(
-                F.col("sh"), lambda s: F.pmod(md5_prefix_hash(s), F.lit(_M31))
-            ).alias("hs"),
-        ).filter(F.size("hs") > 0).transform(materialize)
-    else:
-        hashed = tok.select(
-            "doc_id",
-            F.transform(
-                shingle_hashes(F.col("tokens"), shingle_n),
-                lambda s: F.pmod(s, F.lit(_M31)),
-            ).alias("hs"),
-        ).filter(F.size("hs") > 0).transform(materialize)
+    window = ", ".join(f"element_at(tokens, i + {k})" for k in range(shingle_n))
+    if portable:  # dedup.word_shingles, then dedup.md5_prefix_hash
+        shingle, elem = f"concat_ws(' ', {window})", "STRING"
+        h = "CAST(conv(substring(md5(s), 1, 15), 16, 10) AS BIGINT)"
+    else:  # dedup.shingle_hashes
+        shingle, elem, h = f"xxhash64({window})", "BIGINT", "s"
+    shingles = (
+        f"CASE WHEN size(tokens) >= {shingle_n} THEN array_distinct(transform("
+        f"sequence(1, size(tokens) - {shingle_n - 1}), i -> {shingle})) "
+        f"ELSE CAST(array() AS ARRAY<{elem}>) END"
+    )
+    hashed = (
+        docs.selectExpr("doc_id", "split(text, ' ') AS tokens")
+        .selectExpr("doc_id", f"transform({shingles}, s -> pmod({h}, {_M31})) AS hs")
+        .filter("size(hs) > 0")
+        .transform(materialize)
+    )
     sig = hashed.select(
         "doc_id", minhash_signature_from_hashes(F.col("hs")).alias("sig")
     )
     rows_per_band = _MINHASH_K // _MINHASH_BANDS
 
-    def band_key(b: int):
-        vals = [
-            F.element_at(F.col("sig"), b * rows_per_band + r + 1)
-            for r in range(rows_per_band)
-        ]
+    def band_key(b: int) -> str:
         if portable:
-            return F.concat_ws("_", *[v.cast("string") for v in vals])
-        return F.xxhash64(F.slice(F.col("sig"), b * rows_per_band + 1, rows_per_band))
-
-    return sig.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"), band_key(b).alias("band_hash")
-                    )
-                    for b in range(_MINHASH_BANDS)
-                ]
+            vals = (
+                f"CAST(element_at(sig, {b * rows_per_band + r + 1}) AS STRING)"
+                for r in range(rows_per_band)
             )
-        ).alias("bb"),
-    ).select(F.col("bb.band").alias("band"), F.col("bb.band_hash").alias("band_hash"), "doc_id")
+            return f"concat_ws('_', {', '.join(vals)})"
+        return f"xxhash64(slice(sig, {b * rows_per_band + 1}, {rows_per_band}))"
+
+    bands = ", ".join(
+        f"named_struct('band', {b}, 'band_hash', {band_key(b)})"
+        for b in range(_MINHASH_BANDS)
+    )
+    return sig.selectExpr(f"inline(array({bands}))", "doc_id")
 
 
 def _index_is_portable(spark: SparkSession, index_path: str) -> bool:

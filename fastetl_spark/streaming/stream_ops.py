@@ -49,11 +49,17 @@ def read_events_stream(spark: SparkSession, path: str, max_files_per_trigger: in
     )
 
 
-def windowed_event_counts(stream: DataFrame, window: str = "1 hour", watermark: str = "2 hours") -> DataFrame:
-    """Tumbling-window counts + sums with late-data watermark."""
+def windowed_event_counts(
+    stream: DataFrame, window: str = "1 hour", watermark: str | None = "2 hours"
+) -> DataFrame:
+    """Tumbling-window counts + sums with late-data watermark. Spark 4.1
+    rejects a second ``withWatermark`` in one stream ("Redefining
+    watermark is disallowed"): after a stage that declared one
+    (``dedup_stream``), pass ``watermark=None`` to reuse it."""
+    if watermark is not None:
+        stream = stream.withWatermark("ts", watermark)
     return (
-        stream.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"), "event_type")
+        stream.groupBy(F.window("ts", window).alias("w"), "event_type")
         .agg(F.count("*").alias("n_events"), F.sum("value").alias("total_value"))
         .select(F.col("w.start").alias("window_start"), "event_type", "n_events", "total_value")
     )
@@ -77,7 +83,8 @@ def sessionized_counts(stream: DataFrame, gap: str = "30 minutes", watermark: st
 
 def dedup_stream(stream: DataFrame, keys: list[str], watermark: str = "2 hours") -> DataFrame:
     """Streaming exact-dedup with bounded state (watermark evicts old
-    keys) — A3 made continuous."""
+    keys) — A3 made continuous. A later stage reuses this watermark
+    (``windowed_event_counts(..., watermark=None)``)."""
     return stream.withWatermark("ts", watermark).dropDuplicates(keys)
 
 

@@ -1,12 +1,15 @@
 """Fixed per-round cost of an ingest round: Spark jobs, bookkeeping
-rows built on the JVM, and the merge facts the v2 manifest records.
+rows built on the JVM, the merge facts the v2 manifest records, and the
+driver's own work: code generation and py4j round trips.
 
 A bucketed ``Engine.sync`` round is bound by fixed costs, not by its
-data: every Spark job, Python-worker start and file created costs the
-same at 10 rows as at 10k. These tests pin the job ceilings of one
-round and of one index append, the plans of the bookkeeping writes,
-and the row counts and schema the manifest carries so that the
-post-merge count needs no job.
+data: every Spark job, Python-worker start, file created, generated
+class compiled and py4j round trip costs the same at 10 rows as at 10k.
+These tests pin the job ceilings of one round and of one index append,
+the plans of the bookkeeping writes, the row counts and schema the
+manifest carries so that the post-merge count needs no job, the
+compilations of a repeated round and the round trips of an index
+append and match. ``make fixed-costs`` runs this file alone.
 """
 
 from __future__ import annotations
@@ -18,6 +21,7 @@ import os
 
 import pyarrow.parquet as pq
 import pytest
+from py4j.clientserver import ClientServerConnection
 from pyspark.sql import functions as F
 from pyspark.sql.readwriter import DataFrameWriter
 
@@ -32,7 +36,17 @@ from fastetl_spark.io.bucketed import (
     rollback_bucketed,
     write_bucketed,
 )
+from fastetl_spark.io.readers import read_table
 from fastetl_spark.meta.load_info import LOG_SCHEMA, LoadInfo
+from fastetl_spark.operators.dedup_index import (
+    MAX_INCREMENT_MARKERS,
+    _MARKER_PRUNE_BATCH,
+    _band_rows,
+    append_to_minhash_index,
+    build_minhash_index,
+    mark_increment_applied,
+    match_minhash_index,
+)
 from fastetl_spark.operators.sync import WatermarkStore, _watermark_type
 
 N_BUCKETS = 8
@@ -42,6 +56,17 @@ N_BUCKETS = 8
 # and 8 while the merge facts took actions of their own.
 SYNC_ROUND_JOBS = 14
 INDEX_APPEND_JOBS = 4
+# Generated classes compiled by a second, identical round (sync plus
+# index build, match and append; ~84 in the first): 6 with a codegen
+# cache that holds a round's classes, 18-43 with Spark's default 100
+# entries. The 6 are plans with a per-round literal inlined in the code.
+REPEAT_ROUND_COMPILES = 12
+# py4j round trips of one minhash index append and of one match plus
+# its collect: 520-710 each. They were 4.4-5.6k each while the minhash
+# expressions were built one Column call at a time, with call-site
+# capture on.
+INDEX_APPEND_ROUND_TRIPS = 1000
+INDEX_MATCH_ROUND_TRIPS = 1000
 
 
 def _table(spark, lo: int, hi: int, ts: int):
@@ -72,6 +97,35 @@ class _Jobs:
         self.n = len(self.sc.statusTracker().getJobIdsForGroup(self.group))
 
 
+class _RoundTrips:
+    """Counts the py4j commands the driver sends inside the block."""
+
+    def __enter__(self):
+        self.n, self._send = 0, ClientServerConnection.send_command
+
+        def send_command(conn, command):
+            self.n += 1
+            return self._send(conn, command)
+
+        ClientServerConnection.send_command = send_command
+        return self
+
+    def __exit__(self, *exc):
+        ClientServerConnection.send_command = self._send
+
+
+def _compilations(spark) -> int:
+    """Generated classes compiled so far by this JVM."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
+def _split_documents(spark, sf_dir):
+    """(corpus, increment) of the fixture documents."""
+    docs = read_table(spark, sf_dir, "documents").select("doc_id", "text")
+    return docs.filter(F.col("doc_id") % 4 != 0), docs.filter(F.col("doc_id") % 4 == 0)
+
+
 def _capture_parquet_plans(monkeypatch) -> dict[str, str]:
     """Record the executed plan of every parquet write, by path."""
     plans: dict[str, str] = {}
@@ -86,12 +140,6 @@ def _capture_parquet_plans(monkeypatch) -> dict[str, str]:
 
 
 def test_sync_round_and_index_append_job_budget(spark, sf_dir, tmp_path, monkeypatch):
-    from fastetl_spark.io.readers import read_table
-    from fastetl_spark.operators.dedup_index import (
-        append_to_minhash_index,
-        build_minhash_index,
-    )
-
     dest, src = str(tmp_path / "dest"), str(tmp_path / "src")
     write_bucketed(_table(spark, 0, 400, 1), dest, ["id"], N_BUCKETS)
     wm, log = str(tmp_path / "wm"), str(tmp_path / "log")
@@ -110,8 +158,7 @@ def test_sync_round_and_index_append_job_budget(spark, sf_dir, tmp_path, monkeyp
         assert "ExistingRDD" not in plans[path], plans[path]
         assert "Range" in plans[path], plans[path]
 
-    docs = read_table(spark, sf_dir, "documents").select("doc_id", "text")
-    corpus, inc = docs.filter(F.col("doc_id") % 4 != 0), docs.filter(F.col("doc_id") % 4 == 0)
+    corpus, inc = _split_documents(spark, sf_dir)
     idx = str(tmp_path / "idx")
     build_minhash_index(corpus, idx, n_buckets=N_BUCKETS)
     n_before = spark.read.parquet(idx).count()
@@ -119,6 +166,165 @@ def test_sync_round_and_index_append_job_budget(spark, sf_dir, tmp_path, monkeyp
         append_to_minhash_index(inc, idx)
     assert jobs.n <= INDEX_APPEND_JOBS, jobs.n
     assert spark.read.parquet(idx).count() > n_before
+
+
+def _ingest_round(spark, sf_dir, root: str) -> None:
+    """A bucketed sync plus a minhash index build, match and append,
+    all from the same inputs every time."""
+    dest, src, idx = f"{root}/dest", f"{root}/src", f"{root}/idx"
+    write_bucketed(_table(spark, 0, 400, 1), dest, ["id"], N_BUCKETS)
+    _table(spark, 350, 450, 2).write.parquet(src)
+    eng = Engine(spark, load_log_path=f"{root}/log", watermark_store_path=f"{root}/wm")
+    eng.watermark_store.set(dest, 1)
+    dels = _table(spark, 3, 6, 0).select("id")
+    assert eng.sync({"path": src}, {"path": dest}, ["id"], "ts", deleted_keys=dels) == 447
+    corpus, inc = _split_documents(spark, sf_dir)
+    build_minhash_index(corpus, idx, n_buckets=N_BUCKETS)
+    match_minhash_index(spark, idx, inc).collect()
+    append_to_minhash_index(inc, idx)
+
+
+def test_repeated_round_reuses_generated_code(spark, sf_dir, tmp_path):
+    """A round's generated classes stay in the codegen cache, so the
+    next identical round compiles (almost) nothing."""
+    _ingest_round(spark, sf_dir, str(tmp_path / "r1"))
+    before = _compilations(spark)
+    _ingest_round(spark, sf_dir, str(tmp_path / "r2"))
+    assert _compilations(spark) - before <= REPEAT_ROUND_COMPILES
+
+
+def test_index_append_and_match_round_trips(spark, sf_dir, tmp_path):
+    corpus, inc = _split_documents(spark, sf_dir)
+    for portable in (False, True):
+        idx = str(tmp_path / f"idx_{portable}")
+        build_minhash_index(corpus, idx, n_buckets=N_BUCKETS, portable=portable)
+        with _RoundTrips() as match:
+            match_minhash_index(spark, idx, inc).collect()
+        with _RoundTrips() as append:
+            append_to_minhash_index(inc, idx)
+        assert match.n <= INDEX_MATCH_ROUND_TRIPS, (portable, match.n)
+        assert append.n <= INDEX_APPEND_ROUND_TRIPS, (portable, append.n)
+
+
+def _call_chain_band_rows(docs, portable: bool):
+    """The band rows as the Column call chains built them before the
+    expressions became SQL text: the reference for bit-identity."""
+    m31, k, bands, n = (1 << 31) - 1, 32, 8, 3
+    tokens = F.split(F.col("text"), " ")
+
+    def windows(tokens, fn, elem):
+        gen = F.transform(
+            F.sequence(F.lit(1), F.size(tokens) - (n - 1)),
+            lambda i: fn(*[F.element_at(tokens, i + j) for j in range(n)]),
+        )
+        return F.when(F.size(tokens) >= n, F.array_distinct(gen)).otherwise(
+            F.expr(f"CAST(array() AS ARRAY<{elem}>)")
+        )
+
+    tok = docs.select("doc_id", tokens.alias("tokens"))
+    if portable:
+        sh = tok.select(
+            "doc_id",
+            windows(F.col("tokens"), lambda *w: F.concat_ws(" ", *w), "STRING").alias("sh"),
+        )
+        def md5_prefix(c):
+            return F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("long")
+
+        hs = F.transform(F.col("sh"), lambda s: F.pmod(md5_prefix(s), F.lit(m31)))
+        hashed = sh.select("doc_id", hs.alias("hs"))
+    else:
+        hs = F.transform(
+            windows(F.col("tokens"), F.xxhash64, "BIGINT"), lambda s: F.pmod(s, F.lit(m31))
+        )
+        hashed = tok.select("doc_id", hs.alias("hs"))
+    hashed = hashed.filter(F.size("hs") > 0)
+    acc0 = F.array_repeat(F.lit(m31).cast("long"), k)
+    params = F.array(
+        *[
+            F.struct(
+                F.lit(2 * i + 1).cast("long").alias("a"),
+                F.lit(i * 7919).cast("long").alias("b"),
+            )
+            for i in range(k)
+        ]
+    )
+    sig = F.aggregate(
+        F.col("hs"),
+        acc0,
+        lambda acc, h: F.zip_with(
+            acc, params, lambda m, p: F.least(m, (h * p["a"] + p["b"]) % m31)
+        ),
+    )
+    sigs = hashed.select("doc_id", F.when(F.size("hs") > 0, sig).alias("sig"))
+    per_band = k // bands
+
+    def band_key(b: int):
+        if portable:
+            vals = [F.element_at(F.col("sig"), b * per_band + r + 1) for r in range(per_band)]
+            return F.concat_ws("_", *[v.cast("string") for v in vals])
+        return F.xxhash64(F.slice(F.col("sig"), b * per_band + 1, per_band))
+
+    keyed = F.array(
+        *[F.struct(F.lit(b).alias("band"), band_key(b).alias("band_hash")) for b in range(bands)]
+    )
+    return sigs.select("doc_id", F.explode(keyed).alias("bb")).select(
+        F.col("bb.band").alias("band"), F.col("bb.band_hash").alias("band_hash"), "doc_id"
+    )
+
+
+@pytest.mark.parametrize("portable", [False, True])
+def test_band_rows_match_call_chain_formula(spark, sf_dir, portable):
+    edge = spark.createDataFrame(
+        [
+            (-1, None),
+            (-2, ""),
+            (-3, "two words"),
+            (-4, "exactly three words"),
+            (-5, "a a a a a a a a"),
+            (-6, "  double  spaces  and   tabs\there  "),
+            (-7, "ünïcode wörds ünïcode wörds ünïcode wörds"),
+        ],
+        "doc_id long, text string",
+    )
+    docs = read_table(spark, sf_dir, "documents").select("doc_id", "text").unionByName(edge)
+    got = _band_rows(docs, portable=portable)
+    want = _call_chain_band_rows(docs, portable)
+    assert got.dtypes == want.dtypes
+    got_rows, want_rows = sorted(map(tuple, got.collect())), sorted(map(tuple, want.collect()))
+    assert got_rows == want_rows
+    assert len(got_rows) > 8 * 400
+    assert {r[2] for r in got_rows} & {-4, -5, -6, -7} == {-4, -5, -6, -7}
+
+
+def test_marker_count_is_flat_and_retention_holds(spark, tmp_path):
+    """Appending a marker costs the same round trips with 0 and with 1100
+    markers present; past the cap plus one prune batch the oldest go,
+    by mtime (ties included), down to the cap."""
+
+    def seed_markers(root, n: int):
+        inc = root / "_increments"
+        inc.mkdir(parents=True)
+        for i in range(n):
+            (inc / f"old{i:05d}").write_text("x")
+            os.utime(inc / f"old{i:05d}", (1_000_000_000 + i // 2,) * 2)  # pairs tie
+        return inc
+
+    seed_markers(tmp_path / "empty", 0)
+    seed_markers(tmp_path / "full", 1100)
+    with _RoundTrips() as empty:
+        mark_increment_applied(spark, str(tmp_path / "empty"), "new")
+    with _RoundTrips() as full:
+        mark_increment_applied(spark, str(tmp_path / "full"), "new")
+    assert full.n == empty.n, (empty.n, full.n)
+    assert len(os.listdir(tmp_path / "full" / "_increments")) == 1101 + 1  # + new .crc
+
+    # one past the threshold, so the cut (130 oldest) falls between ties
+    n = MAX_INCREMENT_MARKERS + _MARKER_PRUNE_BATCH + 1
+    inc = seed_markers(tmp_path / "over", n)
+    mark_increment_applied(spark, str(tmp_path / "over"), "new")
+    kept = {f for f in os.listdir(inc) if not f.startswith(".")}
+    newest = {f"old{i:05d}" for i in range(n - MAX_INCREMENT_MARKERS + 1, n)}
+    assert kept == newest | {"new"}
 
 
 def test_manifest_rows_track_every_publish(spark, tmp_path):

@@ -7,6 +7,11 @@ batch twin over the same data.
 
 from __future__ import annotations
 
+import datetime as dt
+import os
+
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -84,6 +89,62 @@ def test_dedup_stream(spark, events_dir, tmp_path):
     )
     assert out.count() == batch_distinct
     assert out.select("user_id", "event_type").distinct().count() == batch_distinct
+
+
+def test_dedup_then_windowed_counts_share_one_watermark(spark, tmp_path):
+    """``dedup_stream`` declares the watermark and ``windowed_event_counts``
+    reuses it (``watermark=None``): a second ``withWatermark`` on one
+    stream is rejected by Spark 4.1. One file per micro-batch, append
+    mode. By hand: event 1 repeats within batch 0 and event 2 across
+    batches 0-1, so window 00:00 holds events 1 and 2 of type a and
+    window 01:00 events 3 (b) and 4 (a). Batch 2 (05:00) moves the
+    watermark to 03:00, past both windows, so they are emitted. Event 6
+    (00:30) lands after that and is dropped as late; the 05:00 window
+    stays open."""
+    t0 = dt.datetime(2024, 1, 1)
+    files = [
+        [(1, 5, "a"), (2, 10, "a"), (1, 5, "a")],
+        [(3, 70, "b"), (2, 10, "a"), (4, 65, "a")],
+        [(5, 300, "c")],
+        [(7, 301, "c")],
+        [(6, 30, "a"), (1, 5, "a")],
+    ]
+    src = tmp_path / "src"
+    src.mkdir()
+    for k, rows in enumerate(files):
+        table = pa.table(
+            {
+                "event_id": pa.array([r[0] for r in rows], pa.int64()),
+                "ts": pa.array(
+                    [t0 + dt.timedelta(minutes=r[1]) for r in rows], pa.timestamp("us", "UTC")
+                ),
+                "user_id": pa.array([1] * len(rows), pa.int64()),
+                "event_type": pa.array([r[2] for r in rows]),
+                "value": pa.array([float(r[0]) for r in rows]),
+                "props": pa.array([""] * len(rows)),
+            }
+        )
+        path = str(src / f"f{k}.parquet")
+        pq.write_table(table, path)
+        os.utime(path, (1_000_000_000 + k,) * 2)  # file order = batch order
+
+    stream = read_events_stream(spark, str(src), max_files_per_trigger=1)
+    counts = windowed_event_counts(dedup_stream(stream, ["event_id"]), watermark=None)
+    q = (
+        counts.writeStream.format("parquet")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start(str(tmp_path / "out"))
+    )
+    q.awaitTermination(180)
+    assert q.exception() is None
+    got = sorted(tuple(r) for r in spark.read.parquet(str(tmp_path / "out")).collect())
+    assert got == [
+        (t0, "a", 2, 3.0),
+        (t0 + dt.timedelta(hours=1), "a", 1, 4.0),
+        (t0 + dt.timedelta(hours=1), "b", 1, 3.0),
+    ]
 
 
 def test_foreach_batch_merge_upserts(spark, events_dir, tmp_path):
