@@ -111,9 +111,11 @@ class Engine:
           transactional MERGE INTO — file-pruned partial rewrite plus
           cross-file atomicity (operators/delta_merge);
         - bucketed parquet (io/bucketed, created via `Engine.bucketize`
-          or `write_bucketed`): only the key-buckets the increment
-          touches are read and rewritten — O(|increment|) per sync, the
-          layout a 100 TB destination needs;
+          or `write_bucketed`): the increment lands as one delta per
+          touched key-bucket (merge-on-read, folded into the bucket now
+          and then) — O(|increment|) per sync, the layout a 100 TB
+          destination needs. Its Spark jobs are described
+          ``fastetl:sync:<phase>`` (watermark, then partial_merge's).
         - plain parquet: full merge + atomic directory swap (correct and
           crash-safe, but O(|destination|) per sync — the migration
           target is the bucketed layout);
@@ -157,6 +159,7 @@ class Engine:
                 read_bucket_spec,
                 read_bucketed,
             )
+            from fastetl_spark.session import job_phase
 
             spec = read_bucket_spec(self.spark, dest["path"])
             if spec is not None:
@@ -166,15 +169,17 @@ class Engine:
                 # Fallback (no store / first run): scan once, then the
                 # store takes over.
                 wm = None
-                if self.watermark_store is not None:
-                    wm = self.watermark_store.get(table_name or dest["path"])
-                if wm is None:
-                    # MAX over an empty destination is None — legitimate
-                    # after a deletion feed empties every bucket
-                    # (partial_merge keeps a schema-bearing empty file);
-                    # merge the full source increment rather than wedge.
-                    dest_df = read_bucketed(self.spark, dest["path"])
-                    wm = dest_df.agg(F.max(watermark_col)).first()[0]
+                with job_phase(self.spark, "sync", "watermark"):
+                    if self.watermark_store is not None:
+                        wm = self.watermark_store.get(table_name or dest["path"])
+                    if wm is None:
+                        # MAX over an empty destination is None —
+                        # legitimate after a deletion feed empties every
+                        # bucket (partial_merge keeps a schema-bearing
+                        # empty file); merge the full source increment
+                        # rather than wedge.
+                        dest_df = read_bucketed(self.spark, dest["path"])
+                        wm = dest_df.agg(F.max(watermark_col)).first()[0]
                 inc = (
                     src_df
                     if wm is None
@@ -188,7 +193,8 @@ class Engine:
                 if self.watermark_store is not None:
                     new_wm = observed(wm_obs, {"wm": None})["wm"]
                     if new_wm is not None:
-                        self.watermark_store.set(table_name or dest["path"], new_wm)
+                        with job_phase(self.spark, "sync", "watermark"):
+                            self.watermark_store.set(table_name or dest["path"], new_wm)
                 n = merge["rows"]  # from the manifest: no count job
                 if self.load_info:
                     self.load_info.save(

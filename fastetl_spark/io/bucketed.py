@@ -11,27 +11,55 @@ file-level pruning. This module is the plain-parquet equivalent:
   merge key, one parquet directory each, plus a ``_bucket_spec.json``
   control file;
 - a merge computes the increment's touched bucket set (≤ N small ints
-  — a bounded, documented driver value, not a data collect), reads
-  ONLY those buckets, merges, and publishes them;
-- untouched buckets are never opened, so merge cost is
-  O(|increment| + |touched buckets|), and a point increment into a
-  4096-bucket 100 TB destination rewrites ~25 GB, not 100 TB.
+  — a bounded, documented driver value, not a data collect) and writes
+  a delta for those buckets only (merge-on-read, below);
+- untouched buckets are never opened, and touched ones are read only
+  for their key columns (the exact post-merge row count), so a merge
+  writes O(|increment|) plus the occasional fold of a bucket.
 
 Every merge destination has one layout, the manifest layout (spec
 version 2, ``write_bucketed``): bucket data lives in versioned
-``bucket_<K>_v<gen>`` dirs, and a rename-committed
+``bucket_<K>_v<gen>`` base dirs, and a rename-committed
 ``_manifest_<gen>.json`` is the single pointer that publishes a
-generation. A merge writes all touched buckets' new dirs first
-(unreferenced, invisible), then flips the pointer once — readers
-racing the merge resolve one committed generation, old or new, never a
-mix; a crash before the commit leaves the old generation fully intact,
-and re-running the same increment converges. The previous generation's
-dirs are retained for in-flight readers and GC'd a generation later.
-The manifest also records each bucket's row count and the data schema,
-so a count or a read needs no Spark job. The trade: the root is not
-raw-readable with ``spark.read.parquet(path)`` — go through
+generation. The manifest also records each bucket's row count and the
+data schema, so a count or a read needs no Spark job. The trade: the
+root is not raw-readable with ``spark.read.parquet(path)`` — go through
 ``read_bucketed``. The Delta-backed path (operators/delta_merge)
 remains the choice where delta is installed.
+
+Merges are merge-on-read, after Iceberg v2 equality deletes
+(https://iceberg.apache.org/spec/#equality-delete-files):
+
+- a merge writes ONE delta dir, ``delta_v<gen>/__fe_bucket=K/`` (one
+  file per touched bucket), holding the increment's rows and the
+  deletion feed's keys as tombstone rows (``__fe_del`` true, other
+  columns null). It neither reads nor rewrites the buckets' data; the
+  manifest lists each bucket's base dir and its pending delta dirs in
+  generation order, and the merge writes about as much as the increment
+  (reference fast_etl.py:601-610 updates only the changed rows, too);
+- readers resolve base + deltas through one resolver (``_resolve``):
+  the latest generation of a key wins and a tombstone deletes it, the
+  base is anti-joined against all delta keys (broadcast, so the base is
+  never shuffled), then the live delta rows are unioned. A bucket with
+  no deltas is a plain scan. Pending deltas cost a read one shuffle of
+  the delta rows and one broadcast of their keys;
+- a bucket FOLDS — the old copy-on-write body: base + deltas + the
+  increment rewritten as a new base — when its pending delta rows,
+  tombstones included, pass ``FOLD_DELTA_SHARE`` of its live rows, when
+  it has ``DEFAULT_MAX_FILES_PER_BUCKET`` delta dirs, or when it has no
+  base yet. All folding buckets of a merge go in one write, committed
+  in the same manifest as the delta. The share bounds what a read pays
+  for deltas; amortised, a fold rewrites a bucket once per
+  ~``FOLD_DELTA_SHARE`` of its rows merged.
+
+A merge writes the delta (and any fold) first, unreferenced and
+invisible, then flips the pointer once — readers racing the merge
+resolve one committed generation, old or new, never a mix; a crash
+before the commit leaves the old generation fully intact, and re-running
+the same increment converges. The previous generation's dirs are
+retained for in-flight readers and GC'd a generation later; since a
+delta generation shares its base dirs with the one before, that
+retention costs only the superseded deltas and folded bases.
 
 The append-only indexes (operators/dedup_index, the IVF-PQ
 ``vectors/`` of operators/ann_index) keep the Hive layout (spec version
@@ -59,10 +87,11 @@ plan-asserted shuffle-free in tests).
 from __future__ import annotations
 
 import json
+from functools import reduce
 
-from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import BooleanType, IntegerType, StructField, StructType
 
 from fastetl_spark.checkpointing import materialize, observed
 from fastetl_spark.io.fsutil import (
@@ -74,6 +103,7 @@ from fastetl_spark.io.fsutil import (
     write_text_file,
 )
 from fastetl_spark.io.writers import literal_frame
+from fastetl_spark.session import job_phase
 
 BUCKET_COL = "__fe_bucket"
 SPEC_FILE = "_bucket_spec.json"
@@ -83,6 +113,19 @@ HIVE_VERSION = 1
 # rename-committed manifest pointer; readers see one generation)
 MANIFEST_VERSION = 2
 MANIFEST_PREFIX = "_manifest_"
+# Merge-on-read deltas: ``delta_v<gen>/__fe_bucket=K/`` dirs whose rows
+# carry their generation and DELETED_COL (true on a tombstone: keys set,
+# other columns null)
+DELTA_PREFIX = "delta_v"
+GEN_COL = "__fe_gen"
+DELETED_COL = "__fe_del"
+# A bucket folds into a new base once its pending delta rows pass this
+# share of its live rows (or it has DEFAULT_MAX_FILES_PER_BUCKET delta
+# dirs): it bounds a read's delta work against the rewrites a fold costs
+FOLD_DELTA_SHARE = 0.5
+DEFAULT_MAX_FILES_PER_BUCKET = 16
+# manifest keys that map a bucket id to a value
+_PER_BUCKET = ("buckets", "rows", "shards", "deltas", "delta_rows")
 
 
 def bucket_id(keys: list[str], n_buckets: int) -> Column:
@@ -127,14 +170,17 @@ def _manifest_gens(fs, path_cls, base: str) -> list[int]:
 
 def read_manifest(spark: SparkSession, path: str) -> dict | None:
     """Latest committed manifest of a v2 destination:
-    {"gen": N, "buckets": {bucket_id: dir_name}} — the one pointer that
-    defines which physical dirs are live. None when no manifest exists.
+    {"gen": N, "buckets": {bucket_id: base dir name}} — the one pointer
+    that defines which physical dirs are live. None when no manifest
+    exists.
 
-    Manifests committed by this version also carry ``rows`` ({bucket_id:
-    row count} of the live dirs, from their parquet footers) and
-    ``schema`` (the data schema as Spark JSON), so a row count or a
-    read of the live dirs needs no Spark job; older manifests lack both
-    keys and readers fall back to the footers and to schema inference."""
+    Optional keys: ``rows`` ({bucket_id: live row count}) and ``schema``
+    (the data schema as Spark JSON), so a row count or a read needs no
+    Spark job (manifests older than both fall back to the footers and to
+    schema inference); ``deltas`` ({bucket_id: [delta dir, ...]} in
+    generation order) and ``delta_rows`` ({bucket_id: pending delta rows,
+    tombstones included}) for buckets with merge-on-read deltas; and
+    ``shards``/``n_shards`` on a sharded destination."""
     fs, path_cls = hadoop_fs(spark, path)
     gens = _manifest_gens(fs, path_cls, path.rstrip("/"))
     if not gens:
@@ -142,21 +188,13 @@ def read_manifest(spark: SparkSession, path: str) -> dict | None:
     return _read_manifest_gen(spark, path, gens[-1])
 
 
-def _commit_manifest(
-    spark: SparkSession,
-    path: str,
-    gen: int,
-    buckets: dict[int, str],
-    shards: dict[int, int] | None = None,
-    n_shards: int | None = None,
-    rows: dict[int, int] | None = None,
-    schema: dict | None = None,
-) -> None:
-    """THE atomic publish step: write the manifest to a hidden tmp name,
-    then rename onto `_manifest_<gen>.json` (rename-to-new-name is
-    atomic on HDFS/POSIX). A reader lists committed manifests and takes
-    the highest generation, so at every instant it resolves either the
-    old pointer or the new one — never a partially-published state.
+def _commit_manifest(spark: SparkSession, path: str, m: dict) -> None:
+    """THE atomic publish step: write manifest ``m`` (``read_manifest``'s
+    form, ``m["gen"]`` its generation) to a hidden tmp name, then rename
+    onto `_manifest_<gen>.json` (rename-to-new-name is atomic on
+    HDFS/POSIX). A reader lists committed manifests and takes the
+    highest generation, so at every instant it resolves either the old
+    pointer or the new one — never a partially-published state.
 
     ``shards`` (sharded destinations only) is the bucket -> rendezvous
     shard placement map — per-bucket provenance carried on every
@@ -164,24 +202,17 @@ def _commit_manifest(
     bucket dirs as of this gen. ``n_shards`` rides along as the ring
     size the map was computed for: the MANIFEST is the source of truth
     for shard placement (it commits atomically with the data pointer),
-    the spec file is a convenience mirror refreshed after commit.
-
-    ``rows`` and ``schema`` (see ``read_manifest``) are recorded when
-    known."""
+    the spec file is a convenience mirror refreshed after commit."""
     fs, path_cls = hadoop_fs(spark, path)
     base = path.rstrip("/")
+    gen = m["gen"]
     tmp = f"{base}/.{MANIFEST_PREFIX}{gen}.json.tmp"
     final = f"{base}/{MANIFEST_PREFIX}{gen}.json"
-    m: dict = {"gen": gen, "buckets": {str(k): v for k, v in buckets.items()}}
-    if shards is not None:
-        m["shards"] = {str(k): int(v) for k, v in shards.items()}
-    if n_shards is not None:
-        m["n_shards"] = int(n_shards)
-    if rows is not None:
-        m["rows"] = {str(k): int(v) for k, v in rows.items()}
-    if schema is not None:
-        m["schema"] = schema
-    write_text_file(spark, tmp, json.dumps(m))
+    doc = {
+        k: {str(b): x for b, x in v.items()} if k in _PER_BUCKET else v
+        for k, v in m.items()
+    }
+    write_text_file(spark, tmp, json.dumps(doc))
     if not fs.rename(path_cls(tmp), path_cls(final)):
         fs.delete(path_cls(tmp), False)
         raise IOError(
@@ -189,24 +220,41 @@ def _commit_manifest(
         )
 
 
+def _referenced(m: dict) -> list[str]:
+    """Every dir manifest ``m`` reads: base dirs, then delta dirs."""
+    return list(m["buckets"].values()) + [
+        d for dirs in m.get("deltas", {}).values() for d in dirs
+    ]
+
+
 def _gc_generations(spark: SparkSession, path: str, keep_gens: int = 2) -> None:
-    """Drop bucket dirs and manifests no longer referenced by the newest
-    ``keep_gens`` manifests. The previous generation is retained so a
-    reader that resolved the old pointer just before a flip can still
-    open its files; anything older is dead."""
+    """Drop base dirs, delta dirs and manifests no longer referenced by
+    the newest ``keep_gens`` manifests. The previous generation is
+    retained so a reader that resolved the old pointer just before a
+    flip can still open its files; anything older is dead. A delta dir
+    goes bucket by bucket, as folds stop referencing its parts."""
     fs, path_cls = hadoop_fs(spark, path)
     base = path.rstrip("/")
     gens = _manifest_gens(fs, path_cls, base)
-    live_dirs: set[str] = set()
+    live: set[str] = set()
     for g in gens[-keep_gens:]:
-        text = read_text_file(spark, f"{base}/{MANIFEST_PREFIX}{g}.json")
-        live_dirs |= set(json.loads(text)["buckets"].values())
+        live |= set(_referenced(_read_manifest_gen(spark, path, g)))
     for g in gens[:-keep_gens]:
         fs.delete(path_cls(f"{base}/{MANIFEST_PREFIX}{g}.json"), False)
     for s in fs.listStatus(path_cls(base)):
         name = s.getPath().getName()
-        if s.isDirectory() and name.startswith("bucket_") and name not in live_dirs:
+        if not s.isDirectory():
+            continue
+        if name.startswith("bucket_") and name not in live:
             fs.delete(s.getPath(), True)
+        elif name.startswith(DELTA_PREFIX):
+            parts = {d.split("/", 1)[1] for d in live if d.startswith(name + "/")}
+            if not parts:
+                fs.delete(s.getPath(), True)
+                continue
+            for p in fs.listStatus(s.getPath()):
+                if p.isDirectory() and p.getPath().getName() not in parts:
+                    fs.delete(p.getPath(), True)
 
 
 def write_bucketed(
@@ -272,15 +320,11 @@ def write_bucketed(
         empty.write.mode("overwrite").parquet(f"{base}/bucket_0_v{gen}")
         buckets[0], rows[0] = f"bucket_0_v{gen}", 0
     fs.delete(path_cls(staging), True)
-    shards = (
-        {b: _hrw_shard(b, n_shards) for b in range(n_buckets)}
-        if n_shards is not None
-        else None
-    )
-    _commit_manifest(
-        spark, path, gen, buckets, shards=shards, n_shards=n_shards,
-        rows=rows, schema=df.schema.jsonValue(),
-    )
+    m: dict = {"gen": gen, "buckets": buckets, "rows": rows, "schema": df.schema.jsonValue()}
+    if n_shards is not None:
+        m["shards"] = {b: _hrw_shard(b, n_shards) for b in range(n_buckets)}
+        m["n_shards"] = int(n_shards)
+    _commit_manifest(spark, path, m)
     spec: dict = {
         "version": MANIFEST_VERSION,
         "keys": list(keys),
@@ -304,13 +348,65 @@ def _write_hive_bucketed(
     write_text_file(df.sparkSession, _spec_path(path), json.dumps(spec))
 
 
-def _read_dirs(spark: SparkSession, m: dict, dirs: list[str]) -> DataFrame:
-    """Read bucket dirs of the generation ``m`` describes. A recorded
-    schema skips parquet schema inference, which costs a Spark job."""
-    reader = spark.read
+def _schema(spark: SparkSession, base: str, m: dict) -> StructType:
+    """Data schema of generation ``m``: the recorded one, or (for a
+    manifest that predates recording it) inferred from its base dirs,
+    which costs a Spark job."""
     if "schema" in m:
-        reader = reader.schema(StructType.fromJson(m["schema"]))
-    return reader.parquet(*dirs)
+        return StructType.fromJson(m["schema"])
+    return spark.read.parquet(*[f"{base}/{d}" for d in m["buckets"].values()]).schema
+
+
+def _pending(spark: SparkSession, base: str, m: dict, ids: list[int]) -> DataFrame | None:
+    """Every pending delta row of buckets ``ids`` in generation ``m``,
+    tombstones included; None when they have no deltas."""
+    deltas = m.get("deltas", {})
+    dirs = [f"{base}/{d}" for b in ids for d in deltas.get(b, [])]
+    if not dirs:
+        return None
+    marks = [StructField(GEN_COL, IntegerType()), StructField(DELETED_COL, BooleanType())]
+    return spark.read.schema(StructType(_schema(spark, base, m).fields + marks)).parquet(*dirs)
+
+
+def _resolve(
+    spark: SparkSession,
+    path: str,
+    m: dict,
+    bucket_ids: list[int] | None = None,
+    keys: list[str] | None = None,
+) -> DataFrame:
+    """THE reader of generation ``m``: the live rows of its buckets
+    (all, or ``bucket_ids``), every reader goes through it.
+
+    A bucket without deltas is a plain scan of its base. For buckets
+    with deltas: the deltas resolve among themselves (per key the latest
+    generation wins, a tombstone beats an upsert of its own generation,
+    and a winning tombstone deletes the key); the base is anti-joined
+    against every delta key, broadcast, so the base is never shuffled;
+    the live delta rows are unioned on. ``keys`` (the merge keys) is read
+    from the spec when not given and deltas exist."""
+    base = path.rstrip("/")
+    schema = _schema(spark, base, m)
+    ids = sorted(m["buckets"] if bucket_ids is None else set(bucket_ids) & set(m["buckets"]))
+    deltas = m.get("deltas", {})
+    plain = [f"{base}/{m['buckets'][b]}" for b in ids if b not in deltas]
+    shadowed = [f"{base}/{m['buckets'][b]}" for b in ids if b in deltas]
+    parts = [spark.read.schema(schema).parquet(*plain)] if plain else []
+    pending = _pending(spark, base, m, ids)
+    if pending is not None:
+        keys = keys or read_bucket_spec(spark, path)["keys"]
+        old = spark.read.schema(schema).parquet(*shadowed)
+        parts.append(old.join(F.broadcast(pending.select(*keys)), keys, "left_anti"))
+        latest = Window.partitionBy(*keys).orderBy(F.desc(GEN_COL), F.desc(DELETED_COL))
+        parts.append(
+            pending.withColumn("__fe_rank", F.row_number().over(latest))
+            .filter(f"__fe_rank = 1 AND NOT {DELETED_COL}")
+            .select(*schema.names)
+        )
+    if not parts:
+        return literal_frame(spark, schema)
+    # by name: a join on ``keys`` puts the key columns first
+    return reduce(DataFrame.unionByName, parts).select(*schema.names)
 
 
 def read_bucketed(spark: SparkSession, path: str) -> DataFrame:
@@ -332,8 +428,7 @@ def read_bucketed(spark: SparkSession, path: str) -> DataFrame:
         else None
     )
     if m is not None:
-        base = path.rstrip("/")
-        return _read_dirs(spark, m, [f"{base}/{d}" for d in m["buckets"].values()])
+        return _resolve(spark, path, m, keys=spec and spec["keys"])
     if spec is not None and spec["version"] == MANIFEST_VERSION:
         raise IOError(
             f"{path} has a v2 bucket spec but no committed manifest — "
@@ -359,13 +454,9 @@ def _read_manifest_gen(spark: SparkSession, path: str, gen: int) -> dict:
             f"{list_generations(spark, path)}"
         )
     m = json.loads(text)
-    m["buckets"] = {int(k): v for k, v in m["buckets"].items()}
-    if "rows" in m:
-        m["rows"] = {int(k): int(v) for k, v in m["rows"].items()}
-    if "shards" in m:
-        m["shards"] = {int(k): int(v) for k, v in m["shards"].items()}
-    if "n_shards" in m:
-        m["n_shards"] = int(m["n_shards"])
+    for k in _PER_BUCKET:
+        if k in m:
+            m[k] = {int(b): v for b, v in m[k].items()}
     return m
 
 
@@ -375,16 +466,21 @@ def read_bucketed_at(spark: SparkSession, path: str, gen: int) -> DataFrame:
     retention window (``keep_gens``, default 2) still have their bucket
     dirs on disk; older gens raise here."""
     m = _read_manifest_gen(spark, path, gen)
-    base = path.rstrip("/")
-    fs, path_cls = hadoop_fs(spark, path)
-    missing = [d for d in m["buckets"].values() if not fs.exists(path_cls(f"{base}/{d}"))]
+    missing = _missing_dirs(spark, path, m)
     if missing:
         raise ValueError(
             f"generation {gen} of {path} is no longer readable: bucket dirs "
             f"{missing[:3]}{'...' if len(missing) > 3 else ''} were GC'd "
             "(outside the keep_gens retention window)"
         )
-    return _read_dirs(spark, m, [f"{base}/{d}" for d in m["buckets"].values()])
+    return _resolve(spark, path, m)
+
+
+def _missing_dirs(spark: SparkSession, path: str, m: dict) -> list[str]:
+    """Dirs generation ``m`` reads that are gone (GC'd)."""
+    fs, path_cls = hadoop_fs(spark, path)
+    base = path.rstrip("/")
+    return [d for d in _referenced(m) if not fs.exists(path_cls(f"{base}/{d}"))]
 
 
 def rollback_bucketed(spark: SparkSession, path: str, to_gen: int | None = None) -> int:
@@ -419,20 +515,14 @@ def rollback_bucketed(spark: SparkSession, path: str, to_gen: int | None = None)
         if target not in gens:
             raise ValueError(f"generation {target} not in committed history {gens}")
         m = _read_manifest_gen(spark, path, target)
-        base = path.rstrip("/")
-        missing = [
-            d for d in m["buckets"].values() if not fs.exists(path_cls(f"{base}/{d}"))
-        ]
+        missing = _missing_dirs(spark, path, m)
         if missing:
             raise ValueError(
                 f"cannot roll back {path} to gen {target}: bucket dirs "
                 f"{missing[:3]}{'...' if len(missing) > 3 else ''} were GC'd"
             )
         new_gen = gens[-1] + 1
-        _commit_manifest(
-            spark, path, new_gen, m["buckets"], shards=m.get("shards"),
-            rows=m.get("rows"), schema=m.get("schema"),
-        )
+        _commit_manifest(spark, path, {**m, "gen": new_gen})
         return new_gen
     finally:
         fs.delete(lock, False)
@@ -459,11 +549,10 @@ def read_buckets_for_keys(
     touched = sorted(_touched)
     if spec["version"] == MANIFEST_VERSION:
         m = read_manifest(spark, path)
-        base = path.rstrip("/")
-        dirs = [f"{base}/{m['buckets'][b]}" for b in touched if b in m["buckets"]]
-        if not dirs:
-            return read_bucketed(spark, path).limit(0)
-        dest = _read_dirs(spark, m, dirs)
+        live = [b for b in touched if b in m["buckets"]]
+        dest = _resolve(spark, path, m, live, keys)
+        if not live:
+            return dest  # empty, typed
         return dest.join(keys_df.select(*keys), on=keys, how="left_semi")
     # Hive-layout index root: the bucket dirs that exist
     existing = _existing_bucket_paths(spark, path, touched)
@@ -512,6 +601,68 @@ def _tag_touched(
     return tagged[0], (tagged[1] if len(tagged) > 1 else None), sorted(touched)
 
 
+def _folds(m: dict, b: int) -> bool:
+    """Whether a merge touching bucket ``b`` of generation ``m`` folds
+    it (base + deltas + increment into a new base) instead of adding a
+    delta: it has no base yet, its pending delta rows pass
+    ``FOLD_DELTA_SHARE`` of its live rows, or it has
+    ``DEFAULT_MAX_FILES_PER_BUCKET`` delta dirs."""
+    if b not in m["buckets"]:
+        return True
+    return (
+        m.get("delta_rows", {}).get(b, 0) > FOLD_DELTA_SHARE * m["rows"][b]
+        or len(m.get("deltas", {}).get(b, [])) >= DEFAULT_MAX_FILES_PER_BUCKET
+    )
+
+
+def _delta_frame(
+    schema: StructType, keys: list[str], gen: int, inc: DataFrame, dels: DataFrame | None
+) -> DataFrame:
+    """The bucket-tagged increment rows as upserts and the deletion
+    feed's keys as tombstones of generation ``gen``: the data columns,
+    ``GEN_COL``, ``DELETED_COL`` and the bucket column."""
+    rows = inc.select(*schema.names, BUCKET_COL, F.lit(False).alias(DELETED_COL))
+    if dels is not None:
+        tombstones = dels.select(
+            *[F.col(f.name) if f.name in keys else F.lit(None).cast(f.dataType).alias(f.name) for f in schema],
+            BUCKET_COL,
+            F.lit(True).alias(DELETED_COL),
+        )
+        rows = rows.union(tombstones)
+    return rows.select(*schema.names, F.lit(gen).alias(GEN_COL), DELETED_COL, BUCKET_COL)
+
+
+def _bucket_counts(
+    spark: SparkSession, path: str, m: dict, ids: list[int], keys: list[str], n_buckets: int
+) -> dict[int, tuple[int, int]]:
+    """{bucket: (live rows, pending delta rows)} of buckets ``ids`` in
+    generation ``m``: one aggregate over their key columns, distributed
+    by bucket so that it runs a single shuffle. It resolves as
+    ``_resolve`` does: per key the greatest (generation, tombstone)
+    wins, base rows being generation 0."""
+    base = path.rstrip("/")
+    ids = [b for b in ids if b in m["buckets"]]
+    if not ids:
+        return {}
+    rows = (
+        spark.read.schema(_schema(spark, base, m))
+        .parquet(*[f"{base}/{m['buckets'][b]}" for b in ids])
+        .select(*keys, F.lit(0).alias(GEN_COL), F.lit(False).alias(DELETED_COL))
+    )
+    pending = _pending(spark, base, m, ids)
+    if pending is not None:
+        rows = rows.union(pending.select(*keys, GEN_COL, DELETED_COL))
+    latest = F.max(F.struct(GEN_COL, DELETED_COL))[DELETED_COL]
+    per_key = (
+        rows.withColumn(BUCKET_COL, bucket_id(keys, n_buckets))
+        .repartition(BUCKET_COL)
+        .groupBy(BUCKET_COL, *keys)
+        .agg(latest.alias("dead"), F.count_if(F.col(GEN_COL) > 0).alias("pending"))
+    )
+    agg = per_key.groupBy(BUCKET_COL).agg(F.count_if(~F.col("dead")), F.sum("pending"))
+    return {r[0]: (r[1], r[2]) for r in agg.collect()}
+
+
 def _write_by_bucket(df: DataFrame, path: str) -> None:
     """``partitionBy`` write of a bucket-tagged frame, distributed by
     bucket first: one file per touched bucket (more only where AQE splits
@@ -537,26 +688,30 @@ def partial_merge(
     increment: DataFrame,
     deleted_keys: DataFrame | None = None,
 ) -> dict:
-    """Merge an increment into a bucketed destination, rewriting only
+    """Merge an increment into a bucketed destination, writing only for
     the buckets the increment (or deletion feed) touches.
 
     Upsert semantics match operators/sync.merge_upsert (incoming rows
     win on key match, new keys append — reference fast_etl.py:437-451);
-    deletions match delete_sync (anti-join retain). The increment must
+    deletions match delete_sync (anti-join retain), and a key in both
+    the increment and the deletion feed is deleted. The increment must
     be key-unique (callers dedupe, as the streaming merge already does).
 
-    The touched buckets' NEW versions are written as fresh
-    ``bucket_<K>_v<gen+1>`` dirs (invisible — nothing references them),
-    then every touched bucket is published at once with ONE manifest
-    rename-commit. A crash before the commit leaves the destination
-    exactly at the old generation (orphan dirs are overwritten by the
-    re-run and collected by generation GC); a crash after the commit IS
-    the new state.
+    Merge-on-read (module docstring): the touched buckets get one delta
+    dir, ``delta_v<gen+1>``, of upserts and tombstones; buckets due a
+    fold are rewritten as ``bucket_<K>_v<gen+1>`` in one write instead.
+    Both are invisible until ONE manifest rename-commit publishes every
+    touched bucket at once. A crash before the commit leaves the
+    destination exactly at the old generation (orphan dirs are
+    overwritten by the re-run and collected by generation GC); a crash
+    after the commit IS the new state, and a re-run converges.
 
     Returns ``{"n_buckets": N, "buckets_touched": t, "rows_written": w,
-    "rows": r}``: ``w`` is the row count of the rewritten buckets and
-    ``r`` the destination's row count after the merge, both from the
-    manifest and the new dirs' parquet footers — no count job.
+    "rows": r}``: ``w`` is the rows physically written (delta rows,
+    tombstones and folded buckets) and ``r`` the destination's exact row
+    count after the merge, kept in the manifest from one aggregate over
+    the touched buckets' key columns. A bucket left without rows is
+    dropped from the manifest.
 
     Only manifest-layout roots merge; a Hive-layout root (spec version
     1) raises ``ValueError`` — migrate it once with ``bucketize``.
@@ -566,6 +721,9 @@ def partial_merge(
     fight over one staging directory and one next generation. A crash
     leaves the lock behind; clear it with ``io.fsutil.vacuum_dest`` (or
     delete the file) once no merge runs.
+
+    The Spark jobs run under the descriptions ``fastetl:sync:<phase>``,
+    phases ``materialize``, ``delta_write``, ``fold`` and ``count``.
     """
     spec = read_bucket_spec(spark, path)
     if spec is None:
@@ -602,79 +760,129 @@ def _merge_locked(
 ) -> dict:
     """The body of ``partial_merge``, run under its lock.
 
-    Row counts per bucket come from the new dirs' footers and, for
-    untouched buckets, from the old manifest. Not from observations:
-    the merge plan's joins sit above the scans, and AQE drops a subtree
-    it finds empty together with its observations."""
+    The increment and the deletion feed are cast to the destination's
+    schema before they are bucketed. When no bucket is due a fold, they
+    are read once, by the delta write, which observes the touched
+    buckets; otherwise they are materialised first, as a fold consumes
+    them too. Row counts per bucket come from an aggregate over the new
+    generation, not from observations: the merge plans' joins sit above
+    the scans, and AQE drops a subtree it finds empty together with its
+    observations."""
     from fastetl_spark.operators.sync import delete_sync, merge_upsert
 
     keys, n_buckets = spec["keys"], spec["n_buckets"]
     m = read_manifest(spark, path)
-    gen, old_buckets = m["gen"], dict(m["buckets"])
-    next_gen = gen + 1
     base = path.rstrip("/")
-    fs, path_cls = hadoop_fs(spark, path)
+    m["rows"] = _live_rows(spark, base, m)
+    schema = _schema(spark, base, m)
+    inc = increment.select(*[F.col(f.name).cast(f.dataType).alias(f.name) for f in schema])
+    dels = deleted_keys
+    if dels is not None:
+        dels = dels.select(*[F.col(k).cast(schema[k].dataType).alias(k) for k in keys])
+    due = {b for b in range(n_buckets) if _folds(m, b)}
+    if due:
+        with job_phase(spark, "sync", "materialize"):
+            inc, dels, touched = _tag_touched(inc, dels, keys, n_buckets)
+        fold = [b for b in touched if b in due]
+    else:
+        inc = inc.withColumn(BUCKET_COL, bucket_id(keys, n_buckets))
+        if dels is not None:
+            dels = dels.withColumn(BUCKET_COL, bucket_id(keys, n_buckets))
+        touched, fold = None, []  # touched: observed on the delta write
 
-    rows = _live_rows(spark, base, m)
-    inc, dels, touched_ids = _tag_touched(increment, deleted_keys, keys, n_buckets)
-    if not touched_ids:
+    def only(df: DataFrame | None, ids: list[int]) -> DataFrame | None:
+        if df is None or not fold:
+            return df
+        return df.filter(F.col(BUCKET_COL).isin(ids))
+
+    next_gen = m["gen"] + 1
+    new = {
+        **m,
+        "gen": next_gen,
+        "schema": schema.jsonValue(),
+        **{k: dict(m.get(k, {})) for k in ("buckets", "rows", "deltas", "delta_rows")},
+    }
+    fs, path_cls = hadoop_fs(spark, path)
+    rows_written = 0
+    append = None if touched is None else [b for b in touched if b not in fold]
+    if append is None or append:
+        delta_dir = f"{DELTA_PREFIX}{next_gen}"
+        obs = Observation()
+        with job_phase(spark, "sync", "delta_write"):
+            delta = _delta_frame(schema, keys, next_gen, only(inc, append), only(dels, append))
+            observe = [F.count(F.lit(1)).alias("n"), F.collect_set(BUCKET_COL).alias("b")]
+            _write_by_bucket(delta.observe(obs, *observe), f"{base}/{delta_dir}")
+        written = observed(obs, {"n": 0, "b": []})
+        rows_written += written["n"]
+        if touched is None:
+            touched = append = sorted(written["b"])
+        for b in append:
+            new["deltas"][b] = new["deltas"].get(b, []) + [f"{delta_dir}/{BUCKET_COL}={b}"]
+        if not touched:  # nothing to merge: drop the empty delta dir
+            fs.delete(path_cls(f"{base}/{delta_dir}"), True)
+    if not touched:
         return {
             "n_buckets": n_buckets,
             "buckets_touched": 0,
             "rows_written": 0,
-            "rows": sum(rows.values()),
+            "rows": sum(m["rows"].values()),
         }
 
-    live_touched = [f"{base}/{old_buckets[b]}" for b in touched_ids if b in old_buckets]
-    if live_touched:
-        dest = _read_dirs(spark, m, live_touched)
-        merged = merge_upsert(dest, inc.drop(BUCKET_COL).select(*dest.columns), keys)
-    else:
-        merged = inc.drop(BUCKET_COL)
-    if dels is not None:
-        merged = delete_sync(merged, dels.select(*keys), keys)
-
-    staging = base + ".__merge_staging__"
-    if fs.exists(path_cls(staging)):
+    if fold:
+        staging = base + ".__merge_staging__"
+        with job_phase(spark, "sync", "fold"):
+            merged = merge_upsert(
+                _resolve(spark, path, m, fold, keys),
+                only(inc, fold).drop(BUCKET_COL),
+                keys,
+            )
+            if dels is not None:
+                merged = delete_sync(merged, only(dels, fold).select(*keys), keys)
+            if fs.exists(path_cls(staging)):
+                fs.delete(path_cls(staging), True)
+            _write_by_bucket(merged.withColumn(BUCKET_COL, bucket_id(keys, n_buckets)), staging)
+        for b in fold:
+            new["deltas"].pop(b, None)
+            new["buckets"].pop(b, None)
+            src = path_cls(f"{staging}/{BUCKET_COL}={b}")
+            if not fs.exists(src):
+                continue  # bucket emptied
+            dirname = f"bucket_{b}_v{next_gen}"
+            dst = path_cls(f"{base}/{dirname}")
+            if fs.exists(dst):  # orphan from a crashed previous attempt
+                fs.delete(dst, True)
+            if not fs.rename(src, dst):
+                raise IOError(f"could not place {dirname} under {base}")
+            new["buckets"][b] = dirname
         fs.delete(path_cls(staging), True)
-    _write_by_bucket(merged.withColumn(BUCKET_COL, bucket_id(keys, n_buckets)), staging)
 
-    new_buckets = {b: d for b, d in old_buckets.items() if b not in touched_ids}
-    rows = {b: n for b, n in rows.items() if b in new_buckets}
-    for b in touched_ids:
-        src = path_cls(f"{staging}/{BUCKET_COL}={b}")
-        if not fs.exists(src):
-            continue  # bucket emptied: simply not referenced anymore
-        dirname = f"bucket_{b}_v{next_gen}"
-        dst = path_cls(f"{base}/{dirname}")
-        if fs.exists(dst):  # orphan from a crashed previous attempt
-            fs.delete(dst, True)
-        if not fs.rename(src, dst):
-            raise IOError(f"could not place {dirname} under {base}")
-        new_buckets[b] = dirname
-        rows[b] = parquet_rows(spark, f"{base}/{dirname}")
-    fs.delete(path_cls(staging), True)
-    if not new_buckets:
+    with job_phase(spark, "sync", "count"):
+        counts = _bucket_counts(spark, path, new, touched, keys, n_buckets)
+    for b in touched:
+        live, pending = counts.get(b, (0, 0))
+        if live == 0:  # emptied: referenced no more
+            for k in ("buckets", "rows", "deltas", "delta_rows"):
+                new[k].pop(b, None)
+            continue
+        new["rows"][b] = live
+        new["delta_rows"].pop(b, None)
+        if b in new["deltas"]:
+            new["delta_rows"][b] = pending
+        if b in fold:
+            rows_written += live
+    if not new["buckets"]:
         # destination fully emptied: keep one schema-bearing empty dir
         dirname = f"bucket_0_v{next_gen}"
-        literal_frame(spark, merged.schema).write.mode("overwrite").parquet(
-            f"{base}/{dirname}"
-        )
-        new_buckets[0], rows[0] = dirname, 0
-    _commit_manifest(
-        spark, path, next_gen, new_buckets, shards=m.get("shards"),
-        rows=rows, schema=merged.schema.jsonValue(),
-    )
+        literal_frame(spark, schema).write.mode("overwrite").parquet(f"{base}/{dirname}")
+        new["buckets"][0], new["rows"][0] = dirname, 0
+    _commit_manifest(spark, path, new)
     _gc_generations(spark, path, keep_gens=int(spec.get("keep_gens", 2)))
     return {
         "n_buckets": n_buckets,
-        "buckets_touched": len(touched_ids),
-        "rows_written": sum(rows[b] for b in touched_ids if b in rows),
-        "rows": sum(rows.values()),
+        "buckets_touched": len(touched),
+        "rows_written": rows_written,
+        "rows": sum(new["rows"].values()),
     }
-
-
-DEFAULT_MAX_FILES_PER_BUCKET = 16
 
 
 def bucket_file_counts(
@@ -826,16 +1034,8 @@ def read_shard(spark: SparkSession, path: str, shard: int) -> DataFrame:
             "write_bucketed(..., n_shards=N) or run "
             "reshard_bucketed once to initialize placement"
         )
-    shards = m["shards"]
-    base = path.rstrip("/")
-    dirs = [
-        f"{base}/{d}"
-        for b, d in m["buckets"].items()
-        if shards.get(b) == shard
-    ]
-    if not dirs:
-        return read_bucketed(spark, path).limit(0)
-    return spark.read.parquet(*dirs)
+    owned = [b for b in m["buckets"] if m["shards"].get(b) == shard]
+    return _resolve(spark, path, m, owned)
 
 
 def reshard_bucketed(
@@ -899,22 +1099,25 @@ def reshard_bucketed(
             else []  # first placement: nothing was placed, nothing moves
         )
         next_gen = m["gen"] + 1
-        new_buckets = dict(m["buckets"])
         rows = _live_rows(spark, base, m)
+        new = {
+            **m, "gen": next_gen, "rows": rows, "shards": new_shards,
+            "n_shards": int(new_n_shards), "buckets": dict(m["buckets"]),
+            "deltas": dict(m.get("deltas", {})),
+            "delta_rows": dict(m.get("delta_rows", {})),
+        }
         for b in moved:
+            # the copy resolves the bucket's deltas: it moves as a base
             dirname = f"bucket_{b}_v{next_gen}"
             dst = f"{base}/{dirname}"
             dst_p = path_cls(dst)
             if fs.exists(dst_p):  # orphan from a crashed previous attempt
                 fs.delete(dst_p, True)
-            src = f"{base}/{m['buckets'][b]}"
-            _read_dirs(spark, m, [src]).write.mode("overwrite").parquet(dst)
-            new_buckets[b] = dirname
-        _commit_manifest(
-            spark, path, next_gen, new_buckets,
-            shards=new_shards, n_shards=int(new_n_shards),
-            rows=rows, schema=m.get("schema"),
-        )
+            _resolve(spark, path, m, [b], spec["keys"]).write.mode("overwrite").parquet(dst)
+            new["buckets"][b] = dirname
+            new["deltas"].pop(b, None)
+            new["delta_rows"].pop(b, None)
+        _commit_manifest(spark, path, new)
         spec["n_shards"] = int(new_n_shards)
         replace_text_file(spark, _spec_path(path), json.dumps(spec))
         _gc_generations(spark, path, keep_gens=int(spec.get("keep_gens", 2)))

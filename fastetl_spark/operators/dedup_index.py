@@ -459,7 +459,7 @@ from fastetl_spark.registry import query  # noqa: E402
 
 # Bump when index layout/params change so stale scratch indexes from an
 # older code version can never satisfy _scratch_index_ready.
-_SCRATCH_INDEX_VERSION = "v3"
+_SCRATCH_INDEX_VERSION = "v4"
 
 
 def _scratch_index_path(sf_dir: str, kind: str) -> str:

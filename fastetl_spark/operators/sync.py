@@ -62,6 +62,12 @@ def incremental_sync(
     return merged
 
 
+_STATE_SCHEMA = (
+    "table_name string, watermark_value string, value_type string, seq long, "
+    "updated_at timestamp"
+)
+
+
 class WatermarkStore:
     """Parquet-backed watermark state table (the reference reads the max
     back from the destination each run; a control table avoids a full
@@ -80,25 +86,21 @@ class WatermarkStore:
         path reads as "no watermark"; corruption/permission errors
         propagate instead of silently triggering a full re-sync.
 
+        The state is read with its declared schema: no inference job.
         State dirs written by an older schema (without seq/value_type)
-        are read with mergeSchema and the missing columns defaulted, so
-        an upgrade never breaks existing sync state: pre-upgrade rows
-        order by updated_at alone and parse as str (the old behavior).
+        read those columns as null, so an upgrade never breaks existing
+        sync state: pre-upgrade rows order by updated_at alone (nulls
+        last on seq) and parse as str (the old behavior).
         """
         from pyspark.errors import AnalysisException
 
         try:
-            state = self.spark.read.option("mergeSchema", "true").parquet(self.path)
+            state = self.spark.read.schema(_STATE_SCHEMA).parquet(self.path)
         except AnalysisException as e:
             msg = str(e)
             if "PATH_NOT_FOUND" in msg or "Path does not exist" in msg:
                 return None
             raise
-        cols = set(state.columns)
-        if "seq" not in cols:
-            state = state.withColumn("seq", F.lit(0).cast("long"))
-        if "value_type" not in cols:
-            state = state.withColumn("value_type", F.lit("str"))
         row = (
             state.filter(F.col("table_name") == table)
             .orderBy(F.desc("updated_at"), F.desc_nulls_last("seq"))

@@ -12,6 +12,7 @@ UTC session time zone for deterministic timestamp semantics.
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -74,3 +75,17 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+@contextmanager
+def job_phase(spark: SparkSession, op: str, phase: str):
+    """Describe the Spark jobs run inside the block as
+    ``fastetl:<op>:<phase>`` (the UI, the event log and the status store
+    show it), then restore the caller's description."""
+    sc = spark.sparkContext
+    prev = sc.getLocalProperty("spark.job.description")
+    sc.setLocalProperty("spark.job.description", f"fastetl:{op}:{phase}")
+    try:
+        yield
+    finally:
+        sc.setLocalProperty("spark.job.description", prev)

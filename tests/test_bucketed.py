@@ -414,12 +414,17 @@ def test_v2_roundtrip_merge_and_key_pruning(spark, sf_dir, tmp_path):
     assert _rows(got, nation.columns) == _rows(want, nation.columns)
     assert read_manifest(spark, dest)["gen"] == 2
 
-    # point lookup prunes to manifest dirs of the touched buckets
+    # point lookup prunes to manifest dirs (base and pending deltas) of
+    # the touched buckets
     keys_df = nation.limit(2).select("n_nationkey")
     looked = read_buckets_for_keys(spark, dest, keys_df)
     assert looked.count() == 2
+    m = read_manifest(spark, dest)
+    wanted = {r[0] for r in keys_df.select(bucket_id(["n_nationkey"], N_BUCKETS)).collect()}
+    allowed = {m["buckets"][b] for b in wanted}
+    allowed |= {d for b in wanted for d in m.get("deltas", {}).get(b, [])}
     dest_files = [f for f in looked.inputFiles() if dest in f]
-    assert dest_files and all("bucket_" in f for f in dest_files)
+    assert dest_files and all(any(f"/{d}/" in f for d in allowed) for f in dest_files)
 
 
 def test_v2_crash_before_pointer_flip_leaves_old_generation(spark, sf_dir, tmp_path, monkeypatch):

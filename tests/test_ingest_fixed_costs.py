@@ -15,6 +15,7 @@ append and match. ``make fixed-costs`` runs this file alone.
 from __future__ import annotations
 
 import datetime as dt
+import gc
 import glob
 import json
 import os
@@ -53,8 +54,10 @@ N_BUCKETS = 8
 
 # Spark jobs of one bucketed sync round (watermark get, merge, new
 # watermark, load log) and of one minhash index append. They were 23
-# and 8 while the merge facts took actions of their own.
-SYNC_ROUND_JOBS = 14
+# and 8 while the merge facts took actions of their own; the round was
+# 13 while the watermark read inferred its schema and the merge
+# materialised the increment and rewrote the touched buckets.
+SYNC_ROUND_JOBS = 8
 INDEX_APPEND_JOBS = 4
 # Generated classes compiled by a second, identical round (sync plus
 # index build, match and append; ~84 in the first): 6 with a codegen
@@ -98,9 +101,12 @@ class _Jobs:
 
 
 class _RoundTrips:
-    """Counts the py4j commands the driver sends inside the block."""
+    """Counts the py4j commands the driver sends inside the block. Java
+    objects that earlier work left as garbage are collected first: their
+    release is a py4j command too, sent whenever Python's collector runs."""
 
     def __enter__(self):
+        gc.collect()
         self.n, self._send = 0, ClientServerConnection.send_command
 
         def send_command(conn, command):
@@ -166,6 +172,40 @@ def test_sync_round_and_index_append_job_budget(spark, sf_dir, tmp_path, monkeyp
         append_to_minhash_index(inc, idx)
     assert jobs.n <= INDEX_APPEND_JOBS, jobs.n
     assert spark.read.parquet(idx).count() > n_before
+
+
+def _files(root: str) -> dict[str, int]:
+    """{path: bytes} of every file under ``root``."""
+    return {
+        os.path.join(d, f): os.path.getsize(os.path.join(d, f))
+        for d, _, names in os.walk(root)
+        for f in names
+    }
+
+
+def test_upsert_writes_about_the_increment(spark, tmp_path):
+    """An upsert of 1/24 of a 16-bucket table writes at most 3x the
+    increment's own parquet bytes under the destination: a delta per
+    touched bucket, not the buckets. Rewriting every touched bucket
+    wrote ~21x (24x the increment's rows)."""
+
+    def rows(lo: int, hi: int, rev: float):
+        return spark.range(lo, hi).select(
+            F.col("id"),
+            (F.col("id") * 7 % 1000).alias("qty"),
+            (F.col("id") * 1.5 + rev).alias("price"),
+            F.concat(F.lit("comment "), F.col("id").cast("string")).alias("note"),
+        )
+
+    dest, inc = str(tmp_path / "dest"), str(tmp_path / "inc")
+    write_bucketed(rows(0, 48_000, 0), dest, ["id"], 16)
+    rows(47_000, 49_000, 1).write.parquet(inc)  # 1000 updates, 1000 inserts
+    before = _files(dest)
+    stats = partial_merge(spark, dest, spark.read.parquet(inc))
+    written = sum(n for f, n in _files(dest).items() if f not in before)
+    assert stats["buckets_touched"] == 16 and stats["rows"] == 49_000
+    assert stats["rows_written"] == 2_000
+    assert written <= 3 * sum(_files(inc).values()), (written, _files(inc))
 
 
 def _ingest_round(spark, sf_dir, root: str) -> None:
