@@ -15,13 +15,13 @@ append and match. ``make fixed-costs`` runs this file alone.
 from __future__ import annotations
 
 import datetime as dt
-import gc
 import glob
 import json
 import os
 
 import pyarrow.parquet as pq
 import pytest
+from py4j import protocol as proto
 from py4j.clientserver import ClientServerConnection
 from pyspark.sql import functions as F
 from pyspark.sql.readwriter import DataFrameWriter
@@ -100,17 +100,21 @@ class _Jobs:
         self.n = len(self.sc.statusTracker().getJobIdsForGroup(self.group))
 
 
+_RELEASE = proto.MEMORY_COMMAND_NAME + proto.MEMORY_DEL_SUBCOMMAND_NAME
+
+
 class _RoundTrips:
-    """Counts the py4j commands the driver sends inside the block. Java
-    objects that earlier work left as garbage are collected first: their
-    release is a py4j command too, sent whenever Python's collector runs."""
+    """Counts the py4j commands the driver sends inside the block. The
+    release of a Java object (``m``/``d``) is not counted: Python's
+    collector sends it whenever it runs, for garbage that earlier work
+    left too."""
 
     def __enter__(self):
-        gc.collect()
         self.n, self._send = 0, ClientServerConnection.send_command
 
         def send_command(conn, command):
-            self.n += 1
+            if not command.startswith(_RELEASE):
+                self.n += 1
             return self._send(conn, command)
 
         ClientServerConnection.send_command = send_command
