@@ -185,8 +185,8 @@ class Engine:
                     if wm is None
                     else src_df.filter(F.col(watermark_col) > F.lit(wm))
                 )
-                # the new watermark rides on the merge's materialisation
-                # of the increment: no second pass
+                # the new watermark rides on the merge's one read of the
+                # increment (its delta write): no second pass
                 wm_obs = Observation()
                 inc = inc.observe(wm_obs, F.max(watermark_col).alias("wm"))
                 merge = partial_merge(self.spark, dest["path"], inc, deleted_keys)

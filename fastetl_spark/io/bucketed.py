@@ -33,24 +33,30 @@ Merges are merge-on-read, after Iceberg v2 equality deletes
 - a merge writes ONE delta dir, ``delta_v<gen>/__fe_bucket=K/`` (one
   file per touched bucket), holding the increment's rows and the
   deletion feed's keys as tombstone rows (``__fe_del`` true, other
-  columns null). It neither reads nor rewrites the buckets' data; the
-  manifest lists each bucket's base dir and its pending delta dirs in
-  generation order, and the merge writes about as much as the increment
-  (reference fast_etl.py:601-610 updates only the changed rows, too);
+  columns null). It rewrites no bucket (it reads their key columns,
+  for the exact row count); the manifest lists each bucket's base dir
+  and its pending delta dirs in generation order, and the merge writes
+  about as much as the increment (reference fast_etl.py:601-610 updates
+  only the changed rows, too);
 - readers resolve base + deltas through one resolver (``_resolve``):
   the latest generation of a key wins and a tombstone deletes it, the
-  base is anti-joined against all delta keys (broadcast, so the base is
-  never shuffled), then the live delta rows are unioned. A bucket with
-  no deltas is a plain scan. Pending deltas cost a read one shuffle of
-  the delta rows and one broadcast of their keys;
-- a bucket FOLDS — the old copy-on-write body: base + deltas + the
-  increment rewritten as a new base — when its pending delta rows,
-  tombstones included, pass ``FOLD_DELTA_SHARE`` of its live rows, when
-  it has ``DEFAULT_MAX_FILES_PER_BUCKET`` delta dirs, or when it has no
-  base yet. All folding buckets of a merge go in one write, committed
-  in the same manifest as the delta. The share bounds what a read pays
-  for deltas; amortised, a fold rewrites a bucket once per
-  ~``FOLD_DELTA_SHARE`` of its rows merged.
+  base is anti-joined against all delta keys, then the live delta rows
+  are unioned. A bucket with no deltas is a plain scan. Pending deltas
+  cost a read one shuffle of the delta rows and one broadcast of their
+  keys (so the base is never shuffled) — up to ``BROADCAST_DELTA_ROWS``
+  pending rows in the buckets read; past it the anti-join shuffles the
+  base instead;
+- once the delta is written, a touched bucket FOLDS — its base and
+  deltas, resolved, rewritten as a new base — when, before the merge,
+  its pending delta rows, tombstones included, passed
+  ``FOLD_DELTA_SHARE`` of its live rows or it had
+  ``DEFAULT_MAX_FILES_PER_BUCKET`` delta dirs. A bucket may hold deltas
+  without a base (a sparse table, a bucket emptied by deletes); its
+  deltas are all its rows, so the next merge touching it folds it. All
+  folding buckets of a merge go in one write, committed in the same
+  manifest as the delta. The share bounds what a read pays for deltas;
+  amortised, a fold rewrites a bucket once per ~``FOLD_DELTA_SHARE`` of
+  its rows merged.
 
 A merge writes the delta (and any fold) first, unreferenced and
 invisible, then flips the pointer once — readers racing the merge
@@ -93,7 +99,7 @@ from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import BooleanType, IntegerType, StructField, StructType
 
-from fastetl_spark.checkpointing import materialize, observed
+from fastetl_spark.checkpointing import observed
 from fastetl_spark.io.fsutil import (
     hadoop_fs,
     parquet_rows,
@@ -121,9 +127,15 @@ GEN_COL = "__fe_gen"
 DELETED_COL = "__fe_del"
 # A bucket folds into a new base once its pending delta rows pass this
 # share of its live rows (or it has DEFAULT_MAX_FILES_PER_BUCKET delta
-# dirs): it bounds a read's delta work against the rewrites a fold costs
-FOLD_DELTA_SHARE = 0.5
+# dirs): it bounds a read's delta work against the rewrites a fold costs.
+# 0.5 wrote 36% fewer bytes than 0.25 but made the median full read 1.5x
+# slower (tools/merge_amortised.py, RUNBOOK "Merge-on-read")
+FOLD_DELTA_SHARE = 0.25
 DEFAULT_MAX_FILES_PER_BUCKET = 16
+# A read broadcasts the keys of the pending delta rows it resolves up to
+# this many rows; above it the base anti-joins them through a shuffle,
+# so a large pending set never has to fit on the driver
+BROADCAST_DELTA_ROWS = 1 << 20
 # manifest keys that map a bucket id to a value
 _PER_BUCKET = ("buckets", "rows", "shards", "deltas", "delta_rows")
 
@@ -357,6 +369,11 @@ def _schema(spark: SparkSession, base: str, m: dict) -> StructType:
     return spark.read.parquet(*[f"{base}/{d}" for d in m["buckets"].values()]).schema
 
 
+def _ids(m: dict) -> set[int]:
+    """Buckets of generation ``m`` that hold rows: a base, deltas, or both."""
+    return set(m["buckets"]) | set(m.get("deltas", {}))
+
+
 def _pending(spark: SparkSession, base: str, m: dict, ids: list[int]) -> DataFrame | None:
     """Every pending delta row of buckets ``ids`` in generation ``m``,
     tombstones included; None when they have no deltas."""
@@ -382,21 +399,27 @@ def _resolve(
     with deltas: the deltas resolve among themselves (per key the latest
     generation wins, a tombstone beats an upsert of its own generation,
     and a winning tombstone deletes the key); the base is anti-joined
-    against every delta key, broadcast, so the base is never shuffled;
-    the live delta rows are unioned on. ``keys`` (the merge keys) is read
-    from the spec when not given and deltas exist."""
+    against every delta key — broadcast while the buckets read hold at
+    most ``BROADCAST_DELTA_ROWS`` pending rows, so the base is not
+    shuffled, through a shuffle above it; the live delta rows are unioned
+    on. ``keys`` (the merge keys) is read from the spec when not given
+    and deltas exist."""
     base = path.rstrip("/")
     schema = _schema(spark, base, m)
-    ids = sorted(m["buckets"] if bucket_ids is None else set(bucket_ids) & set(m["buckets"]))
-    deltas = m.get("deltas", {})
-    plain = [f"{base}/{m['buckets'][b]}" for b in ids if b not in deltas]
-    shadowed = [f"{base}/{m['buckets'][b]}" for b in ids if b in deltas]
+    ids = sorted(_ids(m) if bucket_ids is None else set(bucket_ids) & _ids(m))
+    deltas, bases = m.get("deltas", {}), m["buckets"]
+    plain = [f"{base}/{bases[b]}" for b in ids if b in bases and b not in deltas]
+    shadowed = [f"{base}/{bases[b]}" for b in ids if b in bases and b in deltas]
     parts = [spark.read.schema(schema).parquet(*plain)] if plain else []
     pending = _pending(spark, base, m, ids)
     if pending is not None:
         keys = keys or read_bucket_spec(spark, path)["keys"]
-        old = spark.read.schema(schema).parquet(*shadowed)
-        parts.append(old.join(F.broadcast(pending.select(*keys)), keys, "left_anti"))
+        if shadowed:
+            dead = pending.select(*keys)
+            if sum(m.get("delta_rows", {}).get(b, 0) for b in ids) <= BROADCAST_DELTA_ROWS:
+                dead = F.broadcast(dead)
+            old = spark.read.schema(schema).parquet(*shadowed)
+            parts.append(old.join(dead, keys, "left_anti"))
         latest = Window.partitionBy(*keys).orderBy(F.desc(GEN_COL), F.desc(DELETED_COL))
         parts.append(
             pending.withColumn("__fe_rank", F.row_number().over(latest))
@@ -549,7 +572,7 @@ def read_buckets_for_keys(
     touched = sorted(_touched)
     if spec["version"] == MANIFEST_VERSION:
         m = read_manifest(spark, path)
-        live = [b for b in touched if b in m["buckets"]]
+        live = [b for b in touched if b in _ids(m)]
         dest = _resolve(spark, path, m, live, keys)
         if not live:
             return dest  # empty, typed
@@ -574,62 +597,47 @@ def _existing_bucket_paths(
     return out
 
 
-def _tag_touched(
-    increment: DataFrame,
-    deleted_keys: DataFrame | None,
-    keys: list[str],
-    n_buckets: int,
-) -> tuple[DataFrame, DataFrame | None, list[int]]:
-    """Tag the increment (and the deletion feed's keys) with their
-    bucket and materialise each once; the touched-bucket set (at most
-    n_buckets small ints) is observed on those same materialisations
-    instead of costing a ``distinct().collect()`` job apiece. Any
-    observation a caller attached to ``increment`` is filled here too."""
-    frames = [increment]
-    if deleted_keys is not None:
-        frames.append(deleted_keys.select(*keys))
-    tagged, touched = [], set()
-    for df in frames:
-        obs = Observation()
-        df = (
-            df.withColumn(BUCKET_COL, bucket_id(keys, n_buckets))
-            .observe(obs, F.collect_set(BUCKET_COL).alias("b"))
-            .transform(materialize)
-        )
-        touched |= set(observed(obs, {"b": []})["b"])
-        tagged.append(df)
-    return tagged[0], (tagged[1] if len(tagged) > 1 else None), sorted(touched)
-
-
 def _folds(m: dict, b: int) -> bool:
-    """Whether a merge touching bucket ``b`` of generation ``m`` folds
-    it (base + deltas + increment into a new base) instead of adding a
-    delta: it has no base yet, its pending delta rows pass
-    ``FOLD_DELTA_SHARE`` of its live rows, or it has
-    ``DEFAULT_MAX_FILES_PER_BUCKET`` delta dirs."""
-    if b not in m["buckets"]:
-        return True
+    """Whether a merge touching bucket ``b`` folds it (base and deltas
+    into a new base), judged on generation ``m`` before the merge: its
+    pending delta rows pass ``FOLD_DELTA_SHARE`` of its live rows —
+    always so for a bucket of deltas only — or it has
+    ``DEFAULT_MAX_FILES_PER_BUCKET`` delta dirs. A bucket without deltas
+    in ``m`` (or absent from it) does not fold."""
+    if b not in m.get("deltas", {}):
+        return False
     return (
-        m.get("delta_rows", {}).get(b, 0) > FOLD_DELTA_SHARE * m["rows"][b]
-        or len(m.get("deltas", {}).get(b, [])) >= DEFAULT_MAX_FILES_PER_BUCKET
+        m["delta_rows"][b] > FOLD_DELTA_SHARE * m["rows"][b]
+        or len(m["deltas"][b]) >= DEFAULT_MAX_FILES_PER_BUCKET
     )
 
 
 def _delta_frame(
-    schema: StructType, keys: list[str], gen: int, inc: DataFrame, dels: DataFrame | None
+    schema: StructType,
+    keys: list[str],
+    n_buckets: int,
+    gen: int,
+    inc: DataFrame,
+    dels: DataFrame | None,
 ) -> DataFrame:
-    """The bucket-tagged increment rows as upserts and the deletion
-    feed's keys as tombstones of generation ``gen``: the data columns,
-    ``GEN_COL``, ``DELETED_COL`` and the bucket column."""
-    rows = inc.select(*schema.names, BUCKET_COL, F.lit(False).alias(DELETED_COL))
+    """The increment's rows as upserts and the deletion feed's keys as
+    tombstones of generation ``gen``, cast to the destination schema:
+    the data columns, ``GEN_COL``, ``DELETED_COL`` and the bucket
+    column."""
+    cast = {f.name: F.col(f.name).cast(f.dataType).alias(f.name) for f in schema}
+    rows = inc.select(*cast.values(), F.lit(False).alias(DELETED_COL))
     if dels is not None:
         tombstones = dels.select(
-            *[F.col(f.name) if f.name in keys else F.lit(None).cast(f.dataType).alias(f.name) for f in schema],
-            BUCKET_COL,
+            *[cast[f.name] if f.name in keys else F.lit(None).cast(f.dataType).alias(f.name) for f in schema],
             F.lit(True).alias(DELETED_COL),
         )
         rows = rows.union(tombstones)
-    return rows.select(*schema.names, F.lit(gen).alias(GEN_COL), DELETED_COL, BUCKET_COL)
+    return rows.select(
+        *schema.names,
+        F.lit(gen).alias(GEN_COL),
+        DELETED_COL,
+        bucket_id(keys, n_buckets).alias(BUCKET_COL),
+    )
 
 
 def _bucket_counts(
@@ -641,17 +649,20 @@ def _bucket_counts(
     ``_resolve`` does: per key the greatest (generation, tombstone)
     wins, base rows being generation 0."""
     base = path.rstrip("/")
-    ids = [b for b in ids if b in m["buckets"]]
-    if not ids:
-        return {}
-    rows = (
-        spark.read.schema(_schema(spark, base, m))
-        .parquet(*[f"{base}/{m['buckets'][b]}" for b in ids])
-        .select(*keys, F.lit(0).alias(GEN_COL), F.lit(False).alias(DELETED_COL))
-    )
+    parts = []
+    based = [f"{base}/{m['buckets'][b]}" for b in ids if b in m["buckets"]]
+    if based:
+        parts.append(
+            spark.read.schema(_schema(spark, base, m))
+            .parquet(*based)
+            .select(*keys, F.lit(0).alias(GEN_COL), F.lit(False).alias(DELETED_COL))
+        )
     pending = _pending(spark, base, m, ids)
     if pending is not None:
-        rows = rows.union(pending.select(*keys, GEN_COL, DELETED_COL))
+        parts.append(pending.select(*keys, GEN_COL, DELETED_COL))
+    if not parts:
+        return {}
+    rows = reduce(DataFrame.union, parts)
     latest = F.max(F.struct(GEN_COL, DELETED_COL))[DELETED_COL]
     per_key = (
         rows.withColumn(BUCKET_COL, bucket_id(keys, n_buckets))
@@ -698,13 +709,14 @@ def partial_merge(
     be key-unique (callers dedupe, as the streaming merge already does).
 
     Merge-on-read (module docstring): the touched buckets get one delta
-    dir, ``delta_v<gen+1>``, of upserts and tombstones; buckets due a
-    fold are rewritten as ``bucket_<K>_v<gen+1>`` in one write instead.
-    Both are invisible until ONE manifest rename-commit publishes every
-    touched bucket at once. A crash before the commit leaves the
-    destination exactly at the old generation (orphan dirs are
-    overwritten by the re-run and collected by generation GC); a crash
-    after the commit IS the new state, and a re-run converges.
+    dir, ``delta_v<gen+1>``, of upserts and tombstones; then the touched
+    buckets due a fold are rewritten from that new generation as
+    ``bucket_<K>_v<gen+1>`` in one write. Both are invisible until ONE
+    manifest rename-commit publishes every touched bucket at once. A
+    crash before the commit leaves the destination exactly at the old
+    generation (orphan dirs are overwritten by the re-run and collected
+    by generation GC); a crash after the commit IS the new state, and a
+    re-run converges.
 
     Returns ``{"n_buckets": N, "buckets_touched": t, "rows_written": w,
     "rows": r}``: ``w`` is the rows physically written (delta rows,
@@ -723,7 +735,7 @@ def partial_merge(
     delete the file) once no merge runs.
 
     The Spark jobs run under the descriptions ``fastetl:sync:<phase>``,
-    phases ``materialize``, ``delta_write``, ``fold`` and ``count``.
+    phases ``delta_write``, ``count`` and ``fold``.
     """
     spec = read_bucket_spec(spark, path)
     if spec is None:
@@ -760,67 +772,31 @@ def _merge_locked(
 ) -> dict:
     """The body of ``partial_merge``, run under its lock.
 
-    The increment and the deletion feed are cast to the destination's
-    schema before they are bucketed. When no bucket is due a fold, they
-    are read once, by the delta write, which observes the touched
-    buckets; otherwise they are materialised first, as a fold consumes
-    them too. Row counts per bucket come from an aggregate over the new
-    generation, not from observations: the merge plans' joins sit above
-    the scans, and AQE drops a subtree it finds empty together with its
-    observations."""
-    from fastetl_spark.operators.sync import delete_sync, merge_upsert
-
+    The increment and the deletion feed are read once, by the delta
+    write, which observes the touched buckets and the rows written. Row
+    counts per bucket come from an aggregate over the new generation,
+    not from observations: AQE drops a subtree it finds empty together
+    with its observations. The touched buckets that ``_folds`` on the
+    old generation and still hold rows fold: their new base is the
+    resolved new generation."""
     keys, n_buckets = spec["keys"], spec["n_buckets"]
     m = read_manifest(spark, path)
     base = path.rstrip("/")
     m["rows"] = _live_rows(spark, base, m)
     schema = _schema(spark, base, m)
-    inc = increment.select(*[F.col(f.name).cast(f.dataType).alias(f.name) for f in schema])
-    dels = deleted_keys
-    if dels is not None:
-        dels = dels.select(*[F.col(k).cast(schema[k].dataType).alias(k) for k in keys])
-    due = {b for b in range(n_buckets) if _folds(m, b)}
-    if due:
-        with job_phase(spark, "sync", "materialize"):
-            inc, dels, touched = _tag_touched(inc, dels, keys, n_buckets)
-        fold = [b for b in touched if b in due]
-    else:
-        inc = inc.withColumn(BUCKET_COL, bucket_id(keys, n_buckets))
-        if dels is not None:
-            dels = dels.withColumn(BUCKET_COL, bucket_id(keys, n_buckets))
-        touched, fold = None, []  # touched: observed on the delta write
-
-    def only(df: DataFrame | None, ids: list[int]) -> DataFrame | None:
-        if df is None or not fold:
-            return df
-        return df.filter(F.col(BUCKET_COL).isin(ids))
-
     next_gen = m["gen"] + 1
-    new = {
-        **m,
-        "gen": next_gen,
-        "schema": schema.jsonValue(),
-        **{k: dict(m.get(k, {})) for k in ("buckets", "rows", "deltas", "delta_rows")},
-    }
     fs, path_cls = hadoop_fs(spark, path)
-    rows_written = 0
-    append = None if touched is None else [b for b in touched if b not in fold]
-    if append is None or append:
-        delta_dir = f"{DELTA_PREFIX}{next_gen}"
-        obs = Observation()
-        with job_phase(spark, "sync", "delta_write"):
-            delta = _delta_frame(schema, keys, next_gen, only(inc, append), only(dels, append))
-            observe = [F.count(F.lit(1)).alias("n"), F.collect_set(BUCKET_COL).alias("b")]
-            _write_by_bucket(delta.observe(obs, *observe), f"{base}/{delta_dir}")
-        written = observed(obs, {"n": 0, "b": []})
-        rows_written += written["n"]
-        if touched is None:
-            touched = append = sorted(written["b"])
-        for b in append:
-            new["deltas"][b] = new["deltas"].get(b, []) + [f"{delta_dir}/{BUCKET_COL}={b}"]
-        if not touched:  # nothing to merge: drop the empty delta dir
-            fs.delete(path_cls(f"{base}/{delta_dir}"), True)
-    if not touched:
+
+    delta_dir = f"{DELTA_PREFIX}{next_gen}"
+    obs = Observation()
+    with job_phase(spark, "sync", "delta_write"):
+        delta = _delta_frame(schema, keys, n_buckets, next_gen, increment, deleted_keys)
+        observe = [F.count(F.lit(1)).alias("n"), F.collect_set(BUCKET_COL).alias("b")]
+        _write_by_bucket(delta.observe(obs, *observe), f"{base}/{delta_dir}")
+    written = observed(obs, {"n": 0, "b": []})
+    touched = sorted(written["b"])
+    if not touched:  # nothing to merge: drop the empty delta dir
+        fs.delete(path_cls(f"{base}/{delta_dir}"), True)
         return {
             "n_buckets": n_buckets,
             "buckets_touched": 0,
@@ -828,49 +804,48 @@ def _merge_locked(
             "rows": sum(m["rows"].values()),
         }
 
-    if fold:
-        staging = base + ".__merge_staging__"
-        with job_phase(spark, "sync", "fold"):
-            merged = merge_upsert(
-                _resolve(spark, path, m, fold, keys),
-                only(inc, fold).drop(BUCKET_COL),
-                keys,
-            )
-            if dels is not None:
-                merged = delete_sync(merged, only(dels, fold).select(*keys), keys)
-            if fs.exists(path_cls(staging)):
-                fs.delete(path_cls(staging), True)
-            _write_by_bucket(merged.withColumn(BUCKET_COL, bucket_id(keys, n_buckets)), staging)
-        for b in fold:
-            new["deltas"].pop(b, None)
-            new["buckets"].pop(b, None)
-            src = path_cls(f"{staging}/{BUCKET_COL}={b}")
-            if not fs.exists(src):
-                continue  # bucket emptied
-            dirname = f"bucket_{b}_v{next_gen}"
-            dst = path_cls(f"{base}/{dirname}")
-            if fs.exists(dst):  # orphan from a crashed previous attempt
-                fs.delete(dst, True)
-            if not fs.rename(src, dst):
-                raise IOError(f"could not place {dirname} under {base}")
-            new["buckets"][b] = dirname
-        fs.delete(path_cls(staging), True)
-
+    per_bucket = ("buckets", "rows", "deltas", "delta_rows")
+    new = {
+        **m,
+        "gen": next_gen,
+        "schema": schema.jsonValue(),
+        **{k: dict(m.get(k, {})) for k in per_bucket},
+    }
+    for b in touched:
+        new["deltas"][b] = new["deltas"].get(b, []) + [f"{delta_dir}/{BUCKET_COL}={b}"]
     with job_phase(spark, "sync", "count"):
         counts = _bucket_counts(spark, path, new, touched, keys, n_buckets)
     for b in touched:
         live, pending = counts.get(b, (0, 0))
         if live == 0:  # emptied: referenced no more
-            for k in ("buckets", "rows", "deltas", "delta_rows"):
+            for k in per_bucket:
                 new[k].pop(b, None)
-            continue
-        new["rows"][b] = live
-        new["delta_rows"].pop(b, None)
-        if b in new["deltas"]:
-            new["delta_rows"][b] = pending
-        if b in fold:
-            rows_written += live
-    if not new["buckets"]:
+        else:
+            new["rows"][b], new["delta_rows"][b] = live, pending
+
+    rows_written = written["n"]
+    fold = [b for b in touched if b in new["deltas"] and _folds(m, b)]
+    if fold:
+        staging = base + ".__merge_staging__"
+        with job_phase(spark, "sync", "fold"):
+            if fs.exists(path_cls(staging)):
+                fs.delete(path_cls(staging), True)
+            folded = _resolve(spark, path, new, fold, keys)
+            _write_by_bucket(folded.withColumn(BUCKET_COL, bucket_id(keys, n_buckets)), staging)
+        for b in fold:
+            dirname = f"bucket_{b}_v{next_gen}"
+            dst = path_cls(f"{base}/{dirname}")
+            if fs.exists(dst):  # orphan from a crashed previous attempt
+                fs.delete(dst, True)
+            if not fs.rename(path_cls(f"{staging}/{BUCKET_COL}={b}"), dst):
+                raise IOError(f"could not place {dirname} under {base}")
+            new["buckets"][b] = dirname
+            new["deltas"].pop(b)
+            new["delta_rows"].pop(b)
+            rows_written += new["rows"][b]
+        fs.delete(path_cls(staging), True)
+
+    if not _ids(new):
         # destination fully emptied: keep one schema-bearing empty dir
         dirname = f"bucket_0_v{next_gen}"
         literal_frame(spark, schema).write.mode("overwrite").parquet(f"{base}/{dirname}")
@@ -1034,7 +1009,7 @@ def read_shard(spark: SparkSession, path: str, shard: int) -> DataFrame:
             "write_bucketed(..., n_shards=N) or run "
             "reshard_bucketed once to initialize placement"
         )
-    owned = [b for b in m["buckets"] if m["shards"].get(b) == shard]
+    owned = [b for b, s in m["shards"].items() if s == shard]
     return _resolve(spark, path, m, owned)
 
 
@@ -1092,7 +1067,7 @@ def reshard_bucketed(
         moved = (
             sorted(
                 b
-                for b in m["buckets"]
+                for b in _ids(m)
                 if old_shards.get(b) != new_shards[b]
             )
             if old_shards is not None

@@ -15,9 +15,11 @@ append and match. ``make fixed-costs`` runs this file alone.
 from __future__ import annotations
 
 import datetime as dt
+import gc
 import glob
 import json
 import os
+import threading
 
 import pyarrow.parquet as pq
 import pytest
@@ -101,27 +103,46 @@ class _Jobs:
 
 
 _RELEASE = proto.MEMORY_COMMAND_NAME + proto.MEMORY_DEL_SUBCOMMAND_NAME
+_OBJECT_ANSWERS = tuple(
+    proto.SUCCESS + t
+    for t in (proto.REFERENCE_TYPE, proto.LIST_TYPE, proto.SET_TYPE, proto.MAP_TYPE, proto.ARRAY_TYPE, proto.ITERATOR_TYPE)
+)
 
 
 class _RoundTrips:
-    """Counts the py4j commands the driver sends inside the block. The
-    release of a Java object (``m``/``d``) is not counted: Python's
-    collector sends it whenever it runs, for garbage that earlier work
-    left too."""
+    """Counts the py4j commands the block's thread sends inside the
+    block: every call, and the release of every Java object the block
+    created. The release of an object made before the block is not
+    counted, nor is Python's cycle collector left running inside it
+    (collected on entry): both would release the garbage of earlier
+    work whenever they happen to run."""
 
     def __enter__(self):
+        gc.collect()
+        self._gc = gc.isenabled()
+        gc.disable()
         self.n, self._send = 0, ClientServerConnection.send_command
+        thread, made = threading.get_ident(), set()
 
         def send_command(conn, command):
-            if not command.startswith(_RELEASE):
-                self.n += 1
-            return self._send(conn, command)
+            answer = self._send(conn, command)
+            if threading.get_ident() != thread:
+                return answer
+            if command.startswith(_RELEASE):
+                if command[len(_RELEASE) :].split("\n", 1)[0] not in made:
+                    return answer
+            elif answer.startswith(_OBJECT_ANSWERS):
+                made.add(answer[2:])
+            self.n += 1
+            return answer
 
         ClientServerConnection.send_command = send_command
         return self
 
     def __exit__(self, *exc):
         ClientServerConnection.send_command = self._send
+        if self._gc:
+            gc.enable()
 
 
 def _compilations(spark) -> int:

@@ -2,15 +2,17 @@
 and folds.
 
 A merge writes one delta per touched bucket (upserts plus tombstones)
-and folds a bucket into a new base only when its deltas pass
-``FOLD_DELTA_SHARE`` of its rows. These tests check every reader against
+and then folds a touched bucket into a new base only when its deltas
+pass ``FOLD_DELTA_SHARE`` of its rows. These tests check every reader against
 an independent oracle while deltas are pending: a kill at each commit
 boundary of a merge converges on a plain re-run to the full-frame
 ``merge_upsert``/``delete_sync`` result; random upsert/delete sequences
 (re-inserts after deletes, deletes of absent keys, emptied buckets,
 forced folds) match a Python model through ``read_bucketed``,
 ``read_buckets_for_keys``, ``read_bucketed_at`` and the manifest rows;
-shards read their own rows; and the sync phases name their Spark jobs.
+shards read their own rows; a read past ``BROADCAST_DELTA_ROWS`` does
+not broadcast; a sparse destination folds only the buckets without a
+base; and the sync phases name their Spark jobs.
 """
 
 from __future__ import annotations
@@ -156,9 +158,10 @@ def test_kill_at_commit_boundary_then_rerun_converges(spark, tmp_path, monkeypat
 
 
 def test_round_kinds_and_rows_written(spark, tmp_path):
-    """Round 0 writes only its delta (upserts + tombstones), round 1 folds
-    the touched buckets instead of adding a delta, round 2 is a delta on
-    the folded bases; untouched base dirs are never rewritten."""
+    """Round 0 writes only its delta (upserts + tombstones), round 1
+    writes its delta and folds it with the rest of every bucket into new
+    bases, round 2 is a delta on the folded bases; a base dir is never
+    rewritten by a round that does not fold it."""
     dest = str(tmp_path / "dest")
     write_bucketed(_frame(spark, range(120), "base"), dest, KEYS, 4)
     base_dirs = read_manifest(spark, dest)["buckets"]
@@ -175,7 +178,8 @@ def test_round_kinds_and_rows_written(spark, tmp_path):
     m = read_manifest(spark, dest)
     assert not m["deltas"] and not os.path.exists(os.path.join(dest, "delta_v3"))
     assert all(d == f"bucket_{b}_v3" for b, d in m["buckets"].items())
-    assert stats["rows_written"] == stats["rows"] == len(states[2])
+    assert stats["rows"] == len(states[2])
+    assert stats["rows_written"] == len(ROUNDS[1][0]) + len(ROUNDS[1][2]) + len(states[2])
 
     stats = _merge(spark, dest, 2)
     assert stats["rows_written"] == len(ROUNDS[2][0]) + len(ROUNDS[2][2])
@@ -193,7 +197,7 @@ _OPS = st.lists(
         st.sets(st.integers(0, 23), max_size=10),  # upserts
         st.sets(st.integers(0, 29), max_size=6),  # deletes (24-29 never exist)
         st.one_of(st.none(), st.integers(0, 3)),  # empty this bucket too
-        st.booleans(),  # force every touched bucket to fold
+        st.booleans(),  # fold every touched bucket that has deltas
     ),
     min_size=2,
     max_size=5,
@@ -254,6 +258,78 @@ def test_read_shard_resolves_pending_deltas(spark, tmp_path):
         assert _rows(got) == expected, s
 
 
+def _executed_plan(df) -> str:
+    df.collect()
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_read_past_broadcast_bound_shuffles_and_matches(spark, tmp_path, monkeypatch):
+    """Above ``BROADCAST_DELTA_ROWS`` pending rows a read does not force
+    a broadcast of the delta keys; the base anti-joins them through a
+    shuffle and every reader returns the same rows."""
+    dest = str(tmp_path / "dest")
+    write_bucketed(_frame(spark, range(120), "base"), dest, KEYS, 4)
+    _merge(spark, dest, 0)
+    want = _oracle(spark, 1)[1]
+    probe = _keys(spark, [0, 1, 5, 200, 999])
+    probed = [r for r in want if r[0] in (0, 1, 5, 200, 999)]
+    assert read_manifest(spark, dest)["deltas"]
+    assert "BroadcastHashJoin" in _executed_plan(read_bucketed(spark, dest))
+
+    monkeypatch.setattr(B, "BROADCAST_DELTA_ROWS", 0)
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        full = read_bucketed(spark, dest)
+        plan = _executed_plan(full)
+        assert "BroadcastHashJoin" not in plan and "SortMergeJoin" in plan, plan
+        assert _rows(full) == want
+        assert _rows(read_buckets_for_keys(spark, dest, probe)) == probed
+        assert _rows(read_bucketed_at(spark, dest, 2)) == want
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+
+
+def test_sparse_destination_keeps_delta_only_buckets(spark, tmp_path):
+    """Buckets without a base (a sparse table, a bucket emptied by
+    deletes) hold deltas only until a merge touches them again, which
+    folds them. A merge that touches only buckets below the fold share
+    writes only its delta, whatever other buckets lack."""
+    dest = str(tmp_path / "dest")
+    where = _bucket_of(spark, 200, 4)
+    in_b = {b: [k for k in range(200) if where[k] == b] for b in range(4)}
+    model = {k: f"base{k}" for k in in_b[0] + in_b[1]}
+    write_bucketed(_frame(spark, sorted(model), "base"), dest, KEYS, 4)
+    bases = read_manifest(spark, dest)["buckets"]
+    assert sorted(bases) == [0, 1]
+
+    def merge(ups, tag, dels=()):
+        stats = partial_merge(spark, dest, _frame(spark, ups, tag), deleted_keys=_keys(spark, list(dels)))
+        model.update({k: f"{tag}{k}" for k in ups})
+        for k in dels:
+            model.pop(k, None)
+        m = read_manifest(spark, dest)
+        assert {r.id: r.v for r in read_bucketed(spark, dest).collect()} == model
+        assert stats["rows"] == sum(m["rows"].values()) == len(model)
+        probe = [in_b[b][0] for b in range(4)]
+        got = {r.id: r.v for r in read_buckets_for_keys(spark, dest, _keys(spark, probe)).collect()}
+        assert got == {k: v for k, v in model.items() if k in probe}
+        return stats, m
+
+    stats, m = merge(in_b[0][:2], "a")  # bucket 0 only, under the share
+    assert stats["rows_written"] == 2 and m["buckets"] == bases
+    stats, m = merge(in_b[2][:5], "b")  # bucket 2: deltas, no base
+    assert stats["rows_written"] == 5 and 2 not in m["buckets"] and m["rows"][2] == 5
+    assert {r.id for r in read_bucketed_at(spark, dest, m["gen"]).collect()} == set(model)
+    stats, m = merge(in_b[2][5:7], "c")  # touched again: folds
+    assert m["buckets"][2] == f"bucket_2_v{m['gen']}" and 2 not in m["deltas"]
+    assert stats["rows_written"] == 2 + 7 and m["buckets"][0] == bases[0]
+    stats, m = merge([], "d", dels=in_b[1])  # bucket 1 emptied: dropped
+    assert 1 not in m["buckets"] and 1 not in m["deltas"] and 1 not in m["rows"]
+    stats, m = merge(in_b[1][:1], "e")  # back as deltas only
+    assert 1 not in m["buckets"] and m["rows"][1] == 1
+
+
 def _job_descriptions(spark, group: str) -> list[str]:
     """Descriptions of the jobs of ``group``, from the status store."""
     jobs = spark.sparkContext._jsc.sc().statusStore().jobsList(None)
@@ -273,6 +349,7 @@ def test_sync_phases_describe_their_jobs(spark, tmp_path):
     write_bucketed(base, dest, KEYS, 8)
     # rewrite all of bucket 0 as a delta: its next merge folds it
     partial_merge(spark, dest, base.filter(bucket_id(KEYS, 8) == 0).withColumn("v", F.lit("x")))
+    assert 0 in read_manifest(spark, dest)["deltas"]
     base.filter(F.col("id") % 5 == 0).withColumn("ts", F.lit(2).cast("long")).write.parquet(src)
     eng = Engine(spark, watermark_store_path=str(tmp_path / "wm"))
     eng.watermark_store.set(dest, 1)
@@ -286,6 +363,7 @@ def test_sync_phases_describe_their_jobs(spark, tmp_path):
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     assert n == 399
+    assert 0 not in read_manifest(spark, dest)["deltas"]  # folded
     got = set(_job_descriptions(spark, "phases"))
-    phases = {"watermark", "materialize", "delta_write", "fold", "count"}
+    phases = {"watermark", "delta_write", "count", "fold"}
     assert {f"fastetl:sync:{p}" for p in phases} <= got, got

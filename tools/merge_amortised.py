@@ -6,8 +6,11 @@ new keys, duplicates and deletes, from ``perfbench/gen.py``) through
 prints, per round and in total, the bytes written under the destination
 per landed byte (the increment's and the deletion feed's parquet files),
 plus the buckets whose base dir was rewritten (a fold, or every touched
-bucket of a copy-on-write merge). The destination is checked against a
-DuckDB replay of the same increments at the end.
+bucket of a copy-on-write merge), and what a read of the destination
+costs after each round: the wall time of a full read (every column of
+every row, through ``read_bucketed``) and of a five-key probe (through
+``read_buckets_for_keys``), each the median of three. The destination
+is checked against a DuckDB replay of the same increments at the end.
 
     python tools/merge_amortised.py [--rounds 30] [--seed 1]
 
@@ -21,8 +24,10 @@ from __future__ import annotations
 import argparse
 import os
 import shutil
+import statistics
 import sys
 import tempfile
+import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -37,6 +42,16 @@ def _files(root: str) -> dict[str, tuple[int, float]]:
     return out
 
 
+def _wall(action) -> float:
+    """Median wall seconds of three runs of ``action``."""
+    times = []
+    for _ in range(3):
+        t0 = time.perf_counter()
+        action()
+        times.append(time.perf_counter() - t0)
+    return statistics.median(times)
+
+
 def main(argv=None) -> int:
     p = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     p.add_argument("--rounds", type=int, default=30)
@@ -48,7 +63,13 @@ def main(argv=None) -> int:
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    from fastetl_spark.io.bucketed import partial_merge, read_bucketed, read_manifest, write_bucketed
+    from fastetl_spark.io.bucketed import (
+        partial_merge,
+        read_bucketed,
+        read_buckets_for_keys,
+        read_manifest,
+        write_bucketed,
+    )
     from fastetl_spark.session import get_spark
 
     keys = gen.LINEITEM_KEYS
@@ -66,8 +87,21 @@ def main(argv=None) -> int:
         con = duckdb.connect()
         con.execute(f"CREATE TABLE state AS SELECT * FROM read_parquet('{base_file}')")
         latest = Window.partitionBy(*keys).orderBy(F.desc("l_shipdate"))
+        cols = t["lineitem"].column_names
+        probe_file = os.path.join(root, "probe.parquet")
+        gen.write_table(t["lineitem"].select(keys).slice(0, 5), probe_file)
+        probe = spark.read.parquet(probe_file)
+
+        def full_read():
+            read_bucketed(spark, dest).agg(F.bit_xor(F.xxhash64(*cols))).collect()
+
+        def key_probe():
+            read_buckets_for_keys(spark, dest, probe).collect()
+
         landed_total = written_total = folds_total = 0
-        print("round landed_B written_B written/landed rebased_buckets rows_written")
+        reads, probes = [_wall(full_read)], [_wall(key_probe)]
+        print(f"before: read_s {reads[0]:.3f} probe_s {probes[0]:.3f}")
+        print("round landed_B written_B written/landed rebased_buckets rows_written read_s probe_s")
         for r in range(args.rounds):
             inc = incs.next()
             raw, dels = os.path.join(root, f"raw{r}.parquet"), os.path.join(root, f"del{r}.parquet")
@@ -84,7 +118,12 @@ def main(argv=None) -> int:
             landed_total, written_total, folds_total = (
                 landed_total + landed, written_total + written, folds_total + rebased
             )
-            print(r, landed, written, round(written / landed, 2), rebased, stats["rows_written"])
+            reads.append(_wall(full_read))
+            probes.append(_wall(key_probe))
+            print(
+                r, landed, written, round(written / landed, 2), rebased, stats["rows_written"],
+                f"{reads[-1]:.3f}", f"{probes[-1]:.3f}",
+            )
             con.register("raw", inc.raw)
             con.register("dels", inc.deletes)
             con.execute(
@@ -100,13 +139,17 @@ def main(argv=None) -> int:
                     con.execute("INSERT INTO state SELECT * FROM inc")
         got = read_bucketed(spark, dest).toArrow()
         con.register("got", got)
-        cols = ", ".join(t["lineitem"].column_names)
-        q = f"SELECT count(*), sum(hash({cols})::HUGEINT) FROM {{}}"
+        q = f"SELECT count(*), sum(hash({', '.join(cols)})::HUGEINT) FROM {{}}"
         ok = con.execute(q.format("got")).fetchone() == con.execute(q.format("state")).fetchone()
         print(
             f"total: landed {landed_total} B, written {written_total} B, "
             f"written/landed {written_total / landed_total:.2f}, "
             f"rebased buckets {folds_total}, oracle {'ok' if ok else 'MISMATCH'}"
+        )
+        print(
+            f"reads after a round: full read median {statistics.median(reads[1:]):.3f} s "
+            f"(max {max(reads[1:]):.3f}), five-key probe median "
+            f"{statistics.median(probes[1:]):.3f} s (max {max(probes[1:]):.3f})"
         )
         return 0 if ok else 1
     finally:
