@@ -1,7 +1,8 @@
-.PHONY: test test-sf01 fixed-costs bench smoke
+.PHONY: test test-sf01 fixed-costs bench smoke audit sweep
 
+# The tier-1 command of ROADMAP.md, verbatim.
 test:
-	python -m pytest tests/ -q
+	export SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local; timeout -k 10 2670 python -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider
 
 # Driver-cost gate (Spark jobs, codegen compilations, py4j round trips
 # of an ingest round): a minute or two, ahead of the full suite.

@@ -48,19 +48,18 @@ def main(sf_dir: str, work: str) -> None:
     print(f"clean rows: {cleaned.count()}, rejected: {rejects.count()}")
 
     # 2. incremental sync into a bucketed destination ----------------------
-    dest = os.path.join(work, "orders_dest")
-    from fastetl_spark.io.bucketed import partial_merge, read_bucketed, write_bucketed
-
-    write_bucketed(
-        cleaned.select("o_orderkey", "o_custkey", "o_totalprice"), dest, ["o_orderkey"], 8
-    )
-    increment = cleaned.select("o_orderkey", "o_custkey", "o_totalprice").filter(
-        F.col("o_orderkey") % 10 == 0
-    ).withColumn("o_totalprice", F.col("o_totalprice") + 1.0)
-    stats = partial_merge(spark, dest, increment)
-    print(f"merged: {stats}")
-    print(f"generations: {eng.generations(dest)} (rollback/read_at available)")
-    assert read_bucketed(spark, dest).count() == cleaned.count()
+    # The first sync creates the bucketed root; the next one lands only
+    # the rows past the watermark, as one delta per touched bucket.
+    cols = ["o_orderkey", "o_custkey", "o_totalprice", "o_orderdate"]
+    cutoff = F.lit("1997-01-01").cast("timestamp")
+    src_old, src_all = os.path.join(work, "orders_old"), os.path.join(work, "orders_all")
+    cleaned.select(*cols).filter(F.col("o_orderdate") < cutoff).write.parquet(src_old)
+    cleaned.select(*cols).write.parquet(src_all)
+    dest = {"path": os.path.join(work, "orders_dest")}
+    first = eng.sync({"path": src_old}, dest, keys=["o_orderkey"], watermark_col="o_orderdate")
+    total = eng.sync({"path": src_all}, dest, keys=["o_orderkey"], watermark_col="o_orderdate")
+    print(f"synced: {first} rows, then {total} (generations {eng.generations(dest['path'])})")
+    assert eng.read(dest).count() == total == cleaned.count()
 
     # 3. near-dup dedup against a persistent index -------------------------
     docs = read_table(spark, sf_dir, "documents")

@@ -12,6 +12,10 @@ Sources/destinations are dicts:
     {"path": "/data/x.parquet"}                      parquet
     {"path": "...", "format": "csv", "options": {}}  csv
     {"jdbc": {...jdbc_scan_options kwargs...}}       database table/query
+
+`Engine.sync` (the incremental replication) reads any source but
+merges into one destination layout only: a bucketed parquet root
+(io/bucketed), which its first sync creates and `Engine.read` reads.
 """
 
 from __future__ import annotations
@@ -21,11 +25,10 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from fastetl_spark.checkpointing import materialize, observed
+from fastetl_spark.checkpointing import observed
 from fastetl_spark.io.readers import read_jdbc
-from fastetl_spark.io.writers import atomic_overwrite, select_intersection, write_csv
+from fastetl_spark.io.writers import select_intersection, write_csv
 from fastetl_spark.meta.load_info import LoadInfo
-from fastetl_spark.operators.sync import incremental_sync, merge_upsert
 from fastetl_spark.plans.qa import CleaningPipeline
 
 
@@ -50,9 +53,16 @@ class Engine:
     # --- io ---------------------------------------------------------------
 
     def read(self, source: dict) -> DataFrame:
+        """Read a source dict (module docstring). A bucketed root, such
+        as every sync destination, reads through ``read_bucketed``."""
         if "jdbc" in source:
             return read_jdbc(self.spark, **source["jdbc"])
         fmt = source.get("format", "parquet")
+        if fmt == "parquet":
+            from fastetl_spark.io.bucketed import is_bucketed_root, read_bucketed
+
+            if is_bucketed_root(self.spark, source["path"]):
+                return read_bucketed(self.spark, source["path"])
         reader = self.spark.read.format(fmt).options(**source.get("options", {}))
         if fmt == "csv":
             reader = reader.option("header", "true")
@@ -104,150 +114,76 @@ class Engine:
         deleted_keys: DataFrame | None = None,
         table_name: str = "",
     ) -> int:
-        """Incremental sync (§2.9): watermark -> diff -> merge.
+        """Incremental sync (§2.9): watermark -> merge -> bookkeeping.
+        Returns the destination's row count after the sync.
 
-        Destination layouts, in order of preference:
-        - Delta (``format: "delta"``, needs delta-spark installed): one
-          transactional MERGE INTO — file-pruned partial rewrite plus
-          cross-file atomicity (operators/delta_merge);
-        - bucketed parquet (io/bucketed, created via `Engine.bucketize`
-          or `write_bucketed`): the increment lands as one delta per
-          touched key-bucket (merge-on-read, folded into the bucket now
-          and then) — O(|increment|) per sync, the layout a 100 TB
-          destination needs. Its Spark jobs are described
-          ``fastetl:sync:<phase>`` (watermark, then partial_merge's).
-        - plain parquet: full merge + atomic directory swap (correct and
-          crash-safe, but O(|destination|) per sync — the migration
-          target is the bucketed layout);
-        - anything else (jdbc/csv): staged full overwrite.
+        The destination is a bucketed parquet root (io/bucketed), bucketed
+        on ``keys``. The first sync into a missing ``dest["path"]`` creates
+        it with ``write_bucketed``: the source's rows minus
+        ``deleted_keys``, in ``advise_n_buckets(source path)`` buckets (1
+        for a source with no path). Every later sync filters the source by
+        the watermark (the store's when configured, else one MAX over the
+        destination) and lands the increment through ``partial_merge``: one
+        delta per touched bucket, O(|increment|) per sync. The new
+        watermark is observed on that one write. An increment holds one
+        row per key (``partial_merge``'s contract): dedupe the source
+        first, for example with ``DuplicatedRowCleaner``.
+
+        Other destinations raise ``ValueError``: an existing root without a
+        bucket spec (migrate it once with ``bucketize``), one bucketed on
+        other keys, and any non-parquet one. Merging into a JDBC table waits
+        on ROADMAP item 3 (JDBC destinations). The Spark jobs are described
+        ``fastetl:sync:<phase>`` (watermark, then partial_merge's).
         """
-        src_df = self.read(source)
-        if dest.get("format") == "delta":
-            from fastetl_spark.operators.delta_merge import (
-                is_delta_table,
-                merge_into_delta,
-                require_delta,
-            )
+        from fastetl_spark.io.bucketed import (
+            advise_n_buckets,
+            merge_dest_spec,
+            partial_merge,
+            read_bucketed,
+            write_bucketed,
+        )
+        from fastetl_spark.session import job_phase
 
-            require_delta()
-            # watermark resolution mirrors the bucketed branch: control
-            # table first (no destination scan), then — only for an
-            # EXISTING table — a one-time MAX scan; a missing table is
-            # the documented "first call creates it" path, which must
-            # not read() the not-yet-existing destination.
-            wm = None
-            if self.watermark_store is not None:
-                wm = self.watermark_store.get(table_name or dest["path"])
-            if wm is None and is_delta_table(self.spark, dest["path"]):
-                wm = self.read(dest).agg(F.max(watermark_col)).first()[0]
-            inc = src_df if wm is None else src_df.filter(F.col(watermark_col) > F.lit(wm))
-            if self.watermark_store is not None:
-                inc = inc.transform(materialize)  # merge + new-watermark read below
-            merge_into_delta(self.spark, dest["path"], inc, keys, deleted_keys)
-            if self.watermark_store is not None:
-                new_wm = inc.agg(F.max(watermark_col)).first()[0]
-                if new_wm is not None:
-                    self.watermark_store.set(table_name or dest["path"], new_wm)
-            n = self.read(dest).count()
-            if self.load_info:
-                self.load_info.save(table_name or dest.get("path", ""), "incremental", n)
-            return n
-        is_parquet = "jdbc" not in dest and dest.get("format", "parquet") == "parquet"
-        if is_parquet:
-            from fastetl_spark.io.bucketed import (
-                partial_merge,
-                read_bucket_spec,
-                read_bucketed,
+        if "jdbc" in dest or dest.get("format", "parquet") != "parquet":
+            kind = "a JDBC table" if "jdbc" in dest else f"a {dest['format']} destination"
+            raise ValueError(
+                f"sync merges into bucketed parquet roots only, not into {kind}; "
+                "JDBC merge waits on ROADMAP item 3 (JDBC destinations)"
             )
-            from fastetl_spark.session import job_phase
-
-            spec = read_bucket_spec(self.spark, dest["path"])
-            if spec is not None:
-                # watermark from the control table when configured — a
-                # MAX over the destination would be a full scan, exactly
-                # the O(|destination|) cost the bucketed layout removes.
-                # Fallback (no store / first run): scan once, then the
-                # store takes over.
-                wm = None
+        path = dest["path"]
+        name = table_name or path
+        spec = merge_dest_spec(self.spark, path, keys)
+        wm = None
+        if spec is not None:
+            # the control table first: a MAX over the destination is a
+            # full scan. It is the fallback (no store, first run, or an
+            # emptied destination, whose MAX is None: merge everything)
+            with job_phase(self.spark, "sync", "watermark"):
+                if self.watermark_store is not None:
+                    wm = self.watermark_store.get(name)
+                if wm is None:
+                    dest_df = read_bucketed(self.spark, path)
+                    wm = dest_df.agg(F.max(watermark_col)).first()[0]
+        inc = self.read(source)
+        if wm is not None:
+            inc = inc.filter(F.col(watermark_col) > F.lit(wm))
+        # the new watermark rides on the one read of the increment
+        wm_obs = Observation()
+        inc = inc.observe(wm_obs, F.max(watermark_col).alias("wm"))
+        if spec is None:
+            if deleted_keys is not None:
+                inc = inc.join(deleted_keys.select(*keys), on=keys, how="left_anti")
+            n_buckets = advise_n_buckets(self.spark, source["path"]) if "path" in source else 1
+            n = write_bucketed(inc, path, keys, n_buckets)
+        else:
+            n = partial_merge(self.spark, path, inc, deleted_keys)["rows"]
+        if self.watermark_store is not None:
+            new_wm = observed(wm_obs, {"wm": None})["wm"]
+            if new_wm is not None:
                 with job_phase(self.spark, "sync", "watermark"):
-                    if self.watermark_store is not None:
-                        wm = self.watermark_store.get(table_name or dest["path"])
-                    if wm is None:
-                        # MAX over an empty destination is None —
-                        # legitimate after a deletion feed empties every
-                        # bucket (partial_merge keeps a schema-bearing
-                        # empty file); merge the full source increment
-                        # rather than wedge.
-                        dest_df = read_bucketed(self.spark, dest["path"])
-                        wm = dest_df.agg(F.max(watermark_col)).first()[0]
-                inc = (
-                    src_df
-                    if wm is None
-                    else src_df.filter(F.col(watermark_col) > F.lit(wm))
-                )
-                # the new watermark rides on the merge's one read of the
-                # increment (its delta write): no second pass
-                wm_obs = Observation()
-                inc = inc.observe(wm_obs, F.max(watermark_col).alias("wm"))
-                merge = partial_merge(self.spark, dest["path"], inc, deleted_keys)
-                if self.watermark_store is not None:
-                    new_wm = observed(wm_obs, {"wm": None})["wm"]
-                    if new_wm is not None:
-                        with job_phase(self.spark, "sync", "watermark"):
-                            self.watermark_store.set(table_name or dest["path"], new_wm)
-                n = merge["rows"]  # from the manifest: no count job
-                if self.load_info:
-                    self.load_info.save(
-                        table_name or dest.get("path", ""), "incremental", n
-                    )
-                return n
-        if is_parquet:
-            # first run against a not-yet-created destination: the
-            # initial full load IS the sync (mirrors the delta branch's
-            # is_delta_table probe — ADVICE r3)
-            from fastetl_spark.io.writers import read_parquet_if_exists
-
-            dest_df = read_parquet_if_exists(self.spark, dest["path"])
-            if dest_df is None:
-                n = atomic_overwrite(src_df, dest["path"])
-                if self.watermark_store is not None:
-                    wm = src_df.agg(F.max(watermark_col)).first()[0]
-                    if wm is not None:
-                        self.watermark_store.set(table_name or dest["path"], wm)
-                if self.load_info:
-                    self.load_info.save(
-                        table_name or dest.get("path", ""), "full", n
-                    )
-                return n
-        else:
-            dest_df = self.read(dest)
-        merged = incremental_sync(dest_df, src_df, keys, watermark_col, deleted_keys)
-        if is_parquet:
-            # A parquet destination without a bucket spec takes the
-            # O(|destination|) full-rewrite path — correct and
-            # crash-safe, but every sync rewrites everything. Say so
-            # loudly: at scale the fix is a one-time
-            # Engine.bucketize(path, keys, n_buckets) migration.
-            import warnings
-
-            warnings.warn(
-                f"sync destination {dest['path']!r} is plain parquet with no "
-                "bucket spec: falling back to a full destination rewrite "
-                "(O(|destination|) per sync). Migrate once with "
-                "Engine.bucketize(path, keys, n_buckets) to rewrite only "
-                "touched buckets per increment.",
-                stacklevel=2,
-            )
-            # Rewriting the path being read is not crash-safe with plain
-            # parquet: stage + directory-swap so a mid-write failure never
-            # leaves the destination deleted or partial.
-            n = atomic_overwrite(merged, dest["path"])
-        else:
-            staged = merged.transform(materialize)  # materialize before the dest rewrite
-            self.write(staged, dest, mode="overwrite")
-            n = staged.count()
+                    self.watermark_store.set(name, new_wm)
         if self.load_info:
-            self.load_info.save(table_name or dest.get("path", ""), "incremental", n)
+            self.load_info.save(name, "full" if spec is None else "incremental", n)
         return n
 
     # --- cleaning ---------------------------------------------------------

@@ -24,8 +24,10 @@ version 2, ``write_bucketed``): bucket data lives in versioned
 generation. The manifest also records each bucket's row count and the
 data schema, so a count or a read needs no Spark job. The trade: the
 root is not raw-readable with ``spark.read.parquet(path)`` — go through
-``read_bucketed``. The Delta-backed path (operators/delta_merge)
-remains the choice where delta is installed.
+``read_bucketed`` (``Engine.read`` does so for any bucketed root).
+``Engine.sync`` and the streaming merge know no other destination: the
+first sync creates the root with ``write_bucketed``, every later one
+calls ``partial_merge`` (``merge_dest_spec`` tells the two apart).
 
 Merges are merge-on-read, after Iceberg v2 equality deletes
 (https://iceberg.apache.org/spec/#equality-delete-files):
@@ -162,6 +164,39 @@ def read_bucket_spec(spark: SparkSession, path: str) -> dict | None:
     return spec
 
 
+def is_bucketed_root(spark: SparkSession, path: str) -> bool:
+    """True when ``path`` holds a bucket spec or a committed manifest
+    (the spec can be briefly absent next to one, see ``read_bucketed``):
+    such a root reads through ``read_bucketed`` only. Two metadata calls,
+    whatever the number of files under ``path``."""
+    fs, path_cls = hadoop_fs(spark, path)
+    if fs.exists(path_cls(_spec_path(path))):
+        return True
+    found = fs.globStatus(path_cls(f"{path.rstrip('/')}/{MANIFEST_PREFIX}*.json"))
+    return found is not None and len(found) > 0
+
+
+def merge_dest_spec(spark: SparkSession, path: str, keys: list[str]) -> dict | None:
+    """The bucket spec of the merge destination ``path``, or None when
+    nothing exists there yet (the first merge creates the root with
+    ``write_bucketed``). An existing root that is not bucketed, or is
+    bucketed on other keys than ``keys``, raises ``ValueError``."""
+    spec = read_bucket_spec(spark, path)
+    if spec is None:
+        fs, path_cls = hadoop_fs(spark, path)
+        if fs.exists(path_cls(path)):
+            raise ValueError(
+                f"{path} exists but is not a bucketed root (no {SPEC_FILE}); "
+                "migrate it once with bucketize(spark, path, keys, n_buckets)"
+            )
+        return None
+    if list(keys) != spec["keys"]:
+        raise ValueError(
+            f"{path} is bucketed on {spec['keys']}, not on the merge keys {list(keys)}"
+        )
+    return spec
+
+
 # --- manifest layout (v2): committed generations ---------------------------
 
 
@@ -191,8 +226,10 @@ def read_manifest(spark: SparkSession, path: str) -> dict | None:
     Spark job (manifests older than both fall back to the footers and to
     schema inference); ``deltas`` ({bucket_id: [delta dir, ...]} in
     generation order) and ``delta_rows`` ({bucket_id: pending delta rows,
-    tombstones included}) for buckets with merge-on-read deltas; and
-    ``shards``/``n_shards`` on a sharded destination."""
+    tombstones included}) for buckets with merge-on-read deltas;
+    ``keys`` (the merge keys, so a read resolves deltas while the spec
+    is briefly absent); and ``shards``/``n_shards`` on a sharded
+    destination."""
     fs, path_cls = hadoop_fs(spark, path)
     gens = _manifest_gens(fs, path_cls, path.rstrip("/"))
     if not gens:
@@ -276,11 +313,11 @@ def write_bucketed(
     n_buckets: int,
     keep_gens: int = 2,
     n_shards: int | None = None,
-) -> None:
+) -> int:
     """Initial full load of a bucketed merge destination, in the
-    manifest layout: bucket data lands in versioned
-    ``bucket_<K>_v<gen>`` dirs and a rename-committed manifest file is
-    the single pointer that publishes a generation. Merges then flip
+    manifest layout; returns the rows written. Bucket data lands in
+    versioned ``bucket_<K>_v<gen>`` dirs and a rename-committed manifest
+    file is the single pointer that publishes a generation. Merges then flip
     ALL touched buckets in one pointer commit — a reader racing a merge
     sees the old generation or the new one, never a mix. Read it with
     ``read_bucketed``, not a raw ``spark.read.parquet(path)``. The spec
@@ -332,7 +369,10 @@ def write_bucketed(
         empty.write.mode("overwrite").parquet(f"{base}/bucket_0_v{gen}")
         buckets[0], rows[0] = f"bucket_0_v{gen}", 0
     fs.delete(path_cls(staging), True)
-    m: dict = {"gen": gen, "buckets": buckets, "rows": rows, "schema": df.schema.jsonValue()}
+    m: dict = {
+        "gen": gen, "buckets": buckets, "rows": rows, "schema": df.schema.jsonValue(),
+        "keys": list(keys),
+    }
     if n_shards is not None:
         m["shards"] = {b: _hrw_shard(b, n_shards) for b in range(n_buckets)}
         m["n_shards"] = int(n_shards)
@@ -346,6 +386,7 @@ def write_bucketed(
     if n_shards is not None:
         spec["n_shards"] = int(n_shards)
     write_text_file(spark, _spec_path(path), json.dumps(spec))
+    return sum(rows.values())
 
 
 def _write_hive_bucketed(
@@ -402,8 +443,8 @@ def _resolve(
     against every delta key — broadcast while the buckets read hold at
     most ``BROADCAST_DELTA_ROWS`` pending rows, so the base is not
     shuffled, through a shuffle above it; the live delta rows are unioned
-    on. ``keys`` (the merge keys) is read from the spec when not given
-    and deltas exist."""
+    on. ``keys`` (the merge keys) is read from the manifest, else the
+    spec, when not given and deltas exist."""
     base = path.rstrip("/")
     schema = _schema(spark, base, m)
     ids = sorted(_ids(m) if bucket_ids is None else set(bucket_ids) & _ids(m))
@@ -413,7 +454,7 @@ def _resolve(
     parts = [spark.read.schema(schema).parquet(*plain)] if plain else []
     pending = _pending(spark, base, m, ids)
     if pending is not None:
-        keys = keys or read_bucket_spec(spark, path)["keys"]
+        keys = keys or m.get("keys") or read_bucket_spec(spark, path)["keys"]
         if shadowed:
             dead = pending.select(*keys)
             if sum(m.get("delta_rows", {}).get(b, 0) for b in ids) <= BROADCAST_DELTA_ROWS:

@@ -32,8 +32,7 @@ def replace_dir(fs, path_cls, src_str: str, dst_str: str) -> None:
     exist — a live reader listing the tree right then sees it missing.
     Used for one-off swaps (``io.bucketed.bucketize`` migrating a
     root); recurring merges publish by pointer flip instead, through
-    the bucketed manifest (io/bucketed) or the Delta path
-    (operators/delta_merge)."""
+    the bucketed manifest (io/bucketed)."""
     src = path_cls(src_str)
     dst = path_cls(dst_str)
     backup = path_cls(dst_str.rstrip("/") + ".__old__")

@@ -83,8 +83,10 @@ class WatermarkStore:
         The latest row wins by (updated_at, seq) — NOT a max over the
         stringified value column, which regresses numeric watermarks
         lexicographically (max('9','10') = '9'). Only a missing state
-        path reads as "no watermark"; corruption/permission errors
-        propagate instead of silently triggering a full re-sync.
+        path reads as "no watermark", checked up front through the Hadoop
+        FS (a Spark read of it logs a stack trace before it fails);
+        corruption/permission errors propagate instead of silently
+        triggering a full re-sync.
 
         The state is read with its declared schema: no inference job.
         State dirs written by an older schema (without seq/value_type)
@@ -92,15 +94,12 @@ class WatermarkStore:
         sync state: pre-upgrade rows order by updated_at alone (nulls
         last on seq) and parse as str (the old behavior).
         """
-        from pyspark.errors import AnalysisException
+        from fastetl_spark.io.fsutil import hadoop_fs
 
-        try:
-            state = self.spark.read.schema(_STATE_SCHEMA).parquet(self.path)
-        except AnalysisException as e:
-            msg = str(e)
-            if "PATH_NOT_FOUND" in msg or "Path does not exist" in msg:
-                return None
-            raise
+        fs, path_cls = hadoop_fs(self.spark, self.path)
+        if not fs.exists(path_cls(self.path)):
+            return None
+        state = self.spark.read.schema(_STATE_SCHEMA).parquet(self.path)
         row = (
             state.filter(F.col("table_name") == table)
             .orderBy(F.desc("updated_at"), F.desc_nulls_last("seq"))
@@ -456,9 +455,8 @@ def apply_change_feed(
     """Consume an op-coded change feed (I/U rows carry the new payload,
     D rows delete by key): upsert the I/U rows, anti-join out the D
     keys — §2.9's merge + delete steps driven by an explicit feed
-    instead of a source diff. For bucketed/Delta destinations the same
-    feed splits into partial_merge(increment, deleted_keys) /
-    MERGE WHEN MATCHED DELETE."""
+    instead of a source diff. For a bucketed destination the same feed
+    splits into partial_merge(increment, deleted_keys)."""
     ups = feed.filter(F.col(op_col) != "D").drop(op_col)
     dels = feed.filter(F.col(op_col) == "D").select(*keys)
     return delete_sync(

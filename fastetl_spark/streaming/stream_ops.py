@@ -6,14 +6,13 @@ Components:
 - windowed_event_counts: tumbling-window agg with watermark
 - sessionized_counts: session_window agg (30-min gap)
 - dedup_stream: watermark + dropDuplicates on the event key
-- foreach_batch_merge: streaming upsert sink — every micro-batch MERGEs
-  into a parquet destination via the same merge_upsert used in batch
-  (§2.9 made continuous). With Delta this would be MERGE INTO; the
-  parquet rewrite keeps the engine dependency-free.
+- foreach_batch_merge: streaming upsert sink — every micro-batch merges
+  into a bucketed destination through the same partial_merge as the
+  batch Engine.sync (§2.9 made continuous).
 
 Scale notes: state stores back the window/session/dedup operators —
-watermarks bound state size; foreachBatch merge rewrites only with
-AQE-planned joins. All sinks tested with trigger(availableNow=True)
+watermarks bound state size; the foreachBatch merge writes one delta
+per touched bucket. All sinks tested with trigger(availableNow=True)
 for deterministic batch-equivalence.
 """
 
@@ -88,14 +87,18 @@ def dedup_stream(stream: DataFrame, keys: list[str], watermark: str = "2 hours")
     return stream.withWatermark("ts", watermark).dropDuplicates(keys)
 
 
-def make_merge_batch(
-    dest_path: str,
-    keys: list[str],
-    n_buckets: int | None = None,
-    fmt: str = "parquet",
-):
+def make_merge_batch(dest_path: str, keys: list[str], n_buckets: int | None = None):
     """The foreachBatch merge body, as a standalone callable so batch
     redelivery can be tested directly (and reused outside a stream).
+
+    The destination is a bucketed root (io/bucketed), as for
+    ``Engine.sync``. The first batch into a missing ``dest_path``
+    creates it with ``write_bucketed`` on ``keys``, in ``n_buckets``
+    buckets (1 when unset); every later batch lands through
+    ``partial_merge``, whose contract is one row per key: a batch is
+    deduplicated on ``keys`` first, and which duplicate survives is
+    arbitrary. An existing root that is not bucketed on ``keys`` raises
+    ``ValueError`` (``merge_dest_spec``).
 
     Redelivery contract: a committed batch_id is recorded as a marker
     file AFTER its merge publishes (``dest.__commits__/<batch_id>``), so
@@ -105,52 +108,24 @@ def make_merge_batch(
     written last: a crash between merge and marker re-applies the merge
     on replay, which is safe because the merge is idempotent (keyed
     upsert), so the destination converges either way — effectively-once
-    on top of the at-least-once trigger. Delta destinations skip the
-    marker dance: the MERGE itself is transactional.
+    on top of the at-least-once trigger.
     """
-    from fastetl_spark.io.bucketed import (
-        partial_merge,
-        read_bucket_spec,
-        write_bucketed,
-    )
+    from fastetl_spark.io.bucketed import merge_dest_spec, partial_merge, write_bucketed
     from fastetl_spark.io.fsutil import hadoop_fs, write_text_file
-    from fastetl_spark.io.writers import atomic_overwrite, read_parquet_if_exists
-    from fastetl_spark.operators.sync import merge_upsert
 
     commits_dir = dest_path.rstrip("/") + ".__commits__"
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        batch = batch_df.dropDuplicates(keys)
-        if fmt == "delta":
-            from fastetl_spark.operators.delta_merge import merge_into_delta
-
-            merge_into_delta(spark, dest_path, batch, keys)
-            return
         marker = f"{commits_dir}/{int(batch_id)}"
         fs, path_cls = hadoop_fs(spark, dest_path)
         if fs.exists(path_cls(marker)):
             return  # redelivered batch: already merged and committed
-        # Absence is detected explicitly; a read/merge *error* propagates
-        # and fails the batch instead of silently overwriting the
-        # destination with only the current micro-batch.
-        spec = read_bucket_spec(spark, dest_path)
-        if spec is not None:
-            partial_merge(spark, dest_path, batch)
-        elif n_buckets:
-            # first batch of a bucketed destination: full initial load
-            # (spec file committed last, so a crash here is just "absent")
-            write_bucketed(batch, dest_path, keys, n_buckets)
+        batch = batch_df.dropDuplicates(keys)
+        if merge_dest_spec(spark, dest_path, keys) is None:
+            write_bucketed(batch, dest_path, keys, n_buckets or 1)
         else:
-            dest = read_parquet_if_exists(spark, dest_path)
-            merged = (
-                batch if dest is None else merge_upsert(dest, batch.select(*dest.columns), keys)
-            )
-            # staging-dir + directory swap: parquet is not transactional
-            # (with Delta this whole function is one MERGE INTO), so the
-            # swap keeps readers and crash-recovery from ever seeing a
-            # truncated destination.
-            atomic_overwrite(merged, dest_path)
+            partial_merge(spark, dest_path, batch)
         write_text_file(spark, marker, "")  # commit marker, after publish
 
     return merge_batch
@@ -162,31 +137,16 @@ def foreach_batch_merge(
     keys: list[str],
     checkpoint_dir: str,
     n_buckets: int | None = None,
-    fmt: str = "parquet",
 ):
-    """Streaming upsert: each micro-batch merges into the parquet
-    destination (update-join + anti-join insert, §2.9 steps 4-7).
-    Returns the StreamingQuery.
-
-    With ``fmt="delta"`` (delta-spark installed), every micro-batch is
-    ONE transactional MERGE INTO (operators/delta_merge) — file-pruned
-    partial rewrite, atomic commit. With ``n_buckets`` set (or when the
-    destination already carries a bucket spec), the destination uses
-    the key-bucketed plain-parquet layout (io/bucketed): each
-    micro-batch reads and rewrites ONLY the buckets it touches —
-    O(|batch|) per trigger instead of O(|destination|), which is what
-    keeps a continuously-merged 100 TB destination feasible. Without
-    either, the fallback is the full merge + atomic directory swap
-    (correct, but rewrites everything every batch). Batch redelivery
-    after a restart is absorbed by the commit-marker log (see
-    make_merge_batch)."""
-    if fmt == "delta":
-        from fastetl_spark.operators.delta_merge import require_delta
-
-        require_delta()  # fail at wiring time, not on the first batch
-
+    """Streaming upsert into a bucketed destination: each micro-batch
+    lands through ``make_merge_batch``, so it writes one delta for the
+    buckets it touches — O(|batch|) per trigger, not O(|destination|).
+    ``n_buckets`` sizes the root the first batch creates (1 when unset);
+    a micro-batch holds one row per key once deduplicated. Batch
+    redelivery after a restart is absorbed by the commit-marker log.
+    Returns the StreamingQuery."""
     return (
-        stream.writeStream.foreachBatch(make_merge_batch(dest_path, keys, n_buckets, fmt))
+        stream.writeStream.foreachBatch(make_merge_batch(dest_path, keys, n_buckets))
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .start()

@@ -32,10 +32,12 @@ def test_db_to_db_operator_full(spark, sf_dir, tmp_path):
 
 
 def test_db_to_db_operator_incremental(spark, sf_dir, tmp_path):
+    from fastetl_spark.io.bucketed import write_bucketed
+
     orders = read_table(spark, sf_dir, "orders")
-    # seed destination with the old half
+    # seed destination with the old half: a sync destination is bucketed
     old = orders.filter(F.col("o_orderdate") <= F.lit("2000-01-01").cast("timestamp"))
-    old.write.parquet(str(tmp_path / "dest"))
+    write_bucketed(old, str(tmp_path / "dest"), ["o_orderkey"], 4)
     src_path = str(tmp_path / "src")
     orders.write.parquet(src_path)
     op = DbToDbOperator(
@@ -47,7 +49,7 @@ def test_db_to_db_operator_incremental(spark, sf_dir, tmp_path):
     )
     n = op.execute(spark)
     assert n == orders.count()  # dest now holds everything exactly once
-    dest = spark.read.parquet(str(tmp_path / "dest"))
+    dest = Engine(spark).read({"path": str(tmp_path / "dest")})
     assert dest.count() == orders.count()
     assert dest.select("o_orderkey").distinct().count() == orders.count()
 
@@ -188,19 +190,13 @@ def test_sync_many_reports_per_table_and_isolates_failures(spark, tmp_path):
          "dest": {"path": str(tmp_path / "db")}, "keys": ["id"],
          "watermark_col": "ts"},
     ]
-    import warnings
-
-    with warnings.catch_warnings():
-        warnings.simplefilter("ignore")  # plain-parquet full-rewrite warning
-        rep = {r.table: (r.status, r.rows_merged) for r in eng.sync_many(tables).collect()}
+    rep = {r.table: (r.status, r.rows_merged) for r in eng.sync_many(tables).collect()}
     assert rep["t_a"] == ("ok", 2)
     assert rep["t_bad"][0] == "error"
-    assert spark.read.parquet(dest_a).count() == 2
+    assert eng.read({"path": dest_a}).count() == 2
 
-    with warnings.catch_warnings():
-        warnings.simplefilter("ignore")
-        with pytest.raises(Exception):
-            eng.sync_many(tables[1:], fail_fast=True)
+    with pytest.raises(Exception):
+        eng.sync_many(tables[1:], fail_fast=True)
 
 
 def test_engine_read_at_and_pagerank(spark, tmp_path):

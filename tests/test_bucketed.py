@@ -364,9 +364,20 @@ def test_engine_sync_emptied_bucketed_dest_reloads_full_source(spark, tmp_path):
     )
 
 
-def test_engine_sync_plain_parquet_warns_about_full_rewrite(spark, tmp_path):
-    """The non-bucketed parquet fallback is O(|destination|) per sync;
-    it must say so loudly and name the bucketize migration."""
+def _tree(root: str) -> dict[str, bytes]:
+    """{relative path: content} of every file under ``root``."""
+    out = {}
+    for d, _, names in os.walk(root):
+        for f in names:
+            with open(os.path.join(d, f), "rb") as fh:
+                out[os.path.relpath(os.path.join(d, f), root)] = fh.read()
+    return out
+
+
+def test_engine_sync_plain_parquet_raises_naming_bucketize(spark, tmp_path):
+    """An existing parquet destination without a bucket spec is not
+    merged: the sync names the one-time migration and leaves every byte
+    of the destination as it was."""
     from fastetl_spark.api import Engine
 
     rows = spark.createDataFrame([(1, "a", 10), (2, "b", 20)], "id long, v string, ts long")
@@ -374,18 +385,94 @@ def test_engine_sync_plain_parquet_warns_about_full_rewrite(spark, tmp_path):
     rows.limit(1).write.parquet(dest)
     src = str(tmp_path / "src")
     rows.write.parquet(src)
-    eng = Engine(spark)
-    with pytest.warns(UserWarning, match="bucketize"):
-        n = eng.sync({"path": src}, {"path": dest}, keys=["id"], watermark_col="ts")
-    assert n == 2
-    # the bucketed path must NOT warn
-    dest2 = str(tmp_path / "dest2")
-    write_bucketed(rows.limit(1), dest2, ["id"], N_BUCKETS)
-    import warnings as _w
+    before = _tree(dest)
+    with pytest.raises(ValueError, match="bucketize"):
+        Engine(spark).sync({"path": src}, {"path": dest}, keys=["id"], watermark_col="ts")
+    assert _tree(dest) == before
+    assert not os.path.exists(dest + ".__merge_lock__")
 
-    with _w.catch_warnings():
-        _w.simplefilter("error")
-        eng.sync({"path": src}, {"path": dest2}, keys=["id"], watermark_col="ts")
+
+def test_engine_sync_rejects_other_keys_and_non_parquet(spark, tmp_path):
+    """A bucketed root merges on its spec's keys only, and a JDBC or CSV
+    destination is no sync destination: each raises before any write."""
+    from fastetl_spark.api import Engine
+
+    rows = spark.createDataFrame([(1, "a", 10), (2, "b", 20)], "id long, v string, ts long")
+    dest, src = str(tmp_path / "dest"), str(tmp_path / "src")
+    write_bucketed(rows, dest, ["ts"], N_BUCKETS)
+    rows.write.parquet(src)
+    before = _tree(dest)
+    eng = Engine(spark)
+    with pytest.raises(ValueError, match=r"bucketed on \['ts'\]"):
+        eng.sync({"path": src}, {"path": dest}, keys=["id"], watermark_col="ts")
+    assert _tree(dest) == before
+    jdbc = {"jdbc": {"url": "jdbc:derby:memory:x", "table": "t"}}
+    csv = {"path": str(tmp_path / "csv"), "format": "csv"}
+    for other in (jdbc, csv):
+        with pytest.raises(ValueError, match="JDBC merge"):
+            eng.sync({"path": src}, other, keys=["id"], watermark_col="ts")
+    assert not os.path.exists(csv["path"])
+
+
+def test_first_sync_creates_bucketed_root_then_lands_a_delta(spark, tmp_path):
+    """The first sync into a missing destination writes a bucketed root
+    (bases, not deltas), without the keys the deletion feed names even
+    where the source holds them. The second sync adds exactly one delta
+    dir and leaves the base map alone. Both match the frame-level
+    incremental_sync of the same inputs."""
+    from fastetl_spark.api import Engine
+    from fastetl_spark.io.bucketed import DELTA_PREFIX
+    from fastetl_spark.operators.sync import incremental_sync
+
+    cols = ["id", "v", "ts"]
+    first = spark.createDataFrame(
+        [(i, f"v{i}", 1) for i in range(40)], "id long, v string, ts long"
+    )
+    dels = spark.createDataFrame([(3,), (7,)], "id long")  # both in the source
+    dest, src1, src2 = (str(tmp_path / n) for n in ("dest", "src1", "src2"))
+    first.write.parquet(src1)
+    eng = Engine(spark, load_log_path=str(tmp_path / "log"))
+
+    n = eng.sync({"path": src1}, {"path": dest}, ["id"], "ts", deleted_keys=dels)
+    want = first.join(dels, "id", "left_anti")
+    assert n == 38
+    spec = read_bucket_spec(spark, dest)
+    assert spec["keys"] == ["id"] and spec["n_buckets"] == 1  # a small source
+    m1 = read_manifest(spark, dest)
+    assert "deltas" not in m1
+    assert _rows(eng.read({"path": dest}), cols) == _rows(want, cols)
+
+    second = spark.createDataFrame(
+        [(5, "u5", 2), (100, "new", 2), (1, "stale", 1)], "id long, v string, ts long"
+    )
+    first.unionByName(second).write.parquet(src2)
+    n2 = eng.sync({"path": src2}, {"path": dest}, ["id"], "ts")
+    deltas = [d for d in os.listdir(dest) if d.startswith(DELTA_PREFIX)]
+    assert deltas == [f"{DELTA_PREFIX}{m1['gen'] + 1}"]
+    m2 = read_manifest(spark, dest)
+    assert m2["buckets"] == m1["buckets"]
+    oracle = incremental_sync(want, spark.read.parquet(src2), ["id"], "ts")
+    assert n2 == oracle.count() == 39
+    assert _rows(eng.read({"path": dest}), cols) == _rows(oracle, cols)
+    log = {(r.tp_carga, r.qt_linhas) for r in eng.load_info.read().collect()}
+    assert log == {("full", 38), ("incremental", 39)}
+
+
+def test_engine_read_resolves_a_merged_bucketed_root(spark, tmp_path):
+    """A root with a pending delta is no raw-readable parquet tree;
+    Engine.read resolves it like read_bucketed, spec or no spec."""
+    from fastetl_spark.api import Engine
+    from fastetl_spark.io.bucketed import SPEC_FILE
+
+    dest = str(tmp_path / "dest")
+    base = spark.createDataFrame([(i, i * 10) for i in range(20)], "k long, v long")
+    write_bucketed(base, dest, ["k"], 4)
+    partial_merge(spark, dest, base.limit(5).withColumn("v", F.lit(-1)))
+    want = _rows(read_bucketed(spark, dest), ["k", "v"])
+    assert sum(v == -1 for _, v in want) == 5
+    assert _rows(Engine(spark).read({"path": dest}), ["k", "v"]) == want
+    os.remove(os.path.join(dest, SPEC_FILE))  # the manifest alone decides
+    assert _rows(Engine(spark).read({"path": dest}), ["k", "v"]) == want
 
 
 def test_v2_roundtrip_merge_and_key_pruning(spark, sf_dir, tmp_path):
@@ -649,10 +736,10 @@ def test_vacuum_dest_removes_leftovers_keeps_data(spark, tmp_path):
         f for f in os.listdir(dest + ".__commits__") if not f.startswith(".")
     )
     assert kept == ["3", "4"]
-    assert spark.read.parquet(dest).count() == 5
+    assert read_bucketed(spark, dest).count() == 5
     # redelivery of a RETAINED batch is still absorbed after the vacuum
     merge(spark.createDataFrame([(4, "XX")], "id long, v string"), 4)
-    assert {r.v for r in spark.read.parquet(dest).collect()} == {"v0", "v1", "v2", "v3", "v4"}
+    assert {r.v for r in read_bucketed(spark, dest).collect()} == {"v0", "v1", "v2", "v3", "v4"}
 
 
 def test_partial_merge_lock_rejects_concurrent_and_vacuums(spark, tmp_path):

@@ -15,6 +15,7 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
+from fastetl_spark.io.bucketed import read_bucket_spec, read_bucketed, read_manifest
 from fastetl_spark.io.readers import read_table
 from fastetl_spark.streaming.stream_ops import (
     dedup_stream,
@@ -156,7 +157,8 @@ def test_foreach_batch_merge_upserts(spark, events_dir, tmp_path):
         checkpoint_dir=str(tmp_path / "ckpt"),
     )
     q.awaitTermination(180)
-    dest = spark.read.parquet(str(tmp_path / "dest"))
+    assert read_bucket_spec(spark, str(tmp_path / "dest"))["n_buckets"] == 1
+    dest = read_bucketed(spark, str(tmp_path / "dest"))
     src = spark.read.parquet(events_dir)
     assert dest.count() == src.count()  # every key exactly once
     assert dest.select("event_id").distinct().count() == src.count()
@@ -259,19 +261,43 @@ def test_merge_batch_redelivery_is_skipped(spark, tmp_path):
 
     b0 = spark.createDataFrame([(1, "a"), (2, "b")], "id long, v string")
     merge(b0, 0)
-    assert sorted(r.v for r in spark.read.parquet(dest).collect()) == ["a", "b"]
+    assert sorted(r.v for r in read_bucketed(spark, dest).collect()) == ["a", "b"]
 
     # redelivery of batch 0 with DIFFERENT payload (worst case): must be
     # ignored — the first commit won
     b0_replay = spark.createDataFrame([(1, "X"), (2, "Y")], "id long, v string")
     merge(b0_replay, 0)
-    assert sorted(r.v for r in spark.read.parquet(dest).collect()) == ["a", "b"]
+    assert sorted(r.v for r in read_bucketed(spark, dest).collect()) == ["a", "b"]
 
     # the next batch id applies normally
     merge(spark.createDataFrame([(2, "b2"), (3, "c")], "id long, v string"), 1)
-    got = {r.id: r.v for r in spark.read.parquet(dest).collect()}
+    got = {r.id: r.v for r in read_bucketed(spark, dest).collect()}
     assert got == {1: "a", 2: "b2", 3: "c"}
     assert os.path.isdir(dest + ".__commits__")
+
+
+def test_merge_batch_first_batch_creates_bucketed_root(spark, tmp_path):
+    """Without ``n_buckets`` the first batch still writes a bucketed
+    root (one bucket, bases only); the next batch lands as a delta; an
+    existing root that is not bucketed is rejected before any write."""
+    from fastetl_spark.streaming.stream_ops import make_merge_batch
+
+    dest = str(tmp_path / "dest")
+    merge = make_merge_batch(dest, keys=["id"])
+    merge(spark.createDataFrame([(1, "a"), (2, "b"), (2, "b")], "id long, v string"), 0)
+    spec = read_bucket_spec(spark, dest)
+    assert (spec["version"], spec["keys"], spec["n_buckets"]) == (2, ["id"], 1)
+    assert "deltas" not in read_manifest(spark, dest)
+    merge(spark.createDataFrame([(2, "b2"), (3, "c")], "id long, v string"), 1)
+    assert read_manifest(spark, dest)["deltas"]
+    got = {r.id: r.v for r in read_bucketed(spark, dest).collect()}
+    assert got == {1: "a", 2: "b2", 3: "c"}
+
+    plain = str(tmp_path / "plain")
+    spark.createDataFrame([(1, "a")], "id long, v string").write.parquet(plain)
+    with pytest.raises(ValueError, match="bucketize"):
+        make_merge_batch(plain, keys=["id"])(spark.createDataFrame([(2, "b")], "id long, v string"), 0)
+    assert not os.path.exists(plain + ".__commits__")
 
 
 def test_cdc_batch_applies_ops_and_skips_redelivery(spark, tmp_path):
