@@ -25,7 +25,6 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from fastetl_spark.checkpointing import observed
 from fastetl_spark.io.readers import read_jdbc
 from fastetl_spark.io.writers import select_intersection, write_csv
 from fastetl_spark.meta.load_info import LoadInfo
@@ -114,7 +113,7 @@ class Engine:
         deleted_keys: DataFrame | None = None,
         table_name: str = "",
     ) -> int:
-        """Incremental sync (§2.9): watermark -> merge -> bookkeeping.
+        """Incremental sync (§2.9): watermark -> merge, one commit.
         Returns the destination's row count after the sync.
 
         The destination is a bucketed parquet root (io/bucketed), bucketed
@@ -122,12 +121,22 @@ class Engine:
         it with ``write_bucketed``: the source's rows minus
         ``deleted_keys``, in ``advise_n_buckets(source path)`` buckets (1
         for a source with no path). Every later sync filters the source by
-        the watermark (the store's when configured, else one MAX over the
-        destination) and lands the increment through ``partial_merge``: one
-        delta per touched bucket, O(|increment|) per sync. The new
-        watermark is observed on that one write. An increment holds one
-        row per key (``partial_merge``'s contract): dedupe the source
-        first, for example with ``DuplicatedRowCleaner``.
+        the watermark and lands the increment through ``partial_merge``:
+        one delta dir for all touched buckets, O(|increment|) per sync.
+        An increment holds one row per key (``partial_merge``'s contract):
+        dedupe the source first, for example with ``DuplicatedRowCleaner``.
+
+        The watermark and the load record ride the manifest commit that
+        publishes the data: the write observes the new watermark (the
+        greatest ``watermark_col`` value it lands), and the next sync reads
+        it from the manifest, with no Spark job. The configured
+        ``WatermarkStore`` is only read, once, for a root whose manifest
+        records no watermark (one created before the manifest carried it,
+        or by ``bucketize``), keyed by ``table_name`` or the path; without
+        a stored value the fallback is one MAX over the destination (None
+        for an emptied one: merge everything). The sync writes neither the
+        store nor the ``LoadInfo`` log: the root's latest load records are
+        in its manifest (``read_manifest``'s ``loads``).
 
         Other destinations raise ``ValueError``: an existing root without a
         bucket spec (migrate it once with ``bucketize``), one bucketed on
@@ -137,9 +146,11 @@ class Engine:
         """
         from fastetl_spark.io.bucketed import (
             advise_n_buckets,
+            manifest_watermark,
             merge_dest_spec,
             partial_merge,
             read_bucketed,
+            read_manifest,
             write_bucketed,
         )
         from fastetl_spark.session import job_phase
@@ -151,40 +162,26 @@ class Engine:
                 "JDBC merge waits on ROADMAP item 3 (JDBC destinations)"
             )
         path = dest["path"]
-        name = table_name or path
         spec = merge_dest_spec(self.spark, path, keys)
         wm = None
         if spec is not None:
-            # the control table first: a MAX over the destination is a
-            # full scan. It is the fallback (no store, first run, or an
-            # emptied destination, whose MAX is None: merge everything)
-            with job_phase(self.spark, "sync", "watermark"):
-                if self.watermark_store is not None:
-                    wm = self.watermark_store.get(name)
-                if wm is None:
-                    dest_df = read_bucketed(self.spark, path)
-                    wm = dest_df.agg(F.max(watermark_col)).first()[0]
+            wm = manifest_watermark(read_manifest(self.spark, path))
+            if wm is None:
+                with job_phase(self.spark, "sync", "watermark"):
+                    if self.watermark_store is not None:
+                        wm = self.watermark_store.get(table_name or path)
+                    if wm is None:
+                        dest_df = read_bucketed(self.spark, path)
+                        wm = dest_df.agg(F.max(watermark_col)).first()[0]
         inc = self.read(source)
         if wm is not None:
             inc = inc.filter(F.col(watermark_col) > F.lit(wm))
-        # the new watermark rides on the one read of the increment
-        wm_obs = Observation()
-        inc = inc.observe(wm_obs, F.max(watermark_col).alias("wm"))
         if spec is None:
             if deleted_keys is not None:
                 inc = inc.join(deleted_keys.select(*keys), on=keys, how="left_anti")
             n_buckets = advise_n_buckets(self.spark, source["path"]) if "path" in source else 1
-            n = write_bucketed(inc, path, keys, n_buckets)
-        else:
-            n = partial_merge(self.spark, path, inc, deleted_keys)["rows"]
-        if self.watermark_store is not None:
-            new_wm = observed(wm_obs, {"wm": None})["wm"]
-            if new_wm is not None:
-                with job_phase(self.spark, "sync", "watermark"):
-                    self.watermark_store.set(name, new_wm)
-        if self.load_info:
-            self.load_info.save(name, "full" if spec is None else "incremental", n)
-        return n
+            return write_bucketed(inc, path, keys, n_buckets, watermark_col=watermark_col)
+        return partial_merge(self.spark, path, inc, deleted_keys, watermark_col)["rows"]
 
     # --- cleaning ---------------------------------------------------------
 

@@ -32,14 +32,18 @@ calls ``partial_merge`` (``merge_dest_spec`` tells the two apart).
 Merges are merge-on-read, after Iceberg v2 equality deletes
 (https://iceberg.apache.org/spec/#equality-delete-files):
 
-- a merge writes ONE delta dir, ``delta_v<gen>/__fe_bucket=K/`` (one
-  file per touched bucket), holding the increment's rows and the
-  deletion feed's keys as tombstone rows (``__fe_del`` true, other
-  columns null). It rewrites no bucket (it reads their key columns,
-  for the exact row count); the manifest lists each bucket's base dir
-  and its pending delta dirs in generation order, and the merge writes
-  about as much as the increment (reference fast_etl.py:601-610 updates
-  only the changed rows, too);
+- a merge writes ONE delta dir, ``delta_v<gen>/``, of plain parquet
+  that keeps the bucket column: the increment's rows and the deletion
+  feed's keys as tombstone rows (``__fe_del`` true, other columns null),
+  rebalanced on the bucket and sorted by it within each file, so a small
+  increment is one file whatever the buckets it touches. It rewrites no
+  bucket (it reads their key columns, for the exact row count); the
+  manifest lists each bucket's base dir and the delta dirs that hold its
+  pending rows, in generation order, and the merge writes about as much
+  as the increment (reference fast_etl.py:601-610 updates only the
+  changed rows, too). A reader reads each delta dir once and keeps a
+  row only where its (bucket, generation) pair is listed: a bucket that
+  folded since must not see its rows in a dir other buckets still list;
 - readers resolve base + deltas through one resolver (``_resolve``):
   the latest generation of a key wins and a tombstone deletes it, the
   base is anti-joined against all delta keys, then the live delta rows
@@ -67,7 +71,15 @@ before the commit leaves the old generation fully intact, and re-running
 the same increment converges. The previous generation's dirs are
 retained for in-flight readers and GC'd a generation later; since a
 delta generation shares its base dirs with the one before, that
-retention costs only the superseded deltas and folded bases.
+retention costs only the superseded bases and the delta dirs no bucket
+lists any more (a delta dir goes whole, once no retained manifest
+references it).
+
+The same manifest commit carries a sync's bookkeeping: the watermark
+observed on the write (``watermark_col``) and a bounded ring of load
+records. Data, watermark and load record therefore publish together,
+exactly once, and ``rollback_bucketed`` moves the watermark back with
+the data.
 
 The append-only indexes (operators/dedup_index, the IVF-PQ
 ``vectors/`` of operators/ann_index) keep the Hive layout (spec version
@@ -94,6 +106,7 @@ plan-asserted shuffle-free in tests).
 
 from __future__ import annotations
 
+import datetime as dt
 import json
 from functools import reduce
 
@@ -111,6 +124,7 @@ from fastetl_spark.io.fsutil import (
     write_text_file,
 )
 from fastetl_spark.io.writers import literal_frame
+from fastetl_spark.operators.sync import _parse_watermark, _watermark_type
 from fastetl_spark.session import job_phase
 
 BUCKET_COL = "__fe_bucket"
@@ -121,9 +135,9 @@ HIVE_VERSION = 1
 # rename-committed manifest pointer; readers see one generation)
 MANIFEST_VERSION = 2
 MANIFEST_PREFIX = "_manifest_"
-# Merge-on-read deltas: ``delta_v<gen>/__fe_bucket=K/`` dirs whose rows
-# carry their generation and DELETED_COL (true on a tombstone: keys set,
-# other columns null)
+# Merge-on-read deltas: one ``delta_v<gen>/`` dir per generation whose
+# rows carry their bucket, their generation and DELETED_COL (true on a
+# tombstone: keys set, other columns null)
 DELTA_PREFIX = "delta_v"
 GEN_COL = "__fe_gen"
 DELETED_COL = "__fe_del"
@@ -138,6 +152,8 @@ DEFAULT_MAX_FILES_PER_BUCKET = 16
 # this many rows; above it the base anti-joins them through a shuffle,
 # so a large pending set never has to fit on the driver
 BROADCAST_DELTA_ROWS = 1 << 20
+# The manifest keeps the records of this many latest commits (``loads``)
+MAX_LOAD_RECORDS = 32
 # manifest keys that map a bucket id to a value
 _PER_BUCKET = ("buckets", "rows", "shards", "deltas", "delta_rows")
 
@@ -224,12 +240,24 @@ def read_manifest(spark: SparkSession, path: str) -> dict | None:
     Optional keys: ``rows`` ({bucket_id: live row count}) and ``schema``
     (the data schema as Spark JSON), so a row count or a read needs no
     Spark job (manifests older than both fall back to the footers and to
-    schema inference); ``deltas`` ({bucket_id: [delta dir, ...]} in
-    generation order) and ``delta_rows`` ({bucket_id: pending delta rows,
-    tombstones included}) for buckets with merge-on-read deltas;
-    ``keys`` (the merge keys, so a read resolves deltas while the spec
-    is briefly absent); and ``shards``/``n_shards`` on a sharded
-    destination."""
+    schema inference); ``deltas`` ({bucket_id: [``delta_v<gen>`` dir,
+    ...]} in generation order: the dirs that hold the bucket's pending
+    rows) and ``delta_rows`` ({bucket_id: pending delta rows, tombstones
+    included}) for buckets with merge-on-read deltas; ``keys`` (the merge
+    keys, so a read resolves deltas while the spec is briefly absent);
+    ``shards``/``n_shards`` on a sharded destination.
+
+    A sync's bookkeeping: ``watermark`` ({"value": text, "type": name},
+    read back by ``manifest_watermark``), the greatest watermark column
+    value a write with ``watermark_col`` landed, carried over by a write
+    that lands none; and ``loads``, the records of the latest
+    ``MAX_LOAD_RECORDS`` commits by ``write_bucketed`` and
+    ``partial_merge``, oldest first, each {"kind": "full" or
+    "incremental", "at": UTC time, "upserts", "tombstones",
+    "buckets_touched", "rows_written", "folds", "rows"}.
+
+    A manifest that lists a delta per bucket (``delta_v<gen>/__fe_bucket=K``,
+    the layout before one delta dir per generation) raises ``ValueError``."""
     fs, path_cls = hadoop_fs(spark, path)
     gens = _manifest_gens(fs, path_cls, path.rstrip("/"))
     if not gens:
@@ -271,9 +299,8 @@ def _commit_manifest(spark: SparkSession, path: str, m: dict) -> None:
 
 def _referenced(m: dict) -> list[str]:
     """Every dir manifest ``m`` reads: base dirs, then delta dirs."""
-    return list(m["buckets"].values()) + [
-        d for dirs in m.get("deltas", {}).values() for d in dirs
-    ]
+    deltas = {d for dirs in m.get("deltas", {}).values() for d in dirs}
+    return list(m["buckets"].values()) + sorted(deltas)
 
 
 def _gc_generations(spark: SparkSession, path: str, keep_gens: int = 2) -> None:
@@ -281,7 +308,7 @@ def _gc_generations(spark: SparkSession, path: str, keep_gens: int = 2) -> None:
     the newest ``keep_gens`` manifests. The previous generation is
     retained so a reader that resolved the old pointer just before a
     flip can still open its files; anything older is dead. A delta dir
-    goes bucket by bucket, as folds stop referencing its parts."""
+    goes once no retained manifest lists it for any bucket."""
     fs, path_cls = hadoop_fs(spark, path)
     base = path.rstrip("/")
     gens = _manifest_gens(fs, path_cls, base)
@@ -292,18 +319,31 @@ def _gc_generations(spark: SparkSession, path: str, keep_gens: int = 2) -> None:
         fs.delete(path_cls(f"{base}/{MANIFEST_PREFIX}{g}.json"), False)
     for s in fs.listStatus(path_cls(base)):
         name = s.getPath().getName()
-        if not s.isDirectory():
-            continue
-        if name.startswith("bucket_") and name not in live:
+        if s.isDirectory() and name.startswith(("bucket_", DELTA_PREFIX)) and name not in live:
             fs.delete(s.getPath(), True)
-        elif name.startswith(DELTA_PREFIX):
-            parts = {d.split("/", 1)[1] for d in live if d.startswith(name + "/")}
-            if not parts:
-                fs.delete(s.getPath(), True)
-                continue
-            for p in fs.listStatus(s.getPath()):
-                if p.isDirectory() and p.getPath().getName() not in parts:
-                    fs.delete(p.getPath(), True)
+
+
+def manifest_watermark(m: dict | None):
+    """The watermark manifest ``m`` records, in its native type, or None
+    when it records none (``read_manifest``)."""
+    wm = (m or {}).get("watermark")
+    return None if wm is None else _parse_watermark(wm["value"], wm["type"])
+
+
+def _bookkeeping(m: dict, kind: str, wm, **counts: int) -> dict:
+    """The ``watermark`` and ``loads`` entries of a commit that follows
+    manifest ``m`` (``{}`` for a new root): the watermark ``wm`` observed
+    on the write, or ``m``'s when the write landed none, and ``m``'s load
+    records plus this one, the latest ``MAX_LOAD_RECORDS`` kept."""
+    out: dict = {}
+    if wm is not None:
+        out["watermark"] = {"value": str(wm), "type": _watermark_type(wm)}
+    elif "watermark" in m:
+        out["watermark"] = m["watermark"]
+    at = dt.datetime.now(dt.timezone.utc).isoformat(timespec="milliseconds")
+    record = {"kind": kind, "at": at, **counts}
+    out["loads"] = (m.get("loads", []) + [record])[-MAX_LOAD_RECORDS:]
+    return out
 
 
 def write_bucketed(
@@ -313,6 +353,7 @@ def write_bucketed(
     n_buckets: int,
     keep_gens: int = 2,
     n_shards: int | None = None,
+    watermark_col: str | None = None,
 ) -> int:
     """Initial full load of a bucketed merge destination, in the
     manifest layout; returns the rows written. Bucket data lands in
@@ -320,12 +361,18 @@ def write_bucketed(
     file is the single pointer that publishes a generation. Merges then flip
     ALL touched buckets in one pointer commit — a reader racing a merge
     sees the old generation or the new one, never a mix. Read it with
-    ``read_bucketed``, not a raw ``spark.read.parquet(path)``. The spec
-    file is committed last, so a half-written initial load is never
-    mistaken for a valid bucketed destination.
+    ``read_bucketed``, not a raw ``spark.read.parquet(path)``.
 
-    Rows are distributed by bucket before the write (``_write_by_bucket``):
-    one file per bucket, more only where AQE splits an oversized one.
+    The whole root (bucket dirs, manifest, spec) is built in
+    ``<path>.__init_staging__`` and renamed into place once, so a crash
+    leaves ``path`` absent and a re-run starts over; ``path`` must not
+    exist yet. Rows are distributed by bucket
+    before the write (``_write_by_bucket``): one file per bucket, more
+    only where AQE splits an oversized one.
+
+    ``watermark_col`` (a sync's first load) records the greatest value
+    of that column written as the manifest's ``watermark``; every load
+    records itself in ``loads`` (``read_manifest``).
 
     ``keep_gens`` (recorded in the spec) is the GC retention window:
     merge-time GC keeps the newest N generations' manifests and dirs.
@@ -345,38 +392,50 @@ def write_bucketed(
     spark = df.sparkSession
     fs, path_cls = hadoop_fs(spark, path)
     base = path.rstrip("/")
+    if fs.exists(path_cls(base)):
+        raise ValueError(f"{path} exists: write_bucketed creates a new root")
     staging = base + ".__init_staging__"
     if fs.exists(path_cls(staging)):
         fs.delete(path_cls(staging), True)
-    _write_by_bucket(df.withColumn(BUCKET_COL, bucket_id(keys, n_buckets)), staging)
+    tagged = df.withColumn(BUCKET_COL, bucket_id(keys, n_buckets))
+    obs = Observation()
+    if watermark_col is not None:
+        tagged = tagged.observe(obs, F.max(watermark_col).alias("wm"))
+    _write_by_bucket(tagged, staging)
+    wm = observed(obs, {"wm": None})["wm"] if watermark_col is not None else None
+    fs.delete(path_cls(f"{staging}/_SUCCESS"), False)
     gen = 1
     buckets: dict[int, str] = {}
     rows: dict[int, int] = {}
-    fs.mkdirs(path_cls(base))
     for s in fs.listStatus(path_cls(staging)):
         name = s.getPath().getName()
         if not (s.isDirectory() and name.startswith(f"{BUCKET_COL}=")):
             continue
         b = int(name.split("=", 1)[1])
         dirname = f"bucket_{b}_v{gen}"
-        if not fs.rename(s.getPath(), path_cls(f"{base}/{dirname}")):
-            raise IOError(f"could not place {dirname} under {base}")
+        if not fs.rename(s.getPath(), path_cls(f"{staging}/{dirname}")):
+            raise IOError(f"could not place {dirname} under {staging}")
         buckets[b] = dirname
-        rows[b] = parquet_rows(spark, f"{base}/{dirname}")
+        rows[b] = parquet_rows(spark, f"{staging}/{dirname}")
+    touched = len(buckets)
     if not buckets:
         # zero-row initial load: keep one schema-bearing empty bucket
         empty = literal_frame(spark, df.schema)
-        empty.write.mode("overwrite").parquet(f"{base}/bucket_0_v{gen}")
+        empty.write.mode("overwrite").parquet(f"{staging}/bucket_0_v{gen}")
         buckets[0], rows[0] = f"bucket_0_v{gen}", 0
-    fs.delete(path_cls(staging), True)
+    n = sum(rows.values())
     m: dict = {
         "gen": gen, "buckets": buckets, "rows": rows, "schema": df.schema.jsonValue(),
         "keys": list(keys),
+        **_bookkeeping(
+            {}, "full", wm, upserts=n, tombstones=0, buckets_touched=touched,
+            rows_written=n, folds=0, rows=n,
+        ),
     }
     if n_shards is not None:
         m["shards"] = {b: _hrw_shard(b, n_shards) for b in range(n_buckets)}
         m["n_shards"] = int(n_shards)
-    _commit_manifest(spark, path, m)
+    _commit_manifest(spark, staging, m)
     spec: dict = {
         "version": MANIFEST_VERSION,
         "keys": list(keys),
@@ -385,8 +444,11 @@ def write_bucketed(
     }
     if n_shards is not None:
         spec["n_shards"] = int(n_shards)
-    write_text_file(spark, _spec_path(path), json.dumps(spec))
-    return sum(rows.values())
+    write_text_file(spark, _spec_path(staging), json.dumps(spec))
+    fs.mkdirs(path_cls(base).getParent())
+    if not fs.rename(path_cls(staging), path_cls(base)):
+        raise IOError(f"could not place {staging} at {base}")
+    return n
 
 
 def _write_hive_bucketed(
@@ -417,13 +479,32 @@ def _ids(m: dict) -> set[int]:
 
 def _pending(spark: SparkSession, base: str, m: dict, ids: list[int]) -> DataFrame | None:
     """Every pending delta row of buckets ``ids`` in generation ``m``,
-    tombstones included; None when they have no deltas."""
+    tombstones included; None when they have no deltas. Each delta dir
+    is read once, and a row is kept only where ``m`` lists its dir for
+    its bucket: the (bucket, generation) pair, not the bucket alone, as
+    a bucket that folded since the dir was written must not read its
+    rows there again while other buckets still list the dir."""
     deltas = m.get("deltas", {})
-    dirs = [f"{base}/{d}" for b in ids for d in deltas.get(b, [])]
-    if not dirs:
+    by_dir: dict[str, list[int]] = {}
+    for b in ids:
+        for d in deltas.get(b, []):
+            by_dir.setdefault(d, []).append(b)
+    if not by_dir:
         return None
-    marks = [StructField(GEN_COL, IntegerType()), StructField(DELETED_COL, BooleanType())]
-    return spark.read.schema(StructType(_schema(spark, base, m).fields + marks)).parquet(*dirs)
+    listed = reduce(
+        Column.__or__,
+        [
+            (F.col(GEN_COL) == int(d[len(DELTA_PREFIX) :])) & F.col(BUCKET_COL).isin(bs)
+            for d, bs in by_dir.items()
+        ],
+    )
+    marks = [
+        StructField(GEN_COL, IntegerType()),
+        StructField(DELETED_COL, BooleanType()),
+        StructField(BUCKET_COL, IntegerType()),
+    ]
+    schema = StructType(_schema(spark, base, m).fields + marks)
+    return spark.read.schema(schema).parquet(*[f"{base}/{d}" for d in by_dir]).filter(listed)
 
 
 def _resolve(
@@ -521,6 +602,12 @@ def _read_manifest_gen(spark: SparkSession, path: str, gen: int) -> dict:
     for k in _PER_BUCKET:
         if k in m:
             m[k] = {int(b): v for b, v in m[k].items()}
+    for d in (d for dirs in m.get("deltas", {}).values() for d in dirs):
+        if "/" in d:
+            raise ValueError(
+                f"generation {gen} of {path} lists the per-bucket delta entry {d!r}: "
+                "a delta layout that is no longer read"
+            )
     return m
 
 
@@ -725,6 +812,16 @@ def _write_by_bucket(df: DataFrame, path: str) -> None:
     ).parquet(path)
 
 
+def _write_delta(df: DataFrame, path: str) -> None:
+    """Plain parquet write of a generation's delta rows, the bucket
+    column kept as data: rebalanced on the bucket and sorted by it within
+    each partition, so a small delta is one file, and a large one splits
+    at AQE's advisory size into files of bucket-ordered row groups."""
+    df.hint("rebalance", BUCKET_COL).sortWithinPartitions(BUCKET_COL).write.mode(
+        "overwrite"
+    ).parquet(path)
+
+
 def _live_rows(spark: SparkSession, base: str, m: dict) -> dict[int, int]:
     """Row count per live bucket of manifest ``m``: the recorded
     ``rows``, or the live dirs' parquet footers (read on the driver, no
@@ -739,6 +836,7 @@ def partial_merge(
     path: str,
     increment: DataFrame,
     deleted_keys: DataFrame | None = None,
+    watermark_col: str | None = None,
 ) -> dict:
     """Merge an increment into a bucketed destination, writing only for
     the buckets the increment (or deletion feed) touches.
@@ -749,11 +847,14 @@ def partial_merge(
     the increment and the deletion feed is deleted. The increment must
     be key-unique (callers dedupe, as the streaming merge already does).
 
-    Merge-on-read (module docstring): the touched buckets get one delta
+    Merge-on-read (module docstring): the touched buckets share one delta
     dir, ``delta_v<gen+1>``, of upserts and tombstones; then the touched
     buckets due a fold are rewritten from that new generation as
     ``bucket_<K>_v<gen+1>`` in one write. Both are invisible until ONE
-    manifest rename-commit publishes every touched bucket at once. A
+    manifest rename-commit publishes every touched bucket at once, with
+    the merge's load record and, given ``watermark_col``, the greatest
+    value of that column among the increment's rows as the new
+    ``watermark`` (the old one when the increment holds no rows). A
     crash before the commit leaves the destination exactly at the old
     generation (orphan dirs are overwritten by the re-run and collected
     by generation GC); a crash after the commit IS the new state, and a
@@ -799,7 +900,7 @@ def partial_merge(
             "with io.fsutil.vacuum_dest)"
         )
     try:
-        return _merge_locked(spark, path, spec, increment, deleted_keys)
+        return _merge_locked(spark, path, spec, increment, deleted_keys, watermark_col)
     finally:
         lock_fs.delete(lock, False)
 
@@ -810,14 +911,16 @@ def _merge_locked(
     spec: dict,
     increment: DataFrame,
     deleted_keys: DataFrame | None,
+    watermark_col: str | None,
 ) -> dict:
     """The body of ``partial_merge``, run under its lock.
 
     The increment and the deletion feed are read once, by the delta
-    write, which observes the touched buckets and the rows written. Row
-    counts per bucket come from an aggregate over the new generation,
-    not from observations: AQE drops a subtree it finds empty together
-    with its observations. The touched buckets that ``_folds`` on the
+    write, which observes the touched buckets, the upserts and
+    tombstones written and the new watermark. Row counts per bucket come
+    from an aggregate over the new generation, not from observations:
+    AQE drops a subtree it finds empty together with its observations.
+    The touched buckets that ``_folds`` on the
     old generation and still hold rows fold: their new base is the
     resolved new generation."""
     keys, n_buckets = spec["keys"], spec["n_buckets"]
@@ -832,9 +935,16 @@ def _merge_locked(
     obs = Observation()
     with job_phase(spark, "sync", "delta_write"):
         delta = _delta_frame(schema, keys, n_buckets, next_gen, increment, deleted_keys)
-        observe = [F.count(F.lit(1)).alias("n"), F.collect_set(BUCKET_COL).alias("b")]
-        _write_by_bucket(delta.observe(obs, *observe), f"{base}/{delta_dir}")
-    written = observed(obs, {"n": 0, "b": []})
+        upsert = ~F.col(DELETED_COL)
+        observe = [
+            F.count_if(upsert).alias("upserts"),
+            F.count_if(~upsert).alias("tombstones"),
+            F.collect_set(BUCKET_COL).alias("b"),
+        ]
+        if watermark_col is not None:
+            observe.append(F.max(F.when(upsert, F.col(watermark_col))).alias("wm"))
+        _write_delta(delta.observe(obs, *observe), f"{base}/{delta_dir}")
+    written = observed(obs, {"upserts": 0, "tombstones": 0, "b": [], "wm": None})
     touched = sorted(written["b"])
     if not touched:  # nothing to merge: drop the empty delta dir
         fs.delete(path_cls(f"{base}/{delta_dir}"), True)
@@ -853,7 +963,7 @@ def _merge_locked(
         **{k: dict(m.get(k, {})) for k in per_bucket},
     }
     for b in touched:
-        new["deltas"][b] = new["deltas"].get(b, []) + [f"{delta_dir}/{BUCKET_COL}={b}"]
+        new["deltas"][b] = new["deltas"].get(b, []) + [delta_dir]
     with job_phase(spark, "sync", "count"):
         counts = _bucket_counts(spark, path, new, touched, keys, n_buckets)
     for b in touched:
@@ -864,7 +974,7 @@ def _merge_locked(
         else:
             new["rows"][b], new["delta_rows"][b] = live, pending
 
-    rows_written = written["n"]
+    rows_written = written["upserts"] + written["tombstones"]
     fold = [b for b in touched if b in new["deltas"] and _folds(m, b)]
     if fold:
         staging = base + ".__merge_staging__"
@@ -891,6 +1001,13 @@ def _merge_locked(
         dirname = f"bucket_0_v{next_gen}"
         literal_frame(spark, schema).write.mode("overwrite").parquet(f"{base}/{dirname}")
         new["buckets"][0], new["rows"][0] = dirname, 0
+    new.update(
+        _bookkeeping(
+            m, "incremental", written.get("wm"), upserts=written["upserts"],
+            tombstones=written["tombstones"], buckets_touched=len(touched),
+            rows_written=rows_written, folds=len(fold), rows=sum(new["rows"].values()),
+        )
+    )
     _commit_manifest(spark, path, new)
     _gc_generations(spark, path, keep_gens=int(spec.get("keep_gens", 2)))
     return {

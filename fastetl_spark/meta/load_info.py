@@ -5,6 +5,11 @@ inserts one row per load (vdb, schema, table, user, load_type,
 timestamp, row count). Here the log is an append-only parquet metrics
 table with the same schema, written as a one-row DataFrame built from
 JVM literals (io/writers.literal_frame).
+
+The engine logs ``full_copy`` loads here (``Engine.full_copy``,
+operators/copy). ``Engine.sync`` does not: each bucketed root keeps the
+records of its latest loads in its manifest (io/bucketed
+``read_manifest``, ``loads``), committed with the data they describe.
 """
 
 from __future__ import annotations

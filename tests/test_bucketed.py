@@ -10,6 +10,7 @@ the Engine.sync integration, and the streaming foreachBatch path.
 
 from __future__ import annotations
 
+import datetime as dt
 import os
 
 import pytest
@@ -300,11 +301,14 @@ def test_materialize_reliable_checkpoint_mode(spark, sf_dir, tmp_path):
 
 
 def test_engine_sync_bucketed_watermark_store(spark, sf_dir, tmp_path):
-    """With a watermark store, sync never scans the destination for its
-    MAX watermark: the second (no-new-data) sync reads the stored value,
-    finds an empty increment, and touches zero buckets — every bucket
-    file survives byte-identical."""
+    """A root whose manifest records no watermark (``bucketize`` made
+    it) takes the store's value, so the sync does not scan the
+    destination for its MAX. The sync records the new watermark in the
+    manifest and leaves the store as it was; the second (no-new-data)
+    sync reads the manifest's value, finds an empty increment, and
+    touches zero buckets — every bucket file survives byte-identical."""
     from fastetl_spark.api import Engine
+    from fastetl_spark.io.bucketed import manifest_watermark
     from fastetl_spark.operators.sync import WatermarkStore
 
     orders = read_table(spark, sf_dir, "orders")
@@ -317,15 +321,16 @@ def test_engine_sync_bucketed_watermark_store(spark, sf_dir, tmp_path):
     wm_path = str(tmp_path / "wm_state")
     eng = Engine(spark, watermark_store_path=wm_path)
     eng.bucketize(dest, ["o_orderkey"], N_BUCKETS)
+    eng.watermark_store.set(dest, dt.datetime(1997, 1, 1))
 
     n = eng.sync(
         {"path": src}, {"path": dest}, keys=["o_orderkey"], watermark_col="o_orderdate"
     )
     assert n == orders.count()
-    # the store holds the source max now
-    stored = WatermarkStore(spark, wm_path).get(dest)
+    # the manifest holds the source max now; the store is not written
     true_max = orders.agg(F.max("o_orderdate")).first()[0]
-    assert stored == true_max
+    assert manifest_watermark(read_manifest(spark, dest)) == true_max
+    assert WatermarkStore(spark, wm_path).get(dest) == dt.datetime(1997, 1, 1)
 
     before = _bucket_listing(spark, dest)
     n2 = eng.sync(
@@ -419,9 +424,10 @@ def test_first_sync_creates_bucketed_root_then_lands_a_delta(spark, tmp_path):
     (bases, not deltas), without the keys the deletion feed names even
     where the source holds them. The second sync adds exactly one delta
     dir and leaves the base map alone. Both match the frame-level
-    incremental_sync of the same inputs."""
+    incremental_sync of the same inputs, and each records its load and
+    the watermark in the manifest, not in the load log."""
     from fastetl_spark.api import Engine
-    from fastetl_spark.io.bucketed import DELTA_PREFIX
+    from fastetl_spark.io.bucketed import DELTA_PREFIX, manifest_watermark
     from fastetl_spark.operators.sync import incremental_sync
 
     cols = ["id", "v", "ts"]
@@ -454,8 +460,10 @@ def test_first_sync_creates_bucketed_root_then_lands_a_delta(spark, tmp_path):
     oracle = incremental_sync(want, spark.read.parquet(src2), ["id"], "ts")
     assert n2 == oracle.count() == 39
     assert _rows(eng.read({"path": dest}), cols) == _rows(oracle, cols)
-    log = {(r.tp_carga, r.qt_linhas) for r in eng.load_info.read().collect()}
-    assert log == {("full", 38), ("incremental", 39)}
+    loads = [(r["kind"], r["upserts"], r["rows"]) for r in m2["loads"]]
+    assert loads == [("full", 38, 38), ("incremental", 2, 39)]
+    assert manifest_watermark(m2) == 2
+    assert not os.path.exists(tmp_path / "log")  # the load log has full copies only
 
 
 def test_engine_read_resolves_a_merged_bucketed_root(spark, tmp_path):

@@ -1,13 +1,13 @@
-"""Fixed per-round cost of an ingest round: Spark jobs, bookkeeping
-rows built on the JVM, the merge facts the v2 manifest records, and the
-driver's own work: code generation and py4j round trips.
+"""Fixed per-round cost of an ingest round: Spark jobs, the merge facts
+and the bookkeeping the v2 manifest records, and the driver's own work:
+code generation and py4j round trips.
 
 A bucketed ``Engine.sync`` round is bound by fixed costs, not by its
 data: every Spark job, Python-worker start, file created, generated
 class compiled and py4j round trip costs the same at 10 rows as at 10k.
 These tests pin the job ceilings of one round and of one index append,
-the plans of the bookkeeping writes, the row counts and schema the
-manifest carries so that the post-merge count needs no job, the
+the row counts, schema and watermark the manifest carries so that the
+post-merge count and the next watermark need no job, the
 compilations of a repeated round and the round trips of an index
 append and match. ``make fixed-costs`` runs this file alone.
 """
@@ -26,12 +26,12 @@ import pytest
 from py4j import protocol as proto
 from py4j.clientserver import ClientServerConnection
 from pyspark.sql import functions as F
-from pyspark.sql.readwriter import DataFrameWriter
 
 from fastetl_spark.api import Engine
 from fastetl_spark.io.bucketed import (
     MANIFEST_PREFIX,
     list_generations,
+    manifest_watermark,
     partial_merge,
     read_bucketed,
     read_manifest,
@@ -54,12 +54,14 @@ from fastetl_spark.operators.sync import WatermarkStore, _watermark_type
 
 N_BUCKETS = 8
 
-# Spark jobs of one bucketed sync round (watermark get, merge, new
-# watermark, load log) and of one minhash index append. They were 23
-# and 8 while the merge facts took actions of their own; the round was
-# 13 while the watermark read inferred its schema and the merge
-# materialised the increment and rewrote the touched buckets.
-SYNC_ROUND_JOBS = 8
+# Spark jobs of one bucketed sync round (the merge: its delta write and
+# its count; the watermark and the load record ride the manifest) and of
+# one minhash index append. They were 23 and 8 while the merge facts took
+# actions of their own; the round was 13 while the watermark read
+# inferred its schema and the merge materialised the increment and
+# rewrote the touched buckets, and 8 while it read and wrote a watermark
+# store and appended to the load log.
+SYNC_ROUND_JOBS = 5
 INDEX_APPEND_JOBS = 4
 # Generated classes compiled by a second, identical round (sync plus
 # index build, match and append; ~84 in the first): 6 with a codegen
@@ -157,37 +159,22 @@ def _split_documents(spark, sf_dir):
     return docs.filter(F.col("doc_id") % 4 != 0), docs.filter(F.col("doc_id") % 4 == 0)
 
 
-def _capture_parquet_plans(monkeypatch) -> dict[str, str]:
-    """Record the executed plan of every parquet write, by path."""
-    plans: dict[str, str] = {}
-    orig = DataFrameWriter.parquet
-
-    def parquet(self, path, *args, **kwargs):
-        plans[path] = self._df._jdf.queryExecution().executedPlan().toString()
-        return orig(self, path, *args, **kwargs)
-
-    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
-    return plans
-
-
-def test_sync_round_and_index_append_job_budget(spark, sf_dir, tmp_path, monkeypatch):
-    dest, src = str(tmp_path / "dest"), str(tmp_path / "src")
-    write_bucketed(_table(spark, 0, 400, 1), dest, ["id"], N_BUCKETS)
+def test_sync_round_and_index_append_job_budget(spark, sf_dir, tmp_path):
+    dest, src0, src = (str(tmp_path / n) for n in ("dest", "src0", "src"))
     wm, log = str(tmp_path / "wm"), str(tmp_path / "log")
     eng = Engine(spark, load_log_path=log, watermark_store_path=wm)
-    eng.watermark_store.set(dest, 1)
+    _table(spark, 0, 400, 1).write.parquet(src0)
+    assert eng.sync({"path": src0}, {"path": dest}, ["id"], "ts") == 400
+    assert manifest_watermark(read_manifest(spark, dest)) == 1
     _table(spark, 350, 450, 2).write.parquet(src)
     dels = spark.createDataFrame([(3,), (5,)], "id long")
-    plans = _capture_parquet_plans(monkeypatch)
     with _Jobs(spark, "budget-sync") as jobs:
         n = eng.sync({"path": src}, {"path": dest}, ["id"], "ts", deleted_keys=dels)
     assert n == 448 == read_bucketed(spark, dest).count()
-    assert WatermarkStore(spark, wm).get(dest) == 2
+    assert manifest_watermark(read_manifest(spark, dest)) == 2
     assert jobs.n <= SYNC_ROUND_JOBS, jobs.n
-    # the bookkeeping rows come from JVM literals, not a Python RDD
-    for path in (wm, log):
-        assert "ExistingRDD" not in plans[path], plans[path]
-        assert "Range" in plans[path], plans[path]
+    # the sync writes neither the watermark store nor the load log
+    assert not os.path.exists(wm) and not os.path.exists(log)
 
     corpus, inc = _split_documents(spark, sf_dir)
     idx = str(tmp_path / "idx")
@@ -447,7 +434,7 @@ def test_sync_of_v2_table_without_recorded_rows(spark, tmp_path):
     assert eng.sync({"path": src}, {"path": dest}, ["id"], "ts") == 260
     assert _manifest_rows(spark, dest) == 260
     assert "schema" in read_manifest(spark, dest)
-    assert eng.watermark_store.get(dest) == 2
+    assert manifest_watermark(read_manifest(spark, dest)) == 2
 
 
 def test_merge_facts_under_reliable_checkpoints(spark, tmp_path):
@@ -465,7 +452,8 @@ def test_merge_facts_under_reliable_checkpoints(spark, tmp_path):
         dels = spark.createDataFrame([(7,)], "id long")
         n = eng.sync({"path": src}, {"path": dest}, ["id"], "ts", deleted_keys=dels)
         rows = sorted(tuple(r) for r in read_bucketed(spark, dest).collect())
-        return n, eng.watermark_store.get(dest), read_manifest(spark, dest)["rows"], rows
+        m = read_manifest(spark, dest)
+        return n, manifest_watermark(m), m["rows"], rows
 
     local = run("local")
     try:

@@ -1,14 +1,19 @@
 """Merge-on-read bucketed destinations (io/bucketed): deltas, tombstones
 and folds.
 
-A merge writes one delta per touched bucket (upserts plus tombstones)
-and then folds a touched bucket into a new base only when its deltas
-pass ``FOLD_DELTA_SHARE`` of its rows. These tests check every reader against
-an independent oracle while deltas are pending: a kill at each commit
-boundary of a merge converges on a plain re-run to the full-frame
-``merge_upsert``/``delete_sync`` result; random upsert/delete sequences
-(re-inserts after deletes, deletes of absent keys, emptied buckets,
-forced folds) match a Python model through ``read_bucketed``,
+A merge writes one delta dir for all the buckets it touches (upserts
+plus tombstones) and then folds a touched bucket into a new base only
+when its deltas pass ``FOLD_DELTA_SHARE`` of its rows. These tests check
+every reader against an independent oracle while deltas are pending: a
+kill at each commit boundary of a merge, of a sync and of a first sync
+converges on a plain re-run to the full-frame
+``merge_upsert``/``delete_sync`` result, with the manifest's watermark
+moving together with the data, also across a rollback; a merge of 16
+buckets writes one delta file; a bucket that folded reads none of its
+rows from a delta dir that other buckets still list; random
+upsert/delete sequences (re-inserts after deletes, deletes of absent
+keys, emptied buckets, forced folds) match a Python model through
+``read_bucketed``,
 ``read_buckets_for_keys``, ``read_bucketed_at`` and the manifest rows;
 shards read their own rows; a read past ``BROADCAST_DELTA_ROWS`` does
 not broadcast; a sparse destination folds only the buckets without a
@@ -27,12 +32,14 @@ from pyspark.sql import functions as F
 import fastetl_spark.io.bucketed as B
 from fastetl_spark.io.bucketed import (
     bucket_id,
+    manifest_watermark,
     partial_merge,
     read_bucketed,
     read_bucketed_at,
     read_buckets_for_keys,
     read_manifest,
     read_shard,
+    rollback_bucketed,
     shard_map,
     write_bucketed,
 )
@@ -92,12 +99,8 @@ def _assert_converged(spark, dest, want: list[tuple]) -> None:
     if prev:
         retained |= set(B._referenced(B._read_manifest_gen(spark, dest, prev[-1])))
     for name in os.listdir(dest):
-        if name.startswith("bucket_"):
+        if name.startswith(("bucket_", B.DELTA_PREFIX)):
             assert name in retained, name
-        elif name.startswith(B.DELTA_PREFIX):
-            for part in os.listdir(os.path.join(dest, name)):
-                if part.startswith(B.BUCKET_COL):
-                    assert f"{name}/{part}" in retained, (name, part)
 
 
 def _crash_in(monkeypatch, name: str, after_call: bool, only=lambda *a: True):
@@ -157,6 +160,132 @@ def test_kill_at_commit_boundary_then_rerun_converges(spark, tmp_path, monkeypat
     _assert_converged(spark, dest, states[-1])
 
 
+def _sync_round(spark, eng, src: str, dest: str, i: int) -> int:
+    """Land ``ROUNDS[i]`` through ``Engine.sync``: its rows, at ts
+    ``i + 2``, are appended to the source, which keeps every earlier
+    round's rows, as a staged landing area does."""
+    ups, tag, dels = ROUNDS[i]
+    _frame(spark, ups, tag).withColumn("ts", F.lit(i + 2).cast("long")).write.mode("append").parquet(src)
+    return eng.sync({"path": src}, {"path": dest}, KEYS, "ts", deleted_keys=_keys(spark, dels))
+
+
+def _synced(spark, dest) -> tuple:
+    """What a reader of ``dest`` sees: its rows and its watermark."""
+    return _rows(read_bucketed(spark, dest)), manifest_watermark(read_manifest(spark, dest))
+
+
+@pytest.mark.parametrize(
+    "round_, boundary",
+    [
+        (0, "delta_written"),  # delta dir written, manifest not committed
+        (1, "fold_staged"),  # folded rows staged, not placed
+        (1, "fold_placed"),  # fold dirs placed, manifest not committed
+        (0, "committed"),  # manifest committed, GC not run
+        (2, "gc"),  # GC run, sync not returned
+    ],
+)
+def test_sync_kill_at_each_boundary_keeps_data_and_watermark_together(
+    spark, tmp_path, monkeypatch, round_, boundary
+):
+    """``Engine.sync`` killed at each commit boundary of its merge: the
+    rows and the manifest's watermark are both the old ones or both the
+    new ones, and a plain re-run of the same sync converges."""
+    from fastetl_spark.api import Engine
+
+    dest, src = str(tmp_path / "dest"), str(tmp_path / "src")
+    base = _frame(spark, range(120), "base").withColumn("ts", F.lit(1).cast("long"))
+    write_bucketed(base, dest, KEYS, 4, watermark_col="ts")
+    states = _oracle(spark, len(ROUNDS))
+    eng = Engine(spark)
+    for i in range(round_):
+        _sync_round(spark, eng, src, dest, i)
+    old, new = (states[round_], round_ + 1), (states[round_ + 1], round_ + 2)
+    assert _synced(spark, dest) == old
+
+    if boundary in ("delta_written", "fold_placed"):
+        _crash_in(monkeypatch, "_commit_manifest", after_call=False)
+    elif boundary == "fold_staged":
+        _crash_in(
+            monkeypatch, "_write_by_bucket", after_call=True,
+            only=lambda df, path: path.endswith(".__merge_staging__"),
+        )
+    else:
+        _crash_in(monkeypatch, "_gc_generations", after_call=boundary == "gc")
+    with pytest.raises(RuntimeError, match="injected crash"):
+        _sync_round(spark, eng, src, dest, round_)
+    monkeypatch.undo()
+    assert _synced(spark, dest) == (new if boundary in ("committed", "gc") else old)
+
+    ups, _, dels = ROUNDS[round_]
+    eng.sync({"path": src}, {"path": dest}, KEYS, "ts", deleted_keys=_keys(spark, dels))
+    assert _synced(spark, dest) == new
+    for i in range(round_ + 1, len(ROUNDS)):
+        _sync_round(spark, eng, src, dest, i)
+    _assert_converged(spark, dest, states[-1])
+    assert manifest_watermark(read_manifest(spark, dest)) == len(ROUNDS) + 1
+
+
+def test_sync_after_rollback_remerges_the_rolled_back_increment(spark, tmp_path):
+    """A rollback moves the watermark back with the data, so the next
+    sync of the same source lands the undone round again."""
+    from fastetl_spark.api import Engine
+
+    dest, src = str(tmp_path / "dest"), str(tmp_path / "src")
+    base = _frame(spark, range(120), "base").withColumn("ts", F.lit(1).cast("long"))
+    write_bucketed(base, dest, KEYS, 4, watermark_col="ts")
+    states = _oracle(spark, 2)
+    eng = Engine(spark)
+    _sync_round(spark, eng, src, dest, 0)
+    _sync_round(spark, eng, src, dest, 1)
+    assert _synced(spark, dest) == (states[2], 3)
+    rollback_bucketed(spark, dest)
+    assert _synced(spark, dest) == (states[1], 2)
+    loads = read_manifest(spark, dest)["loads"]
+    assert [r["kind"] for r in loads] == ["full", "incremental"]
+    n = eng.sync({"path": src}, {"path": dest}, KEYS, "ts", deleted_keys=_keys(spark, ROUNDS[1][2]))
+    assert n == len(states[2]) and _synced(spark, dest) == (states[2], 3)
+
+
+@pytest.mark.parametrize(
+    "name, after_call, only",
+    [
+        ("_write_by_bucket", True, None),  # bucket rows staged
+        ("parquet_rows", False, None),  # bucket dirs being placed
+        ("_commit_manifest", True, None),  # manifest staged, no spec
+        ("write_text_file", True, lambda spark, path, text: path.endswith(B.SPEC_FILE)),
+    ],
+)
+def test_first_sync_crash_at_each_step_then_rerun_converges(
+    spark, tmp_path, monkeypatch, name, after_call, only
+):
+    """The first sync builds the whole root aside and renames it into
+    place once: a crash at any step before leaves no destination, and a
+    plain re-run of the same sync creates it, then later syncs match
+    ``incremental_sync``."""
+    from fastetl_spark.api import Engine
+    from fastetl_spark.operators.sync import incremental_sync
+
+    dest, src1, src2 = (str(tmp_path / n) for n in ("dest", "src1", "src2"))
+    first = _frame(spark, range(40), "a").withColumn("ts", F.lit(1).cast("long"))
+    first.write.parquet(src1)
+    dels = _keys(spark, [3, 7])
+    eng = Engine(spark)
+    _crash_in(monkeypatch, name, after_call, only or (lambda *a: True))
+    with pytest.raises(RuntimeError, match="injected crash"):
+        eng.sync({"path": src1}, {"path": dest}, KEYS, "ts", deleted_keys=dels)
+    monkeypatch.undo()
+    assert not os.path.exists(dest)
+
+    assert eng.sync({"path": src1}, {"path": dest}, KEYS, "ts", deleted_keys=dels) == 38
+    want = first.join(dels, "id", "left_anti")
+    assert _synced(spark, dest) == (_rows(want), 1)
+    second = _frame(spark, [5, 100], "b").withColumn("ts", F.lit(2).cast("long"))
+    first.unionByName(second).write.parquet(src2)
+    assert eng.sync({"path": src2}, {"path": dest}, KEYS, "ts") == 39
+    oracle = incremental_sync(want, spark.read.parquet(src2), KEYS, "ts")
+    assert _synced(spark, dest) == (_rows(oracle), 2)
+
+
 def test_round_kinds_and_rows_written(spark, tmp_path):
     """Round 0 writes only its delta (upserts + tombstones), round 1
     writes its delta and folds it with the rest of every bucket into new
@@ -171,7 +300,7 @@ def test_round_kinds_and_rows_written(spark, tmp_path):
     m = read_manifest(spark, dest)
     assert stats["rows_written"] == len(ROUNDS[0][0]) + len(ROUNDS[0][2])
     assert m["buckets"] == base_dirs
-    assert all(m["deltas"][b] == [f"delta_v2/{B.BUCKET_COL}={b}"] for b in range(4))
+    assert all(m["deltas"][b] == ["delta_v2"] for b in range(4))
     assert sum(m["delta_rows"].values()) == stats["rows_written"]
 
     stats = _merge(spark, dest, 1)
@@ -185,6 +314,68 @@ def test_round_kinds_and_rows_written(spark, tmp_path):
     assert stats["rows_written"] == len(ROUNDS[2][0]) + len(ROUNDS[2][2])
     assert _rows(read_bucketed(spark, dest)) == states[3]
     assert _rows(read_bucketed_at(spark, dest, 3)) == states[2]
+
+
+def test_merge_of_sixteen_buckets_writes_one_delta_file(spark, tmp_path):
+    dest = str(tmp_path / "dest")
+    write_bucketed(_frame(spark, range(1600), "base"), dest, KEYS, 16)
+    stats = partial_merge(spark, dest, _frame(spark, range(0, 1600, 8), "new"))
+    assert stats["buckets_touched"] == 16
+    delta = os.path.join(dest, "delta_v2")
+    data = [f for f in os.listdir(delta) if f.endswith(".parquet") and not f.startswith(".")]
+    assert len(data) == 1 and os.path.isfile(os.path.join(delta, data[0])), os.listdir(delta)
+    assert all(d == ["delta_v2"] for d in read_manifest(spark, dest)["deltas"].values())
+
+
+def test_folded_bucket_reads_none_of_its_rows_in_a_dir_others_still_list(spark, tmp_path):
+    """Bucket 0 folds at gen 3 while bucket 1 still lists ``delta_v2``,
+    so a merge at gen 4 that touches both reads ``delta_v2`` again. It
+    keeps the dir's rows of bucket 1 only: bucket 0's pending rows are
+    its gen-4 rows alone, and its keys read their folded gen-3 version.
+    A filter on the bucket alone counts bucket 0's gen-2 rows again and
+    lets them win over the fold."""
+    dest = str(tmp_path / "dest")
+    where = _bucket_of(spark, 200, 2)
+    a, b = ([k for k in range(200) if where[k] == x] for x in (0, 1))
+    model = {k: f"base{k}" for k in range(200)}
+    write_bucketed(_frame(spark, range(200), "base"), dest, KEYS, 2)
+
+    def merge(ups, tag):
+        partial_merge(spark, dest, _frame(spark, ups, tag))
+        model.update({k: f"{tag}{k}" for k in ups})
+        return read_manifest(spark, dest)
+
+    m = merge(a[:40] + b[:5], "g2")  # bucket 0's deltas pass the fold share
+    assert m["deltas"] == {0: ["delta_v2"], 1: ["delta_v2"]}
+    m = merge(a[:5], "g3")
+    assert 0 not in m["deltas"] and m["deltas"][1] == ["delta_v2"]
+    m = merge(a[30:33] + b[5:6], "g4")
+    assert m["deltas"] == {0: ["delta_v4"], 1: ["delta_v2", "delta_v4"]}
+    assert m["delta_rows"] == {0: 3, 1: 6}
+    assert {r.id: r.v for r in read_bucketed(spark, dest).collect()} == model
+    probe = _keys(spark, a[:5] + b[:1])
+    assert {r.id: r.v for r in read_buckets_for_keys(spark, dest, probe).collect()} == {
+        k: model[k] for k in a[:5] + b[:1]
+    }
+
+
+def test_manifest_with_per_bucket_delta_entries_raises(spark, tmp_path):
+    """A manifest of the layout before one delta dir per generation
+    (an entry per bucket) is not read: the error names the entry."""
+    import json
+
+    dest = str(tmp_path / "dest")
+    write_bucketed(_frame(spark, range(120), "base"), dest, KEYS, 4)
+    _merge(spark, dest, 0)
+    path = os.path.join(dest, f"{B.MANIFEST_PREFIX}2.json")
+    with open(path) as fh:
+        m = json.load(fh)
+    m["deltas"] = {b: [f"delta_v2/{B.BUCKET_COL}={b}"] for b in m["deltas"]}
+    with open(path, "w") as fh:
+        json.dump(m, fh)
+    os.remove(os.path.join(dest, f".{B.MANIFEST_PREFIX}2.json.crc"))
+    with pytest.raises(ValueError, match=f"delta_v2/{B.BUCKET_COL}=0"):
+        read_manifest(spark, dest)
 
 
 def _bucket_of(spark, n_keys: int, n_buckets: int) -> dict[int, int]:

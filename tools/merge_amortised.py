@@ -57,7 +57,7 @@ def main(argv=None) -> int:
     p.add_argument("--rounds", type=int, default=30)
     p.add_argument("--seed", type=int, default=1)
     args = p.parse_args(argv)
-    sys.path.insert(0, os.path.join(REPO, "perfbench"))
+    sys.path[:0] = [REPO, os.path.join(REPO, "perfbench")]
     import duckdb
     import gen
     from pyspark.sql import Window
