@@ -1,4 +1,4 @@
-.PHONY: test test-sf01 fixed-costs bench smoke audit sweep
+.PHONY: test test-sf01 fixed-costs examples bench smoke audit sweep
 
 # The tier-1 command of ROADMAP.md, verbatim.
 test:
@@ -8,6 +8,11 @@ test:
 # of an ingest round): a minute or two, ahead of the full suite.
 fixed-costs:
 	python -m pytest tests/test_ingest_fixed_costs.py -q
+
+# The quickstart walkthrough (examples/quickstart.py), end to end; the
+# tier-1 run deselects it as `slow`.
+examples:
+	python -m pytest tests/test_quickstart.py -q -m slow
 
 test-sf01:
 	SPARK_GRAFT_TEST_SF_DIR=/root/testdata/sf0.01 python -m pytest tests/test_queries_vs_duckdb.py -q

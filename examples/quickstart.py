@@ -1,6 +1,7 @@
 #!/usr/bin/env python
 """End-to-end quickstart: the typical daily pipeline, composed from the
-public Engine facade. Runs standalone against the bundled test data:
+Engine facade (read, validate, sync) and operator functions imported
+from their modules. Runs standalone against the bundled test data:
 
     python examples/quickstart.py [sf_dir] [work_dir]
 
@@ -26,11 +27,17 @@ import pyspark.sql.functions as F
 def main(sf_dir: str, work: str) -> None:
     from fastetl_spark import engine
     from fastetl_spark.io.readers import read_table
+    from fastetl_spark.operators.ann_index import build_ivf_index, search_ivf_index
+    from fastetl_spark.operators.bloomjoin import bloom_prefilter
+    from fastetl_spark.operators.curation2 import semantic_dedup
+    from fastetl_spark.operators.dedup import ngram_jaccard_pairs
     from fastetl_spark.operators.dedup_index import (
         append_to_shingle_index,
         build_shingle_index,
         match_against_index,
     )
+    from fastetl_spark.operators.features import chunk_text
+    from fastetl_spark.operators.ivm import join_view_delta
 
     eng = engine()
     spark = eng.spark
@@ -74,16 +81,16 @@ def main(sf_dir: str, work: str) -> None:
     # 4. similarity search against a persistent ANN index ------------------
     emb = read_table(spark, sf_dir, "embeddings")
     ann = os.path.join(work, "ivf_idx")
-    eng.build_ann_index(emb, ann, "vec_id", "embedding")
-    hits = eng.search_ann(ann, emb.filter(F.col("vec_id") % 100 == 0), k=3)
+    build_ivf_index(emb, ann, "vec_id", "embedding")
+    hits = search_ivf_index(spark, ann, emb.filter(F.col("vec_id") % 100 == 0), k=3)
     print(f"ANN hits: {hits.count()}")
 
-    # 5. curation: chunking + one-call near-dup pairs ----------------------
-    chunks = eng.chunk(docs.select("doc_id", "text"), width=200, stride=150)
+    # 5. curation: chunking + near-dup pairs ----------------------
+    chunks = chunk_text(docs.select("doc_id", "text"), width=200, stride=150)
     print(f"RAG chunks: {chunks.count()} (shuffle-free fan-out)")
-    pairs = eng.near_dup_pairs(docs.select("doc_id", "text"), method="jaccard")
+    pairs = ngram_jaccard_pairs(docs.select("doc_id", "text"))
     print(f"jaccard near-dup pairs: {pairs.count()}")
-    kept = eng.semantic_dedup(emb, "vec_id", "embedding")
+    kept = semantic_dedup(emb, "vec_id", "embedding")
     print(f"semantic_dedup kept: {kept.filter(F.col('is_kept')).count()}/{kept.count()}")
 
     # 6. view maintenance + join prefilter ---------------------------------
@@ -92,7 +99,7 @@ def main(sf_dir: str, work: str) -> None:
     )
     cutoff = F.lit("2000-01-01").cast("timestamp")
     o = read_table(spark, sf_dir, "orders")
-    delta = eng.join_view_delta(
+    delta = join_view_delta(
         o.filter(F.col("o_orderdate") < cutoff).select("o_orderkey", "o_custkey"),
         o.filter(F.col("o_orderdate") >= cutoff).select("o_orderkey", "o_custkey"),
         customers.withColumnRenamed("c_custkey", "o_custkey"),
@@ -100,7 +107,7 @@ def main(sf_dir: str, work: str) -> None:
         ["o_custkey"],
     )  # static dimension: only the dA><B term produces delta rows
     print(f"join-view delta rows (vs full rejoin): {delta.count()}")
-    tagged = eng.bloom_prefilter(
+    tagged = bloom_prefilter(
         o.select("o_orderkey", "o_custkey"),
         "o_custkey",
         customers.filter(F.col("c_mktsegment") == "BUILDING").select("c_custkey"),

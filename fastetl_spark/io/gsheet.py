@@ -198,13 +198,12 @@ class GSheetToTableOperator:
     def execute(self, spark: SparkSession) -> int:
         from pyspark.sql import functions as F
 
-        from fastetl_spark.api import Engine
+        from fastetl_spark.api import Engine, write_counted
 
         df = GSheetHook(spark, self.client).get_gsheet_df(self.sheet_name)
         if self.column_name_to_add:
             df = df.withColumn(self.column_name_to_add, F.lit(self.value_to_add))
-        Engine(spark).write(df, self.dest, mode=self.mode)
-        return df.count()
+        return write_counted(df, lambda d: Engine(spark).write(d, self.dest, mode=self.mode))
 
 
 @dataclass
@@ -216,8 +215,8 @@ class GSheetToCSVOperator:
     dest_path: str
 
     def execute(self, spark: SparkSession) -> int:
+        from fastetl_spark.api import write_counted
         from fastetl_spark.io.writers import write_csv
 
         df = GSheetHook(spark, self.client).get_gsheet_df(self.sheet_name)
-        write_csv(df, self.dest_path)
-        return df.count()
+        return write_counted(df, lambda d: write_csv(d, self.dest_path))

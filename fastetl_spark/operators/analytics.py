@@ -1834,8 +1834,8 @@ def drift_bins(
     accuracy: int | None = None,
 ) -> DataFrame:
     """Two-halves drift report over an arbitrary (key, value, order,
-    epoch-micros) frame — the reusable core behind the gated query and
-    Engine.drift_report. NULL key/value/timestamp rows are dropped (a
+    epoch-micros) frame — the reusable core behind the gated query.
+    NULL key/value/timestamp rows are dropped (a
     NULL is not a distribution observation, and NULL comparison
     semantics diverge between engines); a key with no reference-half
     rows still reports — all its rows land in bin 0 against +infinity
@@ -1851,7 +1851,10 @@ def drift_bins(
     covers the largest key (both modes take the element at disc rank
     ceil(k*n/10)); ``accuracy=None`` (the default) derives that
     covering accuracy from the reference half, enforcing the
-    bit-equality precondition instead of assuming it."""
+    bit-equality precondition instead of assuming it. That derivation
+    is one eager per-key count job per call (an extra input scan): when
+    a frame feeds several sketch calls, derive it once with
+    ``quantiles.covering_accuracy`` and pass it as ``accuracy=``."""
     spark = ev.sparkSession
     ev = ev.select(
         F.col(key_col).alias("event_type"),

@@ -489,7 +489,10 @@ def winsorize_bounds(
     percentile_approx scale path — no per-key sort window, bit-equal to
     exact whenever ``accuracy`` covers the largest key
     (``accuracy=None``, the default, derives that covering accuracy
-    from the data so the precondition is enforced, not assumed)."""
+    from the data so the precondition is enforced, not assumed). That
+    derivation is one eager per-key count job per call (an extra input
+    scan): when a frame feeds several sketch calls, derive it once with
+    ``quantiles.covering_accuracy`` and pass it as ``accuracy=``."""
     from fastetl_spark.operators.quantiles import group_quantile_bounds
 
     nn = df.filter(F.col(value_col).isNotNull())
@@ -777,7 +780,9 @@ def quantile_map_values(
     distinct values (|floor(r*L/n) - floor((r-1)*L/(n-1))| <= L/n + 1);
     the approx mode is an estimator, not a bit-exact twin — use it when
     even the compressed (key, value) support is the risk, not the
-    answer's last ulp.
+    answer's last ulp. Its ``accuracy=None`` derives a covering accuracy
+    by one eager per-key count job per call (reuse
+    ``quantiles.covering_accuracy`` across calls on one frame).
 
     NULL *and NaN* values are dropped symmetrically on the rank side,
     the grid side and the DuckDB oracle (the r13 ADVICE finding: the

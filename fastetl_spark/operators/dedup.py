@@ -582,7 +582,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def minhash_lsh_pairs(d: DataFrame) -> DataFrame:
     """MinHash+LSH near-dup pairs over a (doc_id, text) frame — the
-    df-shaped core behind dedup_minhash_lsh and Engine.near_dup_pairs."""
+    df-shaped core behind dedup_minhash_lsh."""
     # the short-doc filter tests token count, not the shingle array: the
     # predicate that gets pushed to the scan is then a single cheap
     # split(), not the full shingle construction
@@ -797,7 +797,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def simhash_pairs(d: DataFrame) -> DataFrame:
     """SimHash Hamming<=3 near-dup pairs over a (doc_id, text) frame —
-    the df-shaped core behind dedup_simhash and Engine.near_dup_pairs."""
+    the df-shaped core behind dedup_simhash."""
     tok = d.select("doc_id", F.array_distinct(word_tokens(F.col("text"))).alias("tokens"))
     hashed = tok.select(
         "doc_id", F.transform("tokens", lambda t: md5_prefix_hash(t)).alias("hs")

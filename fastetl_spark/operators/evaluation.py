@@ -100,7 +100,8 @@ def auc_by_class(ev: DataFrame, label_col: str, score_col: str) -> DataFrame:
     binned variant ``auc_binned`` keeps the support frame bounded (and
     is exact whenever the bins cover the distinct values).  Degenerate
     classes (n_neg == 0, e.g. a label covering the whole frame) emit
-    NULL rather than 0/0 = NaN — pinned in both engines."""
+    NULL rather than 0/0 = NaN — pinned in both engines.  Runs 2-3
+    bounded eager jobs at call time (split points + bucket offsets)."""
     vt = (
         ev.filter(F.col(score_col).isNotNull() & ~F.isnan(score_col))
         .groupBy(label_col, score_col)
@@ -774,6 +775,19 @@ def fixed_width_bin(
             "int"
         ),
     )
+
+
+def ks_by_class(ev: DataFrame, label_col: str, value_col: str) -> DataFrame:
+    """Exact two-sample KS of ``value_col`` for every label of
+    ``label_col`` against the rest (gated by `ks_two_sample`): NULL and
+    NaN values dropped, counted per (label, value), then
+    ``ks_from_counts``. For continuous values use ``ks_binned``."""
+    vt = (
+        ev.filter(F.col(value_col).isNotNull() & ~F.isnan(value_col))
+        .groupBy(label_col, value_col)
+        .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
+    )
+    return ks_from_counts(vt, label_col, value_col)
 
 
 def auc_binned(

@@ -501,8 +501,7 @@ def neighbor_jaccard_pairs(
     topk: int = _NBJ_TOPK,
 ) -> DataFrame:
     """Top-k structural-similarity pairs over an undirected edge frame
-    (u, v) with u < v — the reusable core behind the gated query and
-    Engine.neighbor_similarity."""
+    (u, v) with u < v — the reusable core behind the gated query."""
     adj = und.select(F.col("u").alias("node"), F.col("v").alias("nb")).unionAll(
         und.select(F.col("v").alias("node"), F.col("u").alias("nb"))
     )

@@ -96,7 +96,9 @@ def misra_gries_topk(
     key, found or not; null keys are excluded up front). Shape: one
     narrow scan + one groupBy(token) on at most
     k * n_partitions summary rows — the shuffle is summary-sized, not
-    data-sized, which is the entire point at 100 TB."""
+    data-sized, which is the entire point at 100 TB. Set k above the
+    expected distinct count to get exact results from the same
+    pipeline."""
     from fastetl_spark.checkpointing import materialize
 
     # null keys are EXCLUDED by contract (the NULL summary row carries

@@ -63,6 +63,16 @@ def covering_accuracy_for(df: DataFrame, key_col: str) -> int:
     return min(max(2 * int(mx or 0) + 1, 10_000), 2**31 - 1)
 
 
+def covering_accuracy(df: DataFrame, key_col: str, value_col: str) -> int:
+    """``covering_accuracy_for`` over the rows the sketch paths count
+    (non-NULL key and value). Derive it once per frame and pass it as
+    ``accuracy=`` to each of drift_bins, winsorize_bounds and
+    quantile_map_values on that frame; ``accuracy=None`` re-scans the
+    input in every call."""
+    base = df.filter(F.col(value_col).isNotNull() & F.col(key_col).isNotNull())
+    return covering_accuracy_for(base, key_col)
+
+
 def group_quantile_bounds(
     df: DataFrame,
     key_col: str,
@@ -150,3 +160,28 @@ def bin_by_bounds(value: Column, bounds: Column, strict: bool = True) -> Column:
         lambda acc, b: acc
         + F.when(cmp(b), F.lit(1)).otherwise(F.lit(0)),
     ).alias("bin")
+
+
+def monitor_drift(
+    df: DataFrame,
+    bounds: DataFrame,
+    key_col: str = "event_type",
+    value_col: str = "value",
+) -> DataFrame:
+    """Per-(key, bin) counts ``n_cur`` of a live frame (batch or stream)
+    binned against FROZEN per-key ``bounds`` (key, bounds array<double>)
+    from ``group_quantile_bounds`` over the reference slice (gated by
+    `streaming_drift_monitor`): a broadcast join and no window, so it
+    runs per micro-batch. NULL values and NULL keys are no observations
+    (as in drift_bins), and a key absent from ``bounds`` still reports,
+    every row in bin 0, instead of vanishing through an inner join."""
+    return (
+        df.filter(F.col(value_col).isNotNull() & F.col(key_col).isNotNull())
+        .join(F.broadcast(bounds), key_col, "left")
+        .select(
+            key_col,
+            F.coalesce(bin_by_bounds(F.col(value_col), F.col("bounds")), F.lit(0)).alias("bin"),
+        )
+        .groupBy(key_col, "bin")
+        .agg(F.count(F.lit(1)).alias("n_cur"))
+    )

@@ -792,7 +792,7 @@ def trigram_stupid_backoff(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def stupid_backoff_scores(d: DataFrame) -> DataFrame:
     """Per-doc stupid-backoff LM scores over any (doc_id, text) frame —
-    the reusable core behind the gated query and Engine.lm_score."""
+    the reusable core behind the gated query."""
     tok = d.select("doc_id", F.split("text", " ").alias("tokens"))
     toks = F.col("tokens")
     pos = (

@@ -86,7 +86,7 @@ def simhash_signatures(
     bits: int = _VS_BITS,
 ) -> DataFrame:
     """(id, simhash) sign sketches over any (id, array<float>) frame —
-    the reusable core behind the gated queries and Engine.vector_simhash."""
+    the reusable core behind the gated queries."""
     spark = vectors.sparkSession
     q = vectors.select(
         F.col(id_col).alias("vec_id"),
@@ -237,6 +237,20 @@ def simhash_hamming_pairs(
     return cand.select(
         "vec_a", "vec_b", ham.cast("long").alias("hamming")
     ).filter(F.col("hamming") <= max_hamming)
+
+
+def simhash_neardup_pairs(
+    vectors: DataFrame,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    dim: int = _VS_DIM,
+    max_hamming: int = _VS_MAX_HAMMING,
+) -> DataFrame:
+    """(vec_a, vec_b, hamming) near-dup pairs of an embedding frame:
+    ``simhash_signatures``, then ``simhash_hamming_pairs`` — banded
+    candidates verified by exact Hamming distance, never all-pairs."""
+    sigs = simhash_signatures(vectors, id_col=id_col, vec_col=vec_col, dim=dim)
+    return simhash_hamming_pairs(sigs, max_hamming=max_hamming)
 
 
 # --- Johnson-Lindenstrauss random projection (gated) ------------------------

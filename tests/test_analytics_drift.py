@@ -187,26 +187,29 @@ def test_quantile_map_approx_within_one_level(spark):
 
 @pytest.mark.slow  # full gate only: the facade default wiring is covered by test_covering_accuracy_derive_once_and_reuse + the drift oracle gates (default profile); this re-proves bit-equality end-to-end
 def test_facade_defaults_take_scale_path_bit_equal(spark):
-    """Engine.drift_report / winsorize_report default to the
-    sketch-boundary plan (no per-key sort window) at a DERIVED covering
-    accuracy — bit-equal to the exact mode, so flipping the default is
-    a pure plan change; quantile_normalize's DEFAULT stays exact=True
+    """drift_bins / winsorize_bounds on the sketch-boundary plan
+    (``exact=False``, no per-key sort window) at a DERIVED covering
+    accuracy are bit-equal to the exact mode, so choosing the scale path
+    is a pure plan change; quantile_map_values's DEFAULT stays exact=True
     (its approx level convention is only within-one-level equal, so a
     silent flip would change caller outputs — round-9 ADVICE) with the
     window-free plan available by opt-in."""
-    from fastetl_spark.api import Engine
+    from fastetl_spark.operators.analytics import drift_bins
+    from fastetl_spark.operators.curation2 import (
+        quantile_map_values,
+        winsorize_bounds,
+    )
 
-    eng = Engine(spark)
     rows = [
         (f"k{v % 3}", float((v * v) % 23), v, v) for v in range(997)
     ] + [("k0", 5.0, 10_000 + i, 10_000 + i) for i in range(313)]
     df = _frame(spark, rows)
     for call in (
-        lambda **kw: eng.drift_report(df, **kw),
-        lambda **kw: eng.winsorize_report(df, "event_type", "value",
-                                          "event_id", **kw),
+        lambda **kw: drift_bins(df, **kw),
+        lambda **kw: winsorize_bounds(df, "event_type", "value",
+                                      "event_id", **kw),
     ):
-        default = call()
+        default = call(exact=False)
         plan = default._jdf.queryExecution().executedPlan().toString()
         assert "Window" not in plan
         assert sorted(map(tuple, default.collect())) == sorted(
@@ -220,13 +223,13 @@ def test_facade_defaults_take_scale_path_bit_equal(spark):
     # sharp one: no PER-KEY rank window (row_number over the
     # low-cardinality key) rather than no Window node at all.
     qplan_default = (
-        eng.quantile_normalize(df, "event_type", "value", "event_id")
+        quantile_map_values(df, "event_type", "value", "event_id")
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "row_number" in qplan_default
     qplan_scale = (
-        eng.quantile_normalize(df, "event_type", "value", "event_id",
-                               exact=False)
+        quantile_map_values(df, "event_type", "value", "event_id",
+                            exact=False)
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "row_number" not in qplan_scale
@@ -234,30 +237,32 @@ def test_facade_defaults_take_scale_path_bit_equal(spark):
 
 
 def test_covering_accuracy_derive_once_and_reuse(spark):
-    """Engine.covering_accuracy derives the bit-equality accuracy ONCE
-    so multiple sketch calls on the same frame skip the per-call eager
-    count job (round-9 ADVICE); passing it explicitly matches the
+    """quantiles.covering_accuracy derives the bit-equality accuracy
+    ONCE so multiple sketch calls on the same frame skip the per-call
+    eager count job (round-9 ADVICE); passing it explicitly matches the
     per-call accuracy=None derivation exactly."""
-    from fastetl_spark.api import Engine
+    from fastetl_spark.operators.curation2 import winsorize_bounds
+    from fastetl_spark.operators.quantiles import covering_accuracy
 
-    eng = Engine(spark)
     rows = [(f"k{v % 5}", float((v * 3) % 41), v, v) for v in range(500)]
     df = _frame(spark, rows)
-    acc = eng.covering_accuracy(df, "event_type", "value")
+    acc = covering_accuracy(df, "event_type", "value")
     assert acc >= 10_000  # floor clamp; groups here are tiny
-    explicit = eng.winsorize_report(df, "event_type", "value",
-                                    "event_id", accuracy=acc)
-    derived = eng.winsorize_report(df, "event_type", "value", "event_id")
+    explicit = winsorize_bounds(df, "event_type", "value",
+                                "event_id", exact=False, accuracy=acc)
+    derived = winsorize_bounds(df, "event_type", "value", "event_id",
+                               exact=False)
     assert sorted(map(tuple, explicit.collect())) == sorted(
         map(tuple, derived.collect())
     )
 
 
 def test_monitor_drift_drops_null_keys_and_values(spark):
-    from fastetl_spark.api import Engine
-    from fastetl_spark.operators.quantiles import group_quantile_bounds
+    from fastetl_spark.operators.quantiles import (
+        group_quantile_bounds,
+        monitor_drift,
+    )
 
-    eng = Engine(spark)
     ref = _frame(spark, [("a", float(v), v, v) for v in range(40)])
     bounds = group_quantile_bounds(
         ref, "event_type", "value", [(k, 10) for k in range(1, 10)],
@@ -269,7 +274,7 @@ def test_monitor_drift_drops_null_keys_and_values(spark):
          (None, 1.0, 3, 3), ("a", None, 4, 4)],  # both dropped
     )
     out = {(r["event_type"], r["bin"]): r["n_cur"]
-           for r in eng.monitor_drift(live, bounds).collect()}
+           for r in monitor_drift(live, bounds).collect()}
     assert out == {("a", 9): 1, ("b", 0): 1}
 
 

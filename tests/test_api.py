@@ -202,6 +202,7 @@ def test_sync_many_reports_per_table_and_isolates_failures(spark, tmp_path):
 def test_engine_read_at_and_pagerank(spark, tmp_path):
     from fastetl_spark.api import Engine
     from fastetl_spark.io.bucketed import partial_merge, write_bucketed
+    from fastetl_spark.operators.graph import pagerank
     import pyspark.sql.functions as F
 
     eng = Engine(spark)
@@ -218,8 +219,8 @@ def test_engine_read_at_and_pagerank(spark, tmp_path):
     edges = spark.createDataFrame(
         [(i, (i + 1) % 6) for i in range(6)], "src long, dst long"
     )
-    pr_e = {r.node: r.pr for r in eng.pagerank(nodes, edges).collect()}
-    pr_f = {r.node: r.pr for r in eng.pagerank(nodes, edges, exact=False).collect()}
+    pr_e = {r.node: r.pr for r in pagerank(nodes, edges).collect()}
+    pr_f = {r.node: r.pr for r in pagerank(nodes, edges, exact=False).collect()}
     assert abs(sum(pr_e.values()) - 1.0) < 1e-9  # ring conserves mass
     assert max(abs(pr_e[n] - pr_f[n]) for n in pr_e) < 1e-12
 
@@ -263,19 +264,20 @@ def test_engine_storage_report_flags_fragmentation(spark, tmp_path):
 def test_engine_round5_wrappers(spark):
     from pyspark.sql import functions as F
 
-    from fastetl_spark.api import Engine
-
-    eng = Engine(spark)
+    from fastetl_spark.operators.bloomjoin import bloom_prefilter
+    from fastetl_spark.operators.dedup import connected_components
+    from fastetl_spark.operators.ivm import distinct_view_delta, join_view_delta
+    from fastetl_spark.operators.spatial import grid_neighbor_pairs
 
     pts = spark.createDataFrame(
         [(1, 0, 0), (2, 10, 0), (3, 3000, 3000)], "user_id long, x long, y long"
     )
-    pairs = {(r.u, r.v) for r in eng.spatial_neighbors(pts, radius=64).collect()}
+    pairs = {(r.u, r.v) for r in grid_neighbor_pairs(pts, r=64).collect()}
     assert pairs == {(1, 2)}
 
     probe = spark.createDataFrame([(i,) for i in range(50)], "k long")
     build = spark.createDataFrame([(7,), (9,)], "k long")
-    tagged = eng.bloom_prefilter(probe, "k", build, "k")
+    tagged = bloom_prefilter(probe, "k", build, "k")
     passing = {r.k for r in tagged.filter(F.col("bloom_pass")).collect()}
     assert {7, 9} <= passing
 
@@ -283,40 +285,45 @@ def test_engine_round5_wrappers(spark):
     da = spark.createDataFrame([(2, 10)], "aid long, k long")
     b0 = spark.createDataFrame([(5, 10)], "bid long, k long")
     db = spark.createDataFrame([(6, 10)], "bid long, k long")
-    delta = eng.join_view_delta(a0, da, b0, db, ["k"]).collect()
+    delta = join_view_delta(a0, da, b0, db, ["k"]).collect()
     assert {(r.aid, r.bid, r.delta_src) for r in delta} == {
         (2, 5, "new_a"), (1, 6, "new_b"), (2, 6, "both_new"),
     }
 
     view = spark.createDataFrame([(1,)], "v long")
     inc = spark.createDataFrame([(1,), (2,), (2,)], "v long")
-    assert [r.v for r in eng.distinct_view_delta(view, inc).collect()] == [2]
+    assert [r.v for r in distinct_view_delta(view, inc).collect()] == [2]
 
     er_pairs = spark.createDataFrame([("b", "a")], "x string, y string")
     er_nodes = spark.createDataFrame([("a",), ("b",), ("c",)], "n string")
     got = {
         r.n: r.component
-        for r in eng.resolve_entities(er_pairs, er_nodes, "x", "y", "n").collect()
+        for r in connected_components(
+            er_pairs, nodes=er_nodes, a_col="x", b_col="y", id_col="n"
+        ).collect()
     }
     assert got == {"a": "a", "b": "a", "c": "c"}
 
 
 def test_engine_training_data_wrappers(spark, sf_dir):
-    """kmeans / dup_spans / pack_sequences facade smoke: delegate to the
-    oracle-gated cores and keep their schemas."""
-    engine = Engine(spark)
+    """kmeans / dup_spans / pack_sequences smoke: the oracle-gated cores
+    keep their schemas."""
+    from fastetl_spark.operators.curation import maximal_dup_spans
+    from fastetl_spark.operators.kmeans import lloyd_kmeans_exact
+    from fastetl_spark.operators.packing import pack_sequences
+
     docs = read_table(spark, sf_dir, "documents")
     vecs = read_table(spark, sf_dir, "embeddings")
 
-    cents = engine.kmeans(vecs, "vec_id", "embedding", k=4, iterations=1)
+    cents = lloyd_kmeans_exact(vecs, "vec_id", "embedding", k=4, iterations=1)
     assert cents.columns == ["cell", "dim", "c_val", "n_points"]
     assert cents.count() == 4 * 64
 
-    spans = engine.dup_spans(docs, k=8)
+    spans = maximal_dup_spans(docs, k=8)
     assert spans.columns == ["doc_id", "start_tok", "end_tok", "span_len", "n_windows"]
     assert spans.filter(F.col("span_len") < 8).count() == 0
 
-    packed = engine.pack_sequences(docs, capacity=64)
+    packed = pack_sequences(docs, capacity=64)
     assert packed.columns == [
         "doc_id", "seq_id", "start_in_seq", "doc_tok_start", "frag_len"
     ]
@@ -328,36 +335,144 @@ def test_engine_training_data_wrappers(spark, sf_dir):
 
 def test_engine_round6_facades(spark, sf_dir):
     from fastetl_spark.io.readers import read_table
+    from fastetl_spark.operators.dedup import containment_pairs
+    from fastetl_spark.operators.graph import neighbor_jaccard_pairs
+    from fastetl_spark.operators.heavy_hitters import misra_gries_topk
+    from fastetl_spark.operators.retrieval import bm25_topk, stupid_backoff_scores
+    from fastetl_spark.operators.vector_sketch import (
+        simhash_neardup_pairs,
+        simhash_signatures,
+    )
 
-    eng = Engine(spark)
     docs = read_table(spark, sf_dir, "documents").select("doc_id", "text").limit(50)
 
-    top = eng.bm25(docs, terms=("spark", "join"), k=5).collect()
+    top = bm25_topk(docs, terms=("spark", "join"), k=5).collect()
     assert 0 < len(top) <= 5
     assert [r["rank"] for r in top] == list(range(1, len(top) + 1))
 
-    lm = eng.lm_score(docs)
+    lm = stupid_backoff_scores(docs)
     row = lm.limit(1).collect()[0]
     assert row["n_trigrams"] == row["n_hit3"] + row["n_hit2"] + row["n_floor"]
     assert 0.0 <= row["avg_score"] <= 1.0
 
-    hh = eng.heavy_hitters(
-        read_table(spark, sf_dir, "events"), "event_type", k=64, topk=5
+    events = read_table(spark, sf_dir, "events")
+    hh = misra_gries_topk(
+        events.select(F.col("event_type").cast("string").alias("token")), 64, topk=5
     ).collect()
     assert hh and hh[0]["err_bound"] == 0  # k >> distinct event types
 
     vecs = read_table(spark, sf_dir, "embeddings").limit(100)
-    sigs = eng.vector_simhash(vecs)
+    sigs = simhash_signatures(vecs)
     assert set(sigs.columns) == {"vec_id", "simhash"}
     assert sigs.count() == 100
-    pairs = eng.vector_neardup_pairs(vecs, max_hamming=32)
+    pairs = simhash_neardup_pairs(vecs, max_hamming=32)
     assert {"vec_a", "vec_b", "hamming"} <= set(pairs.columns)
 
     edges = spark.createDataFrame(
         [(0, 1), (0, 2), (1, 2), (2, 3)], ["u", "v"]
     )
-    sim = eng.neighbor_similarity(edges, topk=10).collect()
+    sim = neighbor_jaccard_pairs(edges, topk=10).collect()
     assert sim and all(0.0 < r["jaccard"] <= 1.0 for r in sim)
 
-    cont = eng.near_dup_pairs(docs, method="containment")
+    cont = containment_pairs(docs)
     assert {"src", "dst", "containment"} <= set(cont.columns)
+
+
+def test_engine_surface_is_the_etl_job():
+    """The facade keeps the ETL job's methods only; every other operator
+    is imported from its module. A new public method is a decision to
+    make here, not a side effect."""
+    public = {name for name in vars(Engine) if not name.startswith("_")}
+    assert public == {
+        "read", "write", "sql", "full_copy", "sync", "sync_many",
+        "clean", "validate_split", "expectations", "checksum", "schema_drift",
+        "compact", "storage_report", "bucketize", "generations", "read_at",
+        "vacuum", "ingest_new_files",
+        "build_dedup_index", "match_new_documents", "index_new_documents",
+    }
+
+
+def _derby_column(spark, url: str, table: str, column: str) -> tuple[str, int]:
+    conn = spark._jvm.java.sql.DriverManager.getConnection(url)
+    try:
+        rs = conn.getMetaData().getColumns(None, None, table, column)
+        assert rs.next(), (table, column)
+        return rs.getString("TYPE_NAME"), rs.getInt("COLUMN_SIZE")
+    finally:
+        conn.close()
+
+
+def test_full_copy_into_jdbc_truncates_then_appends(spark, sf_dir, tmp_path):
+    """A JDBC destination (embedded Derby, shipped with pyspark): a
+    truncating full_copy run twice keeps the table's definition and holds
+    one copy of the source; ``truncate=False`` appends. The load log
+    names the table."""
+    from fastetl_spark.io.readers import read_jdbc
+
+    url = f"jdbc:derby:{tmp_path / 'db'};create=true"
+    engine = Engine(spark, load_log_path=str(tmp_path / "log"))
+    src = {"path": f"{sf_dir}/nation.parquet"}
+    dest = {"jdbc": {"url": url, "table": "NATION"}}
+    first = {"jdbc": {**dest["jdbc"], "create_table_column_types": "n_name VARCHAR(77)"}}
+    assert engine.full_copy(src, first) == 25
+    assert engine.full_copy(src, dest) == 25
+    assert read_jdbc(spark, url=url, table="NATION").count() == 25
+    # truncate-and-load: the table made by the first run survives (a
+    # drop-and-create would have turned n_name into Derby's CLOB)
+    assert _derby_column(spark, url, "NATION", "n_name") == ("VARCHAR", 77)
+    assert engine.full_copy(src, dest, truncate=False) == 25
+    assert read_jdbc(spark, url=url, table="NATION").count() == 50
+    log = [(r.no_tabela, r.tp_carga, r.qt_linhas) for r in engine.load_info.read().collect()]
+    assert sorted(log) == [("NATION", "append", 25), ("NATION", "full", 25), ("NATION", "full", 25)]
+
+
+def test_db_to_db_operator_full_into_jdbc(spark, sf_dir, tmp_path):
+    from fastetl_spark.io.readers import read_jdbc
+
+    url = f"jdbc:derby:{tmp_path / 'db'};create=true"
+    op = DbToDbOperator(
+        source={"path": f"{sf_dir}/region.parquet"},
+        destination={"jdbc": {"url": url, "table": "REGION"}},
+    )
+    assert op.execute(spark) == 5
+    assert op.execute(spark) == 5
+    back = read_jdbc(spark, url=url, table="REGION")
+    assert back.count() == 5
+    assert back.select("r_regionkey").distinct().count() == 5
+
+
+def _jobs_of(spark, group: str, fn) -> int:
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_db_to_csv_operator_counts_on_its_write(spark, sf_dir, tmp_path):
+    """The returned row count rides on the CSV write: the operator runs
+    the jobs of the write alone, not a second run of the source for
+    ``count()``, and the count equals the rows in the extract."""
+    from fastetl_spark.io.writers import write_csv
+
+    src = {"path": f"{sf_dir}/orders.parquet"}
+    op = DbToCSVOperator(source=src, csv_path=str(tmp_path / "op"))
+    n = None
+
+    def run():
+        nonlocal n
+        n = op.execute(spark)
+
+    def read_and_write():
+        write_csv(Engine(spark).read(src), str(tmp_path / "ref"))
+
+    op_jobs = _jobs_of(spark, "csv-op", run)
+    write_jobs = _jobs_of(spark, "csv-write", read_and_write)
+    df = Engine(spark).read(src)
+    assert _jobs_of(spark, "csv-count", df.count) >= 1
+    assert op_jobs == write_jobs
+    back = spark.read.option("header", "true").csv(str(tmp_path / "op"))
+    assert n == back.count() == df.count()

@@ -86,29 +86,28 @@ def test_winsorize_bounds_are_order_statistics(spark):
 
 
 def test_engine_near_dup_pairs_dispatcher(spark):
-    from fastetl_spark.api import Engine
+    """Every near-dup pair family pairs identical docs, smaller id
+    first."""
+    from fastetl_spark.operators import dedup
+    from fastetl_spark.operators.curation2 import sparse_cosine_pairs
 
-    eng = Engine(spark)
     base = "lorem ipsum dolor sit amet consectetur adipiscing elit sed do eiusmod tempor"
     docs = spark.createDataFrame(
         [(1, base), (2, base), (3, base + " extra"), (4, "totally different words here now ok fine yes")],
         "doc_id long, text string",
     )
-    for method, id_cols in [
-        ("exact", ("doc_a", "doc_b")),
-        ("jaccard", ("doc_a", "doc_b")),
-        ("cosine", ("doc_a", "doc_b")),
-        ("minhash", ("id_a", "id_b")),
-        ("simhash", ("doc_a", "doc_b")),
+    for pairs_of, id_cols in [
+        (dedup.exact_dup_pairs, ("doc_a", "doc_b")),
+        (dedup.ngram_jaccard_pairs, ("doc_a", "doc_b")),
+        (sparse_cosine_pairs, ("doc_a", "doc_b")),
+        (dedup.minhash_lsh_pairs, ("id_a", "id_b")),
+        (dedup.simhash_pairs, ("doc_a", "doc_b")),
     ]:
-        out = eng.near_dup_pairs(docs, method=method)
+        out = pairs_of(docs)
         pairs = {(r[id_cols[0]], r[id_cols[1]]) for r in out.collect()}
-        assert (1, 2) in pairs, method  # identical docs always pair
-        assert all(a < b for a, b in pairs), method
-    import pytest as _pt
-
-    with _pt.raises(ValueError):
-        eng.near_dup_pairs(docs, method="nope")
+        name = pairs_of.__name__
+        assert (1, 2) in pairs, name  # identical docs always pair
+        assert all(a < b for a, b in pairs), name
 
 
 def test_semantic_dedup_increment_flags_planted_twin(spark):

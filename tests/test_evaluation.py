@@ -65,16 +65,13 @@ def test_auc_binned_equals_exact_when_bins_cover(spark):
 
 
 def test_ks_binned_equals_exact_when_bins_cover(spark):
-    from fastetl_spark.api import Engine
+    from fastetl_spark.operators.evaluation import ks_binned, ks_by_class
 
-    eng = Engine(spark)
     df = _lattice_df(spark)
-    exact = {r["cls"]: r for r in eng.ks_report(df, "cls", "score").collect()}
+    exact = {r["cls"]: r for r in ks_by_class(df, "cls", "score").collect()}
     binned = {
         r["cls"]: r
-        for r in eng.ks_report(
-            df, "cls", "score", binned=True, num_bins=16
-        ).collect()
+        for r in ks_binned(df, "cls", "score", num_bins=16).collect()
     }
     for cls in exact:
         assert binned[cls]["n_t"] == exact[cls]["n_t"]
@@ -84,26 +81,16 @@ def test_ks_binned_equals_exact_when_bins_cover(spark):
 
 def test_ks_binned_lower_bounds_exact(spark):
     # coarse bins merge support points: binned D can only shrink
-    from fastetl_spark.api import Engine
+    from fastetl_spark.operators.evaluation import ks_binned, ks_by_class
 
-    eng = Engine(spark)
     df = _lattice_df(spark)
-    exact = {r["cls"]: r["d_stat"] for r in eng.ks_report(df, "cls", "score").collect()}
+    exact = {r["cls"]: r["d_stat"] for r in ks_by_class(df, "cls", "score").collect()}
     coarse = {
         r["cls"]: r["d_stat"]
-        for r in eng.ks_report(df, "cls", "score", binned=True, num_bins=3).collect()
+        for r in ks_binned(df, "cls", "score", num_bins=3).collect()
     }
     for cls in exact:
         assert coarse[cls] <= exact[cls] + 1e-12
-
-
-def test_auc_report_facade_routes_exact(spark):
-    from fastetl_spark.api import Engine
-
-    df = _lattice_df(spark)
-    a = {r["cls"]: r["auc"] for r in Engine(spark).auc_report(df, "cls", "score").collect()}
-    b = {r["cls"]: r["auc"] for r in auc_by_class(df, "cls", "score").collect()}
-    assert a == b
 
 
 def test_auc_degenerate_single_class_is_null(spark):

@@ -74,19 +74,19 @@ def test_decayed_scores_bounded_by_undecayed(spark):
 
 
 def test_engine_chunk_and_semantic_dedup_facades(spark):
-    from fastetl_spark.api import Engine
+    from fastetl_spark.operators.curation2 import semantic_dedup
+    from fastetl_spark.operators.features import chunk_text
 
-    eng = Engine(spark)
     docs = spark.createDataFrame(
         [(1, "en", "x" * 400), (2, "pt", "y" * 100)], "doc_id long, lang string, text string"
     )
-    out = eng.chunk(docs, width=200, stride=150)
+    out = chunk_text(docs, width=200, stride=150)
     assert set(out.columns) == {"doc_id", "lang", "chunk_idx", "start", "chunk"}
     per = {r.doc_id: r.n for r in out.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n")).collect()}
     assert per == {1: 3, 2: 1}  # 400 chars -> starts 1,151,301; 100 -> 1
 
     vecs = spark.read.parquet(f"{SF}/embeddings.parquet")
-    sd = eng.semantic_dedup(vecs, "vec_id", "embedding")
+    sd = semantic_dedup(vecs, "vec_id", "embedding")
     assert sd.count() == vecs.count()
 
 
