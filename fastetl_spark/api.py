@@ -41,12 +41,11 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from fastetl_spark.checkpointing import observed
 from fastetl_spark.io.readers import read_jdbc
-from fastetl_spark.io.writers import select_intersection, write_csv, write_jdbc
+from fastetl_spark.io.writers import select_intersection, write_counted, write_csv, write_jdbc
 from fastetl_spark.meta.load_info import LoadInfo
 from fastetl_spark.plans.qa import CleaningPipeline
 
@@ -401,27 +400,16 @@ class Engine:
 
         return read_bucketed_at(self.spark, path, gen)
 
-    def vacuum(self, path: str, keep_commit_markers: int = 1000) -> dict:
+    def vacuum(self, path: str) -> dict:
         """Clear what a crash leaves beside a destination
         (io/fsutil.vacuum_dest): a stale merge lock, the staging dirs of
         a first write, a fold and a bucketize, and an interrupted
-        ``atomic_overwrite``'s staging and backup dirs. Then trim the
-        streaming commit markers to the newest ``keep_commit_markers``.
-        Never run concurrently with an in-flight merge on the same
-        destination."""
+        ``atomic_overwrite``'s staging and backup dirs. Returns
+        ``{"dirs_removed": [...]}``. Never run concurrently with an
+        in-flight merge on the same destination."""
         from fastetl_spark.io.fsutil import vacuum_dest
 
-        return vacuum_dest(self.spark, path, keep_commit_markers)
-
-
-def write_counted(df: DataFrame, write) -> int:
-    """Run ``write(df)`` and return the rows it wrote, counted by an
-    observation on that write instead of a second run of the source
-    (which, for a JDBC source, is a second query whose count can differ
-    from the rows written)."""
-    obs = Observation()
-    write(df.observe(obs, F.count(F.lit(1)).alias("n_rows")))
-    return int(observed(obs, {"n_rows": 0})["n_rows"])
+        return vacuum_dest(self.spark, path)
 
 
 # --- operator-shaped wrappers (reference operator parity) ----------------

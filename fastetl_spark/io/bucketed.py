@@ -254,7 +254,10 @@ def read_manifest(spark: SparkSession, path: str) -> dict | None:
     ``MAX_LOAD_RECORDS`` commits by ``write_bucketed`` and
     ``partial_merge``, oldest first, each {"kind": "full" or
     "incremental", "at": UTC time, "upserts", "tombstones",
-    "buckets_touched", "rows_written", "folds", "rows"}.
+    "buckets_touched", "rows_written", "folds", "rows"}, plus ``txn``
+    when the write was given one: the identity of a replayable write (a
+    stream sink's micro-batch), which ``partial_merge`` finds here to
+    skip a replay of a write this root already committed.
 
     A manifest that lists a delta per bucket (``delta_v<gen>/__fe_bucket=K``,
     the layout before one delta dir per generation) raises ``ValueError``."""
@@ -330,11 +333,12 @@ def manifest_watermark(m: dict | None):
     return None if wm is None else _parse_watermark(wm["value"], wm["type"])
 
 
-def _bookkeeping(m: dict, kind: str, wm, **counts: int) -> dict:
+def _bookkeeping(m: dict, kind: str, wm, txn: str | None, **counts: int) -> dict:
     """The ``watermark`` and ``loads`` entries of a commit that follows
     manifest ``m`` (``{}`` for a new root): the watermark ``wm`` observed
     on the write, or ``m``'s when the write landed none, and ``m``'s load
-    records plus this one, the latest ``MAX_LOAD_RECORDS`` kept."""
+    records plus this one (with the write's ``txn``, when given), the
+    latest ``MAX_LOAD_RECORDS`` kept."""
     out: dict = {}
     if wm is not None:
         out["watermark"] = {"value": str(wm), "type": _watermark_type(wm)}
@@ -342,6 +346,8 @@ def _bookkeeping(m: dict, kind: str, wm, **counts: int) -> dict:
         out["watermark"] = m["watermark"]
     at = dt.datetime.now(dt.timezone.utc).isoformat(timespec="milliseconds")
     record = {"kind": kind, "at": at, **counts}
+    if txn is not None:
+        record["txn"] = txn
     out["loads"] = (m.get("loads", []) + [record])[-MAX_LOAD_RECORDS:]
     return out
 
@@ -354,6 +360,7 @@ def write_bucketed(
     keep_gens: int = 2,
     n_shards: int | None = None,
     watermark_col: str | None = None,
+    txn: str | None = None,
 ) -> int:
     """Initial full load of a bucketed merge destination, in the
     manifest layout; returns the rows written. Bucket data lands in
@@ -372,7 +379,8 @@ def write_bucketed(
 
     ``watermark_col`` (a sync's first load) records the greatest value
     of that column written as the manifest's ``watermark``; every load
-    records itself in ``loads`` (``read_manifest``).
+    records itself in ``loads`` (``read_manifest``), with ``txn`` when
+    given (``partial_merge``).
 
     ``keep_gens`` (recorded in the spec) is the GC retention window:
     merge-time GC keeps the newest N generations' manifests and dirs.
@@ -428,7 +436,7 @@ def write_bucketed(
         "gen": gen, "buckets": buckets, "rows": rows, "schema": df.schema.jsonValue(),
         "keys": list(keys),
         **_bookkeeping(
-            {}, "full", wm, upserts=n, tombstones=0, buckets_touched=touched,
+            {}, "full", wm, txn, upserts=n, tombstones=0, buckets_touched=touched,
             rows_written=n, folds=0, rows=n,
         ),
     }
@@ -837,6 +845,7 @@ def partial_merge(
     increment: DataFrame,
     deleted_keys: DataFrame | None = None,
     watermark_col: str | None = None,
+    txn: str | None = None,
 ) -> dict:
     """Merge an increment into a bucketed destination, writing only for
     the buckets the increment (or deletion feed) touches.
@@ -859,6 +868,14 @@ def partial_merge(
     generation (orphan dirs are overwritten by the re-run and collected
     by generation GC); a crash after the commit IS the new state, and a
     re-run converges.
+
+    ``txn`` names a replayable write, such as a stream sink's
+    micro-batch: it rides the commit in the merge's load record, and a
+    merge whose ``txn`` a retained load record already holds (``loads``
+    keeps ``MAX_LOAD_RECORDS``; a stream replays only its last batch)
+    writes nothing and returns the no-op result. The check runs under
+    the lock, before any write, so a replay after a crash before the
+    commit merges once, and one after it does not merge again.
 
     Returns ``{"n_buckets": N, "buckets_touched": t, "rows_written": w,
     "rows": r}``: ``w`` is the rows physically written (delta rows,
@@ -900,7 +917,7 @@ def partial_merge(
             "with io.fsutil.vacuum_dest)"
         )
     try:
-        return _merge_locked(spark, path, spec, increment, deleted_keys, watermark_col)
+        return _merge_locked(spark, path, spec, increment, deleted_keys, watermark_col, txn)
     finally:
         lock_fs.delete(lock, False)
 
@@ -912,6 +929,7 @@ def _merge_locked(
     increment: DataFrame,
     deleted_keys: DataFrame | None,
     watermark_col: str | None,
+    txn: str | None,
 ) -> dict:
     """The body of ``partial_merge``, run under its lock.
 
@@ -927,6 +945,14 @@ def _merge_locked(
     m = read_manifest(spark, path)
     base = path.rstrip("/")
     m["rows"] = _live_rows(spark, base, m)
+    unchanged = {
+        "n_buckets": n_buckets,
+        "buckets_touched": 0,
+        "rows_written": 0,
+        "rows": sum(m["rows"].values()),
+    }
+    if txn is not None and any(r.get("txn") == txn for r in m.get("loads", [])):
+        return unchanged  # a replay of a write this root committed
     schema = _schema(spark, base, m)
     next_gen = m["gen"] + 1
     fs, path_cls = hadoop_fs(spark, path)
@@ -948,12 +974,7 @@ def _merge_locked(
     touched = sorted(written["b"])
     if not touched:  # nothing to merge: drop the empty delta dir
         fs.delete(path_cls(f"{base}/{delta_dir}"), True)
-        return {
-            "n_buckets": n_buckets,
-            "buckets_touched": 0,
-            "rows_written": 0,
-            "rows": sum(m["rows"].values()),
-        }
+        return unchanged
 
     per_bucket = ("buckets", "rows", "deltas", "delta_rows")
     new = {
@@ -1003,7 +1024,7 @@ def _merge_locked(
         new["buckets"][0], new["rows"][0] = dirname, 0
     new.update(
         _bookkeeping(
-            m, "incremental", written.get("wm"), upserts=written["upserts"],
+            m, "incremental", written.get("wm"), txn, upserts=written["upserts"],
             tombstones=written["tombstones"], buckets_touched=len(touched),
             rows_written=rows_written, folds=len(fold), rows=sum(new["rows"].values()),
         )

@@ -145,21 +145,18 @@ _LEFTOVER_SUFFIXES = (
 )
 
 
-def vacuum_dest(spark: SparkSession, path: str, keep_commit_markers: int = 1000) -> dict:
+def vacuum_dest(spark: SparkSession, path: str) -> dict:
     """Maintenance sweep for a swap-published destination: remove
     leftover staging/backup directories (a crash between write and
     swap strands them — they are never referenced by readers, only
-    re-created by the next write) and trim the streaming commit-marker
-    log to the newest `keep_commit_markers` batch ids (markers exist to
-    absorb redelivery of the LAST batch after a restart; anything far
-    older is dead weight on the namenode/listing).
+    re-created by the next write) and a stale merge lock.
 
     Safe to run concurrently with readers: nothing under the live
     destination directory itself is touched. Do NOT run concurrently
     with an in-flight merge on the same destination — the merge's own
     staging dir looks identical to a stranded one.
 
-    Returns {"dirs_removed": [...], "markers_removed": n}.
+    Returns {"dirs_removed": [...]}.
     """
     fs, path_cls = hadoop_fs(spark, path)
     base = path.rstrip("/")
@@ -169,15 +166,4 @@ def vacuum_dest(spark: SparkSession, path: str, keep_commit_markers: int = 1000)
         if fs.exists(p):
             fs.delete(p, True)
             removed.append(f"{base}.{suffix}")
-    markers_removed = 0
-    commits = path_cls(f"{base}.__commits__")
-    if fs.exists(commits):
-        ids = []
-        for status in fs.listStatus(commits):
-            name = status.getPath().getName()
-            if name.isdigit():
-                ids.append(int(name))
-        for batch_id in sorted(ids)[:-keep_commit_markers] if keep_commit_markers else sorted(ids):
-            fs.delete(path_cls(f"{base}.__commits__/{batch_id}"), False)
-            markers_removed += 1
-    return {"dirs_removed": removed, "markers_removed": markers_removed}
+    return {"dirs_removed": removed}

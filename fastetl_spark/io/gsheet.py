@@ -198,7 +198,8 @@ class GSheetToTableOperator:
     def execute(self, spark: SparkSession) -> int:
         from pyspark.sql import functions as F
 
-        from fastetl_spark.api import Engine, write_counted
+        from fastetl_spark.api import Engine
+        from fastetl_spark.io.writers import write_counted
 
         df = GSheetHook(spark, self.client).get_gsheet_df(self.sheet_name)
         if self.column_name_to_add:
@@ -215,8 +216,7 @@ class GSheetToCSVOperator:
     dest_path: str
 
     def execute(self, spark: SparkSession) -> int:
-        from fastetl_spark.api import write_counted
-        from fastetl_spark.io.writers import write_csv
+        from fastetl_spark.io.writers import write_counted, write_csv
 
         df = GSheetHook(spark, self.client).get_gsheet_df(self.sheet_name)
         return write_counted(df, lambda d: write_csv(d, self.dest_path))

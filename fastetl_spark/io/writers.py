@@ -11,9 +11,11 @@ Replaces the reference's insert paths:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
+
+from fastetl_spark.checkpointing import observed
 
 
 def select_intersection(df: DataFrame, dest_columns: list[str]) -> DataFrame:
@@ -43,6 +45,16 @@ def literal_frame(spark, schema: str | StructType, values: tuple | None = None) 
             for f, v in zip(schema.fields, values)
         ]
     )
+
+
+def write_counted(df: DataFrame, write) -> int:
+    """Run ``write(df)`` and return the rows it wrote, counted by an
+    observation on that write instead of a second run of the source
+    (which, for a JDBC source, is a second query whose count can differ
+    from the rows written)."""
+    obs = Observation()
+    write(df.observe(obs, F.count(F.lit(1)).alias("n_rows")))
+    return int(observed(obs, {"n_rows": 0})["n_rows"])
 
 
 def write_parquet(df: DataFrame, path: str, mode: str = "overwrite", partition_by: list[str] | None = None) -> None:
@@ -92,22 +104,6 @@ def write_jdbc(df: DataFrame, mode: str = "append", **options) -> None:
     df.write.format("jdbc").options(**write_jdbc_options(**options)).mode(mode).save()
 
 
-def read_parquet_if_exists(spark, path: str) -> DataFrame | None:
-    """Read a parquet destination, returning None ONLY when the path is
-    absent. Any other failure (corrupt files, permission, transient IO)
-    propagates — callers that treated every read error as "first run"
-    would silently overwrite previously merged data."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        return spark.read.parquet(path)
-    except AnalysisException as e:
-        msg = str(e)
-        if "PATH_NOT_FOUND" in msg or "Path does not exist" in msg:
-            return None
-        raise
-
-
 def atomic_overwrite(df: DataFrame, dest_path: str) -> int:
     """Overwrite `dest_path` without a window where readers see partial
     data: write to a staging dir, then swap directories. Plain parquet
@@ -119,7 +115,9 @@ def atomic_overwrite(df: DataFrame, dest_path: str) -> int:
     (file://, hdfs://, s3a://, ...), not just the driver's local POSIX
     tree. On object stores without atomic rename (S3) the rename is
     copy+delete — still a far smaller window than a full in-place
-    overwrite, but prefer a table format with a commit log there."""
+    overwrite, but prefer a table format with a commit log there.
+
+    Returns the rows written, counted on the write (``write_counted``)."""
     spark = df.sparkSession
     jvm = spark.sparkContext._jvm
     jsc = spark.sparkContext._jsc
@@ -131,8 +129,7 @@ def atomic_overwrite(df: DataFrame, dest_path: str) -> int:
     fs = dest.getFileSystem(conf)
     if fs.exists(staging):
         fs.delete(staging, True)
-    df.write.mode("overwrite").parquet(staging.toString())
-    n = spark.read.parquet(staging.toString()).count()
+    n = write_counted(df, lambda d: d.write.mode("overwrite").parquet(staging.toString()))
     if fs.exists(backup):
         fs.delete(backup, True)
     if fs.exists(dest):

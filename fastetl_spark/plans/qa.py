@@ -17,6 +17,8 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from fastetl_spark.io.writers import literal_frame
+
 
 class QALogLevel(IntEnum):
     """patchwork.py:38-42"""
@@ -27,18 +29,11 @@ class QALogLevel(IntEnum):
     ADD_COLUMN = 4
 
 
-QA_COLUMNS = [
-    "primary_keys_labels",
-    "primary_keys_values",
-    "esquema",
-    "tabela",
-    "coluna",
-    "valor_original",
-    "valor_considerado",
-    "nivel_erro",
-    "motivo",
-    "datahora_verificacao",
-]
+QA_SCHEMA = (
+    "primary_keys_labels string, primary_keys_values string, esquema string,"
+    " tabela string, coluna string, valor_original string, valor_considerado string,"
+    " nivel_erro int, motivo string, datahora_verificacao timestamp"
+)
 
 
 def qa_rows(
@@ -69,15 +64,6 @@ def qa_rows(
     )
 
 
-def empty_qa(spark) -> DataFrame:
-    return spark.createDataFrame(
-        [],
-        "primary_keys_labels string, primary_keys_values string, esquema string,"
-        " tabela string, coluna string, valor_original string, valor_considerado string,"
-        " nivel_erro int, motivo string, datahora_verificacao timestamp",
-    )
-
-
 class BaseCleaner:
     """Cleaner protocol: subclass and implement clean(df) -> (df, qa_df)
     (mirrors BaseDataCleaner, patchwork.py:264-345, as pure transforms)."""
@@ -100,7 +86,8 @@ class CleaningPipeline:
     """Chain cleaners; QA logs union across stages. The reference
     checkpointed each stage to a tmp-dir file (patchwork.py module
     docstring); here stages stay distributed, with optional parquet
-    checkpointing of patch/QA artifacts handled by plans/patch.py."""
+    checkpointing of patch/QA artifacts handled by plans/patch.py. With
+    no cleaners the QA log is an empty frame of ``QA_SCHEMA``."""
 
     def __init__(self, cleaners: list[BaseCleaner]):
         self.cleaners = cleaners
@@ -110,5 +97,6 @@ class CleaningPipeline:
         for cleaner in self.cleaners:
             df, qa = cleaner.clean(df)
             qa_parts.append(qa)
-        qa_all = reduce(lambda a, b: a.unionByName(b), qa_parts) if qa_parts else None
-        return df, qa_all
+        if not qa_parts:
+            return df, literal_frame(df.sparkSession, QA_SCHEMA)
+        return df, reduce(DataFrame.unionByName, qa_parts)

@@ -87,6 +87,17 @@ def dedup_stream(stream: DataFrame, keys: list[str], watermark: str = "2 hours")
     return stream.withWatermark("ts", watermark).dropDuplicates(keys)
 
 
+def _batch_txn(batch_df: DataFrame, batch_id: int) -> str:
+    """The identity of a micro-batch's write, the ``txn`` a keyed sink
+    commits with its data: ``<query id>:<batch id>``. The query id is
+    kept in the stream's checkpoint, so a replay from it has the same
+    one, and a stream restarted on a new checkpoint does not collide
+    with the batch ids of the old one. A sink body called outside a
+    stream has no query id and uses the batch id alone."""
+    qid = batch_df.sparkSession.sparkContext.getLocalProperty("sql.streaming.queryId")
+    return f"{qid}:{int(batch_id)}" if qid else str(int(batch_id))
+
+
 def make_merge_batch(dest_path: str, keys: list[str], n_buckets: int | None = None):
     """The foreachBatch merge body, as a standalone callable so batch
     redelivery can be tested directly (and reused outside a stream).
@@ -100,33 +111,25 @@ def make_merge_batch(dest_path: str, keys: list[str], n_buckets: int | None = No
     arbitrary. An existing root that is not bucketed on ``keys`` raises
     ``ValueError`` (``merge_dest_spec``).
 
-    Redelivery contract: a committed batch_id is recorded as a marker
-    file AFTER its merge publishes (``dest.__commits__/<batch_id>``), so
-    a redelivered micro-batch — Structured Streaming replays the last
-    batch after any restart that crashed between sink write and
-    checkpoint commit — is skipped instead of re-merged. The marker is
-    written last: a crash between merge and marker re-applies the merge
-    on replay, which is safe because the merge is idempotent (keyed
-    upsert), so the destination converges either way — effectively-once
-    on top of the at-least-once trigger.
+    Replay contract of the keyed sinks (this, ``make_cdc_batch`` and
+    ``foreach_batch_agg_maintain``): the batch's ``_batch_txn`` rides
+    the manifest commit that publishes it. Structured Streaming replays
+    the last batch after a restart that crashed between the sink write
+    and the checkpoint commit; that replay finds its ``txn`` in the
+    root's load records and writes nothing, and one that crashed before
+    the manifest commit merges once. Either way the destination holds
+    the batch exactly once.
     """
     from fastetl_spark.io.bucketed import merge_dest_spec, partial_merge, write_bucketed
-    from fastetl_spark.io.fsutil import hadoop_fs, write_text_file
-
-    commits_dir = dest_path.rstrip("/") + ".__commits__"
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        marker = f"{commits_dir}/{int(batch_id)}"
-        fs, path_cls = hadoop_fs(spark, dest_path)
-        if fs.exists(path_cls(marker)):
-            return  # redelivered batch: already merged and committed
+        txn = _batch_txn(batch_df, batch_id)
         batch = batch_df.dropDuplicates(keys)
         if merge_dest_spec(spark, dest_path, keys) is None:
-            write_bucketed(batch, dest_path, keys, n_buckets or 1)
+            write_bucketed(batch, dest_path, keys, n_buckets or 1, txn=txn)
         else:
-            partial_merge(spark, dest_path, batch)
-        write_text_file(spark, marker, "")  # commit marker, after publish
+            partial_merge(spark, dest_path, batch, txn=txn)
 
     return merge_batch
 
@@ -142,9 +145,9 @@ def foreach_batch_merge(
     lands through ``make_merge_batch``, so it writes one delta for the
     buckets it touches — O(|batch|) per trigger, not O(|destination|).
     ``n_buckets`` sizes the root the first batch creates (1 when unset);
-    a micro-batch holds one row per key once deduplicated. Batch
-    redelivery after a restart is absorbed by the commit-marker log.
-    Returns the StreamingQuery."""
+    a micro-batch holds one row per key once deduplicated. A replayed
+    batch is skipped by the ``txn`` its first merge committed
+    (``make_merge_batch``). Returns the StreamingQuery."""
     return (
         stream.writeStream.foreachBatch(make_merge_batch(dest_path, keys, n_buckets))
         .option("checkpointLocation", checkpoint_dir)
@@ -193,19 +196,31 @@ def foreach_batch_agg_maintain(
     checkpoint_dir: str,
 ):
     """Streaming materialized-aggregate maintenance: each micro-batch is
-    reduced to PARTIAL aggregates (month, n_orders-style monoid columns)
-    and merged into the destination aggregate with
+    reduced to PARTIAL aggregates per ``hour`` (n_orders, total: monoid
+    columns) and merged into the destination aggregate with
     sync.merge_partial_aggs — the streaming twin of
-    incremental_agg_merge. Only aggregate rows are ever rewritten; the
-    raw stream is touched once per batch. Complement to
+    incremental_agg_merge. The aggregate is a bucketed root keyed on
+    ``hour`` (one bucket; the first batch creates it): a batch reads the
+    hours it touches with ``read_buckets_for_keys`` and lands their new
+    sums through ``partial_merge``, so only the touched aggregate rows
+    are rewritten and the raw stream is touched once per batch. The
+    batch's txn rides the commit (``make_merge_batch``'s replay
+    contract), so a replay does not add its partial sums twice. Read the
+    aggregate with ``read_bucketed``. Complement to
     windowed_event_counts: that holds state in the engine's state store,
     this keeps the aggregate as a queryable parquet table with bounded
     rewrite cost (aggregate cardinality, not stream volume)."""
-    from fastetl_spark.io.writers import atomic_overwrite, read_parquet_if_exists
+    from fastetl_spark.io.bucketed import (
+        merge_dest_spec,
+        partial_merge,
+        read_buckets_for_keys,
+        write_bucketed,
+    )
     from fastetl_spark.operators.sync import merge_partial_aggs
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
+        txn = _batch_txn(batch_df, batch_id)
         partial = (
             batch_df.select(
                 F.date_trunc("hour", F.col("ts")).alias("hour"),
@@ -214,13 +229,11 @@ def foreach_batch_agg_maintain(
             .groupBy("hour")
             .agg(F.count(F.lit(1)).alias("n_orders"), F.sum("__v").alias("total"))
         )
-        dest = read_parquet_if_exists(spark, dest_path)
-        merged = (
-            partial
-            if dest is None
-            else merge_partial_aggs(dest, partial.select(*dest.columns), ["hour"])
-        )
-        atomic_overwrite(merged, dest_path)
+        if merge_dest_spec(spark, dest_path, ["hour"]) is None:
+            write_bucketed(partial, dest_path, ["hour"], 1, txn=txn)
+            return
+        prior = read_buckets_for_keys(spark, dest_path, partial.select("hour"))
+        partial_merge(spark, dest_path, merge_partial_aggs(prior, partial, ["hour"]), txn=txn)
 
     return (
         stream.writeStream.foreachBatch(merge_batch)
@@ -271,19 +284,24 @@ def foreach_batch_quarantine(
     checkpoint_dir: str,
 ):
     """Streaming validate-and-quarantine: each micro-batch is split by
-    plans/quarantine.validate_split — valid rows append to the
-    destination, rejects (with their failed-rule tags) append to the
-    quarantine path. The tagged frame is persisted so the two sinks
-    share ONE evaluation of the rule predicates, and appends keep the
-    sink idempotent per batch file (no read-modify-write)."""
+    plans/quarantine.validate_split — valid rows land in the
+    destination, rejects (with their failed-rule tags) in the
+    quarantine path, each through a ``make_batch_partition_sink`` (the
+    batch's own ``__batch=<id>/`` partition, so a replay converges).
+    The batch is persisted so the two sinks share ONE evaluation of the
+    rule predicates. Read both paths with partition discovery and drop
+    ``__batch``."""
     from fastetl_spark.plans.quarantine import validate_split
+
+    valid_sink = make_batch_partition_sink(valid_path)
+    reject_sink = make_batch_partition_sink(reject_path)
 
     def split_batch(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.persist()
         try:
             valid, rejects = validate_split(batch_df, rules)
-            valid.write.mode("append").parquet(valid_path)
-            rejects.write.mode("append").parquet(reject_path)
+            valid_sink(valid, batch_id)
+            reject_sink(rejects, batch_id)
         finally:
             batch_df.unpersist()
 
@@ -604,12 +622,12 @@ def streaming_upsert_sync_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     3 slice files and streamed (maxFilesPerTrigger=1) through
     foreach_batch_merge into a KEY-BUCKETED parquet destination, so
     three separate micro-batches each run the touched-buckets-only
-    partial_merge with commit markers. Each key appears in exactly one
-    slice, so the final destination state is batch-order independent:
-    the per-key winner set the oracle derives with one window. Proves
-    the full §2.9-made-continuous path (file stream → foreachBatch →
-    bucketed partial merge → commit log) end-to-end, not just its
-    pieces."""
+    partial_merge, the batch's txn committed with its data. Each key
+    appears in exactly one slice, so the final destination state is
+    batch-order independent: the per-key winner set the oracle derives
+    with one window. Proves the full §2.9-made-continuous path (file
+    stream → foreachBatch → bucketed partial merge → manifest commit)
+    end-to-end, not just its pieces."""
     from pyspark.sql import Window
 
     from fastetl_spark.io.bucketed import read_bucketed
@@ -660,7 +678,7 @@ FROM tagged
 @query("streaming_quarantine_split", _STREAM_QUARANTINE_SQL)
 def streaming_quarantine_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """foreach_batch_quarantine under the gate: the events stream is
-    split per micro-batch into valid/reject parquet appends; the final
+    split per micro-batch into valid/reject batch partitions; the final
     union of both sinks (tagged with which side each row landed on and
     the reject's failed-rule list) must equal the batch rule evaluation
     the oracle computes — no row lost, none duplicated, every reject
@@ -717,9 +735,10 @@ def streaming_agg_maintain_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-batches (split by event_id % 3 — arbitrary, since COUNT/SUM
     partials form a commutative monoid), each batch merged into the
     materialized hourly aggregate via merge_partial_aggs. The final
-    parquet aggregate must equal the one-shot GROUP BY the oracle
+    bucketed aggregate must equal the one-shot GROUP BY the oracle
     computes — the exactness claim behind maintaining a 100 TB rollup
     from increments instead of rescanning the base table."""
+    from fastetl_spark.io.bucketed import read_bucketed
     from fastetl_spark.io.readers import read_table
 
     root = _scratch_root(sf_dir, "stream_agg")
@@ -734,8 +753,7 @@ def streaming_agg_maintain_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     with _pinned_state(spark):
         q = foreach_batch_agg_maintain(stream, dest, ckpt)
         q.awaitTermination()
-    agg = spark.read.parquet(dest)
-    return agg.select(
+    return read_bucketed(spark, dest).select(
         "hour",
         "n_orders",
         F.round(F.col("total"), 2).cast("double").alias("total_value"),
@@ -750,21 +768,14 @@ def make_cdc_batch(dest_path: str, keys: list[str], op_col: str = "op"):
     split on ``op_col`` — 'D' rows become the deletion feed, everything
     else upserts — and applied to the key-bucketed destination in ONE
     partial_merge call (touched buckets only, deletes as anti-join
-    retain). Same commit-marker redelivery contract as
-    make_merge_batch; the destination must be initialized with
+    retain). Same replay contract as make_merge_batch: the batch's txn
+    rides the commit. The destination must be initialized with
     write_bucketed first (a CDC feed has no meaningful 'first full
     load' batch)."""
     from fastetl_spark.io.bucketed import partial_merge, read_bucket_spec
-    from fastetl_spark.io.fsutil import hadoop_fs, write_text_file
-
-    commits_dir = dest_path.rstrip("/") + ".__commits__"
 
     def cdc_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        marker = f"{commits_dir}/{int(batch_id)}"
-        fs, path_cls = hadoop_fs(spark, dest_path)
-        if fs.exists(path_cls(marker)):
-            return  # redelivered batch: already applied and committed
         if read_bucket_spec(spark, dest_path) is None:
             raise ValueError(
                 f"{dest_path} is not an initialized bucketed destination; "
@@ -773,8 +784,7 @@ def make_cdc_batch(dest_path: str, keys: list[str], op_col: str = "op"):
         batch = batch_df.dropDuplicates(keys)
         ups = batch.filter(F.col(op_col) != "D").drop(op_col)
         dels = batch.filter(F.col(op_col) == "D").select(*keys)
-        partial_merge(spark, dest_path, ups, deleted_keys=dels)
-        write_text_file(spark, marker, "")  # commit marker, after publish
+        partial_merge(spark, dest_path, ups, deleted_keys=dels, txn=_batch_txn(batch_df, batch_id))
 
     return cdc_batch
 
@@ -815,7 +825,7 @@ def streaming_cdc_apply_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     (maxFilesPerTrigger=1) through foreach_batch_cdc_apply into a
     key-bucketed destination initialized from the base table. Each
     micro-batch runs ONE partial_merge (upserts + anti-join deletes,
-    touched buckets only, commit marker after publish). The oracle
+    touched buckets only, the batch's txn in its commit). The oracle
     derives the final state arithmetically, so a lost delete, a
     double-applied update, or a leaked base row all fail the hash."""
     from fastetl_spark.io.bucketed import read_bucketed, write_bucketed
@@ -899,26 +909,15 @@ def streaming_chunk_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def make_view_delta_batch(dest_path: str, dim: DataFrame, on: str):
     """foreachBatch body for incremental JOIN-VIEW maintenance: each
-    fact micro-batch joins the BROADCAST static dimension and APPENDS
-    its delta rows to the view (operators/ivm.join_view_delta's dA><B
-    term — the only term a fact-only stream produces). A per-batch
-    commit marker makes redelivered batches no-ops, so the append-only
-    view never double-counts a delta."""
-    from fastetl_spark.io.fsutil import hadoop_fs, write_text_file
-
-    commits_dir = dest_path.rstrip("/") + ".__commits__"
-
-    def view_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        marker = f"{commits_dir}/{int(batch_id)}"
-        fs, path_cls = hadoop_fs(spark, dest_path)
-        if fs.exists(path_cls(marker)):
-            return  # redelivered batch: delta already appended
-        delta = batch_df.join(F.broadcast(dim), on)
-        delta.write.mode("append").parquet(dest_path)
-        write_text_file(spark, marker, "")
-
-    return view_batch
+    fact micro-batch joins the BROADCAST static dimension and lands its
+    delta rows (operators/ivm.join_view_delta's dA><B term — the only
+    term a fact-only stream produces) as the batch's own partition
+    (``make_batch_partition_sink``), so a replayed batch rewrites its
+    partition and the view never double-counts a delta. Read the view
+    with partition discovery and drop ``__batch``."""
+    return make_batch_partition_sink(
+        dest_path, transform=lambda df: df.join(F.broadcast(dim), on)
+    )
 
 
 _STREAM_IVM_SQL = """
@@ -933,12 +932,13 @@ def streaming_ivm_join_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders><customer JOIN VIEW. The view is initialized from the
     pre-cutoff orders, then the post-cutoff orders arrive as 3 real
     micro-batches (maxFilesPerTrigger=1) and each batch's delta —
-    batch rows joined to the broadcast customer dimension — is
-    appended under a redelivery commit marker. The oracle computes the
-    FULL join from scratch, so a dropped batch, a double-appended
-    delta, or a stale dimension row all fail the hash. This is the
-    streaming half of the ivm_join_delta algebra (operators/ivm.py):
-    per-trigger work is O(|batch|), the view is never rebuilt."""
+    batch rows joined to the broadcast customer dimension — lands as
+    the batch's own partition; the backfill is partition -1. The oracle
+    computes the FULL join from scratch, so a dropped batch, a
+    double-landed delta, or a stale dimension row all fail the hash.
+    This is the streaming half of the ivm_join_delta algebra
+    (operators/ivm.py): per-trigger work is O(|batch|), the view is
+    never rebuilt."""
     from fastetl_spark.io.readers import read_table
     from fastetl_spark.operators.ivm import _ORD_CUTOFF
 
@@ -953,8 +953,8 @@ def streaming_ivm_join_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     cutoff = F.lit(_ORD_CUTOFF).cast("timestamp")
     base = o.filter(F.col("o_orderdate") < cutoff).drop("o_orderdate")
     inc = o.filter(F.col("o_orderdate") >= cutoff).drop("o_orderdate")
-    # initialize the view with the base join (one-time backfill)
-    base.join(F.broadcast(dim), "o_custkey").write.mode("overwrite").parquet(dest)
+    view_batch = make_view_delta_batch(dest, dim, "o_custkey")
+    view_batch(base, -1)  # the one-time backfill, a partition of its own
     _stage_slices(inc, root, in_dir, F.col("o_orderkey") % 3)
     stream = (
         spark.readStream.schema(inc.schema)
@@ -963,9 +963,7 @@ def streaming_ivm_join_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     with _pinned_state(spark):
         q = (
-            stream.writeStream.foreachBatch(
-                make_view_delta_batch(dest, dim, "o_custkey")
-            )
+            stream.writeStream.foreachBatch(view_batch)
             .option("checkpointLocation", ckpt)
             .trigger(availableNow=True)
             .start()
@@ -1089,8 +1087,8 @@ def make_posting_batch(dest_path: str):
     """foreachBatch body for incremental INVERTED-INDEX maintenance:
     each document micro-batch contributes exactly its own posting rows
     (doc_id, dl, term, tf) — no read-modify-write, because a document's
-    postings are independent of the rest of the corpus. One commit
-    protocol for all per-batch-partition sinks: this is
+    postings are independent of the rest of the corpus. One replay
+    contract for all per-batch-partition sinks: this is
     make_batch_partition_sink with the posting projection as the
     per-batch transform."""
     from fastetl_spark.operators.retrieval import doc_posting
@@ -1111,8 +1109,8 @@ def _stream_posting_sql() -> str:
 def streaming_posting_index_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The fourteenth streaming gate: INVERTED-INDEX maintenance. The
     documents table arrives as 3 real micro-batches
-    (maxFilesPerTrigger=1); each batch appends its own posting rows
-    under a commit marker; then the BM25 query workload is scored FROM
+    (maxFilesPerTrigger=1); each batch writes its own posting rows
+    as its own partition; then the BM25 query workload is scored FROM
     the maintained index (bm25_from_posting re-derives n_docs/avgdl/df
     from the index itself) and must hash-match the from-scratch oracle
     (_BM25_QJ_SQL over the whole corpus). A lost batch shifts df/avgdl
@@ -1529,30 +1527,21 @@ FROM accepted GROUP BY 1, 2
 
 def make_batch_partition_sink(dest_path: str, transform=None):
     """foreachBatch body that lands each micro-batch (optionally passed
-    through ``transform``) under an own partition directory
-    ``__batch=<id>/`` with a commit marker — THE effectively-once
-    recipe for per-batch-partition sinks, shared by the posting-index
-    gate (make_posting_batch) and the lateness gate's update-mode
-    fold. Idempotency does NOT rest on the marker alone (an append +
-    marker-after-write leaves a crash window that would double-append
-    on redelivery): every batch OVERWRITES its own partition, so
-    re-running a batch — marker present or not — converges to the same
-    files; the marker only short-circuits the rewrite."""
-    from fastetl_spark.io.fsutil import hadoop_fs, write_text_file
-
-    commits_dir = dest_path.rstrip("/") + ".__commits__"
+    through ``transform``) in its own partition directory
+    ``__batch=<id>/``: the replay contract of the per-batch sinks
+    (make_posting_batch, make_view_delta_batch,
+    foreach_batch_quarantine and the lateness gate's update-mode fold).
+    Every batch OVERWRITES its own partition, so a replayed batch —
+    Structured Streaming re-runs the last one after a crash before its
+    checkpoint commit — rewrites the same files, and the sink converges
+    with nothing to record. Read the destination with partition
+    discovery and drop ``__batch``."""
 
     def sink_batch(batch_df: DataFrame, batch_id: int) -> None:
-        bspark = batch_df.sparkSession
-        marker = f"{commits_dir}/{int(batch_id)}"
-        fs, path_cls = hadoop_fs(bspark, dest_path)
-        if fs.exists(path_cls(marker)):
-            return  # redelivered batch: partition already written
         out = transform(batch_df) if transform is not None else batch_df
         out.write.mode("overwrite").parquet(
             f"{dest_path.rstrip('/')}/__batch={int(batch_id)}"
         )
-        write_text_file(bspark, marker, "")
 
     return sink_batch
 

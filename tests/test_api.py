@@ -91,6 +91,27 @@ def test_patchwork_operator(spark, sf_dir, tmp_path):
     assert out[2] is None and out[3] == "RJ"
 
 
+def test_patchwork_operator_without_cleaners_writes_an_empty_qa_log(spark, tmp_path):
+    """With its default ``cleaners=[]`` the operator copies the source
+    and lands an empty QA log with the QA schema."""
+    from pyspark.sql.types import StructType
+
+    from fastetl_spark.plans.qa import QA_SCHEMA
+
+    spark.createDataFrame([(1, "SP"), (2, "RJ")], "id long, uf string").write.parquet(str(tmp_path / "src"))
+    op = PatchworkOperator(
+        source={"path": str(tmp_path / "src")},
+        consolidated_path=str(tmp_path / "consolidated"),
+        qa_path=str(tmp_path / "qa"),
+    )
+    assert op.execute(spark) == (2, 0)
+    qa = spark.read.parquet(str(tmp_path / "qa"))
+    assert qa.count() == 0
+    assert [(f.name, f.dataType) for f in qa.schema] == [
+        (f.name, f.dataType) for f in StructType.fromDDL(QA_SCHEMA)
+    ]
+
+
 def test_engine_sql_passthrough(spark, sf_dir):
     from fastetl_spark.io.readers import register_views
 

@@ -721,8 +721,8 @@ def test_v2_keep_gens_widens_rollback_window(spark, tmp_path):
 
 
 def test_vacuum_dest_removes_leftovers_keeps_data(spark, tmp_path):
-    """Stranded staging/backup dirs and old commit markers go; the live
-    destination and the newest markers stay."""
+    """Stranded staging/backup dirs go; the live destination stays, and
+    so do the txns of its load records."""
     import os
 
     from fastetl_spark.io.fsutil import vacuum_dest
@@ -736,14 +736,10 @@ def test_vacuum_dest_removes_leftovers_keeps_data(spark, tmp_path):
     os.makedirs(dest + ".__staging__/x")
     os.makedirs(dest + ".__old__")
 
-    stats = vacuum_dest(spark, dest, keep_commit_markers=2)
+    stats = vacuum_dest(spark, dest)
     assert not os.path.exists(dest + ".__staging__")
     assert not os.path.exists(dest + ".__old__")
-    assert stats["markers_removed"] == 3
-    kept = sorted(
-        f for f in os.listdir(dest + ".__commits__") if not f.startswith(".")
-    )
-    assert kept == ["3", "4"]
+    assert sorted(stats["dirs_removed"]) == [dest + ".__old__", dest + ".__staging__"]
     assert read_bucketed(spark, dest).count() == 5
     # redelivery of a RETAINED batch is still absorbed after the vacuum
     merge(spark.createDataFrame([(4, "XX")], "id long, v string"), 4)

@@ -269,26 +269,6 @@ def test_watermark_store_typed_datetime(spark, tmp_path):
     assert got == wm and isinstance(got, dt.datetime)
 
 
-def test_read_parquet_if_exists(spark, sf_dir, tmp_path):
-    """None ONLY for a missing path; any other read failure propagates
-    (callers treating every error as 'first run' would silently drop
-    previously merged data)."""
-    import pytest
-
-    from fastetl_spark.io.writers import read_parquet_if_exists
-
-    assert read_parquet_if_exists(spark, str(tmp_path / "nope")) is None
-    ok = read_parquet_if_exists(spark, f"{sf_dir}/region.parquet")
-    assert ok is not None and ok.count() == 5
-    bad = tmp_path / "corrupt"
-    bad.mkdir()
-    (bad / "part-00000.parquet").write_bytes(b"garbage bytes")
-    with pytest.raises(Exception):
-        df = read_parquet_if_exists(spark, str(bad))
-        if df is not None:  # schema inference may be lazy — force the read
-            df.count()
-
-
 def test_watermark_store_corruption_raises(spark, tmp_path):
     """Storage corruption must NOT read as 'no watermark' (which would
     silently trigger a full re-sync)."""

@@ -15,9 +15,11 @@ upsert/delete sequences (re-inserts after deletes, deletes of absent
 keys, emptied buckets, forced folds) match a Python model through
 ``read_bucketed``,
 ``read_buckets_for_keys``, ``read_bucketed_at`` and the manifest rows;
-shards read their own rows; a read past ``BROADCAST_DELTA_ROWS`` does
-not broadcast; a sparse destination folds only the buckets without a
-base; and the sync phases name their Spark jobs.
+a keyed stream sink's batch killed before or after its commit and
+replayed lands once; shards read their own rows; a read past
+``BROADCAST_DELTA_ROWS`` does not broadcast; a sparse destination folds
+only the buckets without a base; and the sync phases name their Spark
+jobs.
 """
 
 from __future__ import annotations
@@ -284,6 +286,48 @@ def test_first_sync_crash_at_each_step_then_rerun_converges(
     assert eng.sync({"path": src2}, {"path": dest}, KEYS, "ts") == 39
     oracle = incremental_sync(want, spark.read.parquet(src2), KEYS, "ts")
     assert _synced(spark, dest) == (_rows(oracle), 2)
+
+
+def _stream_batch(spark, sink: str, dest: str):
+    """The body of a keyed stream sink over ``dest`` and its first
+    batch (``ROUNDS[0]``, deletes only for the CDC feed, which carries
+    no key twice), with the state one application of it leaves."""
+    from fastetl_spark.streaming.stream_ops import make_cdc_batch, make_merge_batch
+
+    ups, tag, dels = ROUNDS[0]
+    base = _frame(spark, range(120), "base")
+    if sink == "merge":
+        batch = _frame(spark, ups, tag)
+        return make_merge_batch(dest, KEYS), batch, _rows(merge_upsert(base, batch, KEYS))
+    upserts = _frame(spark, [i for i in ups if i not in dels], tag)
+    feed = upserts.withColumn("op", F.lit("U")).unionByName(
+        _keys(spark, dels).withColumn("v", F.lit(None).cast("string")).withColumn("op", F.lit("D"))
+    )
+    want = delete_sync(merge_upsert(base, upserts, KEYS), _keys(spark, dels), KEYS)
+    return make_cdc_batch(dest, KEYS), feed, _rows(want)
+
+
+@pytest.mark.parametrize("sink", ["merge", "cdc"])
+@pytest.mark.parametrize("committed", [False, True], ids=["before_commit", "after_commit"])
+def test_stream_batch_killed_then_replayed_lands_once(spark, tmp_path, monkeypatch, sink, committed):
+    """A keyed stream sink's batch killed before its manifest commit, or
+    after it (the checkpoint never commits), then replayed with the same
+    batch id as Structured Streaming does: the destination holds the
+    batch once, and a replay of a committed batch writes no new
+    generation."""
+    dest = str(tmp_path / "dest")
+    write_bucketed(_frame(spark, range(120), "base"), dest, KEYS, 4)
+    body, batch, want = _stream_batch(spark, sink, dest)
+    _crash_in(monkeypatch, "_commit_manifest", after_call=committed)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        body(batch, 0)
+    monkeypatch.undo()
+    assert B.list_generations(spark, dest)[-1] == (2 if committed else 1)
+
+    body(batch, 0)
+    assert B.list_generations(spark, dest)[-1] == 2
+    assert read_manifest(spark, dest)["loads"][-1]["txn"] == "0"
+    _assert_converged(spark, dest, want)
 
 
 def test_round_kinds_and_rows_written(spark, tmp_path):

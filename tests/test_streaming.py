@@ -15,7 +15,12 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
-from fastetl_spark.io.bucketed import read_bucket_spec, read_bucketed, read_manifest
+from fastetl_spark.io.bucketed import (
+    list_generations,
+    read_bucket_spec,
+    read_bucketed,
+    read_manifest,
+)
 from fastetl_spark.io.readers import read_table
 from fastetl_spark.streaming.stream_ops import (
     dedup_stream,
@@ -209,7 +214,7 @@ def test_foreach_batch_agg_maintain_matches_batch(spark, events_dir, tmp_path):
 
     got = {
         r["hour"]: (r["n_orders"], r["total"])
-        for r in spark.read.parquet(dest).collect()
+        for r in read_bucketed(spark, dest).collect()
     }
     expected = {
         r["hour"]: (r["n_orders"], r["total"])
@@ -250,10 +255,8 @@ def test_foreach_batch_quarantine_splits_stream(spark, events_dir, tmp_path):
 def test_merge_batch_redelivery_is_skipped(spark, tmp_path):
     """Structured Streaming replays the last micro-batch after a restart
     that crashed between sink write and checkpoint commit. A replayed
-    (batch_id, data) must be a no-op: the commit marker written after
-    the first merge short-circuits the redelivery."""
-    import os
-
+    (batch_id, data) must be a no-op: the batch's txn, committed in the
+    load record of the first merge, short-circuits the redelivery."""
     from fastetl_spark.streaming.stream_ops import make_merge_batch
 
     dest = str(tmp_path / "dest")
@@ -273,7 +276,7 @@ def test_merge_batch_redelivery_is_skipped(spark, tmp_path):
     merge(spark.createDataFrame([(2, "b2"), (3, "c")], "id long, v string"), 1)
     got = {r.id: r.v for r in read_bucketed(spark, dest).collect()}
     assert got == {1: "a", 2: "b2", 3: "c"}
-    assert os.path.isdir(dest + ".__commits__")
+    assert read_manifest(spark, dest)["loads"][-1]["txn"] == "1"
 
 
 def test_merge_batch_first_batch_creates_bucketed_root(spark, tmp_path):
@@ -297,7 +300,7 @@ def test_merge_batch_first_batch_creates_bucketed_root(spark, tmp_path):
     spark.createDataFrame([(1, "a")], "id long, v string").write.parquet(plain)
     with pytest.raises(ValueError, match="bucketize"):
         make_merge_batch(plain, keys=["id"])(spark.createDataFrame([(2, "b")], "id long, v string"), 0)
-    assert not os.path.exists(plain + ".__commits__")
+    assert sorted(os.listdir(tmp_path)) == ["dest", "plain"]
 
 
 def test_cdc_batch_applies_ops_and_skips_redelivery(spark, tmp_path):
@@ -327,6 +330,8 @@ def test_cdc_batch_applies_ops_and_skips_redelivery(spark, tmp_path):
     state = {r.id: r.v for r in read_bucketed(spark, dest).collect()}
     assert state[1] == 111 and 2 not in state and state[99] == 990
     assert state[3] == 30  # untouched
+    m = read_manifest(spark, dest)
+    assert m["loads"][-1]["txn"] == "0"
 
     # redelivery of batch 0 with a DIFFERENT payload: skipped entirely
     poison = spark.createDataFrame(
@@ -335,23 +340,66 @@ def test_cdc_batch_applies_ops_and_skips_redelivery(spark, tmp_path):
     apply_batch(poison, 0)
     state2 = {r.id: r.v for r in read_bucketed(spark, dest).collect()}
     assert state2 == state
+    assert read_manifest(spark, dest)["gen"] == m["gen"]
+
+
+def _drop_side_files(dest: str) -> None:
+    """A crash after a sink's data write and before anything it records
+    beside ``dest``: remove every ``<dest>.*`` sibling."""
+    import glob
+    import shutil
+
+    for p in glob.glob(glob.escape(dest) + ".*"):
+        shutil.rmtree(p)
+
+
+def _replay_last_batch(ckpt: str) -> None:
+    """A crash after the sink of the last micro-batch and before its
+    checkpoint commit: the next start of the query replays that batch."""
+    commits = os.path.join(ckpt, "commits")
+    last = max(int(n) for n in os.listdir(commits) if n.isdigit())
+    for name in (str(last), f".{last}.crc"):
+        if os.path.exists(os.path.join(commits, name)):
+            os.remove(os.path.join(commits, name))
+
+
+def _two_file_stream(spark, path: str, rows: list[tuple]):
+    """An events stream of two files, one micro-batch each."""
+    from fastetl_spark.streaming.stream_ops import EVENTS_SCHEMA
+
+    half = len(rows) // 2
+    for part in (rows[:half], rows[half:]):
+        spark.createDataFrame(part, EVENTS_SCHEMA).coalesce(1).write.mode("append").parquet(path)
+    return read_events_stream(spark, path, max_files_per_trigger=1)
+
+
+def _events(n: int, t0=dt.datetime(2024, 1, 1)) -> list[tuple]:
+    return [
+        (i, t0 + dt.timedelta(minutes=20 * i), i % 3, "click" if i % 4 else "nope", float(i % 5), None)
+        for i in range(n)
+    ]
 
 
 def test_ivm_view_batch_redelivery_noop(spark, tmp_path):
+    """A view-delta batch replayed after a crash that left nothing
+    recorded beside the view lands once: each batch, and the backfill,
+    is a partition of its own that a replay rewrites."""
     from fastetl_spark.streaming.stream_ops import make_view_delta_batch
 
     dim = spark.createDataFrame([(1, "a"), (2, "b")], "k long, seg string")
     dest = str(tmp_path / "view")
-    spark.createDataFrame([(10, 1)], "oid long, k long").join(
-        dim, "k"
-    ).write.parquet(dest)
-    batch = spark.createDataFrame([(11, 2), (12, 1)], "oid long, k long")
     apply_batch = make_view_delta_batch(dest, dim, "k")
+    apply_batch(spark.createDataFrame([(10, 1)], "oid long, k long"), -1)  # backfill
+    batch = spark.createDataFrame([(11, 2), (12, 1)], "oid long, k long")
+
+    def view():
+        return sorted(map(tuple, spark.read.parquet(dest).drop("__batch").collect()))
+
     apply_batch(batch, 7)
-    once = sorted(map(tuple, spark.read.parquet(dest).collect()))
-    apply_batch(batch, 7)  # redelivered micro-batch must be a no-op
-    twice = sorted(map(tuple, spark.read.parquet(dest).collect()))
-    assert once == twice
+    once = view()
+    _drop_side_files(dest)
+    apply_batch(batch, 7)  # replayed micro-batch
+    assert view() == once
     assert len(once) == 3  # base row + two delta rows
 
 
@@ -377,35 +425,101 @@ def test_posting_batch_redelivery_noop(spark, tmp_path):
         map(tuple, doc_posting(docs1.unionByName(docs2)).collect())
     )
     assert got == want
-    # crash-window redelivery: marker missing but partition written —
+    # crash-window redelivery: nothing recorded beside the index —
     # re-running the batch must converge, not double-append
-    import os
-    import shutil
-
-    shutil.rmtree(dest + ".__commits__", ignore_errors=True)
+    _drop_side_files(dest)
     batch(docs1, 0)
     again = sorted(map(tuple, spark.read.parquet(dest).drop("__batch").collect()))
     assert again == want
 
 
 def test_batch_partition_sink_redelivery_noop(spark, tmp_path):
-    """make_batch_partition_sink (the 18th gate's update-mode sink):
-    a redelivered batch_id — even with a DIFFERENT payload, the worst
-    case — must not disturb the already-committed partition, and
-    distinct batches land in their own partitions."""
+    """make_batch_partition_sink (the 18th gate's update-mode sink): a
+    replayed batch_id rewrites its own partition only, so the sink holds
+    what one application of each batch holds, and distinct batches land
+    in their own partitions."""
     from fastetl_spark.streaming.stream_ops import make_batch_partition_sink
 
     dest = str(tmp_path / "late_dest")
     sink = make_batch_partition_sink(dest)
     b0 = spark.createDataFrame([("a", 1)], "k string, n long")
     sink(b0, 0)
-    sink(spark.createDataFrame([("a", 99)], "k string, n long"), 0)
     sink(spark.createDataFrame([("b", 2)], "k string, n long"), 1)
+    _drop_side_files(dest)
+    sink(b0, 0)  # replay after a crash
     got = sorted(
         map(tuple, spark.read.option("basePath", dest).parquet(dest)
             .select("k", "n").collect())
     )
     assert got == [("a", 1), ("b", 2)]
+
+
+def test_quarantine_replayed_batch_lands_once(spark, tmp_path):
+    """The quarantine sink, its last micro-batch replayed by a restart
+    from a checkpoint that never committed it, holds each valid and
+    each rejected row once."""
+    from fastetl_spark.streaming.stream_ops import foreach_batch_quarantine
+
+    rows = _events(8)
+    rules = [("type_known", F.col("event_type") == "click")]
+    valid_p, reject_p, ckpt = (str(tmp_path / n) for n in ("valid", "rej", "ck"))
+    stream = _two_file_stream(spark, str(tmp_path / "in"), rows)
+
+    def landed():
+        return (
+            sorted(r.event_id for r in spark.read.parquet(valid_p).collect()),
+            sorted(r.event_id for r in spark.read.parquet(reject_p).collect()),
+        )
+
+    foreach_batch_quarantine(stream, rules, valid_p, reject_p, ckpt).awaitTermination(180)
+    want = ([1, 2, 3, 5, 6, 7], [0, 4])
+    assert landed() == want
+    _replay_last_batch(ckpt)
+    q = foreach_batch_quarantine(stream, rules, valid_p, reject_p, ckpt)
+    q.awaitTermination(180)
+    assert q.exception() is None
+    assert landed() == want
+
+
+def test_agg_maintain_replayed_batch_adds_once(spark, tmp_path):
+    """The maintained aggregate, its last micro-batch replayed by a
+    restart from a checkpoint that never committed it, adds that batch's
+    partial sums once: the replay finds its txn in the load records."""
+    from fastetl_spark.streaming.stream_ops import foreach_batch_agg_maintain
+
+    rows = _events(12)
+    dest, ckpt = str(tmp_path / "agg"), str(tmp_path / "ck")
+    stream = _two_file_stream(spark, str(tmp_path / "in"), rows)
+
+    def agg():
+        return sorted((r.hour, r.n_orders, float(r.total)) for r in read_bucketed(spark, dest).collect())
+
+    foreach_batch_agg_maintain(stream, dest, ckpt).awaitTermination(180)
+    once = agg()
+    assert sum(n for _, n, _ in once) == len(rows)
+    gens = list_generations(spark, dest)
+    _replay_last_batch(ckpt)
+    q = foreach_batch_agg_maintain(stream, dest, ckpt)
+    q.awaitTermination(180)
+    assert q.exception() is None
+    assert agg() == once
+    assert list_generations(spark, dest) == gens
+
+
+def test_merge_stream_on_a_new_checkpoint_applies_its_batches(spark, tmp_path):
+    """A stream restarted on a new checkpoint numbers its batches from 0
+    again; its txns carry a new query id, so they do not collide with
+    the load records of the stream that wrote the root before."""
+    dest = str(tmp_path / "dest")
+    first = _events(4)
+    later = [(i, *r[1:]) for i, r in zip(range(100, 104), _events(4))]
+    for name, rows in (("a", first), ("b", later)):
+        stream = _two_file_stream(spark, str(tmp_path / f"in_{name}"), rows)
+        q = foreach_batch_merge(stream, dest, ["event_id"], str(tmp_path / f"ck_{name}"))
+        q.awaitTermination(180)
+        assert q.exception() is None
+    got = sorted(r.event_id for r in read_bucketed(spark, dest).collect())
+    assert got == [0, 1, 2, 3, 100, 101, 102, 103]
 
 
 @pytest.mark.slow  # full gate only: lag/boundary also pinned by the oracle gates (streaming_late_data_windows, streaming_tumbling_counts) and the invariant-property test above
