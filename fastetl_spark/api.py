@@ -44,8 +44,14 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from fastetl_spark.io.readers import read_jdbc
-from fastetl_spark.io.writers import select_intersection, write_counted, write_csv, write_jdbc
+from fastetl_spark.io.readers import read_jdbc, read_parquet
+from fastetl_spark.io.writers import (
+    literal_frame,
+    select_intersection,
+    write_counted,
+    write_csv,
+    write_jdbc,
+)
 from fastetl_spark.meta.load_info import LoadInfo
 from fastetl_spark.plans.qa import CleaningPipeline
 
@@ -73,7 +79,9 @@ class Engine:
 
     def read(self, source: dict) -> DataFrame:
         """Read a source dict (module docstring). A bucketed root, such
-        as every sync destination, reads through ``read_bucketed``."""
+        as every sync destination, reads through ``read_bucketed``; other
+        parquet through ``io.readers.read_parquet``, which takes the
+        schema from one footer instead of an inference job."""
         if "jdbc" in source:
             return read_jdbc(self.spark, **source["jdbc"])
         fmt = source.get("format", "parquet")
@@ -82,6 +90,7 @@ class Engine:
 
             if is_bucketed_root(self.spark, source["path"]):
                 return read_bucketed(self.spark, source["path"])
+            return read_parquet(self.spark, source["path"], source.get("options"))
         reader = self.spark.read.format(fmt).options(**source.get("options", {}))
         if fmt == "csv":
             reader = reader.option("header", "true")
@@ -243,8 +252,20 @@ class Engine:
                 if fail_fast:
                     raise
                 rows.append((name, None, "error", f"{type(e).__name__}: {e}"))
-        return self.spark.createDataFrame(
-            rows, "table string, rows_merged long, status string, error string"
+        # JVM literals, not createDataFrame(list), whose Python RDD starts
+        # Python workers (RUNBOOK "Fixed cost per sync round")
+        if not rows:
+            return literal_frame(
+                self.spark, "table string, rows_merged long, status string, error string"
+            )
+        types = ("STRING", "BIGINT", "STRING", "STRING")
+        values = ", ".join(
+            "(" + ", ".join(f"CAST(:v{i}_{j} AS {t})" for j, t in enumerate(types)) + ")"
+            for i in range(len(rows))
+        )
+        return self.spark.sql(
+            f"SELECT * FROM VALUES {values} AS r(`table`, rows_merged, status, error)",
+            args={f"v{i}_{j}": v for i, row in enumerate(rows) for j, v in enumerate(row)},
         )
 
     def expectations(self, df: DataFrame, rules: list) -> DataFrame:

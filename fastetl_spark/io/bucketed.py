@@ -112,10 +112,20 @@ from functools import reduce
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import BooleanType, IntegerType, StructField, StructType
+from pyspark.sql.types import (
+    ArrayType,
+    BooleanType,
+    DataType,
+    IntegerType,
+    MapType,
+    StructField,
+    StructType,
+)
 
 from fastetl_spark.checkpointing import observed
 from fastetl_spark.io.fsutil import (
+    DATA_FILES,
+    footer_schema,
     hadoop_fs,
     parquet_rows,
     read_text_file,
@@ -123,6 +133,7 @@ from fastetl_spark.io.fsutil import (
     replace_text_file,
     write_text_file,
 )
+from fastetl_spark.io.readers import read_parquet
 from fastetl_spark.io.writers import literal_frame
 from fastetl_spark.operators.sync import _parse_watermark, _watermark_type
 from fastetl_spark.session import job_phase
@@ -161,7 +172,17 @@ _PER_BUCKET = ("buckets", "rows", "shards", "deltas", "delta_rows")
 def bucket_id(keys: list[str], n_buckets: int) -> Column:
     """Bucket id of a row: pmod(murmur3(keys), n). Stable for a given
     Spark major version; the spec file pins n so every writer agrees."""
-    return F.pmod(F.hash(*[F.col(k) for k in keys]), F.lit(int(n_buckets)))
+    return F.expr(_bucket_sql(keys, n_buckets))
+
+
+def _bucket_sql(keys: list[str], n_buckets: int) -> str:
+    """``bucket_id`` as SQL text."""
+    return f"pmod(hash({', '.join(map(_quote, keys))}), {int(n_buckets)})"
+
+
+def _quote(name: str) -> str:
+    """``name`` as a SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
 
 
 def _spec_path(path: str) -> str:
@@ -217,17 +238,15 @@ def merge_dest_spec(spark: SparkSession, path: str, keys: list[str]) -> dict | N
 
 
 def _manifest_gens(fs, path_cls, base: str) -> list[int]:
-    """Committed manifest generations, ascending (metadata listing)."""
-    if not fs.exists(path_cls(base)):
-        return []
+    """Committed manifest generations, ascending: one Hadoop glob of the
+    manifest names (a few py4j round trips per manifest, none per data
+    dir or file beside them)."""
     gens = []
-    for s in fs.listStatus(path_cls(base)):
-        name = s.getPath().getName()
-        if name.startswith(MANIFEST_PREFIX) and name.endswith(".json"):
-            try:
-                gens.append(int(name[len(MANIFEST_PREFIX) : -len(".json")]))
-            except ValueError:
-                continue
+    for s in fs.globStatus(path_cls(f"{base}/{MANIFEST_PREFIX}*.json")) or []:
+        try:
+            gens.append(int(s.getPath().getName()[len(MANIFEST_PREFIX) : -len(".json")]))
+        except ValueError:
+            continue
     return sorted(gens)
 
 
@@ -320,9 +339,8 @@ def _gc_generations(spark: SparkSession, path: str, keep_gens: int = 2) -> None:
         live |= set(_referenced(_read_manifest_gen(spark, path, g)))
     for g in gens[:-keep_gens]:
         fs.delete(path_cls(f"{base}/{MANIFEST_PREFIX}{g}.json"), False)
-    for s in fs.listStatus(path_cls(base)):
-        name = s.getPath().getName()
-        if s.isDirectory() and name.startswith(("bucket_", DELTA_PREFIX)) and name not in live:
+    for s in fs.globStatus(path_cls(f"{base}/{{bucket_,{DELTA_PREFIX}}}*")) or []:
+        if s.isDirectory() and s.getPath().getName() not in live:
             fs.delete(s.getPath(), True)
 
 
@@ -499,12 +517,10 @@ def _pending(spark: SparkSession, base: str, m: dict, ids: list[int]) -> DataFra
             by_dir.setdefault(d, []).append(b)
     if not by_dir:
         return None
-    listed = reduce(
-        Column.__or__,
-        [
-            (F.col(GEN_COL) == int(d[len(DELTA_PREFIX) :])) & F.col(BUCKET_COL).isin(bs)
-            for d, bs in by_dir.items()
-        ],
+    # one SQL predicate, not a Column per dir: a driver call, not hundreds
+    listed = " OR ".join(
+        f"({GEN_COL} = {int(d[len(DELTA_PREFIX) :])} AND {BUCKET_COL} IN ({', '.join(map(str, bs))}))"
+        for d, bs in by_dir.items()
     )
     marks = [
         StructField(GEN_COL, IntegerType()),
@@ -587,7 +603,43 @@ def read_bucketed(spark: SparkSession, path: str) -> DataFrame:
             f"{path} has a v2 bucket spec but no committed manifest — "
             "the destination was never published or is corrupt"
         )
-    return spark.read.parquet(path).drop(BUCKET_COL)
+    return _read_hive(spark, path).drop(BUCKET_COL)
+
+
+def _bucket_dirs(path: str, bucket_ids: list[int] | None) -> str:
+    """Hadoop glob of a Hive-layout root's bucket dirs (all, or ``bucket_ids``)."""
+    sel = "*" if bucket_ids is None else "{" + ",".join(map(str, bucket_ids)) + "}"
+    return f"{path.rstrip('/')}/{BUCKET_COL}={sel}"
+
+
+def _hive_schema(
+    spark: SparkSession, path: str, bucket_ids: list[int] | None = None
+) -> StructType | None:
+    """Schema of a Hive-layout root's rows as Spark infers it, data
+    columns then the int bucket column, from the footer of one data file
+    in its buckets (all, or ``bucket_ids``): no inference job. None when
+    those buckets hold no data file."""
+    if bucket_ids is not None and not bucket_ids:
+        return None
+    fs, path_cls = hadoop_fs(spark, path)
+    files = fs.globStatus(path_cls(f"{_bucket_dirs(path, bucket_ids)}/{DATA_FILES}"))
+    if not files:
+        return None
+    return StructType(footer_schema(spark, files[0]).fields + [StructField(BUCKET_COL, IntegerType())])
+
+
+def _read_hive(spark: SparkSession, path: str, bucket_ids: list[int] | None = None) -> DataFrame:
+    """The rows of a Hive-layout root's buckets (all, or ``bucket_ids``),
+    bucket column included, read with ``_hive_schema``. A root with no
+    data file at all is left to Spark's inference, which raises."""
+    schema = _hive_schema(spark, path, bucket_ids)
+    if bucket_ids is None:
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        return reader.parquet(path.rstrip("/"))
+    if schema is None:  # none of those buckets holds a file: empty, typed
+        return _read_hive(spark, path).limit(0)
+    reader = spark.read.schema(schema).option("basePath", path.rstrip("/"))
+    return reader.parquet(_bucket_dirs(path, bucket_ids))
 
 
 def list_generations(spark: SparkSession, path: str) -> list[int]:
@@ -713,24 +765,9 @@ def read_buckets_for_keys(
         if not live:
             return dest  # empty, typed
         return dest.join(keys_df.select(*keys), on=keys, how="left_semi")
-    # Hive-layout index root: the bucket dirs that exist
-    existing = _existing_bucket_paths(spark, path, touched)
-    if not existing:
-        return read_bucketed(spark, path).limit(0)
-    dest = spark.read.option("basePath", path).parquet(*existing)
+    # Hive-layout index root: the touched bucket dirs that exist
+    dest = _read_hive(spark, path, touched)
     return dest.join(keys_df.select(*keys), on=keys, how="left_semi").drop(BUCKET_COL)
-
-
-def _existing_bucket_paths(
-    spark: SparkSession, path: str, bucket_ids: list[int]
-) -> list[str]:
-    fs, path_cls = hadoop_fs(spark, path)
-    out = []
-    for b in bucket_ids:
-        p = f"{path.rstrip('/')}/{BUCKET_COL}={b}"
-        if fs.exists(path_cls(p)):
-            out.append(p)
-    return out
 
 
 def _folds(m: dict, b: int) -> bool:
@@ -759,21 +796,36 @@ def _delta_frame(
     """The increment's rows as upserts and the deletion feed's keys as
     tombstones of generation ``gen``, cast to the destination schema:
     the data columns, ``GEN_COL``, ``DELETED_COL`` and the bucket
-    column."""
-    cast = {f.name: F.col(f.name).cast(f.dataType).alias(f.name) for f in schema}
-    rows = inc.select(*cast.values(), F.lit(False).alias(DELETED_COL))
+    column. Each projection is one ``selectExpr`` of SQL text."""
+    names = [_quote(f.name) for f in schema]
+    cast = [f"CAST({n} AS {_sql_type(f.dataType)}) AS {n}" for n, f in zip(names, schema)]
+    rows = inc.selectExpr(*cast, f"false AS {DELETED_COL}")
     if dels is not None:
-        tombstones = dels.select(
-            *[cast[f.name] if f.name in keys else F.lit(None).cast(f.dataType).alias(f.name) for f in schema],
-            F.lit(True).alias(DELETED_COL),
+        tombstones = dels.selectExpr(
+            *[
+                c if f.name in keys else f"CAST(NULL AS {_sql_type(f.dataType)}) AS {n}"
+                for c, n, f in zip(cast, names, schema)
+            ],
+            f"true AS {DELETED_COL}",
         )
         rows = rows.union(tombstones)
-    return rows.select(
-        *schema.names,
-        F.lit(gen).alias(GEN_COL),
+    return rows.selectExpr(
+        *names,
+        f"{int(gen)} AS {GEN_COL}",
         DELETED_COL,
-        bucket_id(keys, n_buckets).alias(BUCKET_COL),
+        f"{_bucket_sql(keys, n_buckets)} AS {BUCKET_COL}",
     )
+
+
+def _sql_type(t: DataType) -> str:
+    """``t`` as SQL type text, nested field names quoted."""
+    if isinstance(t, StructType):
+        return f"STRUCT<{', '.join(f'{_quote(f.name)}: {_sql_type(f.dataType)}' for f in t)}>"
+    if isinstance(t, ArrayType):
+        return f"ARRAY<{_sql_type(t.elementType)}>"
+    if isinstance(t, MapType):
+        return f"MAP<{_sql_type(t.keyType)}, {_sql_type(t.valueType)}>"
+    return t.simpleString()
 
 
 def _bucket_counts(
@@ -785,28 +837,31 @@ def _bucket_counts(
     ``_resolve`` does: per key the greatest (generation, tombstone)
     wins, base rows being generation 0."""
     base = path.rstrip("/")
+    qkeys = [_quote(k) for k in keys]
     parts = []
     based = [f"{base}/{m['buckets'][b]}" for b in ids if b in m["buckets"]]
     if based:
         parts.append(
             spark.read.schema(_schema(spark, base, m))
             .parquet(*based)
-            .select(*keys, F.lit(0).alias(GEN_COL), F.lit(False).alias(DELETED_COL))
+            .selectExpr(*qkeys, f"0 AS {GEN_COL}", f"false AS {DELETED_COL}")
         )
     pending = _pending(spark, base, m, ids)
     if pending is not None:
-        parts.append(pending.select(*keys, GEN_COL, DELETED_COL))
+        parts.append(pending.selectExpr(*qkeys, GEN_COL, DELETED_COL))
     if not parts:
         return {}
-    rows = reduce(DataFrame.union, parts)
-    latest = F.max(F.struct(GEN_COL, DELETED_COL))[DELETED_COL]
     per_key = (
-        rows.withColumn(BUCKET_COL, bucket_id(keys, n_buckets))
+        reduce(DataFrame.union, parts)
+        .selectExpr("*", f"{_bucket_sql(keys, n_buckets)} AS {BUCKET_COL}")
         .repartition(BUCKET_COL)
         .groupBy(BUCKET_COL, *keys)
-        .agg(latest.alias("dead"), F.count_if(F.col(GEN_COL) > 0).alias("pending"))
+        .agg(
+            F.expr(f"max(struct({GEN_COL}, {DELETED_COL})).{DELETED_COL}").alias("dead"),
+            F.expr(f"count_if({GEN_COL} > 0)").alias("pending"),
+        )
     )
-    agg = per_key.groupBy(BUCKET_COL).agg(F.count_if(~F.col("dead")), F.sum("pending"))
+    agg = per_key.groupBy(BUCKET_COL).agg(F.expr("count_if(NOT dead)"), F.expr("sum(pending)"))
     return {r[0]: (r[1], r[2]) for r in agg.collect()}
 
 
@@ -1043,7 +1098,9 @@ def bucket_file_counts(
     spark: SparkSession, path: str, bucket_ids: list[int] | None = None
 ) -> dict[int, int]:
     """Data-file count per bucket directory of a Hive-layout index
-    (Hadoop listStatus — pure metadata, no data read).
+    (pure metadata, no data read): one Hadoop glob per bucket of the
+    names Spark scans, so a bucket costs a few py4j round trips whatever
+    its file count. A bucket without a data file is left out.
     ``bucket_ids=None`` lists every bucket."""
     fs, path_cls = hadoop_fs(spark, path)
     base = path.rstrip("/")
@@ -1055,15 +1112,9 @@ def bucket_file_counts(
         ]
     out: dict[int, int] = {}
     for b in sorted(set(bucket_ids)):
-        p = path_cls(f"{base}/{BUCKET_COL}={b}")
-        if not fs.exists(p):
-            continue
-        out[b] = sum(
-            1
-            for s in fs.listStatus(p)
-            if not s.isDirectory()
-            and not s.getPath().getName().startswith(("_", "."))
-        )
+        n = len(fs.globStatus(path_cls(f"{base}/{BUCKET_COL}={b}/{DATA_FILES}")) or [])
+        if n:
+            out[b] = n
     return out
 
 
@@ -1083,7 +1134,7 @@ def compact_buckets(
     rewritten (one coalesce + atomic swap each, via io/writers
     atomic_overwrite); everything else is left untouched, so calling
     this after every append is cheap — the steady state is one no-op
-    listStatus per touched bucket. Returns {bucket_id: file_count_after}
+    glob per touched bucket. Returns {bucket_id: file_count_after}
     for the buckets that were compacted."""
     from fastetl_spark.io.writers import atomic_overwrite
 
@@ -1094,7 +1145,7 @@ def compact_buckets(
         if n_files <= max_files:
             continue
         bdir = f"{base}/{BUCKET_COL}={b}"
-        df = spark.read.parquet(bdir)
+        df = read_parquet(spark, bdir)
         n_rows = df.count()  # parquet footer metadata only
         k = max(1, -(-n_rows // target_rows_per_file))
         atomic_overwrite(df.coalesce(k), bdir)
@@ -1302,7 +1353,7 @@ def bucketize(
     so the migration never caches the destination and readers never see
     a partial layout. A Hive-layout root's bucket column is dropped:
     ``write_bucketed`` derives its own."""
-    df = spark.read.parquet(path).drop(BUCKET_COL)
+    df = read_parquet(spark, path).drop(BUCKET_COL)
     staging = path.rstrip("/") + ".__bucketize_staging__"
     fs, path_cls = hadoop_fs(spark, path)
     if fs.exists(path_cls(staging)):

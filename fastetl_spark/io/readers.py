@@ -13,6 +13,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from fastetl_spark.io.fsutil import parquet_schema
+
 TPCH_TABLES = (
     "region",
     "nation",
@@ -27,21 +29,35 @@ TPCH_TABLES = (
 )
 
 
+def read_parquet(spark: SparkSession, path: str, options: dict | None = None) -> DataFrame:
+    """``spark.read.options(**options).parquet(path)`` without Spark's
+    schema-inference job: the schema comes from one data file's footer
+    (``fsutil.parquet_schema``), the one Spark's inference would take.
+    Where that cannot be exact, Spark infers as usual: under any reader
+    option (``mergeSchema`` reads every footer), for a Hive-partitioned
+    directory, or for a path with no data file, which raises Spark's
+    own error."""
+    schema = None if options else parquet_schema(spark, path)
+    reader = spark.read.options(**(options or {}))
+    return (reader if schema is None else reader.schema(schema)).parquet(path)
+
+
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one test table; parquet scans get pushdown + pruning for free.
 
     events.ts is TIMESTAMP(NANOS) in the fixture parquet, which Spark
     refuses by default — read nanos as long and truncate to micros
     (identical to how microsecond engines read the same file)."""
+    path = f"{sf_dir}/{name}.parquet"
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+        df = read_parquet(spark, path)
         from pyspark.sql import functions as F  # local import to avoid cycle
 
         if dict(df.dtypes).get("ts") == "bigint":
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
         return df
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return read_parquet(spark, path)
 
 
 def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> DataFrame:

@@ -497,8 +497,11 @@ _M31 = (1 << 31) - 1  # Mersenne prime; keeps affine products within long range
 def minhash_signature_from_hashes(base: Column, k: int = _MINHASH_K) -> Column:
     """k minhash values via affine re-hashes of pre-hashed shingles.
     `base` MUST be a bound column of pmod(xxhash64(shingle), 2^31-1)
-    values (materialize it first — passing the hash expression inline
-    would re-evaluate it k times per row). Coefficients are small odd
+    values: a column of the frame the signature is selected from, not
+    the hash expression inline, which would be evaluated once per
+    reference. A bound column is enough, and materialising it is not
+    needed: the optimizer does not inline a non-trivial projection into
+    a consumer that references it more than once. Coefficients are small odd
     constants (deterministic, seedless); mod 2^31-1 keeps h * a + b in
     long range (ANSI-safe).
 

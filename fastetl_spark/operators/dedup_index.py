@@ -30,12 +30,14 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType
 
 from fastetl_spark.checkpointing import materialize, observed
 from fastetl_spark.io.bucketed import (
     BUCKET_COL,
     DEFAULT_MAX_FILES_PER_BUCKET,
     bucket_id,
+    _hive_schema,
     _write_hive_bucketed,
     compact_buckets,
     read_bucket_spec,
@@ -49,6 +51,7 @@ from fastetl_spark.operators.dedup import (
     shingle_hashes,
     word_tokens,
 )
+from fastetl_spark.session import job_phase
 
 INDEX_BUCKETS = 64  # local default; size ~4096 for a 100 TB corpus
 
@@ -166,7 +169,7 @@ def _append_index_rows(
     """Shared append-then-compact maintenance step for both indexes:
     tag rows with their bucket, append the files, then compact any
     TOUCHED bucket whose data-file count crept past the threshold
-    (io/bucketed.compact_buckets — steady state is one listStatus per
+    (io/bucketed.compact_buckets — steady state is one glob per
     touched bucket, so per-bucket file counts stay bounded forever
     instead of growing by one file per daily increment)."""
     spark = rows.sparkSession
@@ -177,10 +180,12 @@ def _append_index_rows(
     tagged = rows.withColumn(BUCKET_COL, bucket_id(keys, n_buckets)).observe(
         obs, F.collect_set(BUCKET_COL).alias("b")
     )
-    tagged.write.mode("append").partitionBy(BUCKET_COL).parquet(index_path)
+    with job_phase(spark, "index", "append"):
+        tagged.write.mode("append").partitionBy(BUCKET_COL).parquet(index_path)
     touched = sorted(observed(obs, {"b": []})["b"])
     if compact_threshold is not None:
-        compact_buckets(spark, index_path, touched, max_files=compact_threshold)
+        with job_phase(spark, "index", "compact"):
+            compact_buckets(spark, index_path, touched, max_files=compact_threshold)
 
 
 def append_to_shingle_index(
@@ -283,6 +288,13 @@ def _band_rows(
     own column names (``selectExpr``): one driver call per stage, where
     the same expressions built from ``F.*`` and ``Column`` calls took
     thousands of py4j round trips per call, every round.
+
+    Nothing is materialised and nothing filters on the hashes: a filter
+    on ``hs`` would be pushed under its projection and hash the
+    shingles a second time, while the signature and the band keys each
+    read a bound column that the optimizer does not inline twice. The
+    shingles are hashed once per row (``tests/test_ingest_fixed_costs``
+    checks the plan).
     """
     window = ", ".join(f"element_at(tokens, i + {k})" for k in range(shingle_n))
     if portable:  # dedup.word_shingles, then dedup.md5_prefix_hash
@@ -295,11 +307,8 @@ def _band_rows(
         f"sequence(1, size(tokens) - {shingle_n - 1}), i -> {shingle})) "
         f"ELSE CAST(array() AS ARRAY<{elem}>) END"
     )
-    hashed = (
-        docs.selectExpr("doc_id", "split(text, ' ') AS tokens")
-        .selectExpr("doc_id", f"transform({shingles}, s -> pmod({h}, {_M31})) AS hs")
-        .filter("size(hs) > 0")
-        .transform(materialize)
+    hashed = docs.selectExpr("doc_id", "split(text, ' ') AS tokens").selectExpr(
+        "doc_id", f"transform({shingles}, s -> pmod({h}, {_M31})) AS hs"
     )
     sig = hashed.select(
         "doc_id", minhash_signature_from_hashes(F.col("hs")).alias("sig")
@@ -319,7 +328,10 @@ def _band_rows(
         f"named_struct('band', {b}, 'band_hash', {band_key(b)})"
         for b in range(_MINHASH_BANDS)
     )
-    return sig.selectExpr(f"inline(array({bands}))", "doc_id")
+    # a doc without shingles has a NULL signature and no band rows
+    return sig.selectExpr(
+        f"inline(CASE WHEN sig IS NULL THEN array() ELSE array({bands}) END)", "doc_id"
+    )
 
 
 def _index_is_portable(spark: SparkSession, index_path: str) -> bool:
@@ -327,16 +339,13 @@ def _index_is_portable(spark: SparkSession, index_path: str) -> bool:
     band_hash as a string concat key, the xxhash64 index as a long.
     Keeps append/match parameter-free and makes a variant mismatch
     (probe hashed one way, index built the other) impossible. One data
-    file's footer is read on the driver: Spark's schema inference over
-    the index root would cost a job on every match and append."""
-    from fastetl_spark.io.fsutil import parquet_physical_type
-
-    t = parquet_physical_type(
-        spark, f"{index_path.rstrip('/')}/{BUCKET_COL}=*/*.parquet", "band_hash"
-    )
-    if t is None:
+    file's footer is read on the driver (``io.bucketed._hive_schema``):
+    Spark's schema inference over the index root would cost a job on
+    every match and append."""
+    schema = _hive_schema(spark, index_path)
+    if schema is None or "band_hash" not in schema.names:
         raise ValueError(f"{index_path} has no band_hash column — not a minhash index")
-    return t == "BINARY"
+    return isinstance(schema["band_hash"].dataType, StringType)
 
 
 def build_minhash_index(
@@ -366,7 +375,8 @@ def append_to_minhash_index(
     spec = read_bucket_spec(spark, index_path)
     if spec is None:
         raise ValueError(f"{index_path} is not a minhash index (no bucket spec)")
-    fp = increment_fingerprint(docs)
+    with job_phase(spark, "index", "fingerprint"):
+        fp = increment_fingerprint(docs)
     if increment_already_applied(spark, index_path, fp):
         return
     rows = _band_rows(docs, portable=_index_is_portable(spark, index_path))
@@ -400,16 +410,18 @@ def match_minhash_index(
     # the probe buckets are observed on the one materialisation of the
     # increment's band rows instead of a distinct().collect() job
     obs = Observation()
-    inc_bands = (
-        _band_rows(increment, shingle_n, portable=portable)
-        .select("band", "band_hash", F.col("doc_id").alias("new_doc"))
-        .observe(
-            obs,
-            F.collect_set(bucket_id(spec["keys"], spec["n_buckets"])).alias("b"),
+    with job_phase(spark, "index", "probe"):
+        inc_bands = (
+            _band_rows(increment, shingle_n, portable=portable)
+            .select("band", "band_hash", F.col("doc_id").alias("new_doc"))
+            .observe(
+                obs,
+                F.collect_set(bucket_id(spec["keys"], spec["n_buckets"])).alias("b"),
+            )
+            .transform(materialize)
         )
-        .transform(materialize)
-    )
-    probe_keys = inc_bands.select("band", "band_hash").distinct()
+    # no distinct: the probe's left-semi join keeps an index row once
+    probe_keys = inc_bands.select("band", "band_hash")
     hits = read_buckets_for_keys(
         spark, index_path, probe_keys, _touched=observed(obs, {"b": []})["b"]
     ).select("band", "band_hash", F.col("doc_id").alias("corpus_doc"))
@@ -421,7 +433,8 @@ def match_minhash_index(
     )
     if corpus_path is None:
         return cands
-    cands = cands.transform(materialize)
+    with job_phase(spark, "index", "verify"):
+        cands = cands.transform(materialize)
     # exact verify: fetch ONLY the candidate corpus docs' texts
     wanted = cands.select(F.col("corpus_doc").alias("doc_id")).distinct()
     corpus_docs = read_buckets_for_keys(spark, corpus_path, wanted)

@@ -5,11 +5,12 @@ code generation and py4j round trips.
 A bucketed ``Engine.sync`` round is bound by fixed costs, not by its
 data: every Spark job, Python-worker start, file created, generated
 class compiled and py4j round trip costs the same at 10 rows as at 10k.
-These tests pin the job ceilings of one round and of one index append,
-the row counts, schema and watermark the manifest carries so that the
-post-merge count and the next watermark need no job, the
-compilations of a repeated round and the round trips of an index
-append and match. ``make fixed-costs`` runs this file alone.
+These tests pin the job ceilings of one round and of one index append
+and match, the row counts, schema and watermark the manifest carries so
+that the post-merge count and the next watermark need no job, the
+compilations of a repeated round, the round trips of a round and of an
+index append and match, the band rows' plan and the index phases' job
+descriptions. ``make fixed-costs`` runs this file alone.
 """
 
 from __future__ import annotations
@@ -55,14 +56,20 @@ from fastetl_spark.operators.sync import WatermarkStore, _watermark_type
 N_BUCKETS = 8
 
 # Spark jobs of one bucketed sync round (the merge: its delta write and
-# its count; the watermark and the load record ride the manifest) and of
-# one minhash index append. They were 23 and 8 while the merge facts took
-# actions of their own; the round was 13 while the watermark read
-# inferred its schema and the merge materialised the increment and
-# rewrote the touched buckets, and 8 while it read and wrote a watermark
-# store and appended to the load log.
-SYNC_ROUND_JOBS = 5
-INDEX_APPEND_JOBS = 4
+# its count; the watermark and the load record ride the manifest, the
+# source's schema comes from a footer), of one minhash index append
+# (fingerprint, band-row write) and of one match plus its collect. They
+# were 23 and 8 while the merge facts took actions of their own; the
+# round was 13 while the watermark read inferred its schema and the
+# merge materialised the increment and rewrote the touched buckets, 8
+# while it read and wrote a watermark store and appended to the load
+# log, and 5 while the source read ran Spark's schema inference. The
+# append was 4 and the match 8 while the band rows were materialised,
+# the probe keys were made distinct and the probe inferred the index
+# schema.
+SYNC_ROUND_JOBS = 4
+INDEX_APPEND_JOBS = 3
+INDEX_MATCH_JOBS = 5
 # Generated classes compiled by a second, identical round (sync plus
 # index build, match and append; ~84 in the first): 6 with a codegen
 # cache that holds a round's classes, 18-43 with Spark's default 100
@@ -74,6 +81,13 @@ REPEAT_ROUND_COMPILES = 12
 # capture on.
 INDEX_APPEND_ROUND_TRIPS = 1000
 INDEX_MATCH_ROUND_TRIPS = 1000
+# py4j round trips of one sync round into a 17-column, 8-bucket root
+# that holds three pending delta generations: ~520. They were ~1.3k
+# while the delta frame cast one Column per column, the pending-delta
+# filter and the bucket counts were Column calls, the manifest listing
+# walked every file of the root and each JVM class was looked up one
+# package name at a time.
+SYNC_ROUND_ROUND_TRIPS = 750
 
 
 def _table(spark, lo: int, hi: int, ts: int):
@@ -179,11 +193,41 @@ def test_sync_round_and_index_append_job_budget(spark, sf_dir, tmp_path):
     corpus, inc = _split_documents(spark, sf_dir)
     idx = str(tmp_path / "idx")
     build_minhash_index(corpus, idx, n_buckets=N_BUCKETS)
+    with _Jobs(spark, "budget-match") as jobs:
+        assert match_minhash_index(spark, idx, inc).collect()
+    assert jobs.n <= INDEX_MATCH_JOBS, jobs.n
     n_before = spark.read.parquet(idx).count()
     with _Jobs(spark, "budget-append") as jobs:
         append_to_minhash_index(inc, idx)
     assert jobs.n <= INDEX_APPEND_JOBS, jobs.n
     assert spark.read.parquet(idx).count() > n_before
+
+
+def test_sync_round_round_trips(spark, sf_dir, tmp_path):
+    """The driver's py4j round trips of one sync round stay flat in the
+    destination's columns and pending delta dirs: the delta frame's cast
+    and the pending-delta filter are SQL text, and the manifest listing
+    globs the manifests alone."""
+    keys = ["l_orderkey", "l_linenumber"]
+    lineitem = read_table(spark, sf_dir, "lineitem")
+    dest = str(tmp_path / "dest")
+    write_bucketed(lineitem.withColumn("ts", F.lit(0)), dest, keys, N_BUCKETS, watermark_col="ts")
+    eng = Engine(spark)
+
+    def increment(r: int):
+        src = str(tmp_path / f"src{r}")
+        rows = lineitem.filter(F.col("l_orderkey") % 50 == r).withColumn("ts", F.lit(r))
+        rows.withColumn("l_comment", F.lit(f"round {r}")).write.parquet(src)
+        return {"path": src}, rows.select(*keys).limit(2)
+
+    for r in (1, 2, 3):
+        src, dels = increment(r)
+        eng.sync(src, {"path": dest}, keys, "ts", deleted_keys=dels)
+    assert len(read_manifest(spark, dest)["deltas"][0]) == 3  # three pending generations
+    src, dels = increment(4)
+    with _RoundTrips() as trips:
+        eng.sync(src, {"path": dest}, keys, "ts", deleted_keys=dels)
+    assert trips.n <= SYNC_ROUND_ROUND_TRIPS, trips.n
 
 
 def _files(root: str) -> dict[str, int]:
@@ -346,6 +390,43 @@ def test_band_rows_match_call_chain_formula(spark, sf_dir, portable):
     assert got_rows == want_rows
     assert len(got_rows) > 8 * 400
     assert {r[2] for r in got_rows} & {-4, -5, -6, -7} == {-4, -5, -6, -7}
+
+
+@pytest.mark.parametrize("portable", [False, True])
+def test_band_rows_hash_shingles_once_per_row(spark, sf_dir, portable):
+    """The band rows' optimized plan computes the shingle hashes in one
+    projection: nothing is materialised under it, and no filter on the
+    hashes is pushed below it to hash the shingles a second time."""
+    docs = read_table(spark, sf_dir, "documents").select("doc_id", "text")
+    plan = _band_rows(docs, portable=portable)._jdf.queryExecution().optimizedPlan().toString()
+    assert "LogicalRDD" not in plan, plan  # a checkpoint's scan
+    assert plan.count("array_distinct(") == 1, plan  # the shingle set, hashed
+    assert plan.count("aggregate(") == 1, plan  # the signature
+
+
+def test_index_phases_describe_their_jobs(spark, sf_dir, tmp_path):
+    """The jobs an index append and a match run themselves carry
+    ``fastetl:index:<phase>`` descriptions; the caller's come back."""
+    corpus, inc = _split_documents(spark, sf_dir)
+    idx = str(tmp_path / "idx")
+    build_minhash_index(corpus, idx, n_buckets=N_BUCKETS)
+    sc = spark.sparkContext
+    sc.setJobGroup("index-phases", "caller's description")
+    try:
+        assert match_minhash_index(spark, idx, inc).collect()
+        append_to_minhash_index(inc, idx, compact_threshold=0)  # compacts every touched bucket
+        assert sc.getLocalProperty("spark.job.description") == "caller's description"
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = sc._jsc.sc().statusStore().jobsList(None)
+    got = set()
+    for i in range(jobs.size()):
+        job = jobs.apply(i)
+        if job.jobGroup().isDefined() and job.jobGroup().get() == "index-phases":
+            got.add(job.description().get() if job.description().isDefined() else None)
+    phases = {"probe", "fingerprint", "append", "compact"}
+    assert {f"fastetl:index:{p}" for p in phases} <= got, got
 
 
 def test_marker_count_is_flat_and_retention_holds(spark, tmp_path):
