@@ -81,14 +81,20 @@ records. Data, watermark and load record therefore publish together,
 exactly once, and ``rollback_bucketed`` moves the watermark back with
 the data.
 
-The append-only indexes (operators/dedup_index, the IVF-PQ
-``vectors/`` of operators/ann_index) keep the Hive layout (spec version
-1, ``_write_hive_bucketed``): ``path/__fe_bucket=K/`` subdirectories
-that appends add files to in place and ``compact_buckets`` coalesces.
-That layout stays raw-readable: ``spark.read.parquet(path)`` discovers
-the bucket column as a Hive partition (``read_bucketed`` drops it).
-``partial_merge`` rejects it; ``bucketize`` migrates such a root to the
-manifest layout once.
+The append-only indexes keep the Hive layout: ``path/<col>=K/``
+subdirectories that appends add files to in place. One append, compact
+and probe path serves all five index roots: the shingle and minhash
+indexes (operators/dedup_index) and the IVF-PQ ``vectors/`` partition
+on ``__fe_bucket`` (spec version 1, ``_write_hive_bucketed``); the IVF
+cells and the IVF-PQ ``codes/`` (operators/ann_index) on ``cell``, the
+stored quantizer's cell. The caller tags the partition column;
+``dedup_index._append_index_rows`` appends, ``compact_buckets``
+coalesces the touched partitions past a file count, and ``_read_hive``
+reads chosen partitions with the schema from one footer. That layout
+stays raw-readable: ``spark.read.parquet(path)`` discovers the
+partition column as a Hive partition (``read_bucketed`` drops the
+bucket column). ``partial_merge`` rejects it; ``bucketize`` migrates
+such a root to the manifest layout once.
 
 The bucket id is ``pmod(hash(keys), n_buckets)`` — Spark's Murmur3, the
 same function Spark's managed bucketing uses. Note the limit: a plain
@@ -131,10 +137,11 @@ from fastetl_spark.io.fsutil import (
     read_text_file,
     replace_dir,
     replace_text_file,
+    status_paths,
     write_text_file,
 )
 from fastetl_spark.io.readers import read_parquet
-from fastetl_spark.io.writers import literal_frame
+from fastetl_spark.io.writers import compact_parquet_dir, literal_frame
 from fastetl_spark.operators.sync import _parse_watermark, _watermark_type
 from fastetl_spark.session import job_phase
 
@@ -606,40 +613,55 @@ def read_bucketed(spark: SparkSession, path: str) -> DataFrame:
     return _read_hive(spark, path).drop(BUCKET_COL)
 
 
-def _bucket_dirs(path: str, bucket_ids: list[int] | None) -> str:
-    """Hadoop glob of a Hive-layout root's bucket dirs (all, or ``bucket_ids``)."""
+def _bucket_dirs(path: str, bucket_ids: list[int] | None, part_col: str = BUCKET_COL) -> str:
+    """Hadoop glob of a Hive-layout root's partition dirs (all, or
+    ``bucket_ids``)."""
     sel = "*" if bucket_ids is None else "{" + ",".join(map(str, bucket_ids)) + "}"
-    return f"{path.rstrip('/')}/{BUCKET_COL}={sel}"
+    return f"{path.rstrip('/')}/{part_col}={sel}"
 
 
 def _hive_schema(
-    spark: SparkSession, path: str, bucket_ids: list[int] | None = None
+    spark: SparkSession,
+    path: str,
+    bucket_ids: list[int] | None = None,
+    part_col: str = BUCKET_COL,
 ) -> StructType | None:
     """Schema of a Hive-layout root's rows as Spark infers it, data
-    columns then the int bucket column, from the footer of one data file
-    in its buckets (all, or ``bucket_ids``): no inference job. None when
-    those buckets hold no data file."""
+    columns then the int partition column, from the footer of one data
+    file in its partitions (all, or ``bucket_ids``): no inference job.
+    None when those partitions hold no data file."""
     if bucket_ids is not None and not bucket_ids:
         return None
     fs, path_cls = hadoop_fs(spark, path)
-    files = fs.globStatus(path_cls(f"{_bucket_dirs(path, bucket_ids)}/{DATA_FILES}"))
+    files = fs.globStatus(path_cls(f"{_bucket_dirs(path, bucket_ids, part_col)}/{DATA_FILES}"))
     if not files:
         return None
-    return StructType(footer_schema(spark, files[0]).fields + [StructField(BUCKET_COL, IntegerType())])
+    return StructType(footer_schema(spark, files[0]).fields + [StructField(part_col, IntegerType())])
 
 
-def _read_hive(spark: SparkSession, path: str, bucket_ids: list[int] | None = None) -> DataFrame:
-    """The rows of a Hive-layout root's buckets (all, or ``bucket_ids``),
-    bucket column included, read with ``_hive_schema``. A root with no
-    data file at all is left to Spark's inference, which raises."""
-    schema = _hive_schema(spark, path, bucket_ids)
+def _read_hive(
+    spark: SparkSession,
+    path: str,
+    bucket_ids: list[int] | None = None,
+    part_col: str = BUCKET_COL,
+) -> DataFrame:
+    """The rows of a Hive-layout root's partitions (all, or
+    ``bucket_ids``), partition column included, read with
+    ``_hive_schema``. The chosen partitions reach Spark as the literal
+    dirs that exist: handed a glob as its one path, Spark looks it up for
+    a stream sink's metadata and logs the failed lookup with a stack
+    trace. A root with no data file at all is left to Spark's inference,
+    which raises."""
+    schema = _hive_schema(spark, path, bucket_ids, part_col)
     if bucket_ids is None:
         reader = spark.read if schema is None else spark.read.schema(schema)
         return reader.parquet(path.rstrip("/"))
-    if schema is None:  # none of those buckets holds a file: empty, typed
-        return _read_hive(spark, path).limit(0)
+    if schema is None:  # none of those partitions holds a file: empty, typed
+        return _read_hive(spark, path, part_col=part_col).limit(0)
+    fs, path_cls = hadoop_fs(spark, path)
+    dirs = fs.globStatus(path_cls(_bucket_dirs(path, bucket_ids, part_col)))
     reader = spark.read.schema(schema).option("basePath", path.rstrip("/"))
-    return reader.parquet(_bucket_dirs(path, bucket_ids))
+    return reader.parquet(*status_paths(spark, dirs))
 
 
 def list_generations(spark: SparkSession, path: str) -> list[int]:
@@ -1095,24 +1117,27 @@ def _merge_locked(
 
 
 def bucket_file_counts(
-    spark: SparkSession, path: str, bucket_ids: list[int] | None = None
+    spark: SparkSession,
+    path: str,
+    bucket_ids: list[int] | None = None,
+    part_col: str = BUCKET_COL,
 ) -> dict[int, int]:
-    """Data-file count per bucket directory of a Hive-layout index
-    (pure metadata, no data read): one Hadoop glob per bucket of the
-    names Spark scans, so a bucket costs a few py4j round trips whatever
-    its file count. A bucket without a data file is left out.
-    ``bucket_ids=None`` lists every bucket."""
+    """Data-file count per partition directory of a Hive-layout index
+    (pure metadata, no data read): one Hadoop glob per partition of the
+    names Spark scans, so a partition costs a few py4j round trips
+    whatever its file count. A partition without a data file is left
+    out. ``bucket_ids=None`` lists every partition."""
     fs, path_cls = hadoop_fs(spark, path)
     base = path.rstrip("/")
     if bucket_ids is None:
         bucket_ids = [
             int(s.getPath().getName().split("=", 1)[1])
             for s in fs.listStatus(path_cls(base))
-            if s.isDirectory() and s.getPath().getName().startswith(f"{BUCKET_COL}=")
+            if s.isDirectory() and s.getPath().getName().startswith(f"{part_col}=")
         ]
     out: dict[int, int] = {}
     for b in sorted(set(bucket_ids)):
-        n = len(fs.globStatus(path_cls(f"{base}/{BUCKET_COL}={b}/{DATA_FILES}")) or [])
+        n = len(fs.globStatus(path_cls(f"{base}/{part_col}={b}/{DATA_FILES}")) or [])
         if n:
             out[b] = n
     return out
@@ -1124,33 +1149,24 @@ def compact_buckets(
     bucket_ids: list[int] | None = None,
     max_files: int = DEFAULT_MAX_FILES_PER_BUCKET,
     target_rows_per_file: int = 1_000_000,
+    part_col: str = BUCKET_COL,
 ) -> dict[int, int]:
-    """Per-bucket small-file compaction for the append-maintained
-    Hive-layout indexes (the persistent dedup indexes append a few files per
-    increment forever — without this, a year of daily batches turns the
-    "read only touched buckets" win into a file-count-overhead loss).
+    """Per-partition small-file compaction for the append-maintained
+    Hive-layout indexes (they append a few files per increment forever
+    — without this, a year of daily batches turns the "read only
+    touched partitions" win into a file-count-overhead loss).
 
-    Only buckets whose data-file count EXCEEDS ``max_files`` are
-    rewritten (one coalesce + atomic swap each, via io/writers
-    atomic_overwrite); everything else is left untouched, so calling
-    this after every append is cheap — the steady state is one no-op
-    glob per touched bucket. Returns {bucket_id: file_count_after}
-    for the buckets that were compacted."""
-    from fastetl_spark.io.writers import atomic_overwrite
-
+    Only partitions whose data-file count EXCEEDS ``max_files`` are
+    rewritten, each by ``io.writers.compact_parquet_dir``; everything
+    else is left untouched, so calling this after every append is cheap
+    — the steady state is one no-op glob per touched partition. Returns
+    {partition: file_count_after} for the partitions compacted."""
     base = path.rstrip("/")
-    counts = bucket_file_counts(spark, path, bucket_ids)
-    compacted: dict[int, int] = {}
-    for b, n_files in counts.items():
-        if n_files <= max_files:
-            continue
-        bdir = f"{base}/{BUCKET_COL}={b}"
-        df = read_parquet(spark, bdir)
-        n_rows = df.count()  # parquet footer metadata only
-        k = max(1, -(-n_rows // target_rows_per_file))
-        atomic_overwrite(df.coalesce(k), bdir)
-        compacted[b] = bucket_file_counts(spark, path, [b])[b]
-    return compacted
+    return {
+        b: compact_parquet_dir(spark, f"{base}/{part_col}={b}", target_rows_per_file)
+        for b, n_files in bucket_file_counts(spark, path, bucket_ids, part_col).items()
+        if n_files > max_files
+    }
 
 
 def advise_n_buckets(

@@ -34,6 +34,17 @@ def hadoop_fs(spark: SparkSession, path_str: str):
     return fs, path_cls
 
 
+def status_paths(spark: SparkSession, statuses) -> list[str]:
+    """The full paths of a Hadoop ``FileStatus`` array, joined in the JVM:
+    three py4j round trips whatever its length, where reading them one
+    by one costs about five per status. (py4j does not pass a ``Path[]``
+    where ``Object[]`` is declared; Scala's ``ArraySeq.make`` takes any
+    array.)"""
+    paths = jvm_class(spark, "org.apache.hadoop.fs.FileUtil").stat2Paths(statuses)
+    joined = jvm_class(spark, "scala.collection.mutable.ArraySeq").make(paths).mkString("\n")
+    return joined.split("\n") if joined else []
+
+
 def replace_dir(fs, path_cls, src_str: str, dst_str: str) -> None:
     """Publish ``src`` over ``dst`` with a backup-and-rename swap.
 
@@ -42,9 +53,10 @@ def replace_dir(fs, path_cls, src_str: str, dst_str: str) -> None:
     new one (on failure the old one is restored), but there is a
     window between the two renames where the destination path does not
     exist — a live reader listing the tree right then sees it missing.
-    Used for one-off swaps (``io.bucketed.bucketize`` migrating a
-    root); recurring merges publish by pointer flip instead, through
-    the bucketed manifest (io/bucketed)."""
+    Used for whole-directory swaps (``io.writers.atomic_overwrite``, so
+    a compaction; ``io.bucketed.bucketize`` migrating a root); recurring
+    merges publish by pointer flip instead, through the bucketed
+    manifest (io/bucketed)."""
     src = path_cls(src_str)
     dst = path_cls(dst_str)
     backup = path_cls(dst_str.rstrip("/") + ".__old__")

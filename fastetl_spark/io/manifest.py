@@ -26,20 +26,15 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-
-def _fs_and_path(spark: SparkSession, path: str):
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    return p.getFileSystem(conf), p, jvm
+from fastetl_spark.io.fsutil import hadoop_fs
 
 
 def list_data_files(spark: SparkSession, src_dir: str, suffix: str = ".parquet") -> list[str]:
     """Non-recursive listing of data files in a landing dir (skips
     dotfiles and _SUCCESS markers), as fully-qualified URIs."""
-    fs, p, _ = _fs_and_path(spark, src_dir)
+    fs, path_cls = hadoop_fs(spark, src_dir)
     out = []
-    for status in fs.listStatus(p):
+    for status in fs.listStatus(path_cls(src_dir)):
         name = status.getPath().getName()
         if status.isFile() and name.endswith(suffix) and not name.startswith(("_", ".")):
             out.append(status.getPath().toString())
@@ -49,8 +44,8 @@ def list_data_files(spark: SparkSession, src_dir: str, suffix: str = ".parquet")
 def read_manifest_df(spark: SparkSession, manifest_path: str) -> DataFrame:
     """The manifest as a DataFrame (`file string`); empty when absent.
     Callers join against it — nothing collects the seen-set."""
-    fs, p, _ = _fs_and_path(spark, manifest_path)
-    if not fs.exists(p):
+    fs, path_cls = hadoop_fs(spark, manifest_path)
+    if not fs.exists(path_cls(manifest_path)):
         return spark.createDataFrame([], "file string")
     return spark.read.parquet(manifest_path).select("file")
 

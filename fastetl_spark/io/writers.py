@@ -16,6 +16,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from fastetl_spark.checkpointing import observed
+from fastetl_spark.io.fsutil import DATA_FILES, hadoop_fs, replace_dir
+from fastetl_spark.io.readers import read_parquet
 
 
 def select_intersection(df: DataFrame, dest_columns: list[str]) -> DataFrame:
@@ -106,9 +108,11 @@ def write_jdbc(df: DataFrame, mode: str = "append", **options) -> None:
 
 def atomic_overwrite(df: DataFrame, dest_path: str) -> int:
     """Overwrite `dest_path` without a window where readers see partial
-    data: write to a staging dir, then swap directories. Plain parquet
-    has no transaction log (Delta would make this a commit); the swap
-    keeps the non-transactional window to a single rename.
+    data: write to a staging dir, ``<dest>.__staging__``, then swap it
+    in with ``io.fsutil.replace_dir`` (the old data moves aside to
+    ``<dest>.__old__`` and comes back if the publish fails). Plain
+    parquet has no transaction log (Delta would make this a commit);
+    the swap keeps the non-transactional window to a single rename.
 
     The swap runs through the Hadoop FileSystem API resolved from the
     destination URI, so it works on any Spark-supported filesystem
@@ -118,30 +122,11 @@ def atomic_overwrite(df: DataFrame, dest_path: str) -> int:
     overwrite, but prefer a table format with a commit log there.
 
     Returns the rows written, counted on the write (``write_counted``)."""
-    spark = df.sparkSession
-    jvm = spark.sparkContext._jvm
-    jsc = spark.sparkContext._jsc
-    conf = jsc.hadoopConfiguration()
-    path_cls = jvm.org.apache.hadoop.fs.Path
-    dest = path_cls(dest_path.rstrip("/"))
-    staging = path_cls(dest_path.rstrip("/") + ".__staging__")
-    backup = path_cls(dest_path.rstrip("/") + ".__old__")
-    fs = dest.getFileSystem(conf)
-    if fs.exists(staging):
-        fs.delete(staging, True)
-    n = write_counted(df, lambda d: d.write.mode("overwrite").parquet(staging.toString()))
-    if fs.exists(backup):
-        fs.delete(backup, True)
-    if fs.exists(dest):
-        if not fs.rename(dest, backup):
-            raise IOError(f"atomic_overwrite: could not move {dest} aside")
-    if not fs.rename(staging, dest):
-        # restore the previous data before failing
-        if fs.exists(backup):
-            fs.rename(backup, dest)
-        raise IOError(f"atomic_overwrite: could not publish {staging} to {dest}")
-    if fs.exists(backup):
-        fs.delete(backup, True)
+    dest = dest_path.rstrip("/")
+    staging = f"{dest}.__staging__"
+    n = write_counted(df, lambda d: d.write.mode("overwrite").parquet(staging))
+    fs, path_cls = hadoop_fs(df.sparkSession, dest)
+    replace_dir(fs, path_cls, staging, dest)
     return n
 
 
@@ -221,13 +206,15 @@ def compact_parquet_dir(
     problem is the chronic failure mode of incremental sinks (every
     micro-batch/upsert leaves files); compaction restores scan
     efficiency (fewer tasks, bigger sequential reads, footer pruning
-    still per row group). Returns the file count after compaction.
+    still per row group). Returns the data files in the directory after
+    compaction, counted with one Hadoop glob.
 
-    File count = ceil(rows / target) from the parquet footers (a
-    metadata read, not a data scan)."""
-    df = spark.read.parquet(path)
-    n_rows = df.count()  # parquet count() is footer-metadata only
-    n_files = max(1, -(-n_rows // target_rows_per_file))
+    The schema comes from one footer (``io.readers.read_parquet``) and
+    the file count from ceil(rows / target), the rows from the parquet
+    footers (a metadata read, not a data scan): no schema inference,
+    only the count (two jobs under AQE) and the write."""
+    df = read_parquet(spark, path)
+    n_files = max(1, -(-df.count() // target_rows_per_file))
     atomic_overwrite(df.coalesce(n_files), path)
-    out = spark.read.parquet(path)
-    return out.rdd.getNumPartitions()
+    fs, path_cls = hadoop_fs(spark, path)
+    return len(fs.globStatus(path_cls(f"{path.rstrip('/')}/{DATA_FILES}")) or [])

@@ -21,19 +21,42 @@ arrive daily. This module materializes the IVF structure once:
   structure is frozen at build time — standard IVF maintenance; re-run
   build when drift matters) and append into the touched cell dirs,
   auto-compacting any cell whose file count creeps past a threshold —
-  O(|increment|) per day, like the dedup index appends.
+  O(|increment|) per day.
+
+The cell dirs are the Hive layout of io/bucketed with ``cell`` as the
+partition column, so one append, compaction and probe read serves all
+five append-only index roots: the shingle and minhash indexes, the IVF
+cells, and the IVF-PQ ``codes/`` and ``vectors/``. Appends go through
+``dedup_index._append_index_rows`` (replay marker, append, compaction
+of crept partitions, marker), and a probe reads the probed cells with
+``io.bucketed._read_hive``: the schema from one footer, the cells that
+exist as literal dirs. The probed cells are observed on the query
+frame's one materialisation, not collected by a job of their own.
 """
 
 from __future__ import annotations
 
 import json
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
-from fastetl_spark.checkpointing import materialize
-from fastetl_spark.io.fsutil import hadoop_fs, read_text_file, write_text_file
+from fastetl_spark.checkpointing import materialize, observed
+from fastetl_spark.io.bucketed import (
+    BUCKET_COL,
+    DEFAULT_MAX_FILES_PER_BUCKET,
+    _read_hive,
+    _write_hive_bucketed,
+    bucket_id,
+    read_buckets_for_keys,
+)
+from fastetl_spark.io.fsutil import read_text_file, write_text_file
+from fastetl_spark.operators.dedup_index import (
+    _append_index_rows,
+    _scratch_index_path,
+    increment_fingerprint,
+)
 from fastetl_spark.operators.similarity import (
     IVF_K,
     IVF_NPROBE,
@@ -46,7 +69,6 @@ from fastetl_spark.operators.similarity import (
 )
 
 META_FILE = "_ivf_meta.json"
-ANN_MAX_FILES_PER_CELL = 16
 
 
 def _meta_path(path: str) -> str:
@@ -60,17 +82,8 @@ def read_ivf_meta(spark: SparkSession, path: str) -> dict | None:
     return None if text is None else json.loads(text)
 
 
-def _existing_cell_dirs(
-    spark: SparkSession, path: str, cells: list[int]
-) -> list[str]:
-    fs, path_cls = hadoop_fs(spark, path)
-    base = path.rstrip("/")
-    return [
-        f"{base}/cell={c}" for c in cells if fs.exists(path_cls(f"{base}/cell={c}"))
-    ]
-
-
 def _assign_cells(df: DataFrame, centroids, id_col: str, vec_col: str) -> DataFrame:
+    """(vid, vec, norm, cell) rows, ``cell`` the nearest stored centroid."""
     assign1 = _probe_cells_udf(centroids, 1)
     out = df.select(
         F.col(id_col).alias("vid"), as_double(F.col(vec_col)).alias("vec")
@@ -113,60 +126,28 @@ def build_ivf_index(
     )
 
 
-def _append_cell_partitioned(
-    assigned: DataFrame, path: str, compact_threshold: int | None
-) -> None:
-    """Append cell-tagged rows into a ``cell=K``-partitioned dir, then
-    compact any TOUCHED cell whose data-file count crept past the
-    threshold (one coalesce + atomic swap per crept cell). The distinct
-    cell set collected on the driver is bounded by n_cells."""
-    spark = assigned.sparkSession
-    assigned.write.mode("append").partitionBy("cell").parquet(path)
-    if compact_threshold is None:
-        return
-    from fastetl_spark.io.writers import compact_parquet_dir
-
-    touched = sorted(r[0] for r in assigned.select("cell").distinct().collect())
-    fs, path_cls = hadoop_fs(spark, path)
-    base = path.rstrip("/")
-    for cell in touched:
-        cell_dir = f"{base}/cell={cell}"
-        n_files = sum(
-            1
-            for s in fs.listStatus(path_cls(cell_dir))
-            if s.isFile() and s.getPath().getName().endswith(".parquet")
-        )
-        if n_files > compact_threshold:
-            compact_parquet_dir(spark, cell_dir)
-
-
 def append_to_ivf_index(
     new_vecs: DataFrame,
     index_path: str,
-    compact_threshold: int | None = ANN_MAX_FILES_PER_CELL,
+    compact_threshold: int | None = DEFAULT_MAX_FILES_PER_BUCKET,
 ) -> None:
     """O(|increment|) maintenance: assign with the STORED centroids and
     append into the touched cell dirs; touched cells past
     ``compact_threshold`` data files are rewritten with one coalesce +
     atomic swap (None disables)."""
-    from fastetl_spark.operators.dedup_index import (
-        increment_already_applied,
-        increment_fingerprint,
-        mark_increment_applied,
-    )
-
-    spark = new_vecs.sparkSession
-    meta = read_ivf_meta(spark, index_path)
+    meta = read_ivf_meta(new_vecs.sparkSession, index_path)
     if meta is None:
         raise ValueError(f"{index_path} is not a complete IVF index (no {META_FILE})")
-    fp = increment_fingerprint(new_vecs)
-    if increment_already_applied(spark, index_path, fp):
-        return
-    assigned = _assign_cells(
-        new_vecs, meta["centroids"], meta["id_col"], meta["vec_col"]
-    ).transform(materialize)
-    _append_cell_partitioned(assigned, index_path, compact_threshold)
-    mark_increment_applied(spark, index_path, fp)
+    assigned = _assign_cells(new_vecs, meta["centroids"], meta["id_col"], meta["vec_col"])
+    _append_index_rows(
+        assigned, index_path, "cell", increment_fingerprint(new_vecs), compact_threshold
+    )
+
+
+def _probed(obs: Observation) -> list[int]:
+    """The probed cells observed as ``c`` on a query frame's
+    materialisation (bounded by n_cells: a handful of ints, not data)."""
+    return sorted(observed(obs, {"c": []})["c"])
 
 
 def search_ivf_index(
@@ -177,32 +158,26 @@ def search_ivf_index(
     nprobe: int = IVF_NPROBE,
 ) -> DataFrame:
     """Probe-only search: nprobe nearest cells per query, scan ONLY
-    those cell partitions, exact-cosine rerank, top-k per query. The
-    probed-cell set collected on the driver is bounded by n_cells (a
-    handful of ints, not data). Returns (query_id, neighbor_id, rank) —
-    the same frame ivf_topk produces."""
+    those cell partitions, exact-cosine rerank, top-k per query. A
+    probed cell that received no vectors has no dir and contributes no
+    candidates. Returns (query_id, neighbor_id, rank) — the same frame
+    ivf_topk produces."""
     meta = read_ivf_meta(spark, index_path)
     if meta is None:
         raise ValueError(f"{index_path} is not a complete IVF index (no {META_FILE})")
     probe_n = _probe_cells_udf(meta["centroids"], nprobe)
-    q = queries.select(
-        F.col(meta["id_col"]).alias("query_id"),
-        as_double(F.col(meta["vec_col"])).alias("qv"),
-    ).withColumn("qn", l2_norm(F.col("qv")))
-    q = q.withColumn("probe", F.explode(probe_n("qv"))).transform(materialize)
-    probed = sorted(r[0] for r in q.select("probe").distinct().collect())
-    # a probed cell that received no vectors at build/append time has no
-    # dir — skip it (it can contribute no candidates) instead of failing
-    # the scan on a missing path
-    dirs = _existing_cell_dirs(spark, index_path, probed)
-    if not dirs:
-        return (
-            q.select("query_id")
-            .limit(0)
-            .withColumn("neighbor_id", F.lit(None).cast("long"))
-            .withColumn("rank", F.lit(None).cast("int"))
+    obs = Observation()
+    q = (
+        queries.select(
+            F.col(meta["id_col"]).alias("query_id"),
+            as_double(F.col(meta["vec_col"])).alias("qv"),
         )
-    cells = spark.read.option("basePath", index_path).parquet(*dirs)
+        .withColumn("qn", l2_norm(F.col("qv")))
+        .withColumn("probe", F.explode(probe_n("qv")))
+        .observe(obs, F.collect_set("probe").alias("c"))
+        .transform(materialize)
+    )
+    cells = _read_hive(spark, index_path, _probed(obs), "cell")
     scored = cells.join(
         broadcast(q),
         (F.col("cell") == F.col("probe")) & (F.col("vid") != F.col("query_id")),
@@ -240,19 +215,16 @@ def match_semantic_index(
     meta = read_ivf_meta(spark, index_path)
     if meta is None:
         raise ValueError(f"{index_path} is not a complete IVF index (no {META_FILE})")
-    assigned = _assign_cells(
-        increment, meta["centroids"], meta["id_col"], meta["vec_col"]
-    ).transform(materialize)
-    probed = sorted(r[0] for r in assigned.select("cell").distinct().collect())
-    dirs = _existing_cell_dirs(spark, index_path, probed)
+    obs = Observation()
+    assigned = (
+        _assign_cells(increment, meta["centroids"], meta["id_col"], meta["vec_col"])
+        .observe(obs, F.collect_set("cell").alias("c"))
+        .transform(materialize)
+    )
     inc = assigned.select(
         F.col("vid").alias("vec_id"), "cell", "vec", "norm"
     )
-    corpus_side = (
-        spark.read.option("basePath", index_path).parquet(*dirs)
-        if dirs
-        else inc.limit(0).withColumnRenamed("vec_id", "vid")
-    )
+    corpus_side = _read_hive(spark, index_path, _probed(obs), "cell")
     sim = dot(F.col("c.vec"), F.col("i.vec")) / (F.col("c.norm") * F.col("i.norm"))
 
     def scored(cand_side: DataFrame, id_cond) -> DataFrame:
@@ -343,8 +315,6 @@ def build_ivfpq_index(
         .drop("vec")
     )
     codes.write.mode("overwrite").partitionBy("cell").parquet(f"{base}/codes")
-    from fastetl_spark.io.bucketed import _write_hive_bucketed
-
     _write_hive_bucketed(raw, f"{base}/vectors", ["vid"], vec_buckets)
     write_text_file(
         spark,
@@ -368,61 +338,39 @@ def build_ivfpq_index(
 def append_to_ivfpq_index(
     new_vecs: DataFrame,
     index_path: str,
-    compact_threshold: int | None = ANN_MAX_FILES_PER_CELL,
+    compact_threshold: int | None = DEFAULT_MAX_FILES_PER_BUCKET,
 ) -> None:
     """O(|increment|) maintenance for both halves: encode with the
     STORED models, append codes into touched cell dirs and raw vectors
-    into their vid-buckets (both auto-compacting crept file counts)."""
-    from fastetl_spark.operators.dedup_index import (
-        _append_index_rows,
-        increment_already_applied,
-        increment_fingerprint,
-        mark_increment_applied,
-    )
+    into their vid-buckets (both auto-compacting crept file counts).
+
+    One replay marker per HALF: a retry after the codes committed but
+    the vectors crashed appends only the vectors, and a half whose
+    marker exists runs no job (the encode included)."""
     from fastetl_spark.operators.similarity import _pq_encode_udf
 
-    spark = new_vecs.sparkSession
-    meta = read_ivfpq_meta(spark, index_path)
+    meta = read_ivfpq_meta(new_vecs.sparkSession, index_path)
     if meta is None:
         raise ValueError(
             f"{index_path} is not a complete IVF-PQ index (no {PQ_META_FILE})"
         )
     base = index_path.rstrip("/")
-    # one marker per HALF: a retry after codes committed but vectors
-    # crashed re-runs only the vectors append — neither half can
-    # double-insert
     fp = increment_fingerprint(new_vecs)
-    codes_done = increment_already_applied(spark, f"{base}/codes", fp)
-    vecs_done = increment_already_applied(spark, f"{base}/vectors", fp)
-    if codes_done and vecs_done:
-        return
-    raw = (
-        new_vecs.select(
-            F.col(meta["id_col"]).alias("vid"),
-            as_double(F.col(meta["vec_col"])).alias("vec"),
-        )
-        .withColumn("norm", l2_norm(F.col("vec")))
-        .transform(materialize)
+    raw = new_vecs.select(
+        F.col(meta["id_col"]).alias("vid"),
+        as_double(F.col(meta["vec_col"])).alias("vec"),
+    ).withColumn("norm", l2_norm(F.col("vec")))
+    assign1 = _probe_cells_udf(meta["centroids"], 1)
+    encode = _pq_encode_udf(meta["codebooks"])
+    codes = (
+        raw.select("vid", "vec")
+        .withColumn("cell", F.element_at(assign1("vec"), 1))
+        .withColumn("codes", encode("vec"))
+        .drop("vec")
     )
-    if not codes_done:
-        # built only when this half is actually missing — a retry with
-        # codes already committed must not pay the encode job
-        assign1 = _probe_cells_udf(meta["centroids"], 1)
-        encode = _pq_encode_udf(meta["codebooks"])
-        codes = (
-            raw.select("vid", "vec")
-            .withColumn("cell", F.element_at(assign1("vec"), 1))
-            .withColumn("codes", encode("vec"))
-            .drop("vec")
-            .transform(materialize)
-        )
-        _append_cell_partitioned(codes, f"{base}/codes", compact_threshold)
-        mark_increment_applied(spark, f"{base}/codes", fp)
-    if not vecs_done:
-        _append_index_rows(
-            raw, f"{base}/vectors", ["vid"], meta["vec_buckets"], compact_threshold
-        )
-        mark_increment_applied(spark, f"{base}/vectors", fp)
+    _append_index_rows(codes, f"{base}/codes", "cell", fp, compact_threshold)
+    vecs = raw.withColumn(BUCKET_COL, bucket_id(["vid"], meta["vec_buckets"]))
+    _append_index_rows(vecs, f"{base}/vectors", BUCKET_COL, fp, compact_threshold)
 
 
 def search_ivfpq_index(
@@ -438,7 +386,6 @@ def search_ivfpq_index(
     -> bucket-pruned point-lookup of the raw vectors -> exact rerank.
     Returns the same (query_id, neighbor_id, rank) frame ivfpq_topk
     builds in one job (equality-tested)."""
-    from fastetl_spark.io.bucketed import read_buckets_for_keys
     from fastetl_spark.operators.similarity import PQ_REFINE, _pq_approx_sim_udf
 
     refine = refine or PQ_REFINE
@@ -449,6 +396,7 @@ def search_ivfpq_index(
         )
     base = index_path.rstrip("/")
     probe_n = _probe_cells_udf(meta["centroids"], nprobe)
+    obs = Observation()
     q = (
         queries.select(
             F.col(meta["id_col"]).alias("query_id"),
@@ -456,32 +404,36 @@ def search_ivfpq_index(
         )
         .withColumn("qn", l2_norm(F.col("qv")))
         .withColumn("probe", F.explode(probe_n("qv")))
+        .observe(obs, F.collect_set("probe").alias("c"))
         .transform(materialize)
     )
-    probed = sorted(r[0] for r in q.select("probe").distinct().collect())
-    dirs = _existing_cell_dirs(spark, f"{base}/codes", probed)
-    if not dirs:
-        return (
-            q.select("query_id")
-            .limit(0)
-            .withColumn("neighbor_id", F.lit(None).cast("long"))
-            .withColumn("rank", F.lit(None).cast("int"))
-        )
-    codes = spark.read.option("basePath", f"{base}/codes").parquet(*dirs)
+    codes = _read_hive(spark, f"{base}/codes", _probed(obs), "cell")
     approx = _pq_approx_sim_udf(meta["codebooks"])
     cand = codes.join(
         broadcast(q),
         (F.col("cell") == F.col("probe")) & (F.col("vid") != F.col("query_id")),
     ).withColumn("asim", approx("qv", "codes"))
     w = Window.partitionBy("query_id").orderBy(F.desc("asim"), F.asc("vid"))
+    # the shortlist's vector buckets are observed on its one
+    # materialisation (hash of the value, so neighbor_id buckets as vid)
+    vobs = Observation()
     shortlist = (
         cand.withColumn("arank", F.row_number().over(w))
         .filter(F.col("arank") <= refine)
         .select("query_id", F.col("vid").alias("neighbor_id"), "qv", "qn")
+        .observe(
+            vobs,
+            F.collect_set(bucket_id(["neighbor_id"], meta["vec_buckets"])).alias("b"),
+        )
         .transform(materialize)
     )
-    wanted = shortlist.select(F.col("neighbor_id").alias("vid")).distinct()
-    vecs = read_buckets_for_keys(spark, f"{base}/vectors", wanted)
+    # no distinct: the lookup's left-semi join keeps a vector row once
+    vecs = read_buckets_for_keys(
+        spark,
+        f"{base}/vectors",
+        shortlist.select(F.col("neighbor_id").alias("vid")),
+        _touched=observed(vobs, {"b": []})["b"],
+    )
     rerank = shortlist.join(
         vecs, shortlist.neighbor_id == vecs.vid
     ).select(
@@ -500,9 +452,6 @@ def search_ivfpq_index(
 # --- registered form ------------------------------------------------------
 
 from fastetl_spark.io.readers import ensure_parallelism, read_table  # noqa: E402
-from fastetl_spark.operators.dedup_index import (  # noqa: E402
-    _scratch_index_path,
-)
 from fastetl_spark.operators.similarity import QUERY_STRIDE  # noqa: E402
 from fastetl_spark.registry import query  # noqa: E402
 

@@ -98,11 +98,13 @@ def increment_fingerprint(rows: DataFrame) -> str:
     fingerprint (the mod-2^31-1 sum term breaks cancellation; it
     cannot overflow a long below ~4e9 rows per increment)."""
     cols = ", ".join(f"`{c}`" for c in rows.columns)
-    r = rows.select(
+    agg = rows.select(
         F.count(F.lit(1)).alias("n"),
         F.expr(f"bit_xor(xxhash64({cols}))").alias("x"),
         F.expr(f"sum(pmod(xxhash64({cols}), 2147483647))").alias("s"),
-    ).collect()[0]
+    )
+    with job_phase(rows.sparkSession, "index", "fingerprint"):
+        r = agg.collect()[0]
     return (
         f"{int(r['n'])}_{int(r['x'] or 0) & 0xFFFFFFFFFFFFFFFF:016x}"
         f"_{int(r['s'] or 0):x}"
@@ -162,30 +164,39 @@ def mark_increment_applied(spark: SparkSession, index_path: str, fp: str) -> Non
 def _append_index_rows(
     rows: DataFrame,
     index_path: str,
-    keys: list[str],
-    n_buckets: int,
+    part_col: str,
+    fp: str,
     compact_threshold: int | None,
 ) -> None:
-    """Shared append-then-compact maintenance step for both indexes:
-    tag rows with their bucket, append the files, then compact any
-    TOUCHED bucket whose data-file count crept past the threshold
-    (io/bucketed.compact_buckets — steady state is one glob per
-    touched bucket, so per-bucket file counts stay bounded forever
-    instead of growing by one file per daily increment)."""
+    """The one append of every append-only index: the shingle and minhash
+    indexes (``part_col`` = BUCKET_COL, tagged by ``bucket_id``), the IVF
+    cells and the IVF-PQ codes (``cell``, tagged by the stored
+    quantizer) and the IVF-PQ vectors (BUCKET_COL).
+
+    An increment whose fingerprint ``fp`` has a marker is skipped and
+    runs no job. Otherwise the rows land as new files in their
+    partition dirs, any TOUCHED partition whose data-file count crept
+    past the threshold is compacted (io/bucketed.compact_buckets —
+    steady state is one glob per touched partition, so file counts stay
+    bounded forever instead of growing by one file per daily
+    increment), and the marker is written last."""
     spark = rows.sparkSession
-    # the touched bucket ids (bounded by n_buckets — a driver value) are
-    # observed on the append write itself: no materialisation, no
-    # distinct().collect() job
+    if increment_already_applied(spark, index_path, fp):
+        return
+    # the touched partitions (bounded by the bucket or cell count — a
+    # driver value) are observed on the append write itself: no
+    # materialisation, no distinct().collect() job
     obs = Observation()
-    tagged = rows.withColumn(BUCKET_COL, bucket_id(keys, n_buckets)).observe(
-        obs, F.collect_set(BUCKET_COL).alias("b")
-    )
+    tagged = rows.observe(obs, F.collect_set(part_col).alias("b"))
     with job_phase(spark, "index", "append"):
-        tagged.write.mode("append").partitionBy(BUCKET_COL).parquet(index_path)
-    touched = sorted(observed(obs, {"b": []})["b"])
+        tagged.write.mode("append").partitionBy(part_col).parquet(index_path)
     if compact_threshold is not None:
+        touched = sorted(observed(obs, {"b": []})["b"])
         with job_phase(spark, "index", "compact"):
-            compact_buckets(spark, index_path, touched, max_files=compact_threshold)
+            compact_buckets(
+                spark, index_path, touched, max_files=compact_threshold, part_col=part_col
+            )
+    mark_increment_applied(spark, index_path, fp)
 
 
 def append_to_shingle_index(
@@ -198,16 +209,14 @@ def append_to_shingle_index(
     rewritten except buckets whose file count exceeded
     ``compact_threshold`` (auto-compacted; None disables). Call AFTER
     matching (or the increment matches itself)."""
-    spark = docs.sparkSession
-    spec = read_bucket_spec(spark, index_path)
+    spec = read_bucket_spec(docs.sparkSession, index_path)
     if spec is None:
         raise ValueError(f"{index_path} is not a shingle index (no bucket spec)")
-    fp = increment_fingerprint(docs)
-    if increment_already_applied(spark, index_path, fp):
-        return
     rows = _shingle_rows(docs, _SHINGLE_N)
-    _append_index_rows(rows, index_path, ["shingle"], spec["n_buckets"], compact_threshold)
-    mark_increment_applied(spark, index_path, fp)
+    tagged = rows.withColumn(BUCKET_COL, bucket_id(spec["keys"], spec["n_buckets"]))
+    _append_index_rows(
+        tagged, index_path, BUCKET_COL, increment_fingerprint(docs), compact_threshold
+    )
 
 
 def match_against_index(
@@ -375,15 +384,11 @@ def append_to_minhash_index(
     spec = read_bucket_spec(spark, index_path)
     if spec is None:
         raise ValueError(f"{index_path} is not a minhash index (no bucket spec)")
-    with job_phase(spark, "index", "fingerprint"):
-        fp = increment_fingerprint(docs)
-    if increment_already_applied(spark, index_path, fp):
-        return
     rows = _band_rows(docs, portable=_index_is_portable(spark, index_path))
+    tagged = rows.withColumn(BUCKET_COL, bucket_id(spec["keys"], spec["n_buckets"]))
     _append_index_rows(
-        rows, index_path, ["band", "band_hash"], spec["n_buckets"], compact_threshold
+        tagged, index_path, BUCKET_COL, increment_fingerprint(docs), compact_threshold
     )
-    mark_increment_applied(spark, index_path, fp)
 
 
 def match_minhash_index(

@@ -5,8 +5,8 @@ code generation and py4j round trips.
 A bucketed ``Engine.sync`` round is bound by fixed costs, not by its
 data: every Spark job, Python-worker start, file created, generated
 class compiled and py4j round trip costs the same at 10 rows as at 10k.
-These tests pin the job ceilings of one round and of one index append
-and match, the row counts, schema and watermark the manifest carries so
+These tests pin the job ceilings of one round, of one index append
+and match and of the ANN index appends and probes, the row counts, schema and watermark the manifest carries so
 that the post-merge count and the next watermark need no job, the
 compilations of a repeated round, the round trips of a round and of an
 index append and match, the band rows' plan and the index phases' job
@@ -42,6 +42,15 @@ from fastetl_spark.io.bucketed import (
 )
 from fastetl_spark.io.readers import read_table
 from fastetl_spark.meta.load_info import LOG_SCHEMA, LoadInfo
+from fastetl_spark.operators.ann_index import (
+    append_to_ivf_index,
+    append_to_ivfpq_index,
+    build_ivf_index,
+    build_ivfpq_index,
+    match_semantic_index,
+    search_ivf_index,
+    search_ivfpq_index,
+)
 from fastetl_spark.operators.dedup_index import (
     MAX_INCREMENT_MARKERS,
     _MARKER_PRUNE_BATCH,
@@ -70,6 +79,17 @@ N_BUCKETS = 8
 SYNC_ROUND_JOBS = 4
 INDEX_APPEND_JOBS = 3
 INDEX_MATCH_JOBS = 5
+# Spark jobs of the ANN index calls, each with its collect: an IVF
+# append (fingerprint, cell write), an IVF search, a semantic match, an
+# IVF-PQ append (fingerprint, codes write, vectors write) and an IVF-PQ
+# search. They were 6, 7, 9, 8 and 15 while the appends materialised
+# their rows and collected the touched cells, and the probes collected
+# the probed cells and ran Spark's schema inference over the cell dirs.
+IVF_APPEND_JOBS = 3
+IVF_SEARCH_JOBS = 4
+SEMANTIC_MATCH_JOBS = 6
+IVFPQ_APPEND_JOBS = 4
+IVFPQ_SEARCH_JOBS = 10
 # Generated classes compiled by a second, identical round (sync plus
 # index build, match and append; ~84 in the first): 6 with a codegen
 # cache that holds a round's classes, 18-43 with Spark's default 100
@@ -201,6 +221,44 @@ def test_sync_round_and_index_append_job_budget(spark, sf_dir, tmp_path):
         append_to_minhash_index(inc, idx)
     assert jobs.n <= INDEX_APPEND_JOBS, jobs.n
     assert spark.read.parquet(idx).count() > n_before
+
+
+def test_ann_index_job_budgets(spark, sf_dir, tmp_path):
+    """The IVF and IVF-PQ appends and probes run through the dedup
+    indexes' append and probe read: no job for the touched or probed
+    cells, and none for the cells' schema."""
+    e = read_table(spark, sf_dir, "embeddings")
+    corpus, queries = e.filter(F.col("vec_id") < 400), e.filter(F.col("vec_id") % 50 == 0)
+
+    def batch(lo: int):
+        return e.filter((F.col("vec_id") >= lo) & (F.col("vec_id") < lo + 20))
+
+    ivf, ivfpq = str(tmp_path / "ivf"), str(tmp_path / "ivfpq")
+    build_ivf_index(corpus, ivf, "vec_id", "embedding")
+    build_ivfpq_index(corpus, ivfpq, "vec_id", "embedding", vec_buckets=4)
+    calls = {
+        "ivf_append": (IVF_APPEND_JOBS, lambda: append_to_ivf_index(batch(400), ivf)),
+        "ivf_search": (IVF_SEARCH_JOBS, lambda: search_ivf_index(spark, ivf, queries).collect()),
+        "semantic_match": (
+            SEMANTIC_MATCH_JOBS,
+            lambda: match_semantic_index(spark, ivf, batch(420)).collect(),
+        ),
+        "ivfpq_append": (IVFPQ_APPEND_JOBS, lambda: append_to_ivfpq_index(batch(400), ivfpq)),
+        "ivfpq_search": (
+            IVFPQ_SEARCH_JOBS,
+            lambda: search_ivfpq_index(spark, ivfpq, queries).collect(),
+        ),
+    }
+    over, out = {}, {}
+    for name, (budget, call) in calls.items():
+        with _Jobs(spark, f"budget-{name}") as jobs:
+            out[name] = call()
+        if jobs.n > budget:
+            over[name] = (jobs.n, budget)
+    assert not over, over
+    assert out["ivf_search"] and out["ivfpq_search"] and len(out["semantic_match"]) == 20
+    for root in (ivf, f"{ivfpq}/codes", f"{ivfpq}/vectors"):
+        assert spark.read.parquet(root).count() == 420
 
 
 def test_sync_round_round_trips(spark, sf_dir, tmp_path):

@@ -23,7 +23,7 @@ from fastetl_spark.io.bucketed import (
 )
 from fastetl_spark.io.fsutil import parquet_schema
 from fastetl_spark.io.readers import read_parquet, read_table
-from fastetl_spark.operators.dedup_index import build_minhash_index
+from fastetl_spark.operators.dedup_index import build_minhash_index, match_minhash_index
 
 
 def test_pyarrow_file(spark, tmp_path):
@@ -157,3 +157,26 @@ def test_hive_index_reads_match_sparks_inference(spark, sf_dir, tmp_path):
         return sum(1 for n in names if not n.startswith(("_", ".")))
 
     assert bucket_file_counts(spark, idx) == {b: listed(b) for b in range(8)}
+
+
+def test_hive_probe_reads_literal_dirs(spark, sf_dir, tmp_path, monkeypatch):
+    """A probe hands Spark the touched partition dirs that exist, never a
+    glob: given a glob as its one path, Spark looks it up for a stream
+    sink's metadata and logs the failed lookup with a stack trace, on
+    every probe."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    docs = read_table(spark, sf_dir, "documents").select("doc_id", "text")
+    idx = str(tmp_path / "idx")
+    build_minhash_index(docs.filter(F.col("doc_id") % 4 != 0), idx, n_buckets=8)
+    paths, parquet = [], DataFrameReader.parquet
+
+    def spy(self, *args, **kwargs):
+        paths.extend(args)
+        return parquet(self, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", spy)
+    assert match_minhash_index(spark, idx, docs.filter(F.col("doc_id") % 4 == 0)).collect()
+    probed = [p for p in paths if BUCKET_COL in p]
+    assert probed and not [p for p in probed if set(p) & set("{}[]*?")], probed
+    assert all(os.path.isdir(p.removeprefix("file:")) for p in probed)

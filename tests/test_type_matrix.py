@@ -8,6 +8,7 @@ package with schema intact.
 from __future__ import annotations
 
 import datetime as dt
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -129,6 +130,34 @@ def test_compact_parquet_dir_reduces_files(spark, sf_dir, tmp_path):
     after = len([f for f in os.listdir(path) if f.endswith(".parquet")])
     assert after == 1 and n_after == 1
     assert spark.read.parquet(path).count() == src.count()
+
+
+def test_compact_parquet_dir_counts_files_not_splits(spark, tmp_path):
+    """The count returned is the data files on disk, whatever the read
+    splits: one file larger than ``maxPartitionBytes`` is one file. The
+    compaction runs two jobs, the row count and the write, plus the
+    count's AQE stage: no schema inference."""
+    from fastetl_spark.io.writers import compact_parquet_dir
+
+    path = str(tmp_path / "fragmented")
+    rows = spark.range(20_000).selectExpr("id", "sha2(CAST(id AS STRING), 256) AS h")
+    rows.repartition(20).write.parquet(path)
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(256 * 1024))
+    sc = spark.sparkContext
+    sc.setJobGroup("compact-dir", "compact-dir")
+    try:
+        n_after = compact_parquet_dir(spark, path, target_rows_per_file=10**9)
+    finally:
+        spark.conf.set(key, old)
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    files = [f for f in os.listdir(path) if not f.startswith(("_", "."))]
+    assert n_after == len(files) == 1
+    assert os.path.getsize(os.path.join(path, files[0])) > 256 * 1024
+    assert len(sc.statusTracker().getJobIdsForGroup("compact-dir")) <= 3
+    assert spark.read.parquet(path).count() == 20_000
 
 
 def test_manifest_ingest_is_incremental(spark, sf_dir, tmp_path):
