@@ -1,4 +1,4 @@
-.PHONY: test test-sf01 fixed-costs examples bench smoke audit sweep
+.PHONY: test test-sf01 fixed-costs commit-points examples bench smoke audit sweep
 
 # The tier-1 command of ROADMAP.md, verbatim.
 test:
@@ -8,6 +8,11 @@ test:
 # of an ingest round): a minute or two, ahead of the full suite.
 fixed-costs:
 	python -m pytest tests/test_ingest_fixed_costs.py -q
+
+# The writers of both bucketed layouts and their kill tests: run after
+# touching a commit path.
+commit-points:
+	python -m pytest tests/test_merge_on_read.py tests/test_bucketed.py tests/test_reshard.py tests/test_index_replay.py -q
 
 # The quickstart walkthrough (examples/quickstart.py), end to end; the
 # tier-1 run deselects it as `slow`.

@@ -75,6 +75,20 @@ retention costs only the superseded bases and the delta dirs no bucket
 lists any more (a delta dir goes whole, once no retained manifest
 references it).
 
+Every writer of a manifest-layout root runs one write transaction. A
+merge (``partial_merge``), a ``rollback_bucketed`` and a
+``reshard_bucketed`` take ``<path>.__merge_lock__`` through one helper
+(``_locked``), which checks the v2 spec and always releases the lock.
+The first load, a merge's fold and a reshard's move write their bases
+through one writer (``_write_bases``): one Spark write staged by bucket,
+then each bucket's dir renamed to ``bucket_<K>_v<gen>``. Each writer
+then publishes through the one ``_commit_manifest``. A root emptied by a
+merge, or created from zero rows, has no base at all: its manifest lists
+no bucket and records the schema, which ``_resolve`` reads as a typed
+empty frame. The spec is written once, by the first load, and never
+rewritten: everything that changes per generation (the shard count
+included) is in the manifest.
+
 The same manifest commit carries a sync's bookkeeping: the watermark
 observed on the write (``watermark_col``) and a bounded ring of load
 records. Data, watermark and load record therefore publish together,
@@ -114,6 +128,8 @@ from __future__ import annotations
 
 import datetime as dt
 import json
+from collections.abc import Iterator
+from contextlib import contextmanager
 from functools import reduce
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
@@ -136,7 +152,6 @@ from fastetl_spark.io.fsutil import (
     parquet_rows,
     read_text_file,
     replace_dir,
-    replace_text_file,
     status_paths,
     write_text_file,
 )
@@ -209,10 +224,11 @@ def read_bucket_spec(spark: SparkSession, path: str) -> dict | None:
 
 
 def is_bucketed_root(spark: SparkSession, path: str) -> bool:
-    """True when ``path`` holds a bucket spec or a committed manifest
-    (the spec can be briefly absent next to one, see ``read_bucketed``):
-    such a root reads through ``read_bucketed`` only. Two metadata calls,
-    whatever the number of files under ``path``."""
+    """True when ``path`` holds a bucket spec or a committed manifest (a
+    root that lost its spec file still reads through its manifests, see
+    ``read_bucketed``): such a root reads through ``read_bucketed``
+    only. Two metadata calls, whatever the number of files under
+    ``path``."""
     fs, path_cls = hadoop_fs(spark, path)
     if fs.exists(path_cls(_spec_path(path))):
         return True
@@ -244,14 +260,20 @@ def merge_dest_spec(spark: SparkSession, path: str, keys: list[str]) -> dict | N
 # --- manifest layout (v2): committed generations ---------------------------
 
 
-def _manifest_gens(fs, path_cls, base: str) -> list[int]:
+def _names(spark: SparkSession, pattern: str) -> list[str]:
+    """Names of the entries a Hadoop glob matches: a fixed number of py4j
+    round trips, whatever the number matched (``status_paths``)."""
+    fs, path_cls = hadoop_fs(spark, pattern)
+    return [p.rsplit("/", 1)[1] for p in status_paths(spark, fs.globStatus(path_cls(pattern)))]
+
+
+def _manifest_gens(spark: SparkSession, path: str) -> list[int]:
     """Committed manifest generations, ascending: one Hadoop glob of the
-    manifest names (a few py4j round trips per manifest, none per data
-    dir or file beside them)."""
+    manifest names (none of the data dirs or files beside them)."""
     gens = []
-    for s in fs.globStatus(path_cls(f"{base}/{MANIFEST_PREFIX}*.json")) or []:
+    for name in _names(spark, f"{path.rstrip('/')}/{MANIFEST_PREFIX}*.json"):
         try:
-            gens.append(int(s.getPath().getName()[len(MANIFEST_PREFIX) : -len(".json")]))
+            gens.append(int(name[len(MANIFEST_PREFIX) : -len(".json")]))
         except ValueError:
             continue
     return sorted(gens)
@@ -270,8 +292,9 @@ def read_manifest(spark: SparkSession, path: str) -> dict | None:
     ...]} in generation order: the dirs that hold the bucket's pending
     rows) and ``delta_rows`` ({bucket_id: pending delta rows, tombstones
     included}) for buckets with merge-on-read deltas; ``keys`` (the merge
-    keys, so a read resolves deltas while the spec is briefly absent);
-    ``shards``/``n_shards`` on a sharded destination.
+    keys, so a read resolves deltas without the spec);
+    ``shards``/``n_shards`` on a sharded destination. An empty root lists
+    no bucket.
 
     A sync's bookkeeping: ``watermark`` ({"value": text, "type": name},
     read back by ``manifest_watermark``), the greatest watermark column
@@ -287,8 +310,7 @@ def read_manifest(spark: SparkSession, path: str) -> dict | None:
 
     A manifest that lists a delta per bucket (``delta_v<gen>/__fe_bucket=K``,
     the layout before one delta dir per generation) raises ``ValueError``."""
-    fs, path_cls = hadoop_fs(spark, path)
-    gens = _manifest_gens(fs, path_cls, path.rstrip("/"))
+    gens = _manifest_gens(spark, path)
     if not gens:
         return None
     return _read_manifest_gen(spark, path, gens[-1])
@@ -306,9 +328,9 @@ def _commit_manifest(spark: SparkSession, path: str, m: dict) -> None:
     shard placement map — per-bucket provenance carried on every
     generation so a reader/mover always knows which shard owns which
     bucket dirs as of this gen. ``n_shards`` rides along as the ring
-    size the map was computed for: the MANIFEST is the source of truth
-    for shard placement (it commits atomically with the data pointer),
-    the spec file is a convenience mirror refreshed after commit."""
+    size the map was computed for: the manifest is the only record of
+    shard placement (it commits atomically with the data pointer); the
+    spec, written once by the first load, holds no shard count."""
     fs, path_cls = hadoop_fs(spark, path)
     base = path.rstrip("/")
     gen = m["gen"]
@@ -326,6 +348,39 @@ def _commit_manifest(spark: SparkSession, path: str, m: dict) -> None:
         )
 
 
+@contextmanager
+def _locked(spark: SparkSession, path: str, writer: str) -> Iterator[dict]:
+    """THE write lock of a manifest-layout root, held by every writer
+    that commits a generation on top of the latest (``partial_merge``,
+    ``rollback_bucketed``, ``reshard_bucketed``): checks that ``path``
+    is a v2 root, creates ``<path>.__merge_lock__`` (an atomic create)
+    and yields the spec; the lock is deleted however the block ends. A
+    second writer raises ``RuntimeError``: two would fight over one
+    staging dir and one next generation. A crash leaves the lock behind;
+    clear it with ``io.fsutil.vacuum_dest`` (or delete the file) once no
+    writer runs."""
+    spec = read_bucket_spec(spark, path)
+    if spec is None or spec["version"] != MANIFEST_VERSION:
+        found = f"no {SPEC_FILE}" if spec is None else f"Hive layout, spec version {spec['version']}"
+        raise ValueError(
+            f"{path} is not a manifest-layout (v2) bucketed root ({found}), which "
+            f"{writer} needs: create one with write_bucketed, or migrate it once "
+            "with bucketize(spark, path, keys, n_buckets)"
+        )
+    fs, path_cls = hadoop_fs(spark, path)
+    lock = path.rstrip("/") + ".__merge_lock__"
+    if not fs.createNewFile(path_cls(lock)):
+        raise RuntimeError(
+            f"another merge holds {lock}: {writer} racing another writer of "
+            "this root is rejected (stale after a crash? clear it with "
+            "io.fsutil.vacuum_dest)"
+        )
+    try:
+        yield spec
+    finally:
+        fs.delete(path_cls(lock), False)
+
+
 def _referenced(m: dict) -> list[str]:
     """Every dir manifest ``m`` reads: base dirs, then delta dirs."""
     deltas = {d for dirs in m.get("deltas", {}).values() for d in dirs}
@@ -337,18 +392,21 @@ def _gc_generations(spark: SparkSession, path: str, keep_gens: int = 2) -> None:
     the newest ``keep_gens`` manifests. The previous generation is
     retained so a reader that resolved the old pointer just before a
     flip can still open its files; anything older is dead. A delta dir
-    goes once no retained manifest lists it for any bucket."""
+    goes once no retained manifest lists it for any bucket. The names
+    come from one glob (``_names``), so the listing costs the same
+    round trips whatever the number of dirs; only dirs carry the
+    ``bucket_`` and ``delta_v`` names."""
     fs, path_cls = hadoop_fs(spark, path)
     base = path.rstrip("/")
-    gens = _manifest_gens(fs, path_cls, base)
+    gens = _manifest_gens(spark, path)
     live: set[str] = set()
     for g in gens[-keep_gens:]:
         live |= set(_referenced(_read_manifest_gen(spark, path, g)))
     for g in gens[:-keep_gens]:
         fs.delete(path_cls(f"{base}/{MANIFEST_PREFIX}{g}.json"), False)
-    for s in fs.globStatus(path_cls(f"{base}/{{bucket_,{DELTA_PREFIX}}}*")) or []:
-        if s.isDirectory() and s.getPath().getName() not in live:
-            fs.delete(s.getPath(), True)
+    for name in _names(spark, f"{base}/{{bucket_,{DELTA_PREFIX}}}*"):
+        if name not in live:
+            fs.delete(path_cls(f"{base}/{name}"), True)
 
 
 def manifest_watermark(m: dict | None):
@@ -398,9 +456,10 @@ def write_bucketed(
     The whole root (bucket dirs, manifest, spec) is built in
     ``<path>.__init_staging__`` and renamed into place once, so a crash
     leaves ``path`` absent and a re-run starts over; ``path`` must not
-    exist yet. Rows are distributed by bucket
-    before the write (``_write_by_bucket``): one file per bucket, more
-    only where AQE splits an oversized one.
+    exist yet. The bases go through the one base writer
+    (``_write_bases``): one file per bucket, more only where AQE splits
+    an oversized one. Zero rows make a root whose manifest lists no
+    bucket. The spec is written here, once: nothing rewrites it.
 
     ``watermark_col`` (a sync's first load) records the greatest value
     of that column written as the manifest's ``watermark``; every load
@@ -430,38 +489,19 @@ def write_bucketed(
     staging = base + ".__init_staging__"
     if fs.exists(path_cls(staging)):
         fs.delete(path_cls(staging), True)
-    tagged = df.withColumn(BUCKET_COL, bucket_id(keys, n_buckets))
     obs = Observation()
     if watermark_col is not None:
-        tagged = tagged.observe(obs, F.max(watermark_col).alias("wm"))
-    _write_by_bucket(tagged, staging)
-    wm = observed(obs, {"wm": None})["wm"] if watermark_col is not None else None
-    fs.delete(path_cls(f"{staging}/_SUCCESS"), False)
+        df = df.observe(obs, F.max(watermark_col).alias("wm"))
     gen = 1
-    buckets: dict[int, str] = {}
-    rows: dict[int, int] = {}
-    for s in fs.listStatus(path_cls(staging)):
-        name = s.getPath().getName()
-        if not (s.isDirectory() and name.startswith(f"{BUCKET_COL}=")):
-            continue
-        b = int(name.split("=", 1)[1])
-        dirname = f"bucket_{b}_v{gen}"
-        if not fs.rename(s.getPath(), path_cls(f"{staging}/{dirname}")):
-            raise IOError(f"could not place {dirname} under {staging}")
-        buckets[b] = dirname
-        rows[b] = parquet_rows(spark, f"{staging}/{dirname}")
-    touched = len(buckets)
-    if not buckets:
-        # zero-row initial load: keep one schema-bearing empty bucket
-        empty = literal_frame(spark, df.schema)
-        empty.write.mode("overwrite").parquet(f"{staging}/bucket_0_v{gen}")
-        buckets[0], rows[0] = f"bucket_0_v{gen}", 0
+    buckets = _write_bases(df, keys, n_buckets, f"{staging}/_stage", staging, gen)
+    wm = observed(obs, {"wm": None})["wm"] if watermark_col is not None else None
+    rows = {b: parquet_rows(spark, f"{staging}/{d}") for b, d in buckets.items()}
     n = sum(rows.values())
     m: dict = {
         "gen": gen, "buckets": buckets, "rows": rows, "schema": df.schema.jsonValue(),
         "keys": list(keys),
         **_bookkeeping(
-            {}, "full", wm, txn, upserts=n, tombstones=0, buckets_touched=touched,
+            {}, "full", wm, txn, upserts=n, tombstones=0, buckets_touched=len(buckets),
             rows_written=n, folds=0, rows=n,
         ),
     }
@@ -469,14 +509,12 @@ def write_bucketed(
         m["shards"] = {b: _hrw_shard(b, n_shards) for b in range(n_buckets)}
         m["n_shards"] = int(n_shards)
     _commit_manifest(spark, staging, m)
-    spec: dict = {
+    spec = {
         "version": MANIFEST_VERSION,
         "keys": list(keys),
         "n_buckets": int(n_buckets),
         "keep_gens": int(keep_gens),
     }
-    if n_shards is not None:
-        spec["n_shards"] = int(n_shards)
     write_text_file(spark, _spec_path(staging), json.dumps(spec))
     fs.mkdirs(path_cls(base).getParent())
     if not fs.rename(path_cls(staging), path_cls(base)):
@@ -593,11 +631,10 @@ def read_bucketed(spark: SparkSession, path: str) -> DataFrame:
     do NOT prune buckets automatically (the hash is opaque to
     Catalyst); use ``read_buckets_for_keys`` for point lookups."""
     spec = read_bucket_spec(spark, path)
-    # The manifest, not the spec, decides whether this is a v2 root: a
-    # crash (or the atomic spec swap's delete/rename window) can leave
-    # the spec briefly ABSENT while manifests exist — falling through to
-    # the raw Hive read would then scan EVERY retained generation's bucket
-    # dirs and silently return duplicated rows.
+    # The manifest, not the spec, decides whether this is a v2 root: on
+    # a root whose spec file was lost, falling through to the raw Hive
+    # read would scan EVERY retained generation's bucket dirs and
+    # silently return duplicated rows.
     m = (
         read_manifest(spark, path)
         if spec is None or spec["version"] == MANIFEST_VERSION
@@ -667,8 +704,7 @@ def _read_hive(
 def list_generations(spark: SparkSession, path: str) -> list[int]:
     """Committed manifest generations of a v2 destination, ascending.
     Empty for a Hive-layout index (no manifests)."""
-    fs, path_cls = hadoop_fs(spark, path)
-    return _manifest_gens(fs, path_cls, path.rstrip("/"))
+    return _manifest_gens(spark, path)
 
 
 def _read_manifest_gen(spark: SparkSession, path: str, gen: int) -> dict:
@@ -728,19 +764,7 @@ def rollback_bucketed(spark: SparkSession, path: str, to_gen: int | None = None)
     target's bucket dirs were already GC'd, or if a concurrent merge
     holds the destination lock. This is the plain-parquet twin of Delta's
     RESTORE; with delta installed, prefer the transactional path."""
-    spec = read_bucket_spec(spark, path)
-    if spec is None or spec["version"] != MANIFEST_VERSION:
-        raise ValueError(
-            f"{path} is not a manifest-layout (v2) bucketed destination — "
-            "rollback needs committed generations (write_bucketed)"
-        )
-    fs, path_cls = hadoop_fs(spark, path)
-    lock = path_cls(path.rstrip("/") + ".__merge_lock__")
-    if not fs.createNewFile(lock):
-        raise RuntimeError(
-            f"another merge holds {lock}: rollback racing a merge is rejected"
-        )
-    try:
+    with _locked(spark, path, "rollback_bucketed"):
         gens = list_generations(spark, path)
         if len(gens) < 2 and to_gen is None:
             raise ValueError(f"{path} has no earlier generation to roll back to")
@@ -757,8 +781,6 @@ def rollback_bucketed(spark: SparkSession, path: str, to_gen: int | None = None)
         new_gen = gens[-1] + 1
         _commit_manifest(spark, path, {**m, "gen": new_gen})
         return new_gen
-    finally:
-        fs.delete(lock, False)
 
 
 def read_buckets_for_keys(
@@ -887,6 +909,56 @@ def _bucket_counts(
     return {r[0]: (r[1], r[2]) for r in agg.collect()}
 
 
+def _write_bases(
+    df: DataFrame, keys: list[str], n_buckets: int, stage: str, root: str, gen: int
+) -> dict[int, str]:
+    """THE base writer: the rows of ``df`` as new bucket bases
+    ``root/bucket_<K>_v<gen>``, one per bucket they hold, in one Spark
+    write. The rows are staged by bucket in ``stage``
+    (``_write_by_bucket``), then each ``__fe_bucket=K`` dir is renamed
+    into place and ``stage`` goes. ``gen`` is a generation no manifest
+    has committed yet, so a ``bucket_*_v<gen>`` dir already under
+    ``root`` is an orphan of a crashed attempt and is deleted first. The
+    new bases stay invisible until a manifest lists them. Returns
+    {bucket: base dir name}; a bucket without rows gets no base."""
+    spark = df.sparkSession
+    fs, path_cls = hadoop_fs(spark, root)
+    _write_by_bucket(df.withColumn(BUCKET_COL, bucket_id(keys, n_buckets)), stage)
+    for orphan in _names(spark, f"{root}/bucket_*_v{gen}"):
+        fs.delete(path_cls(f"{root}/{orphan}"), True)
+    placed: dict[int, str] = {}
+    for name in _names(spark, f"{stage}/{BUCKET_COL}=*"):
+        b = int(name.split("=", 1)[1])
+        placed[b] = f"bucket_{b}_v{gen}"
+        if not fs.rename(path_cls(f"{stage}/{name}"), path_cls(f"{root}/{placed[b]}")):
+            raise IOError(f"could not place {placed[b]} under {root}")
+    fs.delete(path_cls(stage), True)
+    return placed
+
+
+def _rebase(
+    spark: SparkSession, path: str, new: dict, ids: list[int], keys: list[str], n_buckets: int
+) -> None:
+    """Rewrite buckets ``ids`` of the uncommitted generation ``new`` as
+    new bases, each its base and deltas resolved, in one write staged in
+    ``<path>.__merge_staging__`` under the caller's lock (a crash strands
+    it: the next write overwrites it, ``io.fsutil.vacuum_dest`` clears
+    it). ``new`` is updated
+    in place: the buckets list their new bases and no deltas. A merge's
+    fold and a reshard's move both run through here."""
+    base = path.rstrip("/")
+    folded = _resolve(spark, path, new, ids, keys)
+    placed = _write_bases(folded, keys, n_buckets, base + ".__merge_staging__", base, new["gen"])
+    for b in ids:
+        new["deltas"].pop(b, None)
+        new["delta_rows"].pop(b, None)
+        if b in placed:
+            new["buckets"][b] = placed[b]
+        else:  # no live rows: the empty base older roots may still list
+            new["buckets"].pop(b, None)
+            new["rows"].pop(b, None)
+
+
 def _write_by_bucket(df: DataFrame, path: str) -> None:
     """``partitionBy`` write of a bucket-tagged frame, distributed by
     bucket first: one file per touched bucket (more only where AQE splits
@@ -964,39 +1036,14 @@ def partial_merge(
     Only manifest-layout roots merge; a Hive-layout root (spec version
     1) raises ``ValueError`` — migrate it once with ``bucketize``.
 
-    Concurrency: a lock file (``<path>.__merge_lock__``, atomic create)
-    rejects a second merge on the same destination — two merges would
-    fight over one staging directory and one next generation. A crash
-    leaves the lock behind; clear it with ``io.fsutil.vacuum_dest`` (or
-    delete the file) once no merge runs.
+    Concurrency: the root's write lock (``_locked``) rejects a second
+    merge, rollback or reshard of the same destination.
 
     The Spark jobs run under the descriptions ``fastetl:sync:<phase>``,
     phases ``delta_write``, ``count`` and ``fold``.
     """
-    spec = read_bucket_spec(spark, path)
-    if spec is None:
-        raise ValueError(
-            f"{path} has no {SPEC_FILE}; initialize with write_bucketed() first"
-        )
-    if spec["version"] != MANIFEST_VERSION:
-        raise ValueError(
-            f"{path} is in the Hive bucket layout (spec version "
-            f"{spec['version']}), which partial_merge does not merge; migrate "
-            "it once with bucketize(spark, path, keys, n_buckets)"
-        )
-
-    lock_fs, lock_path_cls = hadoop_fs(spark, path)
-    lock = lock_path_cls(path.rstrip("/") + ".__merge_lock__")
-    if not lock_fs.createNewFile(lock):
-        raise RuntimeError(
-            f"another merge holds {lock}: concurrent merges on one "
-            "destination are rejected (stale after a crash? clear it "
-            "with io.fsutil.vacuum_dest)"
-        )
-    try:
+    with _locked(spark, path, "partial_merge") as spec:
         return _merge_locked(spark, path, spec, increment, deleted_keys, watermark_col, txn)
-    finally:
-        lock_fs.delete(lock, False)
 
 
 def _merge_locked(
@@ -1072,33 +1119,11 @@ def _merge_locked(
         else:
             new["rows"][b], new["delta_rows"][b] = live, pending
 
-    rows_written = written["upserts"] + written["tombstones"]
     fold = [b for b in touched if b in new["deltas"] and _folds(m, b)]
     if fold:
-        staging = base + ".__merge_staging__"
         with job_phase(spark, "sync", "fold"):
-            if fs.exists(path_cls(staging)):
-                fs.delete(path_cls(staging), True)
-            folded = _resolve(spark, path, new, fold, keys)
-            _write_by_bucket(folded.withColumn(BUCKET_COL, bucket_id(keys, n_buckets)), staging)
-        for b in fold:
-            dirname = f"bucket_{b}_v{next_gen}"
-            dst = path_cls(f"{base}/{dirname}")
-            if fs.exists(dst):  # orphan from a crashed previous attempt
-                fs.delete(dst, True)
-            if not fs.rename(path_cls(f"{staging}/{BUCKET_COL}={b}"), dst):
-                raise IOError(f"could not place {dirname} under {base}")
-            new["buckets"][b] = dirname
-            new["deltas"].pop(b)
-            new["delta_rows"].pop(b)
-            rows_written += new["rows"][b]
-        fs.delete(path_cls(staging), True)
-
-    if not _ids(new):
-        # destination fully emptied: keep one schema-bearing empty dir
-        dirname = f"bucket_0_v{next_gen}"
-        literal_frame(spark, schema).write.mode("overwrite").parquet(f"{base}/{dirname}")
-        new["buckets"][0], new["rows"][0] = dirname, 0
+            _rebase(spark, path, new, fold, keys, n_buckets)
+    rows_written = written["upserts"] + written["tombstones"] + sum(new["rows"][b] for b in fold)
     new.update(
         _bookkeeping(
             m, "incremental", written.get("wm"), txn, upserts=written["upserts"],
@@ -1130,11 +1155,7 @@ def bucket_file_counts(
     fs, path_cls = hadoop_fs(spark, path)
     base = path.rstrip("/")
     if bucket_ids is None:
-        bucket_ids = [
-            int(s.getPath().getName().split("=", 1)[1])
-            for s in fs.listStatus(path_cls(base))
-            if s.isDirectory() and s.getPath().getName().startswith(f"{part_col}=")
-        ]
+        bucket_ids = [int(n.split("=", 1)[1]) for n in _names(spark, f"{base}/{part_col}=*")]
     out: dict[int, int] = {}
     for b in sorted(set(bucket_ids)):
         n = len(fs.globStatus(path_cls(f"{base}/{part_col}={b}/{DATA_FILES}")) or [])
@@ -1266,12 +1287,15 @@ def reshard_bucketed(
     shards, moving ONLY the buckets whose HRW owner changes.
 
     Mechanics: recompute the HRW winner of every bucket under the new
-    shard count (driver-side, n_buckets bounded ints), physically copy
-    just the MOVED buckets into fresh ``bucket_<K>_v<gen+1>`` dirs (on a
-    cluster this copy is the actual data migration; unmoved buckets'
-    dirs are re-referenced untouched — zero I/O), then publish the new
-    placement map + dir set with ONE manifest commit. Readers racing
-    the reshard resolve a complete old or new generation, and
+    shard count (driver-side, n_buckets bounded ints), rewrite just the
+    MOVED buckets, deltas resolved, as fresh ``bucket_<K>_v<gen+1>``
+    bases in one write (``_rebase``; on a cluster this copy is the
+    actual data migration; unmoved buckets' dirs are re-referenced
+    untouched — zero I/O), then publish the new placement map + dir set
+    with ONE manifest commit, under the root's write lock. The spec is
+    not touched: the manifest holds ``n_shards``. Readers racing the
+    reshard resolve a complete old or new generation, a crash before the
+    commit leaves the old one and a re-run converges, and
     ``rollback_bucketed`` undoes the flip like any other publish.
 
     Growing n -> m only ever moves buckets TO the new shards n..m-1
@@ -1285,74 +1309,38 @@ def reshard_bucketed(
 
     Returns {"gen", "old_n_shards", "new_n_shards", "n_buckets",
     "buckets_moved", "rows_moved", "rows_total"}."""
-    spec = read_bucket_spec(spark, path)
-    if spec is None or spec["version"] != MANIFEST_VERSION:
-        raise ValueError(
-            f"{path} is not a manifest-layout (v2) bucketed destination — "
-            "the shard layer needs committed generations (write_bucketed)"
-        )
     if new_n_shards < 1:
         raise ValueError(f"new_n_shards must be >= 1, got {new_n_shards}")
-    fs, path_cls = hadoop_fs(spark, path)
-    base = path.rstrip("/")
-    lock = path_cls(base + ".__merge_lock__")
-    if not fs.createNewFile(lock):
-        raise RuntimeError(
-            f"another merge holds {lock}: resharding racing a merge is rejected"
-        )
-    try:
+    with _locked(spark, path, "reshard_bucketed") as spec:
         m = read_manifest(spark, path)
         n_buckets = int(spec["n_buckets"])
         old_shards = m.get("shards")
-        # the MANIFEST is the source of truth for the prior ring size
-        # (it commits atomically with the placement map); the spec is a
-        # mirror refreshed AFTER commit and can be one step stale if a
-        # previous reshard crashed between the two writes
-        old_n = int(m.get("n_shards") or spec.get("n_shards") or 0)
         new_shards = {b: _hrw_shard(b, new_n_shards) for b in range(n_buckets)}
         moved = (
-            sorted(
-                b
-                for b in _ids(m)
-                if old_shards.get(b) != new_shards[b]
-            )
+            sorted(b for b in _ids(m) if old_shards.get(b) != new_shards[b])
             if old_shards is not None
             else []  # first placement: nothing was placed, nothing moves
         )
-        next_gen = m["gen"] + 1
-        rows = _live_rows(spark, base, m)
+        rows = _live_rows(spark, path.rstrip("/"), m)
         new = {
-            **m, "gen": next_gen, "rows": rows, "shards": new_shards,
+            **m, "gen": m["gen"] + 1, "rows": dict(rows), "shards": new_shards,
             "n_shards": int(new_n_shards), "buckets": dict(m["buckets"]),
             "deltas": dict(m.get("deltas", {})),
             "delta_rows": dict(m.get("delta_rows", {})),
         }
-        for b in moved:
-            # the copy resolves the bucket's deltas: it moves as a base
-            dirname = f"bucket_{b}_v{next_gen}"
-            dst = f"{base}/{dirname}"
-            dst_p = path_cls(dst)
-            if fs.exists(dst_p):  # orphan from a crashed previous attempt
-                fs.delete(dst_p, True)
-            _resolve(spark, path, m, [b], spec["keys"]).write.mode("overwrite").parquet(dst)
-            new["buckets"][b] = dirname
-            new["deltas"].pop(b, None)
-            new["delta_rows"].pop(b, None)
+        if moved:
+            _rebase(spark, path, new, moved, spec["keys"], n_buckets)
         _commit_manifest(spark, path, new)
-        spec["n_shards"] = int(new_n_shards)
-        replace_text_file(spark, _spec_path(path), json.dumps(spec))
         _gc_generations(spark, path, keep_gens=int(spec.get("keep_gens", 2)))
         return {
-            "gen": next_gen,
-            "old_n_shards": old_n,
+            "gen": new["gen"],
+            "old_n_shards": int(m.get("n_shards") or 0),
             "new_n_shards": int(new_n_shards),
             "n_buckets": n_buckets,
             "buckets_moved": len(moved),
             "rows_moved": sum(rows[b] for b in moved),
             "rows_total": sum(rows.values()),
         }
-    finally:
-        fs.delete(lock, False)
 
 
 def bucketize(

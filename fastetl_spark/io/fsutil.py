@@ -39,7 +39,9 @@ def status_paths(spark: SparkSession, statuses) -> list[str]:
     three py4j round trips whatever its length, where reading them one
     by one costs about five per status. (py4j does not pass a ``Path[]``
     where ``Object[]`` is declared; Scala's ``ArraySeq.make`` takes any
-    array.)"""
+    array.) None, what a glob of a missing path can return, has none."""
+    if statuses is None:
+        return []
     paths = jvm_class(spark, "org.apache.hadoop.fs.FileUtil").stat2Paths(statuses)
     joined = jvm_class(spark, "scala.collection.mutable.ArraySeq").make(paths).mkString("\n")
     return joined.split("\n") if joined else []
@@ -81,24 +83,6 @@ def write_text_file(spark: SparkSession, path_str: str, text: str) -> None:
         out.write(bytearray(text.encode("utf-8")))
     finally:
         out.close()
-
-
-def replace_text_file(spark: SparkSession, path_str: str, text: str) -> None:
-    """Overwrite a small control file via tmp-write + rename (the
-    pattern manifest commits use): a concurrent reader sees the old
-    content or the new content, never a torn partial write — the
-    rename, not the write, publishes. The delete/rename window can
-    leave the file briefly ABSENT after a crash; callers treat a
-    missing control file as 'rebuild', which is the safe direction."""
-    fs, path_cls = hadoop_fs(spark, path_str)
-    base, _, name = path_str.rstrip("/").rpartition("/")
-    tmp_str = f"{base}/.{name}.tmp"
-    write_text_file(spark, tmp_str, text)
-    p = path_cls(path_str)
-    if fs.exists(p):
-        fs.delete(p, False)
-    if not fs.rename(path_cls(tmp_str), p):
-        raise IOError(f"replace_text_file: could not publish {path_str}")
 
 
 def read_text_file(spark: SparkSession, path_str: str) -> str | None:

@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from fastetl_spark.checkpointing import observed
-from fastetl_spark.io.fsutil import DATA_FILES, hadoop_fs, replace_dir
+from fastetl_spark.io.fsutil import DATA_FILES, hadoop_fs, parquet_rows, replace_dir
 from fastetl_spark.io.readers import read_parquet
 
 
@@ -211,10 +211,19 @@ def compact_parquet_dir(
 
     The schema comes from one footer (``io.readers.read_parquet``) and
     the file count from ceil(rows / target), the rows from the parquet
-    footers (a metadata read, not a data scan): no schema inference,
-    only the count (two jobs under AQE) and the write."""
-    df = read_parquet(spark, path)
-    n_files = max(1, -(-df.count() // target_rows_per_file))
-    atomic_overwrite(df.coalesce(n_files), path)
+    footers, read on the driver (``io.fsutil.parquet_rows``): the write
+    is the one Spark job. A directory with subdirectories (Hive
+    partitions) raises ``ValueError``: one coalesced rewrite would
+    flatten them into one dir, the partition column turned data. Compact
+    each partition dir instead, as ``io.bucketed.compact_buckets`` does."""
     fs, path_cls = hadoop_fs(spark, path)
-    return len(fs.globStatus(path_cls(f"{path.rstrip('/')}/{DATA_FILES}")) or [])
+    base = path.rstrip("/")
+    if fs.globStatus(path_cls(f"{base}/{DATA_FILES}/*")):
+        raise ValueError(
+            f"{path} holds subdirectories (Hive partitions?): compact each "
+            "partition dir on its own"
+        )
+    df = read_parquet(spark, path)
+    n_files = max(1, -(-parquet_rows(spark, base) // target_rows_per_file))
+    atomic_overwrite(df.coalesce(n_files), path)
+    return len(fs.globStatus(path_cls(f"{base}/{DATA_FILES}")) or [])

@@ -195,12 +195,12 @@ def rendezvous_reshard_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Build (4 shards) + reshard (5 shards) + full read of a v2
     bucketed orders store — content identity across an online HRW
     reshard, under the exact gate. The scratch store is rebuilt only
-    when absent/incomplete (complete = spec says 5 shards and both
-    generations committed), mirroring bucketed_time_travel."""
+    when absent/incomplete (complete = the latest manifest says 5 shards
+    and both generations are committed), mirroring bucketed_time_travel."""
     from fastetl_spark.io.bucketed import (
         list_generations,
-        read_bucket_spec,
         read_bucketed,
+        read_manifest,
         reshard_bucketed,
         write_bucketed,
     )
@@ -211,10 +211,10 @@ def rendezvous_reshard_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey", "o_custkey", "o_totalprice"
     )
     dest = _scratch_index_path(sf_dir, "reshard")
-    spec = read_bucket_spec(spark, dest)
+    m = read_manifest(spark, dest)
     complete = (
-        spec is not None
-        and spec.get("n_shards") == _RESHARD_NEW_N
+        m is not None
+        and m.get("n_shards") == _RESHARD_NEW_N
         and len(list_generations(spark, dest)) >= 2
     )
     if not complete:

@@ -8,9 +8,10 @@ class compiled and py4j round trip costs the same at 10 rows as at 10k.
 These tests pin the job ceilings of one round, of one index append
 and match and of the ANN index appends and probes, the row counts, schema and watermark the manifest carries so
 that the post-merge count and the next watermark need no job, the
-compilations of a repeated round, the round trips of a round and of an
-index append and match, the band rows' plan and the index phases' job
-descriptions. ``make fixed-costs`` runs this file alone.
+compilations of a repeated round, the round trips of a round, of a GC
+pass and of an index append and match, the jobs of a reshard, an
+emptied root without a placeholder base, the band rows' plan and the
+index phases' job descriptions. ``make fixed-costs`` runs this file alone.
 """
 
 from __future__ import annotations
@@ -102,12 +103,22 @@ REPEAT_ROUND_COMPILES = 12
 INDEX_APPEND_ROUND_TRIPS = 1000
 INDEX_MATCH_ROUND_TRIPS = 1000
 # py4j round trips of one sync round into a 17-column, 8-bucket root
-# that holds three pending delta generations: ~520. They were ~1.3k
-# while the delta frame cast one Column per column, the pending-delta
-# filter and the bucket counts were Column calls, the manifest listing
-# walked every file of the root and each JVM class was looked up one
-# package name at a time.
-SYNC_ROUND_ROUND_TRIPS = 750
+# that holds three pending delta generations: ~450. They were ~520
+# while the GC and the manifest listing read each name with calls of
+# its own, and ~1.3k while the delta frame cast one Column per column,
+# the pending-delta filter and the bucket counts were Column calls, the
+# manifest listing walked every file of the root and each JVM class was
+# looked up one package name at a time.
+SYNC_ROUND_ROUND_TRIPS = 650
+# Spark jobs of a reshard of 32 buckets from 3 to 5 shards (15 buckets
+# move): the moved buckets are one write. It was 15 while each moved
+# bucket was a write of its own.
+RESHARD_JOBS = 2
+# py4j round trips of one GC pass over a 16-bucket root with three
+# generations to drop (dead bases, delta dirs and manifests): ~85. It
+# was ~340 while every dir listed cost its own isDirectory, getPath and
+# getName calls.
+GC_ROUND_TRIPS = 120
 
 
 def _table(spark, lo: int, hi: int, ts: int):
@@ -286,6 +297,67 @@ def test_sync_round_round_trips(spark, sf_dir, tmp_path):
     with _RoundTrips() as trips:
         eng.sync(src, {"path": dest}, keys, "ts", deleted_keys=dels)
     assert trips.n <= SYNC_ROUND_ROUND_TRIPS, trips.n
+
+
+def test_reshard_moves_its_buckets_in_one_write(spark, tmp_path):
+    dest = str(tmp_path / "dest")
+    write_bucketed(_table(spark, 0, 2000, 1), dest, ["id"], 32, n_shards=3)
+    with _Jobs(spark, "budget-reshard") as jobs:
+        stats = reshard_bucketed(spark, dest, 5)
+    assert stats["buckets_moved"] == 15 and stats["rows_total"] == 2000
+    assert jobs.n <= RESHARD_JOBS, jobs.n
+    assert read_bucketed(spark, dest).count() == 2000
+
+
+def test_empty_root_has_no_base(spark, tmp_path):
+    """A zero-row first load and a merge that deletes every row write no
+    base: the manifest lists no bucket and records the schema, so the
+    root reads back empty and typed, and later merges land as usual."""
+    dest = str(tmp_path / "dest")
+    schema = _table(spark, 0, 1, 1).schema.simpleString()
+    write_bucketed(_table(spark, 0, 0, 1), dest, ["id"], N_BUCKETS)
+    assert not [d for d in os.listdir(dest) if d.startswith("bucket_")]
+    assert read_manifest(spark, dest)["buckets"] == {}
+    got = read_bucketed(spark, dest)
+    assert got.schema.simpleString() == schema and got.count() == 0
+
+    partial_merge(spark, dest, _table(spark, 0, 50, 2))
+    partial_merge(spark, dest, _table(spark, 0, 50, 3))  # folds every bucket
+    m = read_manifest(spark, dest)
+    assert m["buckets"] and not m.get("deltas")
+    stats = partial_merge(spark, dest, _table(spark, 0, 0, 0), deleted_keys=_table(spark, 0, 50, 0))
+    m = read_manifest(spark, dest)
+    assert stats["rows"] == 0 and m["buckets"] == {} and m["rows"] == {}
+    assert not [d for d in os.listdir(dest) if d.startswith("bucket_") and d.endswith(f"_v{m['gen']}")]
+    got = read_bucketed(spark, dest)
+    assert got.schema.simpleString() == schema and got.count() == 0
+    partial_merge(spark, dest, _table(spark, 7, 9, 4))
+    assert sorted(r.id for r in read_bucketed(spark, dest).collect()) == [7, 8]
+
+
+def test_gc_round_trips(spark, tmp_path, monkeypatch):
+    """A GC pass reads the names of a root's dirs in a fixed number of
+    py4j round trips, and deletes exactly the dirs no retained
+    generation lists."""
+    import fastetl_spark.io.bucketed as B
+
+    dest = str(tmp_path / "dest")
+    write_bucketed(_table(spark, 0, 160, 1), dest, ["id"], 16)
+    monkeypatch.setattr(B, "_gc_generations", lambda *a, **k: None)
+    for r in range(2, 6):  # four merges, GC held back
+        partial_merge(spark, dest, _table(spark, 0, 160 if r == 3 else 60, r))
+    monkeypatch.undo()
+    gens = list_generations(spark, dest)
+    keep = set()
+    for g in gens[-2:]:
+        keep |= set(B._referenced(B._read_manifest_gen(spark, dest, g)))
+    data = lambda: {d for d in os.listdir(dest) if d.startswith(("bucket_", "delta_v"))}
+    assert data() - keep  # garbage to collect
+    with _RoundTrips() as trips:
+        B._gc_generations(spark, dest)
+    assert data() == keep
+    assert list_generations(spark, dest) == gens[-2:]
+    assert trips.n <= GC_ROUND_TRIPS, trips.n
 
 
 def _files(root: str) -> dict[str, int]:
@@ -527,7 +599,8 @@ def test_manifest_rows_track_every_publish(spark, tmp_path):
         got = read_bucketed(spark, dest)
         assert _manifest_rows(spark, dest) == got.count()
         dirs = [f"{dest}/{d}" for d in read_manifest(spark, dest)["buckets"].values()]
-        assert got.schema == spark.read.parquet(*dirs).schema  # recorded == inferred
+        if dirs:  # an emptied root has no base to infer from
+            assert got.schema == spark.read.parquet(*dirs).schema  # recorded == inferred
 
     check()
     partial_merge(spark, dest, _table(spark, 250, 400, 2))  # updates + inserts

@@ -10,6 +10,9 @@ the stable-resharding claims, measured.
 - resharding to the same count is a no-op; unmoved bucket files
   survive byte-identical (same paths, same mtimes);
 - the placement map survives a partial_merge and a rollback;
+- a reshard killed after staging or after placing its moved buckets
+  leaves the old rows and placement, releases its lock, and a plain
+  re-run converges to an uninterrupted reshard;
 - the driver-side HRW (_hrw_shard) agrees with the row-level
   rendezvous_shard column expression for identical string keys.
 """
@@ -21,6 +24,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+import fastetl_spark.io.bucketed as B
 from fastetl_spark.io.bucketed import (
     _hrw_shard,
     list_generations,
@@ -137,9 +141,75 @@ def test_initializes_unsharded_store_without_moving(spark, tmp_path):
     write_bucketed(df, path, ["k"], 32)
     stats = reshard_bucketed(spark, path, 3)
     assert stats["old_n_shards"] == 0 and stats["buckets_moved"] == 0
-    assert read_bucket_spec(spark, path)["n_shards"] == 3
+    assert read_manifest(spark, path)["n_shards"] == 3
+    assert "n_shards" not in read_bucket_spec(spark, path)  # the spec is written once
     assert set(shard_map(spark, path).values()) <= {0, 1, 2}
     assert read_bucketed(spark, path).count() == 500
+
+
+def _crash_in(monkeypatch, name: str, after_call: bool, only=lambda *a: True):
+    """Make ``io.bucketed.<name>`` raise (after running, with
+    ``after_call``) where ``only(*args)`` holds."""
+    real = getattr(B, name)
+
+    def crash(*args, **kwargs):
+        if not only(*args):
+            return real(*args, **kwargs)
+        if after_call:
+            real(*args, **kwargs)
+        raise RuntimeError(f"injected crash in {name}")
+
+    monkeypatch.setattr(B, name, crash)
+
+
+def _pending_store(spark, path: str) -> None:
+    """32 buckets at 3 shards, then a merge that leaves every bucket a
+    pending delta, so a moved bucket resolves its delta into its base."""
+    df = spark.range(640).select(F.col("id").alias("k"), (F.col("id") % 7).alias("v"))
+    write_bucketed(df, path, ["k"], 32, n_shards=3)
+    partial_merge(spark, path, df.filter("k % 20 = 0").withColumn("v", F.lit(-1).cast("long")))
+
+
+@pytest.mark.parametrize(
+    "boundary",
+    [
+        "staged",  # moved buckets staged in .__merge_staging__, not placed
+        "placed",  # moved buckets placed as new bases, manifest not committed
+    ],
+)
+def test_reshard_killed_then_rerun_converges(spark, tmp_path, monkeypatch, boundary):
+    """A reshard killed after it staged the moved buckets, or after it
+    placed them but before its commit: readers see the old rows and the
+    old placement, the lock is gone, and a plain re-run ends where an
+    uninterrupted reshard does."""
+    path, twin = str(tmp_path / "store"), str(tmp_path / "twin")
+    _pending_store(spark, path)
+    _pending_store(spark, twin)
+    rows, placed = _rows(read_bucketed(spark, path)), shard_map(spark, path)
+    if boundary == "staged":
+        _crash_in(
+            monkeypatch, "_write_by_bucket", after_call=True,
+            only=lambda df, p: p.endswith(".__merge_staging__"),
+        )
+    else:
+        _crash_in(monkeypatch, "_commit_manifest", after_call=False)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        reshard_bucketed(spark, path, 5)
+    monkeypatch.undo()
+    assert not os.path.exists(path + ".__merge_lock__")
+    assert _rows(read_bucketed(spark, path)) == rows
+    assert shard_map(spark, path) == placed
+
+    stats = reshard_bucketed(spark, path, 5)
+    want = reshard_bucketed(spark, twin, 5)
+    assert stats == want and stats["buckets_moved"] > 0
+    assert _rows(read_bucketed(spark, path)) == _rows(read_bucketed(spark, twin)) == rows
+    m, m_twin = read_manifest(spark, path), read_manifest(spark, twin)
+    assert (m["buckets"], m["shards"], m.get("deltas")) == (
+        m_twin["buckets"], m_twin["shards"], m_twin.get("deltas")
+    )
+    assert sorted(os.listdir(path)) == sorted(os.listdir(twin))
+    assert not os.path.exists(path + ".__merge_staging__")
 
 
 def test_hrw_matches_rendezvous_shard_column(spark):

@@ -135,8 +135,8 @@ def test_compact_parquet_dir_reduces_files(spark, sf_dir, tmp_path):
 def test_compact_parquet_dir_counts_files_not_splits(spark, tmp_path):
     """The count returned is the data files on disk, whatever the read
     splits: one file larger than ``maxPartitionBytes`` is one file. The
-    compaction runs two jobs, the row count and the write, plus the
-    count's AQE stage: no schema inference."""
+    compaction runs one job, the write: the schema and the row count
+    come from the footers (it ran 3 while AQE ran ``df.count()``)."""
     from fastetl_spark.io.writers import compact_parquet_dir
 
     path = str(tmp_path / "fragmented")
@@ -156,8 +156,23 @@ def test_compact_parquet_dir_counts_files_not_splits(spark, tmp_path):
     files = [f for f in os.listdir(path) if not f.startswith(("_", "."))]
     assert n_after == len(files) == 1
     assert os.path.getsize(os.path.join(path, files[0])) > 256 * 1024
-    assert len(sc.statusTracker().getJobIdsForGroup("compact-dir")) <= 3
+    assert len(sc.statusTracker().getJobIdsForGroup("compact-dir")) == 1
     assert spark.read.parquet(path).count() == 20_000
+
+
+def test_compact_parquet_dir_refuses_partitioned_dir(spark, tmp_path):
+    """A Hive-partitioned dir is not flattened into one file with the
+    partition column turned data: it raises, and the tree is left as it
+    was."""
+    from fastetl_spark.io.writers import compact_parquet_dir
+
+    path = str(tmp_path / "parted")
+    spark.range(30).selectExpr("id", "id % 3 AS k").write.partitionBy("k").parquet(path)
+    before = sorted((d, tuple(sorted(f))) for d, _, f in os.walk(path))
+    with pytest.raises(ValueError, match="subdirectories"):
+        compact_parquet_dir(spark, path)
+    assert sorted((d, tuple(sorted(f))) for d, _, f in os.walk(path)) == before
+    assert sorted(r.k for r in spark.read.parquet(path).select("k").distinct().collect()) == [0, 1, 2]
 
 
 def test_manifest_ingest_is_incremental(spark, sf_dir, tmp_path):
