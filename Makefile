@@ -1,4 +1,4 @@
-.PHONY: test test-sf01 fixed-costs commit-points examples bench smoke audit sweep
+.PHONY: test test-sf01 fixed-costs commit-points forks examples bench smoke audit sweep
 
 # The tier-1 command of ROADMAP.md, verbatim.
 test:
@@ -13,6 +13,12 @@ fixed-costs:
 # touching a commit path.
 commit-points:
 	python -m pytest tests/test_merge_on_read.py tests/test_bucketed.py tests/test_reshard.py tests/test_index_replay.py -q
+
+# Child processes the JVM starts per op (a JFR recording of
+# jdk.ProcessStart): an ingest round and a stream micro-batch, by command
+# and by path. About a minute.
+forks:
+	python tools/forks_per_op.py
 
 # The quickstart walkthrough (examples/quickstart.py), end to end; the
 # tier-1 run deselects it as `slow`.

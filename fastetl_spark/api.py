@@ -43,6 +43,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from fastetl_spark.io.readers import read_jdbc, read_parquet
 from fastetl_spark.io.writers import (
@@ -170,6 +171,14 @@ class Engine:
         store nor the ``LoadInfo`` log: the root's latest load records are
         in its manifest (``read_manifest``'s ``loads``).
 
+        An increment whose columns differ from the destination's (the
+        schema its manifest records) raises ``ValueError`` naming the
+        added, removed and retyped columns (``meta.schema_diff``: names
+        case-insensitive, nullability not compared), before any Spark
+        job; the merge would drop an added column and cast a retyped one.
+        A root whose manifest predates the recorded schema is checked
+        from its next merge on, which records it.
+
         Other destinations raise ``ValueError``: an existing root without a
         bucket spec (migrate it once with ``bucketize``), one bucketed on
         other keys, and any non-parquet one. Merging into a JDBC table waits
@@ -185,6 +194,7 @@ class Engine:
             read_manifest,
             write_bucketed,
         )
+        from fastetl_spark.meta.schema_diff import schema_diff
         from fastetl_spark.session import job_phase
 
         if "jdbc" in dest or dest.get("format", "parquet") != "parquet":
@@ -195,9 +205,10 @@ class Engine:
             )
         path = dest["path"]
         spec = merge_dest_spec(self.spark, path, keys)
-        wm = None
+        wm = m = None
         if spec is not None:
-            wm = manifest_watermark(read_manifest(self.spark, path))
+            m = read_manifest(self.spark, path)
+            wm = manifest_watermark(m)
             if wm is None:
                 with job_phase(self.spark, "sync", "watermark"):
                     if self.watermark_store is not None:
@@ -206,6 +217,15 @@ class Engine:
                         dest_df = read_bucketed(self.spark, path)
                         wm = dest_df.agg(F.max(watermark_col)).first()[0]
         inc = self.read(source)
+        if m is not None and "schema" in m:
+            drift = [
+                c
+                for c in schema_diff(StructType.fromJson(m["schema"]), inc.schema)
+                if c.kind != "nullability_changed" and c.before != c.after
+            ]
+            if drift:
+                detail = "; ".join(f"{c.kind} {c.column} ({c.before} -> {c.after})" for c in drift)
+                raise ValueError(f"increment columns differ from {path}'s: {detail}")
         if wm is not None:
             inc = inc.filter(F.col(watermark_col) > F.lit(wm))
         if spec is None:

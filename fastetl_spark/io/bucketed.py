@@ -901,7 +901,9 @@ def _bucket_counts(
         .repartition(BUCKET_COL)
         .groupBy(BUCKET_COL, *keys)
         .agg(
-            F.expr(f"max(struct({GEN_COL}, {DELETED_COL})).{DELETED_COL}").alias("dead"),
+            # (generation, tombstone) as one int: a HashAggregate, where a
+            # max over a struct plans a SortAggregate that sorts every key row
+            F.expr(f"max(2 * {GEN_COL} + CAST({DELETED_COL} AS INT)) % 2 = 1").alias("dead"),
             F.expr(f"count_if({GEN_COL} > 0)").alias("pending"),
         )
     )

@@ -67,6 +67,20 @@ def get_spark(
         # Errors keep their error class and Python traceback; only the
         # call-site fragment of the DataFrame query context goes.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        # Streaming checkpoints (offset, commit and source logs, the file
+        # sink's _spark_metadata, state deltas and their checksums) commit
+        # by FileSystem.rename, not Spark's default FileContext.rename: on
+        # a local disk that forks `readlink` for both sides of every rename
+        # and again for its .crc, ~190 forks per micro-batch of a windowed
+        # count. The FileSystem manager checks for an existing target and
+        # then renames, where FileContext refuses one atomically; a query
+        # already refuses a second concurrent run on its checkpoint
+        # (RUNBOOK "Fixed cost per sync round").
+        .config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager",
+        )
     )
     if master:
         builder = builder.master(master)

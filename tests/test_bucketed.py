@@ -419,6 +419,36 @@ def test_engine_sync_rejects_other_keys_and_non_parquet(spark, tmp_path):
     assert not os.path.exists(csv["path"])
 
 
+@pytest.mark.parametrize(
+    "columns, message",
+    [
+        (
+            ["id", "CAST(id AS STRING) AS v", "30L AS ts", "7 AS extra"],
+            r"added extra \(None -> int\)$",
+        ),
+        (["id", "30L AS ts"], r"removed v \(string -> None\)$"),
+        (["id", "CAST(id AS INT) AS v", "30L AS ts"], r"type_changed v \(string -> int\)$"),
+    ],
+    ids=["added", "removed", "retyped"],
+)
+def test_engine_sync_rejects_an_increment_of_other_columns(spark, tmp_path, columns, message):
+    """An increment whose columns differ from the destination's raises
+    before any write, naming the columns. Before the check an added
+    column was dropped without a word, a missing one failed in analysis
+    and an int landed in a string column through a silent cast."""
+    from fastetl_spark.api import Engine
+
+    dest, src = str(tmp_path / "dest"), str(tmp_path / "src")
+    rows = spark.createDataFrame([(1, "a", 10), (2, "b", 20)], "id long, v string, ts long")
+    write_bucketed(rows, dest, ["id"], N_BUCKETS, watermark_col="ts")
+    spark.range(3, 5).selectExpr(*columns).write.parquet(src)
+    before = _tree(dest)
+    with pytest.raises(ValueError, match=message):
+        Engine(spark).sync({"path": src}, {"path": dest}, keys=["id"], watermark_col="ts")
+    assert _tree(dest) == before
+    assert not os.path.exists(dest + ".__merge_lock__")
+
+
 def test_first_sync_creates_bucketed_root_then_lands_a_delta(spark, tmp_path):
     """The first sync into a missing destination writes a bucketed root
     (bases, not deltas), without the keys the deletion feed names even

@@ -10,8 +10,9 @@ and match and of the ANN index appends and probes, the row counts, schema and wa
 that the post-merge count and the next watermark need no job, the
 compilations of a repeated round, the round trips of a round, of a GC
 pass and of an index append and match, the jobs of a reshard, an
-emptied root without a placeholder base, the band rows' plan and the
-index phases' job descriptions. ``make fixed-costs`` runs this file alone.
+emptied root without a placeholder base, the bucket count's and the
+band rows' plans and the index phases' job descriptions.
+``make fixed-costs`` runs this file alone.
 """
 
 from __future__ import annotations
@@ -286,7 +287,7 @@ def test_sync_round_round_trips(spark, sf_dir, tmp_path):
     def increment(r: int):
         src = str(tmp_path / f"src{r}")
         rows = lineitem.filter(F.col("l_orderkey") % 50 == r).withColumn("ts", F.lit(r))
-        rows.withColumn("l_comment", F.lit(f"round {r}")).write.parquet(src)
+        rows.withColumn("l_linestatus", F.lit(f"round {r}")).write.parquet(src)
         return {"path": src}, rows.select(*keys).limit(2)
 
     for r in (1, 2, 3):
@@ -647,6 +648,33 @@ def test_sync_of_v2_table_without_recorded_rows(spark, tmp_path):
     assert _manifest_rows(spark, dest) == 260
     assert "schema" in read_manifest(spark, dest)
     assert manifest_watermark(read_manifest(spark, dest)) == 2
+
+
+def test_bucket_count_is_a_hash_aggregate(spark, tmp_path, monkeypatch):
+    """The post-merge count takes each key's liveness from a hash
+    aggregate: a max over a (generation, tombstone) struct planned a
+    SortAggregate, which sorted every key row of the touched buckets."""
+    import fastetl_spark.io.bucketed as B
+
+    dest = str(tmp_path / "dest")
+    write_bucketed(_table(spark, 0, 200, 1), dest, ["id"], N_BUCKETS)
+    partial_merge(spark, dest, _table(spark, 150, 260, 2), deleted_keys=_table(spark, 0, 10, 0))
+    m = read_manifest(spark, dest)
+    plans, frame = [], type(spark.range(1))
+    collect = frame.collect
+
+    def recording(df):
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return collect(df)
+
+    monkeypatch.setattr(frame, "collect", recording)
+    counts = B._bucket_counts(spark, dest, m, sorted(B._ids(m)), ["id"], N_BUCKETS)
+    monkeypatch.undo()
+    (plan,) = plans
+    assert "SortAggregate" not in plan, plan
+    assert "HashAggregate" in plan, plan
+    assert {b: live for b, (live, _) in counts.items() if live} == m["rows"]
+    assert sum(live for live, _ in counts.values()) == read_bucketed(spark, dest).count() == 250
 
 
 def test_merge_facts_under_reliable_checkpoints(spark, tmp_path):

@@ -153,6 +153,116 @@ def test_dedup_then_windowed_counts_share_one_watermark(spark, tmp_path):
     ]
 
 
+CHECKPOINTING = "org.apache.spark.sql.execution.streaming.checkpointing."
+
+
+def _checkpoint_manager(spark, path) -> str:
+    """Class name of the manager Spark's streams use for a checkpoint at
+    local ``path`` under the session's configuration."""
+    jvm = spark._jvm
+    checkpointing = jvm.org.apache.spark.sql.execution.streaming.checkpointing
+    manager = checkpointing.CheckpointFileManager.create(
+        jvm.org.apache.hadoop.fs.Path(f"file:{path}"),
+        spark._jsparkSession.sessionState().newHadoopConf(),
+    )
+    return manager.getClass().getName()
+
+
+def test_session_checkpoints_rename_through_the_filesystem(spark, tmp_path):
+    """``get_spark`` sessions commit stream checkpoints through
+    ``FileSystem.rename``: Spark's default manager renames through
+    ``FileContext``, which forks ``readlink`` on a local disk."""
+    got = _checkpoint_manager(spark, tmp_path)
+    assert got == CHECKPOINTING + "FileSystemBasedCheckpointFileManager"
+
+
+def test_extra_conf_overrides_the_checkpoint_manager(spark, tmp_path):
+    """A caller's ``extra_conf`` wins over the session default."""
+    from fastetl_spark.session import get_spark
+
+    key = "spark.sql.streaming.checkpointFileManagerClass"
+    default = spark.conf.get(key)
+    context = CHECKPOINTING + "FileContextBasedCheckpointFileManager"
+    try:
+        # the running session: get_spark sets its runtime confs again
+        again = get_spark(
+            "fastetl-spark-tests", master="local[8]", shuffle_partitions=8,
+            extra_conf={key: context},
+        )
+        assert _checkpoint_manager(again, tmp_path) == context
+    finally:
+        spark.conf.set(key, default)
+    assert _checkpoint_manager(spark, tmp_path) != context
+
+
+def _land_events(src, k: int, minutes: list[int], t0: dt.datetime) -> None:
+    """File ``k`` of events at ``minutes`` after ``t0``, types a/b in
+    turn; its modification time orders it after files 0..k-1."""
+    path = str(src / f"f{k}.parquet")
+    pq.write_table(
+        pa.table(
+            {
+                "event_id": pa.array([k * 1000 + m for m in minutes], pa.int64()),
+                "ts": pa.array(
+                    [t0 + dt.timedelta(minutes=m) for m in minutes], pa.timestamp("us", "UTC")
+                ),
+                "user_id": pa.array([1] * len(minutes), pa.int64()),
+                "event_type": pa.array(["ab"[j % 2] for j in range(len(minutes))]),
+                "value": pa.array([float(m) for m in minutes]),
+                "props": pa.array([""] * len(minutes)),
+            }
+        ),
+        path,
+    )
+    os.utime(path, (1_000_000_000 + k,) * 2)
+
+
+def test_windowed_counts_resume_from_their_checkpoint(spark, tmp_path):
+    """Two ``availableNow`` runs on one checkpoint, with files landed
+    between them, emit the windows of one run over all the files: the
+    second run reloads the state versions the first one committed.
+    Events arrive in time order, so no row is late in either layout;
+    file 2 adds events to the 04:00 window that file 1 opened, so that
+    window's count spans the restart."""
+    t0 = dt.datetime(2024, 1, 1)
+    files = [range(0, 150, 10), range(150, 300, 10), range(270, 450, 10), range(450, 600, 10)]
+
+    def run(src, ck, sink):
+        stream = read_events_stream(spark, str(src), max_files_per_trigger=1)
+        q = (
+            windowed_event_counts(stream)
+            .writeStream.format("parquet")
+            .option("checkpointLocation", str(ck))
+            .outputMode("append")
+            .trigger(availableNow=True)
+            .start(str(sink))
+        )
+        q.awaitTermination(180)
+        assert q.exception() is None
+
+    once, twice = tmp_path / "once", tmp_path / "twice"
+    for d in (once, twice):
+        (d / "src").mkdir(parents=True)
+    for k, minutes in enumerate(files):
+        _land_events(once / "src", k, list(minutes), t0)
+    run(once / "src", once / "ck", once / "out")
+    for k, minutes in enumerate(files):
+        _land_events(twice / "src", k, list(minutes), t0)
+        if k == 1:
+            run(twice / "src", twice / "ck", twice / "out")
+    run(twice / "src", twice / "ck", twice / "out")
+
+    def emitted(d):
+        return sorted(tuple(r) for r in spark.read.parquet(str(d / "out")).collect())
+
+    got = emitted(twice)
+    assert got == emitted(once)
+    # 04:00-05:00: 6 events of file 1 and 3 of file 2; the final
+    # watermark, 09:50 - 2h, closes every window up to 06:00-07:00
+    assert sum(r[2] for r in got if r[0] == t0 + dt.timedelta(hours=4)) == 9
+    assert max(r[0] for r in got) == t0 + dt.timedelta(hours=6)
+
+
 def test_foreach_batch_merge_upserts(spark, events_dir, tmp_path):
     stream = read_events_stream(spark, events_dir, max_files_per_trigger=1)
     q = foreach_batch_merge(
